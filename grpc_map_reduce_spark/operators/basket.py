@@ -6,22 +6,21 @@ The apriori-style frequent-pair query every retail/recs pipeline runs
 main.go:82 — pair generation is a flatMap, support counting a keyed
 reduce).  Scale shape, in order:
 
-* **Apriori pass 1 prunes before the self-join.**  Items below
+* **Apriori pass 1 prunes before pair generation.**  Items below
   ``MIN_ITEM_SUPPORT`` can never form a frequent pair, so the
-  per-item counts gate the basket stream FIRST — the pair join's
+  per-item counts gate the basket stream FIRST — pair generation's
   input shrinks by the infrequent-item mass (the classic candidate
   cut that makes pair mining feasible at all).
 * **The item-count gate broadcasts.**  Per-item counts are bounded
   by the part CATALOG (dimension-sized — millions at worst), never
   by basket volume, so the probe is a broadcast hash join against
   the fact stream; the corpus never shuffles for the gate.
-* **Pairs are enumerated inside each basket's sorted array** (round
-  12, guide §2.2/§2.4 — the same bucket-array rewrite as
-  ``dedup.minhash_candidates``): one groupBy collects each order's
-  gated (part, count) structs, and posexplode+slice emits the C(k,2)
-  ordered pairs in-task.  The old a×b self-join exchanged the gated
-  stream twice (sort-merge over an unpartitioned checkpoint) and
-  sorted both sides; this exchanges it once and joins nothing.  Pair
+* **Pairs are enumerated inside each basket's sorted array** by the
+  shared pair kernel ``dedup.bucket_pairs``: one groupBy collects
+  each order's gated (part, count) structs, and posexplode+slice
+  emits the C(k,2) ordered pairs in-task.  A self-join would exchange
+  the gated stream twice and sort both sides; this exchanges it once
+  and joins nothing.  Pair
   blow-up is bounded by basket size squared — baskets are small by
   domain (TPC-H ~4 distinct parts/order), the same bounded-wedge
   argument as ``clustering.dedup_triangles``.
@@ -38,11 +37,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from grpc_map_reduce_spark.operators.dedup import bucket_pairs
 from grpc_map_reduce_spark.sources.tables import table
 from grpc_map_reduce_spark.plans.checkpoint import PIN_LEVEL
 
 #: Apriori pass-1 gate: parts in fewer baskets can never reach
-#: MIN_PAIR_SUPPORT, and the cut keeps the self-join input dense.
+#: MIN_PAIR_SUPPORT, and the cut keeps the pair kernel's input dense.
 MIN_ITEM_SUPPORT = 10
 
 #: Emit only pairs co-ordered at least this often.
@@ -63,36 +63,22 @@ def market_basket(li: DataFrame,
     )
     item_n = items.groupBy("l_partkey").agg(F.count("*").alias("item_n"))
     freq = item_n.filter(F.col("item_n") >= min_item)
-    # Basket-array pair generation (round 12): collect each order's
-    # gated (part, count) structs into one array sorted by part key
-    # (unique within an order, so sort_array's struct ordering is the
-    # part ordering), then enumerate ordered pairs in-task — the
-    # output rows are exactly the old self-join's (part_a < part_b by
-    # construction; n_a/n_b ride in the structs, no join back).  The
-    # gated stream is traversed once, so the old repartition+pin is
-    # dead weight and dropped.
-    baskets = (
-        items.join(F.broadcast(freq), "l_partkey")
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(
-            F.collect_list(F.struct("l_partkey", "item_n"))
-        ).alias("ps"))
-        .where(F.size("ps") > 1)
-    )
+    # Basket-array pair generation: each order is one bucket of the
+    # shared pair kernel, its members the gated (part, count) structs
+    # (part keys are unique within an order, so the struct ordering is
+    # the part ordering and part_a < part_b by construction; n_a/n_b
+    # ride in the structs, no join back).  The gated stream is
+    # traversed once, so it needs no repartition or pin.
+    gated = items.join(F.broadcast(freq), "l_partkey")
     pair_n = (
-        baskets
-        .select(F.posexplode("ps").alias("i", "pa"), F.col("ps"))
-        .select(
-            "pa",
-            F.explode(F.slice("ps", F.col("i") + 2, F.size("ps"))).alias("pb"),
-        )
+        bucket_pairs(gated, ["l_orderkey"], F.struct("l_partkey", "item_n"))
         # n_a/n_b are functionally dependent on the part keys — riding
         # them through the grouping keys avoids a join back to item_n.
         .groupBy(
-            F.col("pa.l_partkey").alias("part_a"),
-            F.col("pb.l_partkey").alias("part_b"),
-            F.col("pa.item_n").alias("n_a"),
-            F.col("pb.item_n").alias("n_b"),
+            F.col("a.l_partkey").alias("part_a"),
+            F.col("b.l_partkey").alias("part_b"),
+            F.col("a.item_n").alias("n_a"),
+            F.col("b.item_n").alias("n_b"),
         )
         .agg(F.count("*").alias("pair_n"))
         .filter(F.col("pair_n") >= min_pair)
@@ -161,6 +147,6 @@ FROM pair_n, totals
 QUERIES = [
     ("orders_market_basket", q_market_basket, ORACLE_MARKET_BASKET,
      "Apriori-pruned frequent part-pair mining with integer-exact "
-     "confidence and lift (broadcast item gate, one shuffle feeding "
-     "both self-join sides)."),
+     "confidence and lift (broadcast item gate, pairs enumerated "
+     "in-task per basket with one shuffle and no self-join)."),
 ]

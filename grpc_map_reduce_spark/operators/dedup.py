@@ -7,11 +7,12 @@ Scale design:
     group on a fixed-width digest (xxhash64/md5 of the text), never
     on the raw text bytes, so shuffle rows are ~16 B not ~10 KB.
   * N-gram Jaccard similarity join uses the inverted-index trick:
-    explode distinct shingles, self-join on the shingle, count
-    common shingles per pair.  Shuffle is on the shingle key; a
-    hot shingle (appearing in many docs) quadratically blows up the
-    pair count, so real corpora drop stop-shingles above a document
-    frequency cap first (``max_df``).
+    explode distinct shingles, group docs by shingle, enumerate each
+    shingle's doc pairs (``bucket_pairs``), count common shingles per
+    pair.  Shuffle is on the shingle key; a hot shingle (appearing in
+    many docs) quadratically blows up the pair count, so real corpora
+    drop stop-shingles above a document frequency cap first
+    (``max_df``).
   * Every shingle is represented by its 60-bit md5-derived hash from
     the moment it leaves the tokenizer (functions.text.
     distinct_shingle_hashes_udf): joins shuffle fixed-width 8 B longs,
@@ -27,6 +28,7 @@ import math
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from grpc_map_reduce_spark.functions.text import (
     distinct_shingle_hashes_udf,
@@ -70,7 +72,7 @@ GROUP BY text
 # E2 (exact-arithmetic near-dup): word-3-gram Jaccard similarity join.
 
 #: Stop-shingle document-frequency guard, ON by default: a shingle in
-#: more than this many documents is boilerplate, and its self-join
+#: more than this many documents is boilerplate, and its pair
 #: term alone is df² rows — one hot shingle at df=10⁶ is a 10¹²-row
 #: partition.  The oracle-twin configuration passes ``max_df=None``
 #: EXPLICITLY (exact all-pairs semantics, quadratic by intent).
@@ -82,47 +84,27 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.008,
     """Document pairs (doc_a < doc_b) with shingle-Jaccard ≥ threshold.
 
     ``max_df`` drops shingles present in more than that many docs
-    before the self-join (stop-shingle guard for skew at scale) and is
+    before pair fan-out (stop-shingle guard for skew at scale) and is
     ON by default — a bare call cannot accidentally build a hot-key
     quadratic join.  Pass ``max_df=None`` for the exact all-pairs
     semantics (the oracle-checked configuration does, knowingly).
     """
-    # Per-doc shingle set size is computed BEFORE the explode and
-    # carried on every exploded row, so the pair sizes (na, nb) ride
-    # along through the self-join for free — one shuffle join + one
-    # aggregation total, instead of joining a separate sizes table
-    # twice afterwards (3 shuffle joins).  The duplicated column costs
-    # 8 bytes/row on the shuffle; the avoided joins cost two full
-    # shuffles of the pair set.
-    # The join key is the shingle's 60-bit hash, not the string: 8 B
-    # fixed-width shuffle rows and long-equality probes instead of
-    # ~20 B strings (see functions.text.distinct_shingle_hashes_udf
-    # for the collision argument — counts are identical).
-    # Lazy checkpoint: the self-join consumes sh on BOTH sides, and
-    # Spark would otherwise run the shingling UDF twice over the whole
-    # corpus.  Pinning the exploded shingle table costs O(total
-    # shingles) local storage for a 2× cut in tokenization work — the
-    # right trade below memory pressure; above it, drop the checkpoint
-    # and pay the recompute.
-    sh = (
-        _shingle_sets(docs, n)
-        .select(
-            "doc_id",
-            F.size("sh_set").alias("n_shingles"),
-            F.explode("sh_set").alias("sh_h"),
-        )
-        .localCheckpoint(eager=False, storageLevel=PIN_LEVEL)
+    # Per-doc shingle set size is computed BEFORE the explode and rides
+    # in each member struct, so the pair sizes (na, nb) come out of the
+    # pair kernel with no join back to a sizes table.  The bucket key
+    # is the shingle's 60-bit hash, not the string: 8 B fixed-width
+    # shuffle rows (see functions.text.distinct_shingle_hashes_udf for
+    # the collision argument — counts are identical).  The shingle rows
+    # are traversed once (one exchange into the per-shingle arrays), so
+    # neither the sets nor the exploded rows are pinned; ``max_df`` is
+    # the kernel's bucket-size cap.
+    sh = _shingle_sets(docs, n, pin=False).select(
+        "doc_id",
+        F.size("sh_set").alias("n_shingles"),
+        F.explode("sh_set").alias("sh_h"),
     )
-    if max_df is not None:
-        hot = (
-            sh.groupBy("sh_h").agg(F.count("*").alias("df"))
-            .filter(F.col("df") > max_df).select("sh_h")
-        )
-        sh = sh.join(F.broadcast(hot), "sh_h", "left_anti")
-    a, b = sh.alias("a"), sh.alias("b")
     common = (
-        a.join(b, (F.col("a.sh_h") == F.col("b.sh_h"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
+        bucket_pairs(sh, ["sh_h"], F.struct("doc_id", "n_shingles"), max_df)
         .groupBy(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
@@ -154,13 +136,13 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: no fixture shingle is hot, so a guarded registration would be
 #: vacuous in the hash.  4 is a cap with hot shingles at EVERY
 #: fixture SF (186 @sf0.001, 151 @sf0.01, 25 829 @sf0.1), so the
-#: broadcast anti-join drop path itself is what gets hash-checked.
+#: hot-bucket drop path itself is what gets hash-checked.
 NGRAM_GUARD_DEMO_DF = 4
 
 
 def q_ngram_jaccard_guarded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Guard-ON twin of `dedup_ngram_jaccard`: the stop-shingle
-    anti-join REGISTERED AND FIRING (df cap 4).  Semantics mirrored in
+    guard REGISTERED AND FIRING (df cap 4).  Semantics mirrored in
     the oracle exactly as the Spark code computes them: pair
     denominators (na, nb) are FULL distinct-shingle set sizes (sized
     before the guard), n_common counts only non-hot shared shingles —
@@ -460,10 +442,11 @@ LSH_MAX_BUCKET_DEFAULT = 1000
 def band_key_structs(components, rows_per_band: int) -> F.Column:
     """``array<struct<band_idx, key>>`` from the 16 signature-component
     columns — THE band-key format, single-sourced (round-11 review):
-    every band-bucket producer (batch ``_band_rows``, the incremental
-    split, the streaming corpus index, the stream-side key derivation)
-    must build keys through this expression, or stream-vs-batch and
-    Spark-vs-oracle bucket parity silently breaks on a format drift.
+    every band-bucket producer (batch ``_band_rows``, which the
+    incremental split also reads, the streaming corpus index, the
+    stream-side key derivation) must build keys through this
+    expression, or stream-vs-batch and Spark-vs-oracle bucket parity
+    silently breaks on a format drift.
 
     ``components`` is the list of 16 component Columns (``m0..m15``
     for batch frames, ``element_at(sigs, i+1)`` for a stream's
@@ -484,6 +467,78 @@ def band_key_structs(components, rows_per_band: int) -> F.Column:
     )
 
 
+def bucket_pairs(rows: DataFrame, keys, member,
+                 max_bucket: int | None = None) -> DataFrame:
+    """(a, b): one row per pair of members sharing a ``keys`` bucket —
+    THE candidate-pair kernel: hash-partition by key, group, and fold
+    each group into its pairs (every pair path builds pairs here or in
+    :func:`cross_bucket_pairs`).
+
+    Each bucket's members are collected into ONE sorted array and its
+    C(k,2) pairs are enumerated in-task by ``posexplode`` + ``slice``:
+    the rows are exchanged once and nothing is joined, where a self-join
+    would exchange and sort them twice.  A pair sharing m buckets is
+    emitted m times, so callers count (shared bands, common shingles)
+    or ``distinct`` as they need.
+
+    ``member`` is an id column, or a struct whose FIRST field is the id
+    (payload fields ride along, so no join back is needed).  ``a`` sorts
+    before ``b``, so ``a``'s id ≤ ``b``'s.  Ids are not required to be
+    unique: pairs of two equal ids are dropped, so a duplicated id never
+    pairs with itself and duplicates pair with the other members exactly
+    as under an ``a.id < b.id`` join.  ``max_bucket`` drops buckets of
+    more rows than that before any pair fan-out (the hot-bucket guard:
+    a k-row bucket emits k·(k−1)/2 pairs).
+    """
+    buckets = (
+        rows.groupBy(*keys)
+        .agg(F.sort_array(F.collect_list(member)).alias("ms"))
+        .where(F.size("ms") > 1)
+    )
+    if max_bucket is not None:
+        buckets = buckets.where(F.size("ms") <= max_bucket)
+    pairs = buckets.select(F.posexplode("ms").alias("i", "a"), "ms").select(
+        "a", F.explode(F.slice("ms", F.col("i") + 2, F.size("ms"))).alias("b")
+    )
+    id_a, id_b = F.col("a"), F.col("b")
+    dt = pairs.schema["a"].dataType
+    if isinstance(dt, StructType):
+        id_a, id_b = id_a[dt.fields[0].name], id_b[dt.fields[0].name]
+    return pairs.where(id_a != id_b)
+
+
+def cross_bucket_pairs(rows: DataFrame, keys, member, is_corpus,
+                       max_bucket: int | None = None) -> DataFrame:
+    """(a, b): one row per (incoming, corpus) member pair sharing a
+    ``keys`` bucket — the one-sided form of :func:`bucket_pairs`.
+
+    ONE groupBy collects each bucket's incoming (``is_corpus`` false)
+    and corpus members into two arrays (``collect_list`` of a ``when``
+    drops the other side's NULLs) and the cross is enumerated in-task
+    by two explodes; buckets with one side only never fan out, and no
+    corpus×corpus or incoming×incoming pair exists.  ``max_bucket``
+    caps the CORPUS side only (a degenerate corpus bucket is the skew
+    risk; the incoming shard is small by definition).  Every pair joins
+    two different rows, so no id filter applies."""
+    # ``when`` reads a bare string as a literal, not a column name.
+    member, side = (F.col(c) if isinstance(c, str) else c
+                    for c in (member, is_corpus))
+    grp = (
+        rows.groupBy(*keys)
+        .agg(
+            F.collect_list(F.when(~side, member)).alias("inc"),
+            F.collect_list(F.when(side, member)).alias("cor"),
+        )
+        .where((F.size("inc") > 0) & (F.size("cor") > 0))
+    )
+    if max_bucket is not None:
+        grp = grp.where(F.size("cor") <= max_bucket)
+    return (
+        grp.select(F.explode("inc").alias("a"), "cor")
+        .select("a", F.explode("cor").alias("b"))
+    )
+
+
 def _band_rows(docs: DataFrame, n: int, rows_per_band: int,
                sets: DataFrame | None, pin: bool = True) -> DataFrame:
     """(doc_id, band_idx, key): one row per doc per LSH band."""
@@ -501,11 +556,11 @@ def lsh_hot_buckets(docs: DataFrame, n: int = 3,
                     sets: DataFrame | None = None) -> DataFrame:
     """(band_idx, key, sz): the band buckets the default guard drops.
 
-    The guard inside :func:`minhash_candidates` anti-joins these away
-    silently (the candidate stream must stay lazily composable); this
-    companion surfaces WHAT was dropped and how big each bucket was,
-    so a pipeline can log/alert on guard activity instead of
-    discovering it from a recall dip.
+    The guard inside :func:`minhash_candidates` filters these buckets
+    out before pair fan-out, silently (the candidate stream must stay
+    lazily composable); this companion surfaces WHAT was dropped and
+    how big each bucket was, so a pipeline can log/alert on guard
+    activity instead of discovering it from a recall dip.
     """
     return (
         _band_rows(docs, n, rows_per_band, sets)
@@ -534,9 +589,9 @@ def minhash_candidates(docs: DataFrame, n: int = 3,
     ``max_bucket`` is the scale skew guard, ON by default (see
     :data:`LSH_MAX_BUCKET_DEFAULT`): buckets larger than it are
     dropped — their members are by construction extremely similar and
-    are handled by the exact-dup pass; since round 12 the guard is a
-    free size filter on the bucket rows (no second traversal, no
-    anti-join).  Pass ``max_bucket=None`` for exact band-join
+    are handled by the exact-dup pass; the guard is a free size filter
+    on the bucket arrays of :func:`bucket_pairs` (no second traversal,
+    no anti-join).  Pass ``max_bucket=None`` for exact band-join
     semantics (the oracle-checked registrations do, knowingly);
     :func:`lsh_hot_buckets` reports what a guarded run drops.
 
@@ -546,46 +601,17 @@ def minhash_candidates(docs: DataFrame, n: int = 3,
     census (``lsh_near_dup_auto``) does not pay the tokenize+minhash
     pass a second time (VERDICT r11 item 2; guide §5 reuse).
     """
+    # ``pin`` decides whether the shingle sets _band_rows derives (when
+    # neither ``sets`` nor ``bands`` is given) are checkpointed.  The
+    # band rows themselves are traversed once, guard or no guard: the
+    # hot-bucket guard is a size filter inside the pair kernel.
     exploded = bands if bands is not None else _band_rows(
         docs, n, rows_per_band, sets, pin=pin)
-    # Bucket-array pair generation (round 12, guide §2.2/§2.4): the
-    # old band self-join computed AND exchanged the band rows twice
-    # (once per join side) and paid a sort-merge sort on both — at
-    # sf0.1 the pair stage alone was ~1.1 s warm of the 2.9 s exact
-    # chain.  Collecting each bucket's members into ONE sorted array
-    # instead exchanges the band rows ONCE, needs no join at all, and
-    # enumerates each bucket's C(k,2) ordered pairs in-task with a
-    # streaming explode (same per-bucket colocation and fan-out the
-    # join had, bit-identical output: measured 157 084/157 084 pairs
-    # equal at sf0.1).  It also makes the hot-bucket guard FREE — a
-    # ``size(ms) <= max_bucket`` filter on the bucket row replaces the
-    # old second band-rows traversal + broadcast anti-join, so the
-    # round-11 guard-pin/recompute trade (pin OOMs the 8 GiB cap at
-    # 3125×; recompute costs a second tokenize pass) disappears: the
-    # band rows are traversed once, guard or no guard (``pin`` is
-    # kept for signature compatibility; nothing needs pinning now).
-    buckets = (
-        exploded.groupBy("band_idx", "key")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ms"))
-        .where(F.size("ms") > 1)
+    return (
+        bucket_pairs(exploded, ["band_idx", "key"], "doc_id", max_bucket)
+        .groupBy(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
+        .agg(F.count("*").alias("n_bands"))
     )
-    if max_bucket is not None:
-        # Drop hot buckets BEFORE pair fan-out — their members are by
-        # construction near-identical and handled by the exact-dup
-        # pass (same drop set as the old anti-join: identical buckets,
-        # identical sizes).
-        buckets = buckets.where(F.size("ms") <= max_bucket)
-    pairs = (
-        buckets
-        .select(F.posexplode("ms").alias("i", "doc_a"), F.col("ms"))
-        .select(
-            "doc_a",
-            F.explode(
-                F.slice("ms", F.col("i") + 2, F.size("ms"))
-            ).alias("doc_b"),
-        )
-    )
-    return pairs.groupBy("doc_a", "doc_b").agg(F.count("*").alias("n_bands"))
 
 
 def q_minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -653,6 +679,24 @@ LSH_ROWS_PER_BAND = 1
 LSH_NEAR_DUP_THRESHOLD = 0.05
 
 
+def _set_rescore(cand: DataFrame, sets: DataFrame) -> DataFrame:
+    """``cand`` (first two columns: the pair's doc ids) joined to both
+    docs' shingle sets (``_sa``, ``_sb``) with the exact ``n_common``
+    and ``jaccard`` (6 dp) — the exact rescore every candidate path
+    shares.  Work is O(candidates): two shuffle joins on doc id."""
+    a, b = cand.columns[:2]
+    sa = sets.select(F.col("doc_id").alias(a), F.col("sh_set").alias("_sa"))
+    sb = sets.select(F.col("doc_id").alias(b), F.col("sh_set").alias("_sb"))
+    n_common = F.col("n_common")
+    return (
+        cand.join(sa, a)
+        .join(sb, b)
+        .withColumn("n_common", F.size(F.array_intersect("_sa", "_sb")))
+        .withColumn("jaccard", F.round(
+            n_common / (F.size("_sa") + F.size("_sb") - n_common), 6))
+    )
+
+
 def lsh_near_dup(docs: DataFrame, n: int = 3,
                  threshold: float = LSH_NEAR_DUP_THRESHOLD,
                  rows_per_band: int = LSH_ROWS_PER_BAND,
@@ -666,7 +710,8 @@ def lsh_near_dup(docs: DataFrame, n: int = 3,
     LSH candidate pairs — sub-quadratic END TO END:
 
       * candidate generation shuffles O(docs × bands) band-bucket rows
-        and joins bucket-to-bucket (never shingle-to-shingle);
+        once and enumerates each bucket's pairs in-task
+        (:func:`bucket_pairs`; never shingle-to-shingle);
       * rescoring joins each candidate pair to the two docs' shingle
         SETS (two shuffle joins on doc_id) and computes the exact
         Jaccard with ``array_intersect`` — work is O(candidates), and
@@ -688,24 +733,8 @@ def lsh_near_dup(docs: DataFrame, n: int = 3,
         docs, n, rows_per_band=rows_per_band, sets=sets,
         max_bucket=max_bucket, bands=bands,
     ).select("doc_a", "doc_b")
-    a = sets.select(F.col("doc_id").alias("doc_a"), F.col("sh_set").alias("_sa"))
-    b = sets.select(F.col("doc_id").alias("doc_b"), F.col("sh_set").alias("_sb"))
-    n_common = F.size(F.array_intersect("_sa", "_sb"))
-    scored = (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .withColumn("n_common", n_common)
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common")
-                / (F.size("_sa") + F.size("_sb") - F.col("n_common")),
-                6,
-            ),
-        )
-    )
     return (
-        scored.filter(F.col("jaccard") >= threshold)
+        _set_rescore(cand, sets).filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
 
@@ -742,12 +771,8 @@ def containment_pairs(docs: DataFrame, n: int = 3,
     cand = minhash_candidates(
         docs, n, rows_per_band=rows_per_band, sets=sets, max_bucket=max_bucket
     ).select("doc_a", "doc_b")
-    a = sets.select(F.col("doc_id").alias("doc_a"), F.col("sh_set").alias("_sa"))
-    b = sets.select(F.col("doc_id").alias("doc_b"), F.col("sh_set").alias("_sb"))
     scored = (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .withColumn("n_common", F.size(F.array_intersect("_sa", "_sb")))
+        _set_rescore(cand, sets)
         .withColumn(
             "cont_a_in_b", F.round(F.col("n_common") / F.size("_sa"), 6)
         )
@@ -834,8 +859,9 @@ GROUP BY doc_id
 # --------------------------------------------------------------------------
 # INCREMENTAL dedup: the shape every production pipeline actually
 # runs — a new shard arrives and must be deduped AGAINST THE EXISTING
-# CORPUS, not within itself.  The LSH band join is one-sided
-# (incoming buckets ⋈ corpus buckets), so shuffle volume is
+# CORPUS, not within itself.  Candidate pairs are one-sided
+# (:func:`cross_bucket_pairs` crosses each bucket's incoming members
+# with its corpus members), so shuffle volume is
 # O((|incoming| + |corpus|) × bands) and pair fan-out is
 # incoming×corpus-bucket-collisions only — never corpus×corpus, which
 # is the term that dwarfs everything at 100 TB (the corpus side can
@@ -855,37 +881,6 @@ def _side_is_corpus(doc_id_col) -> F.Column:
     return bucket < INCR_CORPUS_PCT
 
 
-def _cross_side_bucket_pairs(exploded: DataFrame) -> DataFrame:
-    """(doc_id, match_id) per shared band bucket, from side-tagged
-    band rows (doc_id, band_idx, key, is_corpus) — one row per
-    (incoming, corpus, bucket) collision.
-
-    Bucket-array form of the one-sided band join (round 12, same
-    rewrite as :func:`minhash_candidates`): ONE groupBy collects each
-    bucket's incoming and corpus members into two arrays
-    (``collect_list`` of a ``when`` drops the other side's NULLs) and
-    the incoming×corpus cross is enumerated in-task by two explodes —
-    the old inc⋈cor join exchanged the band rows twice (once per
-    filtered side); this exchanges them once, and buckets with only
-    one side present are dropped before any fan-out."""
-    grp = (
-        exploded.groupBy("band_idx", "key")
-        .agg(
-            F.collect_list(
-                F.when(~F.col("is_corpus"), F.col("doc_id"))
-            ).alias("inc"),
-            F.collect_list(
-                F.when(F.col("is_corpus"), F.col("doc_id"))
-            ).alias("cor"),
-        )
-        .where((F.size("inc") > 0) & (F.size("cor") > 0))
-    )
-    return (
-        grp.select(F.explode("inc").alias("doc_id"), "cor")
-        .select("doc_id", F.explode("cor").alias("match_id"))
-    )
-
-
 def incremental_scored_pairs(docs: DataFrame, n: int = 3,
                              threshold: float = LSH_NEAR_DUP_THRESHOLD,
                              rows_per_band: int = LSH_ROWS_PER_BAND) -> DataFrame:
@@ -893,50 +888,16 @@ def incremental_scored_pairs(docs: DataFrame, n: int = 3,
     above-threshold matches on the corpus side — the cross-side
     candidate set, exactly rescored.  The per-doc report below and
     the streaming twin (streaming/dedup.py) both reduce to this."""
-    r = rows_per_band
     sets = _shingle_sets(docs, n)
-    sig = minhash_signatures(docs, n, sets=sets)
-    n_bands = len(MINHASH_A) // r
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("band_idx"),
-                F.concat_ws(
-                    "_", *[F.col(f"m{j * r + k}") for k in range(r)]
-                ).alias("key"),
-            )
-            for j in range(n_bands)
-        ]
+    exploded = _band_rows(docs, n, rows_per_band, sets).withColumn(
+        "is_corpus", _side_is_corpus(F.col("doc_id")))
+    cand = cross_bucket_pairs(
+        exploded, ["band_idx", "key"], "doc_id", "is_corpus"
+    ).select(F.col("a").alias("doc_id"), F.col("b").alias("match_id")).distinct()
+    return (
+        _set_rescore(cand, sets).filter(F.col("jaccard") >= threshold)
+        .select("doc_id", "match_id", "jaccard")
     )
-    exploded = (
-        sig.select("doc_id", F.explode(bands).alias("b"))
-        .select(
-            "doc_id",
-            F.col("b.band_idx").alias("band_idx"),
-            F.col("b.key").alias("key"),
-            _side_is_corpus(F.col("doc_id")).alias("is_corpus"),
-        )
-    )
-    cand = _cross_side_bucket_pairs(exploded).select(
-        "doc_id", "match_id").distinct()
-    a = sets.select(F.col("doc_id"), F.col("sh_set").alias("_sa"))
-    b = sets.select(F.col("doc_id").alias("match_id"), F.col("sh_set").alias("_sb"))
-    n_common = F.size(F.array_intersect("_sa", "_sb"))
-    scored = (
-        cand.join(a, "doc_id")
-        .join(b, "match_id")
-        .withColumn("n_common", n_common)
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common")
-                / (F.size("_sa") + F.size("_sb") - F.col("n_common")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-    return scored.select("doc_id", "match_id", "jaccard")
 
 
 def incremental_sketch_pairs(docs: DataFrame, n: int = 3,
@@ -951,12 +912,13 @@ def incremental_sketch_pairs(docs: DataFrame, n: int = 3,
     `incremental_scored_pairs` joins each cross-side candidate back to
     BOTH shingle-set arrays for the exact rescore — per-candidate
     transport proportional to document size, the same floor the batch
-    sketch path removed (SURVEY §8.12).  Here the cross-side band join
-    IS the scorer: counting matching band buckets per (incoming,
+    sketch path removed (SURVEY §8.12).  Here the cross-side bucket
+    pairs ARE the scorer: counting matching band buckets per (incoming,
     corpus) pair gives the MinHash agreement estimate at zero set
     transport, and the shingle sets are never materialized at all
-    (``pin=False`` signatures only).  Work: one one-sided band join —
-    never corpus×corpus — plus a pair-keyed count.
+    (``pin=False`` signatures only).  Work: one exchange of the band
+    rows into cross-side buckets — never corpus×corpus — plus a
+    pair-keyed count.
 
     ``threshold`` defaults to :data:`SKETCH_THRESHOLD` (the calibrated
     operating point); pass the rescore threshold 0.05 only if a
@@ -970,8 +932,8 @@ def incremental_sketch_pairs(docs: DataFrame, n: int = 3,
         "is_corpus", _side_is_corpus(F.col("doc_id"))
     )
     return (
-        _cross_side_bucket_pairs(exploded)
-        .groupBy("doc_id", "match_id")
+        cross_bucket_pairs(exploded, ["band_idx", "key"], "doc_id", "is_corpus")
+        .groupBy(F.col("a").alias("doc_id"), F.col("b").alias("match_id"))
         .agg(F.count("*").alias("n_bands"))
         .filter(F.col("n_bands") >= min_bands)
         .select(
@@ -1134,7 +1096,7 @@ SELECT doc_a, doc_b, jaccard FROM pairs
 #: registration would be vacuous in the hash — it would never differ
 #: from the unguarded twin.  4 is the largest cap with hot buckets at
 #: EVERY fixture SF (18 @sf0.001, 19 @sf0.01, 5 627 @sf0.1), so the
-#: broadcast anti-join drop path itself is what gets hash-checked.
+#: hot-bucket drop path itself is what gets hash-checked.
 GUARD_DEMO_BUCKET = 4
 
 
@@ -1245,23 +1207,8 @@ def jaccard_estimate_calibration(docs: DataFrame, n: int = 3,
     cand = minhash_candidates(
         docs, n, rows_per_band=rows_per_band, sets=sets, max_bucket=None
     )
-    a = sets.select(F.col("doc_id").alias("doc_a"), F.col("sh_set").alias("_sa"))
-    b = sets.select(F.col("doc_id").alias("doc_b"), F.col("sh_set").alias("_sb"))
-    n_common = F.size(F.array_intersect("_sa", "_sb"))
     n_bands_total = len(MINHASH_A) // rows_per_band
-    scored = (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .withColumn("n_common", n_common)
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common")
-                / (F.size("_sa") + F.size("_sb") - F.col("n_common")),
-                6,
-            ),
-        )
-    )
+    scored = _set_rescore(cand, sets)
     return (
         scored.groupBy("n_bands")
         .agg(
@@ -1417,7 +1364,7 @@ def q_lsh_near_dup_sketch_guarded(spark: SparkSession, sf_dir: str) -> DataFrame
 
 # nbands over the GUARDED `bands` CTE (lsh_pairs_sql's max_bucket
 # HAVING-filter) — agreement counts see only surviving buckets,
-# mirroring the Spark side's pre-pair-join broadcast anti-join.
+# mirroring the Spark side's bucket-size filter before pair fan-out.
 ORACLE_LSH_SKETCH_GUARDED = f"""
 WITH {lsh_pairs_sql(0.0, max_bucket=GUARD_DEMO_BUCKET)},
 nbands AS (
@@ -1461,22 +1408,7 @@ def sketch_confusion(docs: DataFrame, n: int = 3,
     cand = minhash_candidates(
         docs, n, rows_per_band=rows_per_band, sets=sets, max_bucket=None
     )
-    a = sets.select(F.col("doc_id").alias("doc_a"), F.col("sh_set").alias("_sa"))
-    b = sets.select(F.col("doc_id").alias("doc_b"), F.col("sh_set").alias("_sb"))
-    n_common = F.size(F.array_intersect("_sa", "_sb"))
-    scored = (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .withColumn("n_common", n_common)
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common")
-                / (F.size("_sa") + F.size("_sb") - F.col("n_common")),
-                6,
-            ),
-        )
-    )
+    scored = _set_rescore(cand, sets)
     return (
         scored.groupBy(
             (F.col("n_bands") >= min_bands).alias("sketch_kept"),
@@ -1924,12 +1856,12 @@ QUERIES = [
     ("dedup_exact", q_dedup_exact, ORACLE_DEDUP_EXACT,
      "E1 exact dedup: keeper id + copy count per identical text."),
     ("dedup_ngram_jaccard", q_ngram_jaccard, ORACLE_NGRAM_JACCARD,
-     "E2 near-dup: word-3-gram Jaccard similarity self-join "
+     "E2 near-dup: word-3-gram Jaccard similarity join "
      "(the documented exact all-pairs baseline)."),
     ("dedup_ngram_jaccard_guarded", q_ngram_jaccard_guarded,
      ORACLE_NGRAM_JACCARD_GUARDED,
-     "E2 guard-ON twin (round 9): the stop-shingle broadcast "
-     "anti-join REGISTERED AND FIRING (df cap 4 so fixture shingles "
+     "E2 guard-ON twin (round 9): the stop-shingle guard "
+     "REGISTERED AND FIRING (df cap 4 so fixture shingles "
      "are hot), oracle-mirrored — the sub-quadratic scale path under "
      "the hash gate (the unguarded twin measured 8.4x per 5x at the "
      "125x tier)."),
@@ -1948,7 +1880,7 @@ QUERIES = [
      "(sub-quadratic; no shingle self-join)."),
     ("dedup_lsh_neardup_guarded", q_lsh_near_dup_guarded,
      ORACLE_LSH_GUARDED,
-     "E2 guard-ON twin (round 8): the hot-bucket broadcast anti-join "
+     "E2 guard-ON twin (round 8): the hot-bucket guard "
      "REGISTERED AND FIRING (cap 4 so fixture buckets are hot), "
      "oracle-mirrored — the production drop semantics under the hash "
      "gate."),

@@ -28,8 +28,8 @@ from grpc_map_reduce_spark.functions.gif import decode_gif, encode_gif
 from grpc_map_reduce_spark.functions.jpeg import decode_jpeg, encode_jpeg
 from grpc_map_reduce_spark.functions.png import decode_png, encode_png
 from grpc_map_reduce_spark.functions.wav import decode_wav, encode_wav
+from grpc_map_reduce_spark.operators.dedup import bucket_pairs
 from grpc_map_reduce_spark.sources.tables import table
-from grpc_map_reduce_spark.plans.checkpoint import PIN_LEVEL
 
 #: Metadata carried next to every media payload.
 MEDIA_META_DDL = "struct<format:string,width:int,height:int,n_frames:int>"
@@ -1293,9 +1293,10 @@ ORACLE_SPECTROGRAM = _spectrogram_oracle()
 # 4 bands × 14 bits guarantee every pair with Hamming ≤ 3 shares a
 # clean band (pigeonhole); candidates rescore by bit_count(xor).
 #
-# Scale: hashing is map-only over decoded media; the pair join is
-# O(images × 4) band rows bucket-joined — the same sub-quadratic
-# shape as the MinHash text path, never all-pairs.
+# Scale: hashing is map-only over decoded media and runs once; the
+# O(images × 4) band rows are exchanged once into bucket arrays whose
+# pairs are enumerated in-task (``dedup.bucket_pairs``) — the same
+# sub-quadratic shape as the MinHash text path, never all-pairs.
 DHASH_W, DHASH_H = 9, 7
 DHASH_BITS = (DHASH_W - 1) * DHASH_H  # 56
 DHASH_BANDS = 4
@@ -1342,8 +1343,7 @@ def phash_near_dup_pairs(media_df: DataFrame,
     ``max_bucket`` is the hot-bucket skew guard, ON by default (see
     :data:`DHASH_MAX_BUCKET_DEFAULT` for the measured 125x blowup it
     prevents) and mirrored in the oracle's HAVING filter; ``None``
-    restores the exact unguarded band join."""
-    sigs = dhash_images(media_df).localCheckpoint(eager=False, storageLevel=PIN_LEVEL)
+    restores the exact unguarded band pairs."""
     bands = F.array(*[
         F.struct(
             F.lit(j).alias("band_idx"),
@@ -1352,29 +1352,16 @@ def phash_near_dup_pairs(media_df: DataFrame,
         )
         for j in range(DHASH_BANDS)
     ])
-    exploded = sigs.select("doc_id", "dhash", F.explode(bands).alias("b")) \
+    exploded = (
+        dhash_images(media_df)
+        .select("doc_id", "dhash", F.explode(bands).alias("b"))
         .select("doc_id", "dhash", "b.band_idx", "b.key")
-    if max_bucket is not None:
-        exploded = exploded.localCheckpoint(
-            eager=False, storageLevel=PIN_LEVEL
-        )
-        hot = (
-            exploded.groupBy("band_idx", "key")
-            .agg(F.count("*").alias("sz"))
-            .filter(F.col("sz") > max_bucket)
-            .select("band_idx", "key")
-        )
-        exploded = exploded.join(
-            F.broadcast(hot), ["band_idx", "key"], "left_anti"
-        )
-    a, b = exploded.alias("a"), exploded.alias("b")
+    )
+    # The hash rides in the member struct, so the rescore needs no
+    # join back to the signatures.
     cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        bucket_pairs(exploded, ["band_idx", "key"],
+                     F.struct("doc_id", "dhash"), max_bucket)
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from grpc_map_reduce_spark.operators.dedup import bucket_pairs, cross_bucket_pairs
 from grpc_map_reduce_spark.sources.tables import table
 from grpc_map_reduce_spark.plans.checkpoint import iter_checkpoint
 
@@ -366,32 +367,58 @@ def embedding_lsh_candidates(corpus: DataFrame, n_bits: int = EMB_LSH_BITS,
     """Candidate pairs (id_a < id_b, n_bands) sharing ≥1 hyperplane-LSH
     band bucket.
 
-    Signatures via :func:`_emb_band_keys`; the bucket self-join
-    shuffles O(vectors × bands) short rows, never pair rows.
-    ``max_bucket`` drops oversized buckets (same skew rationale as
-    the MinHash path).
+    Signatures via :func:`_emb_band_keys` (one Arrow pass); pairs via
+    the :func:`~grpc_map_reduce_spark.operators.dedup.bucket_pairs`
+    kernel, which shuffles O(vectors × bands) short rows once, never
+    pair rows.  ``max_bucket`` drops oversized buckets before pair
+    fan-out (same skew rationale as the MinHash path).
     """
     exploded = _emb_band_keys(
         corpus, n_bits, rows_per_band, seed, id_col, vec_col
     )
-    if max_bucket is not None:
-        hot = (
-            exploded.groupBy("band_idx", "key")
-            .agg(F.count("*").alias("sz"))
-            .filter(F.col("sz") > max_bucket)
-            .select("band_idx", "key")
-        )
-        exploded = exploded.join(F.broadcast(hot), ["band_idx", "key"], "left_anti")
-    a, b = exploded.alias("a"), exploded.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        bucket_pairs(exploded, ["band_idx", "key"], "id", max_bucket)
+        .groupBy(F.col("a").alias("id_a"), F.col("b").alias("id_b"))
         .agg(F.count("*").alias("n_bands"))
+    )
+
+
+def _cosine_rescore(cand: DataFrame, left: DataFrame, right: DataFrame,
+                    id_col: str, vec_col: str,
+                    threshold: float) -> DataFrame:
+    """Exact-cosine rescore of candidate pairs: ``cand``'s two id
+    columns name the output (a, b, sim); ``a`` ids are looked up in
+    ``left``, ``b`` ids in ``right``.  Keeps pairs whose cosine,
+    rounded to 6 dp, is ≥ ``threshold``.  Work is O(candidates)."""
+    import numpy as np
+    import pandas as pd
+
+    a, b = cand.columns
+    va = left.select(F.col(id_col).cast("long").alias(a),
+                     F.col(vec_col).alias("_va"))
+    vb = right.select(F.col(id_col).cast("long").alias(b),
+                      F.col(vec_col).alias("_vb"))
+
+    def _rescore(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            A = np.array(pdf["_va"].tolist(), dtype=np.float64)
+            B = np.array(pdf["_vb"].tolist(), dtype=np.float64)
+            A /= np.linalg.norm(A, axis=1, keepdims=True)
+            B /= np.linalg.norm(B, axis=1, keepdims=True)
+            sim = np.round(np.einsum("ij,ij->i", A, B), 6)
+            keep = sim >= threshold
+            yield pd.DataFrame({
+                a: pdf[a].to_numpy(np.int64)[keep],
+                b: pdf[b].to_numpy(np.int64)[keep],
+                "sim": sim[keep],
+            })
+
+    return (
+        cand.join(va, a)
+        .join(vb, b)
+        .mapInPandas(_rescore, schema=f"{a} long, {b} long, sim double")
     )
 
 
@@ -413,40 +440,10 @@ def embedding_lsh_near_dup(corpus: DataFrame, threshold: float = 0.4,
     :func:`hyperplanes`), so ORACLE_EMB_LSH replays signatures →
     banding → candidates → exact rescore entirely in SQL.
     """
-    import numpy as np
-    import pandas as pd
-
     cand = embedding_lsh_candidates(
         corpus, n_bits, rows_per_band, seed, id_col, vec_col, max_bucket
     ).select("id_a", "id_b")
-    va = corpus.select(
-        F.col(id_col).cast("long").alias("id_a"), F.col(vec_col).alias("_va")
-    )
-    vb = corpus.select(
-        F.col(id_col).cast("long").alias("id_b"), F.col(vec_col).alias("_vb")
-    )
-
-    def _rescore(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            A = np.array(pdf["_va"].tolist(), dtype=np.float64)
-            B = np.array(pdf["_vb"].tolist(), dtype=np.float64)
-            A /= np.linalg.norm(A, axis=1, keepdims=True)
-            B /= np.linalg.norm(B, axis=1, keepdims=True)
-            sim = np.round(np.einsum("ij,ij->i", A, B), 6)
-            keep = sim >= threshold
-            yield pd.DataFrame({
-                "id_a": pdf["id_a"].to_numpy(np.int64)[keep],
-                "id_b": pdf["id_b"].to_numpy(np.int64)[keep],
-                "sim": sim[keep],
-            })
-
-    return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .mapInPandas(_rescore, schema="id_a long, id_b long, sim double")
-    )
+    return _cosine_rescore(cand, corpus, corpus, id_col, vec_col, threshold)
 
 
 #: Bounded input size for the recall-stress harness: the adversarial
@@ -777,57 +774,21 @@ def embedding_incremental_matches(
     exactly rescored.  The per-incoming report below and the
     streaming twin (streaming/dedup.py) both reduce to this, exactly
     as the text side's ``incremental_scored_pairs``."""
-    import numpy as np
-    import pandas as pd
 
-    cor_k = _emb_band_keys(
-        corpus, n_bits, rows_per_band, seed, id_col, vec_col
-    ).withColumnRenamed("id", "match_id")
-    if max_bucket is not None:
-        hot = (
-            cor_k.groupBy("band_idx", "key")
-            .agg(F.count("*").alias("sz"))
-            .filter(F.col("sz") > max_bucket)
-            .select("band_idx", "key")
-        )
-        cor_k = cor_k.join(F.broadcast(hot), ["band_idx", "key"], "left_anti")
-    inc_k = _emb_band_keys(
-        incoming, n_bits, rows_per_band, seed, id_col, vec_col
-    )
+    def side(df: DataFrame, is_corpus: bool) -> DataFrame:
+        return _emb_band_keys(
+            df, n_bits, rows_per_band, seed, id_col, vec_col
+        ).withColumn("is_corpus", F.lit(is_corpus))
+
     cand = (
-        inc_k.join(cor_k, ["band_idx", "key"])
-        .select("id", "match_id")
+        cross_bucket_pairs(
+            side(incoming, False).unionByName(side(corpus, True)),
+            ["band_idx", "key"], "id", "is_corpus", max_bucket,
+        )
+        .select(F.col("a").alias("id"), F.col("b").alias("match_id"))
         .distinct()
     )
-    va = incoming.select(
-        F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("_va")
-    )
-    vb = corpus.select(
-        F.col(id_col).cast("long").alias("match_id"),
-        F.col(vec_col).alias("_vb"),
-    )
-
-    def _rescore(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            A = np.array(pdf["_va"].tolist(), dtype=np.float64)
-            B = np.array(pdf["_vb"].tolist(), dtype=np.float64)
-            A /= np.linalg.norm(A, axis=1, keepdims=True)
-            B /= np.linalg.norm(B, axis=1, keepdims=True)
-            sim = np.round(np.einsum("ij,ij->i", A, B), 6)
-            keep = sim >= threshold
-            yield pd.DataFrame({
-                "id": pdf["id"].to_numpy(np.int64)[keep],
-                "match_id": pdf["match_id"].to_numpy(np.int64)[keep],
-                "sim": sim[keep],
-            })
-
-    return (
-        cand.join(va, "id")
-        .join(vb, "match_id")
-        .mapInPandas(_rescore, schema="id long, match_id long, sim double")
-    )
+    return _cosine_rescore(cand, incoming, corpus, id_col, vec_col, threshold)
 
 
 def embedding_incremental_neardup(
@@ -843,10 +804,12 @@ def embedding_incremental_neardup(
     near-dup matches in the corpus — the embedding twin of
     dedup.incremental_dedup (dedup.py one-sided design).
 
-    The band join is strictly ONE-SIDED: incoming bands probe corpus
-    bands, so a corpus×corpus (or incoming×incoming) pair structure
-    never exists in the plan — the shape that stays cheap when a
-    small shard arrives against a 100 TB index.  The hot-bucket
+    Candidate pairs are strictly ONE-SIDED: both sides' band rows
+    meet in one exchange, and each bucket crosses its incoming members
+    with its corpus members only (``dedup.cross_bucket_pairs``), so a
+    corpus×corpus (or incoming×incoming) pair structure never exists
+    in the plan — the shape that stays cheap when a small shard
+    arrives against a 100 TB index.  The hot-bucket
     guard applies to the CORPUS side (a degenerate corpus bucket is
     the skew risk; the incoming shard is small by definition).
 

@@ -80,6 +80,23 @@ def test_bench_emits_one_valid_json_line_with_warm_mins():
     assert out["cold_over_warm"] == round(
         sum(out["queries_cold"].values()) / out["value"], 3
     )
+    # Final-line size, projected to the full inventory in the fast
+    # tier: rebuild the line with every registered name in the
+    # per-query map (cycling this run's measured values) and the ten
+    # longest names as `slowest`.  The output contract keeps the
+    # final line under 8 KB.
+    from grpc_map_reduce_spark import registry
+
+    names = sorted(registry.all_queries(), key=len, reverse=True)
+    vals = list(tail["queries"].values())
+    full = {n: vals[i % len(vals)] for i, n in enumerate(names)}
+    projected = json.dumps(
+        dict(tail, queries=full, slowest=dict(list(full.items())[:10]))
+    )
+    assert len(projected) < 8000, (
+        f"final bench line projects to {len(projected)} B over "
+        f"{len(names)} queries; the contract limit is 8,000 B"
+    )
 
 
 @pytest.mark.slow

@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from grpc_map_reduce_spark.operators.dedup import (
+    _shingle_sets,
     lsh_near_dup,
     minhash_candidates,
     ngram_jaccard_pairs,
@@ -59,10 +60,18 @@ def test_lsh_near_dup_plan_has_no_shingle_self_join(spark, sf_dir):
     assert not shingle_eq_join.search(composed), (
         "full shingle self-join leaked into LSH path"
     )
-    # ...and the regex DOES catch the exact path's self-join, so the
-    # assertion above is load-bearing, not vacuous.
+    # ...and the regex DOES catch a shingle self-join, so the
+    # assertion above is load-bearing, not vacuous.  (The exact path,
+    # ngram_jaccard_pairs, enumerates pairs inside per-shingle arrays
+    # and plans no join, so the witness is built by hand.)
+    sh = _shingle_sets(docs, pin=False).select(
+        "doc_id", F.explode("sh_set").alias("sh_h"))
+    self_join = sh.alias("a").join(
+        sh.alias("b"), (F.col("a.sh_h") == F.col("b.sh_h"))
+        & (F.col("a.doc_id") < F.col("b.doc_id")))
+    assert shingle_eq_join.search(explain_str(self_join, "formatted"))
     exact = explain_str(ngram_jaccard_pairs(docs), "formatted")
-    assert shingle_eq_join.search(exact)
+    assert not shingle_eq_join.search(exact)
 
 
 def test_max_bucket_guard_drops_hot_buckets(spark, sf_dir):
@@ -81,6 +90,33 @@ def test_minhash_candidates_deterministic(spark, sf_dir):
     a = sorted((r.doc_a, r.doc_b, r.n_bands) for r in minhash_candidates(docs).collect())
     b = sorted((r.doc_a, r.doc_b, r.n_bands) for r in minhash_candidates(docs).collect())
     assert a == b and len(a) > 0
+
+
+def test_duplicate_doc_id_never_pairs_with_itself(spark):
+    """Pair kernels drop pairs of two equal ids: a doc_id duplicated in
+    the input must not pair with itself, on the MinHash candidate path,
+    the composed LSH→rescore path or the dHash image path, and its
+    pairs with the other docs must survive."""
+    from grpc_map_reduce_spark.operators.multimodal import (
+        attach_png_media,
+        phash_near_dup_pairs,
+    )
+
+    text = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
+            "lambda mu nu xi omicron pi rho sigma tau upsilon ") * 3
+    docs = spark.createDataFrame(
+        [(1, text), (1, text), (2, text),
+         (3, "completely different words here " * 10)],
+        "doc_id long, text string",
+    )
+    for name, df in [
+        ("minhash_candidates", minhash_candidates(docs)),
+        ("lsh_near_dup", lsh_near_dup(docs)),
+        ("phash_near_dup_pairs", phash_near_dup_pairs(attach_png_media(docs))),
+    ]:
+        pairs = {(r.doc_a, r.doc_b) for r in df.collect()}
+        assert all(a != b for a, b in pairs), (name, pairs)
+        assert (1, 2) in pairs, (name, pairs)
 
 
 def test_incremental_matches_symmetric_cross_side(spark, sf_dir):

@@ -19,6 +19,11 @@ from grpc_map_reduce_spark.plans.audit import explain_str, plan_audit
 from grpc_map_reduce_spark.sources.tables import table
 
 
+#: Join nodes in a formatted plan: counting the numbered detail headers
+#: counts each node once.
+JOIN_RE = r"\(\d+\) (?:SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin)"
+
+
 def _plan(spark, sf_dir, name):
     return explain_str(registry.all_queries()[name].spark_fn(spark, sf_dir))
 
@@ -430,12 +435,10 @@ def test_sketch_rescore_has_zero_array_transport(spark, sf_dir):
     # band rows twice; the bucket-array form exchanges them once and
     # joins nothing.  The exact path keeps exactly its two set
     # re-joins (the rescore), nothing else.
-    # Count the numbered detail headers so each node counts once.
-    join_re = r"\(\d+\) (?:SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin)"
-    assert len(re.findall(join_re, plan)) == 0, plan
+    assert len(re.findall(JOIN_RE, plan)) == 0, plan
     exact = _plan(spark, sf_dir, "dedup_lsh_neardup")
     assert "array_intersect" in exact  # the twin still pays it
-    assert len(re.findall(join_re, exact)) == 2, exact
+    assert len(re.findall(JOIN_RE, exact)) == 2, exact
     plan = _plan(spark, sf_dir, "docs_lang_id")
     # round 11: the registered plan is ONE map-only Arrow pass — the
     # ≤ langs×K profile rides in the UDF closure, so there is no join
@@ -498,11 +501,29 @@ def test_cc_star_round_plans_without_joins(spark):
         [(1, 2), (2, 3), (5, 6)], "src long, dst long"
     )
     plan = explain_str(_small_star(_large_star(df)))
-    join_re = r"\(\d+\) (?:SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin)"
-    assert not re.findall(join_re, plan), plan
+    assert not re.findall(JOIN_RE, plan), plan
     n_exchanges = len(re.findall(r"\(\d+\) Exchange", plan))
     assert n_exchanges <= 4, plan
     assert len(re.findall(r"\(\d+\) Window", plan)) == 2, plan
+
+
+def test_candidate_pairs_plan_without_pair_joins(spark, sf_dir):
+    """Every banded / shingle candidate path enumerates its pairs inside
+    bucket arrays (dedup.bucket_pairs / cross_bucket_pairs): no band or
+    shingle self-join, no hot-bucket anti-join.  The joins left are the
+    exact-cosine rescore (2: one lookup per pair side) and, for the
+    incremental report, the total-output left join of the incoming
+    ids."""
+    for name, n_joins in [
+        ("multimodal_phash_pairs", 0),
+        ("embedding_lsh_selective", 2),
+        ("embedding_lsh_recall_stress", 2),
+        ("embedding_incremental_neardup", 3),
+        ("dedup_ngram_jaccard_guarded", 0),
+    ]:
+        plan = _plan(spark, sf_dir, name)
+        assert len(re.findall(JOIN_RE, plan)) == n_joins, (name, plan)
+        assert "LeftAnti" not in plan, (name, plan)
 
 
 def test_lsh_auto_shares_one_band_rows_subtree(spark, sf_dir):

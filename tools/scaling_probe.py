@@ -23,8 +23,9 @@ Probed claims (each maps to a SURVEY §8 scale assertion):
                            wedge count is bounded by Σ deg², which
                            replication grows linearly (cliques don't
                            span replicas)
-  * orders_market_basket — apriori-gated pair self-join: bounded by
-                           Σ basket², baskets replicate unchanged
+  * orders_market_basket — apriori-gated in-basket pair enumeration:
+                           bounded by Σ basket², baskets replicate
+                           unchanged
   * phrase_search        — pruned posting-list adjacency join:
                            ~linear in postings of the probe phrase
 
