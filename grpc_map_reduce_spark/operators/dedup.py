@@ -1499,17 +1499,20 @@ def lsh_near_dup_auto(docs: DataFrame, n: int = 3,
     and the chosen branch previously each derived band rows from
     scratch — two full tokenize+minhash passes per execution (4.2 s
     warm at fixture scale, two corpus scans at 100 TB).  Now the
-    shingle sets are persisted and the band rows checkpointed ONCE;
-    the census aggregates over the checkpoint, the chosen branch's
+    shingle sets and the band rows are each checkpointed ONCE; the
+    census aggregates over the band checkpoint, the chosen branch's
     candidate join reads the same checkpoint, and the exact branch's
-    rescore reads the same persisted sets.  Both pins are DISK_ONLY
+    rescore reads the checkpointed sets.  Both pins are DISK_ONLY
     (guide §5): even the SERIALIZED memory+disk level OOM'd the 8 GiB
     cap at the 3125× tier in round 11 (the guard pin, ledger item 7 —
     storage-pool unroll competing with 32 concurrent scan tasks), and
     disk-only blocks never compete with execution memory, while at
     fixture scale the page cache makes the re-read free.
-    The sketch branch never reads the sets again, so they
-    are unpersisted at decision time.  Values are md5-deterministic,
+    Both are local checkpoints, not ``persist``: a persisted frame
+    stays registered in the session's CacheManager, which then
+    silently serves every later identical ``_shingle_sets`` plan from
+    it; checkpoint blocks go when the frame is garbage-collected.
+    Values are md5-deterministic,
     so sharing changes no output bit — the census sum here is
     algebraically the census's ``sum(n_buckets · sz·(sz−1) DIV 2)``
     regrouped per bucket (sz·(sz−1) is always even, so DIV 2 is exact
@@ -1517,7 +1520,8 @@ def lsh_near_dup_auto(docs: DataFrame, n: int = 3,
     """
     from pyspark import StorageLevel
 
-    sets = _shingle_sets(docs, n, pin=False).persist(StorageLevel.DISK_ONLY)
+    sets = _shingle_sets(docs, n, pin=False).localCheckpoint(
+        eager=False, storageLevel=StorageLevel.DISK_ONLY)
     bands = _band_rows(docs, n, rows_per_band, sets).localCheckpoint(
         eager=False, storageLevel=StorageLevel.DISK_ONLY)
     sizes = bands.groupBy("band_idx", "key").agg(F.count("*").alias("sz"))
@@ -1537,7 +1541,6 @@ def lsh_near_dup_auto(docs: DataFrame, n: int = 3,
     if total > pair_budget:
         # Zero-transport branch: candidates re-read the checkpointed
         # band rows; the shingle sets are never touched again.
-        sets.unpersist(blocking=False)
         out = lsh_near_dup_sketch(docs, n, threshold, rows_per_band,
                                   max_bucket, bands=bands)
         return out.select(

@@ -28,6 +28,7 @@ cross-engine checkability.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -489,7 +490,10 @@ def kmv_estimate(df: DataFrame, col: str, k: int = KMV_K) -> DataFrame:
     vals = (
         df.select(F.col(col).alias("v")).where(F.col("v").isNotNull())
         .distinct()
-        .localCheckpoint(eager=False, storageLevel=PIN_LEVEL)
+        # DISK_ONLY: the distinct set is O(orders) rows for
+        # l_orderkey, and memory-level pins at that volume OOM'd the
+        # 8 GiB cap at the probe tiers (see lsh_near_dup_auto).
+        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     )
     h = F.conv(
         F.substring(F.md5(F.col("v").cast("string")), 1, 15), 16, 10
@@ -548,7 +552,7 @@ def kmv_merge_estimate(df: DataFrame, col: str, k: int = KMV_K) -> DataFrame:
     vals = (
         df.select(F.col(col).alias("v")).where(F.col("v").isNotNull())
         .distinct()
-        .localCheckpoint(eager=False, storageLevel=PIN_LEVEL)
+        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     )
     h = F.conv(
         F.substring(F.md5(F.col("v").cast("string")), 1, 15), 16, 10

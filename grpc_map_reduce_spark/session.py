@@ -98,6 +98,15 @@ DEFAULT_CONF: dict[str, str] = {
     # the bench's between-query System.gc() is the same medicine at
     # a coarser grain.
     "spark.cleaner.periodicGC.interval": "2min",
+    # Janino's compiled-class cache holds 100 entries by default, but
+    # one pass of the 9-query perfbench `query_mix` generates 111
+    # distinct classes and one pass of the 175-query inventory at
+    # sf0.01 generates 2,086: with 100 slots every repeated query
+    # recompiles (77 classes per warm query_mix pass) and the JIT then
+    # compiles the fresh classes again.  4096 holds the whole
+    # inventory with headroom; metaspace was ~200 MB after that
+    # inventory pass.  Static SQL conf: read at session start only.
+    "spark.sql.codegen.cache.maxEntries": "4096",
     "spark.sql.session.timeZone": "UTC",
     "spark.ui.showConsoleProgress": "false",
     "spark.ui.enabled": "false",

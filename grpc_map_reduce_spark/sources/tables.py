@@ -12,6 +12,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLE_NAMES: tuple[str, ...] = (
     "region",
@@ -33,13 +34,60 @@ DIMENSION_TABLES: frozenset[str] = frozenset(
 )
 
 
+#: SQL confs whose values change the schema Spark infers from parquet
+#: footers: the ones ``ParquetToSparkSchemaConverter`` reads, plus
+#: ``mergeSchema``, which decides which footers are read.
+_SCHEMA_CONFS: tuple[str, ...] = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.mergeSchema",
+)
+
+#: path -> (fingerprint, inferred schema); see ``table``.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one fixture table as a DataFrame (lazy parquet scan)."""
+    """Load one fixture table as a DataFrame (lazy parquet scan).
+
+    The inferred schema is cached per path, so only the first call
+    runs Spark's one-task schema-inference job (``mergeSchemasInParallel``)
+    and later calls read with ``spark.read.schema(s)``.  The cache
+    keys on the path, the length and modification time of every file
+    under it (one Hadoop ``FileSystem.listFiles`` call, so it works on
+    any filesystem Spark reads), and the values of the confs in
+    ``_SCHEMA_CONFS``: a rewritten file or a changed conf infers
+    again.  It holds the ``StructType``, never the DataFrame, because
+    every call must return a fresh relation with its own attribute
+    ids: a query that reads one table twice (q21 reads ``lineitem``
+    twice) self-joins on them.
+    """
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     if name == "events":
         return _events_table(spark, sf_dir)
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return _parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
+
+
+def _parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema cache of ``table``."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    files = fs.listFiles(jpath, True)
+    stats = []
+    while files.hasNext():
+        st = files.next()
+        stats.append((st.getPath().toString(), st.getLen(), st.getModificationTime()))
+    fingerprint = (tuple(stats), tuple(spark.conf.get(k) for k in _SCHEMA_CONFS))
+    cached = _SCHEMAS.get(path)
+    if cached is not None and cached[0] == fingerprint:
+        return spark.read.schema(cached[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (fingerprint, df.schema)
+    return df
 
 
 def spread(df: DataFrame, *cols: str) -> DataFrame:
@@ -79,7 +127,7 @@ def _events_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import LongType
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    df = _parquet(spark, os.path.join(sf_dir, "events.parquet"))
     if isinstance(df.schema["ts"].dataType, LongType):
         # `div` (integer division) — `/` would route int64 nanos
         # through a double and round away microseconds above 2^53.

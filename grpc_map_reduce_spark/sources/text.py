@@ -14,20 +14,27 @@ from pyspark.sql import functions as F
 
 
 def read_text_corpus(spark: SparkSession, path: str, *, whole_files: bool = True) -> DataFrame:
-    """Read a directory of text files as ``(source, text)`` rows.
+    """Read a directory of text files as ``(source, text)`` rows, with
+    ``source`` the file's bare on-disk name.
 
     ``whole_files=True`` matches the reference's one-row-per-file
-    granularity; ``False`` reads line-per-row (better scan parallelism
-    for very large single files — the reference's >5 MB failure mode,
-    README.md:158, does not exist here).
+    granularity through the JVM-native ``binaryFile`` source: no
+    Python worker and no schema-inference job.  A file of zero bytes
+    yields no row; it carries no tokens, so ``wc``/``ii`` output is
+    the same as if it had one.  ``False`` reads line-per-row (better
+    scan parallelism for very large single files — the reference's
+    >5 MB failure mode, README.md:158, does not exist here).
     """
     if whole_files:
-        rdd = spark.sparkContext.wholeTextFiles(path)
-        df = rdd.toDF(["source", "text"])
-    else:
-        df = spark.read.text(path).select(
-            F.input_file_name().alias("source"), F.col("value").alias("text")
+        # `path` is the decoded on-disk path; strip the directory the
+        # way invIndexReduce strips the staging prefix "input_"
+        # (reducer.go:181).
+        return spark.read.format("binaryFile").load(path).select(
+            F.element_at(F.split("path", "/"), -1).alias("source"),
+            F.col("content").cast("string").alias("text"),
         )
-    # Strip the directory prefix the way invIndexReduce strips the
-    # staging prefix "input_" (reducer.go:181) — keep the bare name.
-    return df.withColumn("source", F.element_at(F.split("source", "/"), -1))
+    # `_metadata.file_name` is URI-encoded ("%20" for a space, "%25"
+    # for "%").  `url_decode` is form decoding, which would also turn
+    # a literal "+" into a space, so "+" is escaped first.
+    name = F.url_decode(F.regexp_replace("_metadata.file_name", r"\+", "%2B"))
+    return spark.read.text(path).select(name.alias("source"), F.col("value").alias("text"))

@@ -244,6 +244,21 @@ def test_auto_planner_picks_exact_under_budget_and_matches(spark, sf_dir):
     assert {(r.doc_a, r.doc_b): r.score for r in got} == want
 
 
+def test_auto_planner_exact_branch_leaves_cache_manager_empty(spark, sf_dir):
+    """The exact branch's shingle-set pin must not stay registered in
+    the session's CacheManager after the call: a registered frame
+    silently serves every later identical ``_shingle_sets`` plan."""
+    from grpc_map_reduce_spark.operators.dedup import lsh_near_dup_auto
+
+    spark.catalog.clearCache()
+    docs = table(spark, sf_dir, "documents")
+    for _ in range(2):
+        dec: list = []
+        lsh_near_dup_auto(docs, max_bucket=None, decision=dec).collect()
+        assert dec == [False], "fixture volume must take the exact branch"
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_auto_planner_flips_to_sketch_over_budget(spark, sf_dir):
     """Forcing the budget to zero must flip the SAME corpus onto the
     sketch branch: used_sketch True everywhere, scores equal to the

@@ -530,18 +530,18 @@ def test_lsh_auto_shares_one_band_rows_subtree(spark, sf_dir):
     """Round 12 (VERDICT r11 item 2): the auto planner's census and
     its chosen branch must share ONE band-rows pass.  The returned
     (exact-branch) plan therefore reads the band rows from the
-    census's checkpoint (ExistingRDD) and the shingle sets from the
-    persisted relation (InMemoryTableScan) — so the branch must not
-    re-derive band rows: no ``array_min`` (the MinHash signature
-    projection) anywhere in the executed tree.  (ArrowEvalPython still
-    appears TEXTUALLY — formatted mode numbers the cached
-    InMemoryRelation's stored build plan — so the gate is on the
-    signature math and the two scan sources, not on the tokenizer's
-    name.)"""
+    census's checkpoint and the shingle sets, on both rescore sides,
+    from their own checkpoint: three ExistingRDD scans — so the branch
+    must not re-derive band rows or sets: no ``array_min`` (the
+    MinHash signature projection) and no tokenizer (ArrowEvalPython)
+    anywhere in the executed tree.  The sets are
+    a local checkpoint, not a CacheManager entry (no
+    InMemoryTableScan), so they do not outlive the call."""
     plan = _plan(spark, sf_dir, "dedup_lsh_neardup_auto")
-    assert re.findall(r"\(\d+\) Scan ExistingRDD", plan), plan
-    assert re.findall(r"\(\d+\) InMemoryTableScan", plan), plan
+    assert len(re.findall(r"\(\d+\) Scan ExistingRDD", plan)) == 3, plan
+    assert "InMemoryTableScan" not in plan, plan
     assert "array_min" not in plan, plan
+    assert "ArrowEvalPython" not in plan, plan
 
 
 def test_kmv_profile_single_scan_per_column(spark, sf_dir):

@@ -24,6 +24,9 @@ CORPUS = {
     # Unicode letters must be kept whole (ï, é, Σ, ß are letters; the
     # digit and dash split): Go's IsLetter semantics, not [a-zA-Z].
     "d.txt": "naïve café Σigma straße 7Σigma The-the",
+    # A name Hadoop paths URI-encode (space, "%", "+"): every mode must
+    # report the on-disk name, not "ë%20x%2520+.txt".
+    "ë x%20+.txt": "Ünïcode file names: ë, x+y 20%",
 }
 
 # Python twin of Go unicode.IsLetter splitting: [\W\d_] is exactly the
@@ -127,6 +130,7 @@ def test_read_text_corpus_granularity(spark, tmp_path):
     assert {r.source: r.text for r in whole} == CORPUS
 
     lines = read_text_corpus(spark, corpus_dir, whole_files=False).collect()
+    assert {r.source for r in lines} == set(CORPUS)
     # line-granularity: c.txt contributes 3 rows
     assert sum(1 for r in lines if r.source == "c.txt") == 3
 
