@@ -1,4 +1,4 @@
-"""Text expression helpers — all JVM-side Column expressions.
+"""Text helpers: JVM-side tokenizer Columns and the shingle hasher.
 
 Tokenization contract (FIXTURES.md): the reference splits text on
 every non-letter rune (``unicode.IsLetter``, mapper.go:181) and
@@ -16,11 +16,16 @@ modes:
     non-ASCII or case-sensitive corpus produces the reference's
     output byte-for-byte.
 
-Everything here returns a ``Column`` so expressions stay inside
-whole-stage codegen — no Python UDFs on the tokenize path.
+:func:`tokens` and :func:`words` return a ``Column`` so the word-count
+tokenizer stays inside whole-stage codegen.  Shingle sets are the one
+Python path: :func:`shingle_hasher` tokenizes, shingles and hashes one
+document, and every shingle-set producer calls it.
 """
 
 from __future__ import annotations
+
+import re
+from hashlib import md5
 
 import pandas as pd
 from pyspark.sql import Column
@@ -56,96 +61,56 @@ def words(text: Column | str, *, lowercase: bool = True,
     )
 
 
-def shingles(text: Column | str, n: int = 3, *, lowercase: bool = True) -> Column:
-    """``array<string>`` of word ``n``-gram shingles (distinct not applied).
+def shingle_hasher(n: int = 3):
+    """THE per-document shingling of every shingle-set path (the
+    MinHash kernel in ``operators/dedup.py``, its streaming twin, and
+    :func:`distinct_shingle_hashes_udf`): a function from one text to
+    its DISTINCT word ``n``-gram shingles as 60-bit hashes, in
+    first-occurrence order.
 
-    Built with ``transform`` over token indices — stays JVM-side.
-    Documents shorter than ``n`` words yield a single shingle of all
-    their words (never an empty array for non-empty text).
+    Tokens are the default-mode :func:`words` (ASCII-lower, split on
+    :data:`TOKEN_SPLIT_RE`); a document of at most ``n`` words is one
+    shingle of all its words, and a document without words (or a NULL
+    text) has none.  Each shingle hashes to the top 60 bits of its
+    md5 — ``('0x' || md5(s)[:15])::int64``, the same value the DuckDB
+    oracles compute.
 
-    NOTE: higher-order-function lambdas are interpreted (outside
-    whole-stage codegen) and Catalyst freely duplicates this whole
-    expression into inferred filters and generator projections,
-    re-running the tokenizer per slice.  For the shingle→explode→join
-    hot path use :func:`distinct_shingles_udf` instead; this Column
-    version remains for small/one-shot expression contexts.
-    """
-    ws = words(text, lowercase=lowercase)
-    n_sh = F.greatest(F.size(ws) - F.lit(n - 1), F.lit(1))
-    return F.transform(
-        F.sequence(F.lit(0), n_sh - F.lit(1)),
-        lambda i: F.concat_ws(" ", F.slice(ws, i + F.lit(1), F.lit(n))),
-    )
+    It is returned as a closure so Spark ships it to Python workers by
+    value: a worker runs it without importing this package or pandas."""
+    split = re.compile(TOKEN_SPLIT_RE).split
 
+    def shingle_hashes(text: str | None) -> list[int]:
+        ws = [w for w in split(text.lower()) if w] if text else []
+        grams = dict.fromkeys(
+            " ".join(ws[i:i + n]) for i in range(max(len(ws) - n + 1, 1))
+        ) if ws else ()
+        return [int.from_bytes(md5(g.encode()).digest()[:8], "big") >> 4
+                for g in grams]
 
-def distinct_shingles_udf(n: int = 3):
-    """Vectorized (Arrow) producer of the DISTINCT word ``n``-gram
-    shingle set — the scale path for near-dup similarity joins.
-
-    Semantics match ``array_distinct(shingles(text, n))`` exactly
-    (first-occurrence order), verified by the shared DuckDB oracle.
-    A pandas UDF here beats the Column expression ~10×: it is
-    evaluated exactly once per row as a dedicated ArrowEvalPython
-    node (marked nondeterministic so Catalyst cannot clone it into
-    inferred `size(...) > 0` filters), while the interpreted
-    higher-order-function tree gets duplicated and re-runs the regex
-    tokenizer inside every slice lambda.
-    """
-    import re
-
-    from pyspark.sql.functions import pandas_udf
-
-    token_re = re.compile(TOKEN_SPLIT_RE)
-
-    @pandas_udf("array<string>")
-    def _shingle(text: pd.Series) -> pd.Series:
-        out = []
-        for t in text:
-            ws = [w for w in token_re.split(t.lower()) if w]
-            if len(ws) <= n:
-                grams = [" ".join(ws)] if ws else []
-            else:
-                grams = [" ".join(ws[i:i + n]) for i in range(len(ws) - n + 1)]
-            out.append(list(dict.fromkeys(grams)))
-        return pd.Series(out)
-
-    return _shingle.asNondeterministic()
+    return shingle_hashes
 
 
 def distinct_shingle_hashes_udf(n: int = 3):
-    """Like :func:`distinct_shingles_udf` but emits each distinct
-    shingle's 60-bit hash — ``('0x' || md5(s)[:15])::int64``, the same
-    value the DuckDB oracles compute — instead of the string.
+    """Arrow-batched ``array<long>`` Column of :func:`shingle_hasher`,
+    for callers that need the hash set as an expression inside a larger
+    projection (``explode`` for a shingle-keyed aggregate or join).
 
-    This is the scale representation for every shingle join: shuffle
-    keys become fixed-width 8 B longs instead of ~20 B strings, set
-    intersections compare longs instead of hashing strings, and the
-    shingle text never leaves the Python worker.  Downstream counts
-    (document frequency, pair intersections, Jaccard) are identical to
-    the string formulation unless two distinct shingles collide in 60
-    bits — ~n²/2⁶¹, i.e. ~10⁻¹⁰ at fixture scale and a handful of
-    pairs globally even at 10¹⁰ distinct shingles.
+    Every shingle travels as its hash: shuffle keys are fixed-width 8 B
+    longs instead of ~20 B strings, set intersections compare longs,
+    and the shingle text never leaves the Python worker.  Downstream
+    counts (document frequency, pair intersections, Jaccard) are
+    identical to the string formulation unless two distinct shingles
+    collide in 60 bits — ~n²/2⁶¹, i.e. ~10⁻¹⁰ at fixture scale and a
+    handful of pairs globally even at 10¹⁰ distinct shingles.  Marked
+    nondeterministic so Catalyst evaluates it once per row instead of
+    cloning it into inferred ``size(...) > 0`` filters.
     """
-    import hashlib
-    import re
-
     from pyspark.sql.functions import pandas_udf
 
-    token_re = re.compile(TOKEN_SPLIT_RE)
+    hash_doc = shingle_hasher(n)
 
     @pandas_udf("array<long>")
     def _shingle_hashes(text: pd.Series) -> pd.Series:
-        out = []
-        for t in text:
-            ws = [w for w in token_re.split(t.lower()) if w]
-            if len(ws) <= n:
-                grams = [" ".join(ws)] if ws else []
-            else:
-                grams = [" ".join(ws[i:i + n]) for i in range(len(ws) - n + 1)]
-            out.append([
-                int(hashlib.md5(g.encode()).hexdigest()[:15], 16)
-                for g in dict.fromkeys(grams)
-            ])
-        return pd.Series(out)
+        return pd.Series([hash_doc(t) for t in text])
 
     return _shingle_hashes.asNondeterministic()

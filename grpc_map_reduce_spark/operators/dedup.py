@@ -14,11 +14,10 @@ Scale design:
     drop stop-shingles above a document frequency cap first
     (``max_df``).
   * Every shingle is represented by its 60-bit md5-derived hash from
-    the moment it leaves the tokenizer (functions.text.
-    distinct_shingle_hashes_udf): joins shuffle fixed-width 8 B longs,
-    set intersections compare longs, and the shingle text never leaves
-    the Python worker.  Counts are collision-identical to the string
-    formulation (~n²/2⁶¹).
+    the moment it leaves the tokenizer (functions.text.shingle_hasher):
+    joins shuffle fixed-width 8 B longs, set intersections compare
+    longs, and the shingle text never leaves the Python worker.  Counts
+    are collision-identical to the string formulation (~n²/2⁶¹).
 """
 
 from __future__ import annotations
@@ -28,12 +27,9 @@ import math
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
-from grpc_map_reduce_spark.functions.text import (
-    distinct_shingle_hashes_udf,
-    words,
-)
+from grpc_map_reduce_spark.functions.text import shingle_hasher, words
 from grpc_map_reduce_spark.sources.tables import spread, table
 from grpc_map_reduce_spark.plans.checkpoint import PIN_LEVEL
 
@@ -369,18 +365,78 @@ MINHASH_B = [3, 11, 29, 53, 97, 173, 313, 577, 1049, 1907, 3469, 6277, 11369, 20
 MINHASH_ROWS_PER_BAND = 2
 
 
+def _minhash_kernel(n: int, keep: list[str]):
+    """The MinHash kernel over Arrow batches: each batch's ``keep``
+    columns plus ``sh_set`` (:func:`shingle_hasher` of ``text``) and
+    ``sig`` (the 16 permutation mins ``min((A_i·(h mod P) + B_i) mod P)``
+    over the set, NULL for an empty set).  Each permutation is one
+    numpy pass over the whole batch's concatenated hashes, cut into
+    per-document mins by ``minimum.reduceat``.  A closure, like the
+    hasher, so a Python worker runs it without importing this package."""
+    hash_doc = shingle_hasher(n)
+
+    def sign(batches):
+        from itertools import chain
+
+        import numpy as np
+        import pyarrow as pa
+
+        def longs(values, offsets, valid=None):
+            # list<long> straight from numpy buffers: pa.array would
+            # import pandas into the worker
+            items = pa.Array.from_buffers(
+                pa.int64(), len(values), [None, pa.py_buffer(values)])
+            return pa.Array.from_buffers(
+                pa.list_(pa.int64()), len(offsets) - 1,
+                [valid, pa.py_buffer(offsets)], children=[items])
+
+        k = len(MINHASH_A)
+        for batch in batches:
+            sets = [hash_doc(t) for t in batch.column("text").to_pylist()]
+            lens = np.fromiter(map(len, sets), np.int64, len(sets))
+            ends = np.cumsum(lens)
+            flat = np.fromiter(chain.from_iterable(sets), np.int64,
+                               int(ends[-1]) if len(sets) else 0)
+            full = lens > 0
+            sig = np.empty((int(full.sum()), k), np.int64)
+            if len(sig):
+                h = flat % MINHASH_P
+                starts = (ends - lens)[full]
+                for i, (a, b) in enumerate(zip(MINHASH_A, MINHASH_B)):
+                    sig[:, i] = np.minimum.reduceat((a * h + b) % MINHASH_P, starts)
+            off = np.concatenate(([0], ends)).astype(np.int32)
+            sig_off = np.concatenate(([0], np.cumsum(full * k))).astype(np.int32)
+            valid = pa.py_buffer(np.packbits(full, bitorder="little"))
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(c) for c in keep]
+                + [longs(flat, off), longs(sig.ravel(), sig_off, valid)],
+                names=[*keep, "sh_set", "sig"],
+            )
+
+    return sign
+
+
+def _minhash_rows(df: DataFrame, n: int = 3) -> DataFrame:
+    """``df`` with its ``text`` column replaced by ``sh_set`` (the
+    distinct shingle-hash set, ``array<long>``) and ``sig`` (the 16
+    MinHash components, ``array<long>``, NULL when the set is empty);
+    every other column passes through.  One ``mapInArrow`` node runs
+    :func:`_minhash_kernel` — the batch sets and signatures and the
+    streaming twin's per-document enrichment are this one pass."""
+    keep = [f for f in df.schema.fields if f.name != "text"]
+    longs = ArrayType(LongType())
+    schema = StructType(keep + [StructField("sh_set", longs),
+                                StructField("sig", longs)])
+    return df.mapInArrow(_minhash_kernel(n, [f.name for f in keep]), schema)
+
+
 def _shingle_sets(docs: DataFrame, n: int = 3, pin: bool = True) -> DataFrame:
-    """(doc_id, sh_set) — each doc's DISTINCT shingle-HASH set
-    (``array<long>``, see functions.text.distinct_shingle_hashes_udf),
-    computed ONCE (lazy-checkpointed) so candidate generation and
-    rescoring share the tokenization work instead of re-running the
-    UDF.  Shingling runs as a vectorized Arrow UDF *after* a
-    repartition: the exchange spreads the work across all cores (the
-    corpus arrives as a handful of large parquet files), and the UDF
-    is a single ArrowEvalPython node evaluated once per row — the
-    Column-expression alternative gets duplicated by Catalyst into
-    inferred filters/generator projections and re-runs the tokenizer
-    per slice (measured ~10× slower at sf0.1; see functions.text).
+    """(doc_id, sh_set, sig) — each doc's DISTINCT shingle-HASH set and
+    its MinHash signature (:func:`_minhash_rows`), computed ONCE
+    (lazy-checkpointed) so candidate generation and rescoring share the
+    tokenization work.  The kernel runs *after* a repartition: the
+    exchange spreads the work across all cores (the corpus arrives as a
+    handful of large parquet files).
 
     ``pin=False`` skips the checkpoint: consumers that traverse the
     sets exactly ONCE (the band-census and sketch-rescore paths —
@@ -389,9 +445,7 @@ def _shingle_sets(docs: DataFrame, n: int = 3, pin: bool = True) -> DataFrame:
     OOM'd the 8 GiB cap for `dedup_band_volume_census` at the 3125×
     tier (~6 GB of sets for a query whose output is a ≤200-row
     histogram — SURVEY §8.11, round-10 finding)."""
-    out = spread(docs, "doc_id").select(
-        "doc_id", distinct_shingle_hashes_udf(n)("text").alias("sh_set")
-    )
+    out = _minhash_rows(spread(docs, "doc_id").select("doc_id", "text"), n)
     if pin:
         out = out.localCheckpoint(eager=False, storageLevel=PIN_LEVEL)
     return out
@@ -400,30 +454,16 @@ def _shingle_sets(docs: DataFrame, n: int = 3, pin: bool = True) -> DataFrame:
 def minhash_signatures(docs: DataFrame, n: int = 3,
                        sets: DataFrame | None = None,
                        pin: bool = True) -> DataFrame:
-    """Per-doc MinHash signature columns m0..m15.
-
-    Computed map-side: each permutation min is ``array_min`` over a
-    ``transform`` of the doc's shingle-hash array — same arithmetic as
-    the original explode→groupBy(min) formulation (hashes identical),
-    but zero row expansion and zero aggregate: the explode version
-    materialized docs×shingles rows only to re-collapse them, and at
-    125× fixture volume that row stream is the widest intermediate in
-    the whole LSH chain.  The ``size > 0`` filter reproduces explode's
-    drop of empty shingle sets (``array_min([]) = NULL`` would
-    otherwise bucket all empty docs together downstream)."""
+    """Per-doc MinHash signature columns m0..m15: a projection of the
+    kernel's ``sig`` (:func:`_minhash_rows`) — the same values as the
+    explode→groupBy(min) formulation, with no row expansion and no
+    aggregate.  Docs with an empty shingle set are dropped, as explode
+    drops them (a NULL signature would otherwise bucket all empty docs
+    together downstream)."""
     if sets is None:
         sets = _shingle_sets(docs, n, pin=pin)
-    hs = F.transform("sh_set", lambda x: x % MINHASH_P)
-    mins = [
-        F.array_min(
-            F.transform(F.col("_hs"), lambda h: (F.lit(a) * h + F.lit(b)) % MINHASH_P)
-        ).alias(f"m{i}")
-        for i, (a, b) in enumerate(zip(MINHASH_A, MINHASH_B))
-    ]
-    return (
-        sets.filter(F.size("sh_set") > 0)
-        .select("doc_id", hs.alias("_hs"))
-        .select("doc_id", *mins)
+    return sets.where(F.col("sig").isNotNull()).select(
+        "doc_id", *[F.col("sig")[i].alias(f"m{i}") for i in range(len(MINHASH_A))]
     )
 
 
@@ -445,26 +485,41 @@ def band_key_structs(components, rows_per_band: int) -> F.Column:
     every band-bucket producer (batch ``_band_rows``, which the
     incremental split also reads, the streaming corpus index, the
     stream-side key derivation) must build keys through this
-    expression, or stream-vs-batch and Spark-vs-oracle bucket parity
-    silently breaks on a format drift.
+    expression, or stream-vs-batch bucket parity silently breaks on a
+    format drift.
 
-    ``components`` is the list of 16 component Columns (``m0..m15``
-    for batch frames, ``element_at(sigs, i+1)`` for a stream's
-    signature array)."""
+    ``key`` is an exact ``long``: the component itself at
+    ``rows_per_band`` 1, ``m_a·2³¹ + m_b`` at 2.  Every component is
+    below P = 2³¹−1, so the packing is injective and an integer key
+    equals another exactly when the oracle's ``concat_ws('_', …)`` texts
+    do (:func:`_band_key_text` renders it back).  Wider bands would not
+    fit 63 bits and are refused.
+
+    ``components`` is the list of 16 component Columns (``sig[i]``)."""
     r = rows_per_band
-    assert len(MINHASH_A) % r == 0, "rows_per_band must divide 16"
+    if r not in (1, 2):
+        raise ValueError(f"rows_per_band must be 1 or 2, got {r}")
     n_bands = len(MINHASH_A) // r
     return F.array(
         *[
             F.struct(
                 F.lit(j).alias("band_idx"),
-                F.concat_ws(
-                    "_", *[components[j * r + k] for k in range(r)]
-                ).alias("key"),
+                (components[j] if r == 1 else
+                 components[2 * j] * F.lit(1 << 31) + components[2 * j + 1]
+                 ).alias("key"),
             )
             for j in range(n_bands)
         ]
     )
+
+
+def _band_key_text(key: F.Column, rows_per_band: int) -> F.Column:
+    """The oracle's ``concat_ws('_', m…)`` text of an integer band key
+    (:func:`band_key_structs`)."""
+    if rows_per_band == 1:
+        return key.cast("string")
+    return F.concat_ws("_", F.shiftright(key, 31).cast("string"),
+                       key.bitwiseAND(F.lit((1 << 31) - 1)).cast("string"))
 
 
 def bucket_pairs(rows: DataFrame, keys, member,
@@ -542,12 +597,12 @@ def cross_bucket_pairs(rows: DataFrame, keys, member, is_corpus,
 def _band_rows(docs: DataFrame, n: int, rows_per_band: int,
                sets: DataFrame | None, pin: bool = True) -> DataFrame:
     """(doc_id, band_idx, key): one row per doc per LSH band."""
-    sig = minhash_signatures(docs, n, sets=sets, pin=pin)
+    if sets is None:
+        sets = _shingle_sets(docs, n, pin=pin)
+    sig = F.col("sig")
     bands = band_key_structs(
-        [F.col(f"m{i}") for i in range(len(MINHASH_A))], rows_per_band)
-    return sig.select("doc_id", F.explode(bands).alias("b")).select(
-        "doc_id", F.col("b.band_idx").alias("band_idx"), F.col("b.key").alias("key")
-    )
+        [sig[i] for i in range(len(MINHASH_A))], rows_per_band)
+    return sets.where(sig.isNotNull()).select("doc_id", F.inline(bands))
 
 
 def lsh_hot_buckets(docs: DataFrame, n: int = 3,
@@ -567,6 +622,8 @@ def lsh_hot_buckets(docs: DataFrame, n: int = 3,
         .groupBy("band_idx", "key")
         .agg(F.count("*").alias("sz"))
         .filter(F.col("sz") > max_bucket)
+        .select("band_idx",
+                _band_key_text(F.col("key"), rows_per_band).alias("key"), "sz")
     )
 
 
@@ -679,22 +736,32 @@ LSH_ROWS_PER_BAND = 1
 LSH_NEAR_DUP_THRESHOLD = 0.05
 
 
-def _set_rescore(cand: DataFrame, sets: DataFrame) -> DataFrame:
-    """``cand`` (first two columns: the pair's doc ids) joined to both
-    docs' shingle sets (``_sa``, ``_sb``) with the exact ``n_common``
-    and ``jaccard`` (6 dp) — the exact rescore every candidate path
-    shares.  Work is O(candidates): two shuffle joins on doc id."""
-    a, b = cand.columns[:2]
-    sa = sets.select(F.col("doc_id").alias(a), F.col("sh_set").alias("_sa"))
-    sb = sets.select(F.col("doc_id").alias(b), F.col("sh_set").alias("_sb"))
+def _score_sets(pairs: DataFrame) -> DataFrame:
+    """``pairs`` (one row per pair, carrying both docs' shingle sets as
+    ``_sa`` and ``_sb``) with the exact ``n_common`` and ``jaccard``
+    (6 dp), computing ONE ``array_intersect`` per pair."""
     n_common = F.col("n_common")
+    # n_common is a generator output: Catalyst pushes a caller's filter
+    # on jaccard through a Project into the join condition, inlining the
+    # intersection once per reference, but never below the Generate
+    # that defines it.
     return (
-        cand.join(sa, a)
-        .join(sb, b)
-        .withColumn("n_common", F.size(F.array_intersect("_sa", "_sb")))
+        pairs.select("*", F.explode(F.array(
+            F.size(F.array_intersect("_sa", "_sb")))).alias("n_common"))
         .withColumn("jaccard", F.round(
             n_common / (F.size("_sa") + F.size("_sb") - n_common), 6))
     )
+
+
+def _set_rescore(cand: DataFrame, sets: DataFrame) -> DataFrame:
+    """``cand`` (first two columns: the pair's doc ids) joined to both
+    docs' shingle sets (``_sa``, ``_sb``) and scored by
+    :func:`_score_sets` — the exact rescore every candidate path
+    shares.  Work is O(candidates): two joins on doc id."""
+    a, b = cand.columns[:2]
+    sa = sets.select(F.col("doc_id").alias(a), F.col("sh_set").alias("_sa"))
+    sb = sets.select(F.col("doc_id").alias(b), F.col("sh_set").alias("_sb"))
+    return _score_sets(cand.join(sa, a).join(sb, b))
 
 
 def lsh_near_dup(docs: DataFrame, n: int = 3,

@@ -16,11 +16,11 @@ two remaining Spark UDF kinds:
     interpolating; the UDAF pins the discrete (a+b)//2 definition).
 
 Both are the *surface* demo, not the hot path: chunking is equally
-expressible JVM-side (sequence + transform + posexplode — see
-functions.text for why the Column form can be slower under Catalyst
-duplication), and a grouped-agg UDAF ships every group's values into
-Python (fine for coarse groups like market segments; wrong for
-per-key aggregates with millions of groups).
+expressible JVM-side (sequence + transform + posexplode, though
+Catalyst may duplicate the interpreted lambdas into inferred filters
+and generator projections), and a grouped-agg UDAF ships every
+group's values into Python (fine for coarse groups like market
+segments; wrong for per-key aggregates with millions of groups).
 """
 
 from __future__ import annotations

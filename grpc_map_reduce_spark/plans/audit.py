@@ -34,5 +34,6 @@ def plan_audit(df: DataFrame) -> dict[str, bool | int]:
         "has_partial_agg": "partial_" in plan or "HashAggregate" in plan,
         "has_pushed_filters": "PushedFilters: [" in plan and "PushedFilters: []" not in plan,
         "codegen_stages": int(m.group(1)) if m else 0,
-        "has_python_udf": "BatchEvalPython" in plan or "ArrowEvalPython" in plan,
+        "has_python_udf": any(n in plan for n in (
+            "BatchEvalPython", "ArrowEvalPython", "MapInArrow")),
     }

@@ -8,13 +8,13 @@ re-hashed per batch).
 Everything stream-side is map-only or a stream-static join — no
 stream-side shuffle of the corpus ever happens:
 
-  * one Arrow-batched UDF per incoming doc computes BOTH its distinct
-    60-bit shingle-hash set and its full MinHash signature (the batch
-    path's ``groupBy(doc_id)`` signature aggregation would be a
-    stateful streaming agg; fusing it into the map-only UDF removes
-    the state entirely while producing bit-identical signatures);
-  * band keys are derived JVM-side from the signature array in the
-    same ``concat_ws("_", m_i...)`` format as the batch index;
+  * the batch MinHash kernel (``operators/dedup._minhash_rows``, one
+    ``mapInArrow`` pass) gives each incoming doc its distinct 60-bit
+    shingle-hash set and its full signature; the kernel is map-only,
+    so a stream needs no signature aggregation state, and the
+    signatures are bit-identical to the batch path's;
+  * band keys come from the signature through the batch
+    ``band_key_structs``, so stream and corpus keys share one format;
   * candidates come from a stream-static join against the corpus
     band-bucket table; multi-band duplicates collapse via
     ``dropDuplicates`` (bounded by the in-flight shard in the
@@ -40,58 +40,40 @@ from grpc_map_reduce_spark.operators.dedup import (
     LSH_NEAR_DUP_THRESHOLD,
     LSH_ROWS_PER_BAND,
     MINHASH_A,
-    MINHASH_B,
-    MINHASH_P,
     SKETCH_THRESHOLD,
+    _band_rows,
+    _minhash_rows,
     _shingle_sets,
+    _score_sets,
     _side_is_corpus,
     band_key_structs,
-    minhash_signatures,
 )
 from grpc_map_reduce_spark.plans.checkpoint import PIN_LEVEL
 
 
-def minhash_struct_udf(n: int = 3):
-    """Map-only producer of ``struct<sh_set: array<long>, sigs:
-    array<long>>`` per document — the same 60-bit shingle hashes as
-    ``functions.text.distinct_shingle_hashes_udf`` and the same
-    signature arithmetic as the batch ``minhash_signatures``
-    (``min((a·(h mod P) + b) mod P)``), fused so a stream needs no
-    signature aggregation state."""
-    import hashlib
-    import re
+def _stream_band_rows(doc_stream: DataFrame, n: int, rows_per_band: int,
+                      ts_col: str | None, dedup_within: str) -> DataFrame:
+    """(doc_id, [ts_col,] sh_set, sig, band_idx, key): the stream's docs
+    through the batch kernel and band-key format, one row per doc per
+    band; docs with an empty shingle set are dropped.  ``ts_col`` passes
+    through the kernel and carries the ``dedup_within`` watermark."""
+    ts_cols = [ts_col] if ts_col is not None else []
+    rows = _minhash_rows(doc_stream.select("doc_id", *ts_cols, "text"), n)
+    if ts_col is not None:
+        rows = rows.withWatermark(ts_col, dedup_within)
+    sig = F.col("sig")
+    bands = band_key_structs(
+        [sig[i] for i in range(len(MINHASH_A))], rows_per_band)
+    return rows.where(sig.isNotNull()).select("*", F.inline(bands))
 
-    from pyspark.sql.functions import pandas_udf
 
-    from grpc_map_reduce_spark.functions.text import TOKEN_SPLIT_RE
-
-    token_re = re.compile(TOKEN_SPLIT_RE)
-
-    @pandas_udf("struct<sh_set: array<long>, sigs: array<long>>")
-    def _ms(text: pd.Series) -> pd.DataFrame:
-        sh_col, sig_col = [], []
-        for t in text:
-            ws = [w for w in token_re.split(t.lower()) if w]
-            if len(ws) <= n:
-                grams = [" ".join(ws)] if ws else []
-            else:
-                grams = [" ".join(ws[i:i + n]) for i in range(len(ws) - n + 1)]
-            hs = [
-                int(hashlib.md5(g.encode()).hexdigest()[:15], 16)
-                for g in dict.fromkeys(grams)
-            ]
-            sh_col.append(hs)
-            if hs:
-                mod = [h % MINHASH_P for h in hs]
-                sig_col.append([
-                    min((a * h + b) % MINHASH_P for h in mod)
-                    for a, b in zip(MINHASH_A, MINHASH_B)
-                ])
-            else:
-                sig_col.append([])
-        return pd.DataFrame({"sh_set": sh_col, "sigs": sig_col})
-
-    return _ms.asNondeterministic()
+def _dedup_candidates(joined: DataFrame, ts_col: str | None) -> DataFrame:
+    """One row per (doc_id, match_id): run-scoped ``dropDuplicates``,
+    or ``dropDuplicatesWithinWatermark`` under a ``ts_col`` watermark."""
+    if ts_col is not None:
+        return joined.dropDuplicatesWithinWatermark(
+            ["doc_id", "match_id"]).drop(ts_col)
+    return joined.dropDuplicates(["doc_id", "match_id"])
 
 
 def corpus_index(docs: DataFrame, n: int = 3,
@@ -103,13 +85,8 @@ def corpus_index(docs: DataFrame, n: int = 3,
     incrementally as shards are accepted."""
     corpus = docs.filter(_side_is_corpus(F.col("doc_id")))
     sets = _shingle_sets(corpus, n)
-    sig = minhash_signatures(corpus, n, sets=sets)
-    bands = band_key_structs(
-        [F.col(f"m{i}") for i in range(len(MINHASH_A))], rows_per_band)
-    buckets = sig.select(
-        F.col("doc_id").alias("match_id"), F.explode(bands).alias("b")
-    ).select("match_id", F.col("b.band_idx").alias("band_idx"),
-             F.col("b.key").alias("key"))
+    buckets = _band_rows(corpus, n, rows_per_band, sets).withColumnRenamed(
+        "doc_id", "match_id")
     return buckets, sets.select(
         F.col("doc_id").alias("match_id"), F.col("sh_set").alias("_sb")
     )
@@ -140,54 +117,13 @@ def streaming_incremental_dedup(doc_stream: DataFrame, buckets: DataFrame,
     at-least-once per pair and downstream consumers must dedup (or
     upsert) on (doc_id, match_id) if they need exactly-once pairs
     (ADVICE r8)."""
-    r = rows_per_band
-    n_bands = len(MINHASH_A) // r
-    if ts_col is not None:
-        doc_stream = doc_stream.withWatermark(ts_col, dedup_within)
-    ts_cols = [ts_col] if ts_col is not None else []
-    enriched = (
-        doc_stream.select(
-            "doc_id", *ts_cols, minhash_struct_udf(n)("text").alias("ms")
-        )
-        .filter(F.size("ms.sh_set") > 0)
-    )
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("band_idx"),
-                F.concat_ws(
-                    "_",
-                    *[F.element_at("ms.sigs", j * r + k + 1) for k in range(r)],
-                ).alias("key"),
-            )
-            for j in range(n_bands)
-        ]
-    )
-    exp = enriched.select(
-        "doc_id", *ts_cols, F.col("ms.sh_set").alias("_sa"),
-        F.explode(bands).alias("b")
-    ).select("doc_id", *ts_cols, "_sa",
-             F.col("b.band_idx").alias("band_idx"),
-             F.col("b.key").alias("key"))
-    joined = exp.join(buckets, ["band_idx", "key"])  # stream-static
-    if ts_col is not None:
-        cand = joined.dropDuplicatesWithinWatermark(
-            ["doc_id", "match_id"]
-        ).drop(ts_col)
-    else:
-        cand = joined.dropDuplicates(["doc_id", "match_id"])
-    n_common = F.size(F.array_intersect("_sa", "_sb"))
+    exp = _stream_band_rows(doc_stream, n, rows_per_band, ts_col,
+                            dedup_within).drop("sig")
+    joined = exp.withColumnRenamed("sh_set", "_sa").join(
+        buckets, ["band_idx", "key"])  # stream-static
+    cand = _dedup_candidates(joined, ts_col)
     return (
-        cand.join(corpus_sets, "match_id")  # stream-static
-        .withColumn("n_common", n_common)
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common")
-                / (F.size("_sa") + F.size("_sb") - F.col("n_common")),
-                6,
-            ),
-        )
+        _score_sets(cand.join(corpus_sets, "match_id"))  # stream-static
         .filter(F.col("jaccard") >= threshold)
         .select("doc_id", "match_id", "jaccard")
     )
@@ -200,7 +136,7 @@ def streaming_incremental_dedup(doc_stream: DataFrame, buckets: DataFrame,
 # transport proportional to document size, the same floor the batch
 # sketch path removed.  Here the score is MinHash signature agreement
 # computed from FIXED-WIDTH arrays: the stream row carries its own 16
-# signature components (already in the map-only struct), the corpus
+# signature components (the kernel's ``sig``), the corpus
 # side a (match_id, 16-long array) table, and the agreement count is
 # pure column math after the stream-static join — transport per
 # candidate is 16 longs regardless of document length, and the corpus
@@ -225,19 +161,15 @@ def corpus_sketch_index(docs: DataFrame, n: int = 3,
     frame whose pin was the 3125× OOM — at real scale both live as
     bucketed parquet, exactly like the exact twin's index."""
     corpus = docs.filter(_side_is_corpus(F.col("doc_id")))
-    sig = minhash_signatures(corpus, n, pin=False).localCheckpoint(
-        eager=False, storageLevel=PIN_LEVEL)
-    bands = band_key_structs(
-        [F.col(f"m{i}") for i in range(len(MINHASH_A))], rows_per_band)
-    buckets = sig.select(
-        F.col("doc_id").alias("match_id"), F.explode(bands).alias("b")
-    ).select("match_id", F.col("b.band_idx").alias("band_idx"),
-             F.col("b.key").alias("key"))
-    sigs = sig.select(
-        F.col("doc_id").alias("match_id"),
-        F.array(*[F.col(f"m{i}") for i in range(len(MINHASH_A))])
-        .alias("_sigb"),
+    sig = (
+        _shingle_sets(corpus, n, pin=False)
+        .where(F.col("sig").isNotNull()).select("doc_id", "sig")
+        .localCheckpoint(eager=False, storageLevel=PIN_LEVEL)
     )
+    buckets = _band_rows(None, n, rows_per_band, sig).withColumnRenamed(
+        "doc_id", "match_id")
+    sigs = sig.select(F.col("doc_id").alias("match_id"),
+                      F.col("sig").alias("_sigb"))
     return buckets, sigs
 
 
@@ -267,30 +199,10 @@ def streaming_incremental_dedup_sketch(
             "(signature agreement == shared-band count requires r=1)")
     n_bands_total = len(MINHASH_A)
     min_bands = max(1, math.ceil(threshold * n_bands_total))
-    if ts_col is not None:
-        doc_stream = doc_stream.withWatermark(ts_col, dedup_within)
-    ts_cols = [ts_col] if ts_col is not None else []
-    enriched = (
-        doc_stream.select(
-            "doc_id", *ts_cols, minhash_struct_udf(n)("text").alias("ms")
-        )
-        .filter(F.size("ms.sh_set") > 0)
-    )
-    bands = band_key_structs(
-        [F.element_at("ms.sigs", i + 1) for i in range(n_bands_total)], 1)
-    exp = enriched.select(
-        "doc_id", *ts_cols, F.col("ms.sigs").alias("_siga"),
-        F.explode(bands).alias("b")
-    ).select("doc_id", *ts_cols, "_siga",
-             F.col("b.band_idx").alias("band_idx"),
-             F.col("b.key").alias("key"))
+    exp = _stream_band_rows(doc_stream, n, 1, ts_col, dedup_within).drop(
+        "sh_set").withColumnRenamed("sig", "_siga")
     joined = exp.join(buckets, ["band_idx", "key"])  # stream-static
-    if ts_col is not None:
-        cand = joined.dropDuplicatesWithinWatermark(
-            ["doc_id", "match_id"]
-        ).drop(ts_col)
-    else:
-        cand = joined.dropDuplicates(["doc_id", "match_id"])
+    cand = _dedup_candidates(joined, ts_col)
     agree = F.size(
         F.filter(
             F.zip_with("_siga", "_sigb", lambda a, b: a == b),

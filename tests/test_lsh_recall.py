@@ -206,6 +206,39 @@ def test_minhash_signatures_match_explode_formulation(spark):
     assert 30 not in got, "empty-text doc must be dropped, not NULL-signed"
 
 
+def test_band_keys_pack_components_injectively(spark):
+    """Integer band keys: at rows_per_band 2 the key is m_a·2³¹ + m_b,
+    so every (m_a, m_b) over the boundary components {0, 1, P−1} must
+    give its own key, and rendering a key back must give the oracle's
+    ``concat_ws('_', m_a, m_b)`` text.  Wider bands do not fit 63 bits
+    and are refused."""
+    import itertools
+
+    import pytest
+
+    from grpc_map_reduce_spark.operators.dedup import (
+        MINHASH_P,
+        _band_key_text,
+        band_key_structs,
+    )
+
+    edge = [0, 1, MINHASH_P - 1]
+    rows = [(i, [a, b] * 8)
+            for i, (a, b) in enumerate(itertools.product(edge, repeat=2))]
+    sigs = spark.createDataFrame(rows, "i int, sig array<long>")
+    keys = sigs.select(
+        "i", F.inline(band_key_structs([F.col("sig")[k] for k in range(16)], 2))
+    ).where("band_idx = 0").select(
+        "i", "key", _band_key_text(F.col("key"), 2).alias("text"))
+    got = {r.i: (r.key, r.text) for r in keys.collect()}
+    assert len({k for k, _ in got.values()}) == len(rows)
+    for i, (a, b) in enumerate(itertools.product(edge, repeat=2)):
+        assert got[i] == (a * 2**31 + b, f"{a}_{b}")
+    for r in (0, 4, 8):
+        with pytest.raises(ValueError):
+            band_key_structs([F.col("sig")[k] for k in range(16)], r)
+
+
 def test_split_contamination_cells_partition_the_pair_set(spark, sf_dir):
     """Every near-dup pair lands in exactly one split cell, and the
     leaked cell (train|test) plus the pure cells sum to the full pair

@@ -532,16 +532,34 @@ def test_lsh_auto_shares_one_band_rows_subtree(spark, sf_dir):
     (exact-branch) plan therefore reads the band rows from the
     census's checkpoint and the shingle sets, on both rescore sides,
     from their own checkpoint: three ExistingRDD scans — so the branch
-    must not re-derive band rows or sets: no ``array_min`` (the
-    MinHash signature projection) and no tokenizer (ArrowEvalPython)
-    anywhere in the executed tree.  The sets are
+    must not re-derive band rows or sets: no shingle+signature kernel
+    (MapInArrow), and none of the older signature forms (``array_min``
+    projection, ArrowEvalPython tokenizer), anywhere in the executed
+    tree.  The sets are
     a local checkpoint, not a CacheManager entry (no
     InMemoryTableScan), so they do not outlive the call."""
     plan = _plan(spark, sf_dir, "dedup_lsh_neardup_auto")
     assert len(re.findall(r"\(\d+\) Scan ExistingRDD", plan)) == 3, plan
     assert "InMemoryTableScan" not in plan, plan
+    assert "MapInArrow" not in plan, plan
     assert "array_min" not in plan, plan
     assert "ArrowEvalPython" not in plan, plan
+
+
+def test_lsh_near_dup_intersects_each_pair_once(spark, sf_dir):
+    """The exact rescore evaluates ONE ``array_intersect`` per
+    candidate: a ``jaccard >= t`` filter pushed into the set join's
+    condition would inline ``n_common`` once per reference and
+    intersect every pair three times.  The band path is the MinHash
+    kernel plus integer band keys: no interpreted ``transform`` lambda
+    and no ``concat_ws`` string key anywhere in the executed plan."""
+    df = registry.all_queries()["dedup_lsh_neardup"].spark_fn(spark, sf_dir)
+    df.collect()
+    adaptive = df._jdf.queryExecution().executedPlan()
+    plan = adaptive.executedPlan().toString()  # the final plan only
+    assert plan.count("array_intersect(") == 1, plan
+    assert "transform(" not in plan, plan
+    assert "concat_ws" not in plan, plan
 
 
 def test_kmv_profile_single_scan_per_column(spark, sf_dir):

@@ -26,9 +26,8 @@ def t(label, df):
     print(f"{label:30s} {time.perf_counter() - t0:6.2f}s")
 
 
-sets = dedup._shingle_sets(docs)
-t("shingle sets", sets)
-t("minhash signatures", dedup.minhash_signatures(docs, sets=sets))
+sets = dedup._shingle_sets(docs)  # one kernel: shingle sets + signatures
+t("shingle sets + signatures", sets)
 cand = dedup.minhash_candidates(docs, sets=sets, rows_per_band=1)
 t("candidates (given sets)", cand)
 t("lsh_near_dup full", dedup.lsh_near_dup(docs))
