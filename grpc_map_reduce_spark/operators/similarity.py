@@ -14,6 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from grpc_map_reduce_spark.operators.dedup import bucket_pairs, cross_bucket_pairs
 from grpc_map_reduce_spark.sources.tables import table
@@ -22,20 +23,23 @@ from grpc_map_reduce_spark.plans.checkpoint import iter_checkpoint
 
 def _pack_blocks(df: DataFrame, id_col: str, vec_col: str,
                  n_blocks: int, keys: tuple = (),
-                 keys_schema: str = "") -> DataFrame:
+                 keys_schema: str = "", normalize: bool = True) -> DataFrame:
     """Hash rows into ``n_blocks`` blocks and pack each block into one
     ``(*keys, blk, ids, mat)`` summary row: ids int64 array + the
-    block's L2-normalized float64 matrix as bytes.  The shared
-    building block of the vectorized similarity kernels below — joins
-    then replicate whole-block summaries (O(n·B) bytes) instead of
-    per-pair rows.  ``keys`` adds grouping columns (e.g. a metadata
-    partition), turning the pack into a per-group index."""
+    block's L2-normalized float64 matrix as bytes.  Every vector search
+    packs both sides here and scores them in :func:`_block_topk` —
+    joins replicate whole-block summaries (O(n·B) bytes) instead of
+    per-pair rows.  ``keys`` adds grouping columns (a metadata
+    partition, an IVF list id), turning the pack into a per-group
+    index.  ``normalize=False`` packs the vectors as they are (the
+    int8 search's integer-valued rows)."""
     import numpy as np
     import pandas as pd
 
     def _pack(pdf: pd.DataFrame) -> pd.DataFrame:
         mat = np.array(pdf["v"].tolist(), dtype=np.float64)
-        mat /= np.linalg.norm(mat, axis=1, keepdims=True)
+        if normalize:
+            mat /= np.linalg.norm(mat, axis=1, keepdims=True)
         row = {k: [pdf[k].iloc[0]] for k in keys}
         row.update(
             {"blk": [int(pdf["blk"].iloc[0])],
@@ -57,14 +61,14 @@ def _pack_blocks(df: DataFrame, id_col: str, vec_col: str,
 
 
 def _block_topk_kernel(k: int):
-    """mapInPandas kernel shared by the top-k searches: per packed
+    """mapInPandas kernel of every top-k search: per packed
     (corpus block × query block) row, one numpy matmul then a
     block-local top-k per query by (-sim, neighbor_id) — the global
     top-k is contained in the union of block winners."""
     import numpy as np
     import pandas as pd
 
-    def _block_topk(batches):
+    def _kernel(batches):
         for pdf in batches:
             frames = []
             for _, row in pdf.iterrows():
@@ -87,7 +91,29 @@ def _block_topk_kernel(k: int):
                 {"query_id": [], "neighbor_id": [], "sim": []})
             yield out[out["sim"] > -np.inf]
 
-    return _block_topk
+    return _kernel
+
+
+def _block_topk(cpacked: DataFrame, qpacked: DataFrame, k: int,
+                keys: tuple = ()) -> DataFrame:
+    """(query_id, neighbor_id, sim, rank): the top-``k`` corpus rows
+    per query from two :func:`_pack_blocks` packs — the one search
+    every top-k query parameterizes.  The (small) query pack is
+    broadcast to every corpus block (to the blocks of its own ``keys``
+    group when given), :func:`_block_topk_kernel` yields each block's
+    winners and a k-row-per-query window rank over those B·k·|Q|
+    candidates finishes.  Ties break by neighbor id."""
+    qp = F.broadcast(qpacked.select(
+        *keys, F.col("ids").alias("q_ids"), F.col("mat").alias("q_mat")))
+    joined = cpacked.join(qp, list(keys)) if keys else cpacked.join(qp)
+    cand = joined.mapInPandas(
+        _block_topk_kernel(k), schema="query_id long, neighbor_id long, sim double"
+    )
+    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
+    return (
+        cand.withColumn("rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("rank") <= k)
+    )
 
 
 def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
@@ -100,29 +126,12 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     deterministic and engine-portable.
 
     Plan: pack the (small) query set into one summary row and the
-    corpus into ``n_blocks`` blocks; the broadcast cross join ships
-    the queries to every corpus block; one numpy matmul per block
-    yields a block-local top-k per query (sorted by (-sim, id), so the
-    global top-k is contained in the union); a final k-row-per-query
-    window rank over B·k·|Q| candidate rows finishes.  The corpus is
-    never shuffled and no pair rows are materialized."""
-    import numpy as np
-    import pandas as pd
-
-    qpacked = _pack_blocks(queries, id_col, vec_col, 1).select(
-        F.col("ids").alias("q_ids"), F.col("mat").alias("q_mat")
-    )
-    cpacked = _pack_blocks(corpus, id_col, vec_col, n_blocks)
-    joined = cpacked.join(F.broadcast(qpacked))
-
-    cand = joined.mapInPandas(
-        _block_topk_kernel(k), schema="query_id long, neighbor_id long, sim double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    corpus into ``n_blocks`` blocks; :func:`_block_topk` broadcasts the
+    queries to every corpus block, runs one numpy matmul per block and
+    ranks the block winners.  The corpus is never shuffled and no pair
+    rows are materialized."""
+    return _block_topk(_pack_blocks(corpus, id_col, vec_col, n_blocks),
+                       _pack_blocks(queries, id_col, vec_col, 1), k)
 
 
 def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -320,17 +329,23 @@ EMB_LSH_MAX_BUCKET_DEFAULT = 1000
 
 
 def _emb_band_keys(df: DataFrame, n_bits: int, rows_per_band: int,
-                   seed: int, id_col: str, vec_col: str) -> DataFrame:
-    """(id, band_idx, key) hyperplane-LSH band rows for every vector.
+                   seed: int, id_col: str, vec_col: str,
+                   keep: tuple = ()) -> DataFrame:
+    """(id, *keep, band_idx, key) hyperplane-LSH band rows for every
+    vector: one row per vector per band, the ``keep`` columns passed
+    through.  The batch paths and the streaming twin all sign vectors
+    here.
 
     One vectorized matmul per Arrow batch against a seed-deterministic
-    hyperplane matrix (regenerated identically in every task — no
-    driver state, no shuffle of the vectors)."""
+    hyperplane matrix, generated once per task (no driver state, no
+    shuffle of the vectors)."""
     import numpy as np
-    import pandas as pd
 
     r = rows_per_band
-    assert n_bits % r == 0, "rows_per_band must divide n_bits"
+    if r <= 0 or n_bits % r:
+        raise ValueError(
+            f"rows_per_band must divide n_bits, got rows_per_band={r}, "
+            f"n_bits={n_bits}")
     n_bands = n_bits // r
     weights = (1 << np.arange(r, dtype=np.int64))
 
@@ -346,16 +361,16 @@ def _emb_band_keys(df: DataFrame, n_bits: int, rows_per_band: int,
                 H = hyperplanes(seed, n_bits, V.shape[1])
             bits = (V @ H.T) >= 0  # sign bits; norm-invariant
             keys = bits.reshape(len(V), n_bands, r).astype(np.int64) @ weights
-            yield pd.DataFrame({
-                "id": np.repeat(pdf["id"].to_numpy(np.int64), n_bands),
-                "band_idx": np.tile(np.arange(n_bands, dtype=np.int64), len(V)),
-                "key": keys.ravel(),
-            })
+            yield pdf.drop(columns="v").iloc[np.repeat(np.arange(len(V)), n_bands)].assign(
+                band_idx=np.tile(np.arange(n_bands, dtype=np.int64), len(V)),
+                key=keys.ravel(),
+            )
 
     base = df.select(
-        F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("v")
+        F.col(id_col).cast("long").alias("id"), *keep, F.col(vec_col).alias("v")
     )
-    return base.mapInPandas(_bands, schema="id long, band_idx long, key long")
+    longs = [StructField(c, LongType()) for c in ("band_idx", "key")]
+    return base.mapInPandas(_bands, StructType(base.schema.fields[:-1] + longs))
 
 
 def embedding_lsh_candidates(corpus: DataFrame, n_bits: int = EMB_LSH_BITS,
@@ -383,21 +398,12 @@ def embedding_lsh_candidates(corpus: DataFrame, n_bits: int = EMB_LSH_BITS,
     )
 
 
-def _cosine_rescore(cand: DataFrame, left: DataFrame, right: DataFrame,
-                    id_col: str, vec_col: str,
-                    threshold: float) -> DataFrame:
-    """Exact-cosine rescore of candidate pairs: ``cand``'s two id
-    columns name the output (a, b, sim); ``a`` ids are looked up in
-    ``left``, ``b`` ids in ``right``.  Keeps pairs whose cosine,
-    rounded to 6 dp, is ≥ ``threshold``.  Work is O(candidates)."""
+def _cosine_scores(pairs: DataFrame, threshold: float) -> DataFrame:
+    """``pairs`` (carrying both vectors as ``_va`` and ``_vb``) with the
+    vectors replaced by their exact cosine ``sim``, rounded to 6 dp;
+    keeps rows with ``sim`` ≥ ``threshold``.  The one cosine rescore
+    kernel: the batch rescore and the streaming twin score here."""
     import numpy as np
-    import pandas as pd
-
-    a, b = cand.columns
-    va = left.select(F.col(id_col).cast("long").alias(a),
-                     F.col(vec_col).alias("_va"))
-    vb = right.select(F.col(id_col).cast("long").alias(b),
-                      F.col(vec_col).alias("_vb"))
 
     def _rescore(batches):
         for pdf in batches:
@@ -409,17 +415,27 @@ def _cosine_rescore(cand: DataFrame, left: DataFrame, right: DataFrame,
             B /= np.linalg.norm(B, axis=1, keepdims=True)
             sim = np.round(np.einsum("ij,ij->i", A, B), 6)
             keep = sim >= threshold
-            yield pd.DataFrame({
-                a: pdf[a].to_numpy(np.int64)[keep],
-                b: pdf[b].to_numpy(np.int64)[keep],
-                "sim": sim[keep],
-            })
+            yield pdf.drop(columns=["_va", "_vb"])[keep].assign(sim=sim[keep])
 
-    return (
-        cand.join(va, a)
-        .join(vb, b)
-        .mapInPandas(_rescore, schema=f"{a} long, {b} long, sim double")
-    )
+    fields = [f for f in pairs.schema.fields if f.name not in ("_va", "_vb")]
+    return pairs.mapInPandas(
+        _rescore, StructType(fields + [StructField("sim", DoubleType())]))
+
+
+def _cosine_rescore(cand: DataFrame, left: DataFrame, right: DataFrame,
+                    id_col: str, vec_col: str,
+                    threshold: float) -> DataFrame:
+    """Exact-cosine rescore of candidate pairs: ``cand``'s two id
+    columns name the output (a, b, sim); ``a`` ids are looked up in
+    ``left``, ``b`` ids in ``right``, and :func:`_cosine_scores` keeps
+    pairs whose cosine is ≥ ``threshold``.  Work is O(candidates)."""
+    a, b = cand.columns
+    va = left.select(F.col(id_col).cast("long").alias(a),
+                     F.col(vec_col).alias("_va"))
+    vb = right.select(F.col(id_col).cast("long").alias(b),
+                      F.col(vec_col).alias("_vb"))
+    return _cosine_scores(cand.join(va, a).join(vb, b), threshold).select(
+        a, b, "sim")
 
 
 def embedding_lsh_near_dup(corpus: DataFrame, threshold: float = 0.4,
@@ -1016,6 +1032,41 @@ def _model_broadcast(cent: DataFrame):
     return k, bc
 
 
+def _nearest_centroids(df: DataFrame, vec_col: str, model, out: str,
+                       n: int = 1) -> DataFrame:
+    """``df`` with ``out``, the id of a vector's nearest centroid, added
+    — one row per input row and rank r < ``n`` when ``n`` > 1 (IVF
+    probes); every input column passes through.  ``model`` is the
+    ``(k, broadcast)`` pair of :func:`_fit_centroids`.
+
+    The one nearest-centroid kernel: IVF list assignment and probing,
+    k-means assignment and SemDeDup clustering all rank here.  Each
+    vector is L2-normalized and ranked against the broadcast centroids
+    with a stable argsort, so rank 0 is the argmax with ties broken to
+    the lowest centroid id, exactly as the oracles' ``ORDER BY sim
+    DESC, cid``."""
+    import numpy as np
+
+    k, bc = model
+    n = min(n, k)
+
+    def _rank(batches):
+        # the MODEL arrives via sc.broadcast (once per executor), never
+        # duplicated onto corpus rows
+        C = np.frombuffer(bc.value, dtype=np.float64).reshape(k, -1)
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+            V /= np.linalg.norm(V, axis=1, keepdims=True)
+            order = np.argsort(-(V @ C.T), axis=1, kind="stable")[:, :n]
+            yield pdf.iloc[np.repeat(np.arange(len(pdf)), n)].assign(
+                **{out: order.ravel().astype(np.int64)})
+
+    return df.mapInPandas(
+        _rank, StructType(df.schema.fields + [StructField(out, LongType())]))
+
+
 def _lloyd_refine(base: DataFrame, cent: DataFrame, n_iter: int) -> DataFrame:
     """``n_iter`` rounds of Lloyd's k-means on the spherical centroids.
 
@@ -1100,123 +1151,37 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     """Approximate top-k via an IVF (inverted-file) index — the scale
     path for :func:`cosine_topk`.
 
-    Index build: seed centroids are the ``n_lists`` lowest-id corpus
-    vectors, L2-normalized (deterministic), refined by
-    ``kmeans_iters`` rounds of spherical Lloyd iteration
-    (:func:`_lloyd_refine` — one broadcast-assign map pass + one tiny
-    partial-sum combine per round).  Every corpus vector is then
-    assigned to its nearest centroid's list by one broadcast numpy
-    matmul (map-only — no shuffle of the corpus).
+    Index build: :func:`_fit_centroids` seeds ``n_lists`` centroids
+    from the lowest-id corpus vectors and refines them with
+    ``kmeans_iters`` spherical Lloyd rounds.  Every corpus vector is
+    then assigned to its nearest centroid's list by
+    :func:`_nearest_centroids` (map-only — no shuffle of the corpus)
+    and each list is packed by :func:`_pack_blocks` keyed on
+    ``list_id``.
 
-    Search: each query probes its ``n_probe`` nearest centroids and
-    brute-forces only those lists — the scan fraction is ~n_probe /
-    n_lists of the corpus, which is the entire point at 10⁹ vectors.
-    Results are exact sims over an approximate candidate set, so
-    recall < 1 is possible; tests assert recall vs the exact operator
-    and that a full probe reproduces it exactly.
+    Search: each query is ranked against the same centroids, and its
+    ``n_probe`` nearest lists are its ``list_id`` keys in the query
+    pack; :func:`_block_topk` joins the packs on ``list_id``, so a
+    query brute-forces only its probed lists — the scan fraction is
+    ~n_probe / n_lists of the corpus, which is the entire point at 10⁹
+    vectors.  Results are exact sims over an approximate candidate
+    set, so recall < 1 is possible; tests assert recall vs the exact
+    operator and that a full probe reproduces its rows exactly.
     """
-    import numpy as np
-    import pandas as pd
-
-    cent = _pack_blocks(
-        corpus.orderBy(id_col).limit(n_lists), id_col, vec_col, 1
-    ).select(F.col("ids").alias("cent_ids"), F.col("mat").alias("cent_mat"))
-
     base = corpus.select(
-        F.col(id_col).cast("long").alias("id"),
-        F.col(vec_col).alias("v"),  # float32 stays JVM-side; numpy upcasts exactly
-    )
-    if kmeans_iters > 0:
-        cent = _lloyd_refine(base, cent, kmeans_iters)
-
-    n_cent, cent_bc = _model_broadcast(cent)
-    if n_cent == 0:  # empty corpus: no lists, no results
+        F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("v"))
+    model = _fit_centroids(base, n_lists, kmeans_iters)
+    if model[0] == 0:  # empty corpus: no lists, no results
         return corpus.sparkSession.createDataFrame(
             [], "query_id long, neighbor_id long, sim double, rank long")
 
-    def _assign(batches):
-        # closure state: the centroid MODEL arrives via sc.broadcast
-        # (once per executor), never duplicated onto corpus rows
-        C = np.frombuffer(cent_bc.value, dtype=np.float64).reshape(n_cent, -1)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.array(pdf["v"].tolist(), dtype=np.float64)
-            V /= np.linalg.norm(V, axis=1, keepdims=True)
-            lists = np.argsort(-(V @ C.T), axis=1, kind="stable")
-            yield pd.DataFrame({
-                "id": pdf["id"],
-                "v": [row for row in V],
-                "list_id": lists[:, 0].astype(np.int64),
-            })
+    def lists(df: DataFrame, n: int) -> DataFrame:
+        return _pack_blocks(
+            _nearest_centroids(df, vec_col, model, "list_id", n),
+            id_col, vec_col, 1, keys=("list_id",), keys_schema="list_id long")
 
-    assigned = base.mapInPandas(
-        _assign, schema="id long, v array<double>, list_id long"
-    )
-
-    # Pack each IVF list (same summary-row layout as _pack_blocks).
-    def _pack_list(pdf: pd.DataFrame) -> pd.DataFrame:
-        mat = np.array(pdf["v"].tolist(), dtype=np.float64)  # already unit
-        return pd.DataFrame(
-            {"list_id": [int(pdf["list_id"].iloc[0])],
-             "ids": [pdf["id"].to_numpy(np.int64)],
-             "mat": [mat.tobytes()]}
-        )
-
-    lists_packed = assigned.groupBy("list_id").applyInPandas(
-        _pack_list, schema="list_id long, ids array<long>, mat binary"
-    )
-
-    # Queries → (query row, probed list_id) pairs, then join to lists.
-    def _probe(batches):
-        C = np.frombuffer(cent_bc.value, dtype=np.float64).reshape(n_cent, -1)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.array(pdf["v"].tolist(), dtype=np.float64)
-            V /= np.linalg.norm(V, axis=1, keepdims=True)
-            order = np.argsort(-(V @ C.T), axis=1, kind="stable")[:, :n_probe]
-            yield pd.DataFrame({
-                "query_id": np.repeat(pdf["id"].to_numpy(np.int64), n_probe),
-                "qv": [v for v in V for _ in range(n_probe)],
-                "list_id": order.ravel().astype(np.int64),
-            })
-
-    qbase = queries.select(
-        F.col(id_col).cast("long").alias("id"),
-        F.col(vec_col).alias("v"),  # float32 stays JVM-side; numpy upcasts exactly
-    )
-    probes = qbase.mapInPandas(
-        _probe, schema="query_id long, qv array<double>, list_id long"
-    )
-
-    def _search(batches):
-        for pdf in batches:
-            frames = []
-            for _, row in pdf.iterrows():
-                c_ids = np.asarray(row["ids"], dtype=np.int64)
-                C = np.frombuffer(row["mat"], dtype=np.float64).reshape(len(c_ids), -1)
-                qv = np.asarray(row["qv"], dtype=np.float64)
-                sims = np.round(C @ qv, 6)
-                keep = c_ids != row["query_id"]
-                frames.append(pd.DataFrame({
-                    "query_id": row["query_id"],
-                    "neighbor_id": c_ids[keep],
-                    "sim": sims[keep],
-                }))
-            yield (pd.concat(frames) if frames
-                   else pd.DataFrame({"query_id": [], "neighbor_id": [], "sim": []}))
-
-    # NOT broadcast: lists_packed carries the whole corpus; the join
-    # shuffles only the (small) probe side to the lists' partitions.
-    cand = probes.join(lists_packed, "list_id").mapInPandas(
-        _search, schema="query_id long, neighbor_id long, sim double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return _block_topk(lists(corpus, 1), lists(queries, n_probe), k,
+                       keys=("list_id",))
 
 
 #: Probe width for the registered IVF query (and its oracle).
@@ -1345,9 +1310,9 @@ WHERE vec_id < 100
 # deterministic end-to-end: seeds are the k lowest-id vectors packed
 # in sorted-id order (groupBy/applyInPandas row order is not
 # contractual, so the packer sorts explicitly), refinement is
-# :func:`_lloyd_refine` (fixed float accumulation order), and numpy
-# ``argmax`` tie-breaks to the lowest cluster id exactly like the
-# oracle's ``ORDER BY sim DESC, cid``.
+# :func:`_lloyd_refine` (fixed float accumulation order), and the
+# :func:`_nearest_centroids` stable argsort tie-breaks to the lowest
+# cluster id exactly like the oracle's ``ORDER BY sim DESC, cid``.
 #
 # Scale: per round, one broadcast-assign map pass over the corpus +
 # one tiny partial-sum combine — the corpus is NEVER shuffled; the
@@ -1358,11 +1323,11 @@ KMEANS_K = 8
 KMEANS_ITERS = 2
 
 
-def _fit_centroids(base: DataFrame, k: int, n_iter: int) -> DataFrame:
+def _fit_centroids(base: DataFrame, k: int, n_iter: int):
     """Seed ``k`` spherical centroids from the lowest-id vectors and
     refine with ``n_iter`` Lloyd rounds (:func:`_lloyd_refine`).
-    ``base`` is (id, v); returns the one-row (cent_ids, cent_mat)
-    broadcastable centroid summary."""
+    ``base`` is (id, v); returns the broadcast centroid model
+    ``(k, broadcast)`` of :func:`_model_broadcast`."""
     import numpy as np
     import pandas as pd
 
@@ -1381,7 +1346,7 @@ def _fit_centroids(base: DataFrame, k: int, n_iter: int) -> DataFrame:
         .groupBy("g")
         .applyInPandas(_pack_seeds, schema="cent_ids array<long>, cent_mat binary")
     )
-    return _lloyd_refine(base, cent, n_iter)
+    return _model_broadcast(_lloyd_refine(base, cent, n_iter))
 
 
 def embedding_kmeans(corpus: DataFrame, k: int = KMEANS_K,
@@ -1389,37 +1354,19 @@ def embedding_kmeans(corpus: DataFrame, k: int = KMEANS_K,
                      vec_col: str = "embedding") -> DataFrame:
     """(vec_id, cluster, cluster_size) after ``n_iter`` spherical
     Lloyd rounds from the ``k`` lowest-id seed vectors."""
-    import numpy as np
-    import pandas as pd
-
     base = corpus.select(
         F.col(id_col).cast("long").alias("id"),
         F.col(vec_col).alias("v"),  # float32 stays JVM-side; numpy upcasts exactly
     )
-    cent = _fit_centroids(base, k, n_iter)
-    n_cent, cent_bc = _model_broadcast(cent)
-    if n_cent == 0:  # empty corpus: nothing to assign
+    model = _fit_centroids(base, k, n_iter)
+    if model[0] == 0:  # empty corpus: nothing to assign
         return corpus.sparkSession.createDataFrame(
             [], "vec_id long, cluster long, cluster_size long")
 
-    def _assign(batches):
-        C = np.frombuffer(cent_bc.value, dtype=np.float64).reshape(n_cent, -1)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.array(pdf["v"].tolist(), dtype=np.float64)
-            V /= np.linalg.norm(V, axis=1, keepdims=True)
-            yield pd.DataFrame({
-                "vec_id": pdf["id"],
-                "cluster": np.argmax(V @ C.T, axis=1).astype(np.int64),
-            })
-
-    assigned = base.mapInPandas(
-        _assign, schema="vec_id long, cluster long"
-    )
     w = Window.partitionBy("cluster")
-    return assigned.select(
-        "vec_id", "cluster", F.count("*").over(w).alias("cluster_size")
+    return _nearest_centroids(base, "v", model, "cluster").select(
+        F.col("id").alias("vec_id"), "cluster",
+        F.count("*").over(w).alias("cluster_size")
     )
 
 
@@ -1646,9 +1593,11 @@ def semdedup(corpus: DataFrame, threshold: float = SEMDEDUP_THRESHOLD,
     agree on the sentinel, unlike NULL-vs-NaN).
 
     Dataflow: centroids fit via broadcast-assign Lloyd rounds (corpus
-    never shuffled), then ONE shuffle groups each cluster's vectors
-    and a numpy kernel does the within-cluster pairwise matrix —
-    O(Σ cluster_size²) work, the SemDeDup contract.
+    never shuffled); :func:`_nearest_centroids` tags each raw vector
+    with its cluster (map-only), then ONE shuffle groups each
+    cluster's vectors and a numpy kernel normalizes them and does the
+    within-cluster pairwise matrix — O(Σ cluster_size²) work, the
+    SemDeDup contract.
 
     ``k=None`` (default) auto-scales via :func:`semdedup_auto_k` so
     cluster sizes stay ~constant as the corpus grows (one count()
@@ -1664,35 +1613,16 @@ def semdedup(corpus: DataFrame, threshold: float = SEMDEDUP_THRESHOLD,
     )
     if k is None:
         k = semdedup_auto_k(base.count())
-    cent = _fit_centroids(base, k, n_iter)
-    n_cent, cent_bc = _model_broadcast(cent)
-    if n_cent == 0:  # empty corpus: nothing to dedup
+    model = _fit_centroids(base, k, n_iter)
+    if model[0] == 0:  # empty corpus: nothing to dedup
         return corpus.sparkSession.createDataFrame(
             [], "vec_id long, cluster long, n_prior_dups long, "
                 "keep boolean, max_prior_sim double")
 
-    def _assign_nv(batches):
-        C = np.frombuffer(cent_bc.value, dtype=np.float64).reshape(n_cent, -1)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.array(pdf["v"].tolist(), dtype=np.float64)
-            V /= np.linalg.norm(V, axis=1, keepdims=True)
-            yield pd.DataFrame({
-                "vec_id": pdf["id"],
-                "cluster": np.argmax(V @ C.T, axis=1).astype(np.int64),
-                # carry the normalized vector so the per-cluster kernel
-                # never re-reads the corpus
-                "nv": list(V),
-            })
-
-    clustered = base.mapInPandas(
-        _assign_nv, schema="vec_id long, cluster long, nv array<double>"
-    )
-
     def _cluster_dedup(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("vec_id")
-        V = np.array(pdf["nv"].tolist(), dtype=np.float64)
+        pdf = pdf.sort_values("id")
+        V = np.array(pdf["v"].tolist(), dtype=np.float64)
+        V /= np.linalg.norm(V, axis=1, keepdims=True)
         m = len(pdf)
         sims = np.round(V @ V.T, 6)
         prior = np.tril(np.ones((m, m), dtype=bool), -1)  # j < i by id order
@@ -1700,13 +1630,14 @@ def semdedup(corpus: DataFrame, threshold: float = SEMDEDUP_THRESHOLD,
         mx = masked.max(axis=1)
         nd = (masked >= threshold).sum(axis=1)
         return pd.DataFrame({
-            "vec_id": pdf["vec_id"].to_numpy(),
+            "vec_id": pdf["id"].to_numpy(),
             "cluster": pdf["cluster"].to_numpy(),
             "n_prior_dups": nd.astype(np.int64),
             "keep": nd == 0,
             "max_prior_sim": np.where(np.isfinite(mx), mx, -2.0),
         })
 
+    clustered = _nearest_centroids(base, "v", model, "cluster")
     return clustered.groupBy("cluster").applyInPandas(
         _cluster_dedup,
         schema=("vec_id long, cluster long, n_prior_dups long, "
@@ -1807,23 +1738,12 @@ def grouped_cosine_topk(corpus: DataFrame, queries: DataFrame,
                         n_blocks: int = 4) -> DataFrame:
     """(query_id, neighbor_id, sim, rank): top-``k`` neighbors within
     the query's own ``group_col`` partition."""
-    qp = _pack_blocks(
-        queries, "vec_id", "embedding", 1,
-        keys=(group_col,), keys_schema=f"{group_col} int",
-    ).select(group_col, F.col("ids").alias("q_ids"), F.col("mat").alias("q_mat"))
-    cp = _pack_blocks(
-        corpus, "vec_id", "embedding", n_blocks,
-        keys=(group_col,), keys_schema=f"{group_col} int",
-    )
-    joined = cp.join(F.broadcast(qp), group_col)
-    cand = joined.mapInPandas(
-        _block_topk_kernel(k), schema="query_id long, neighbor_id long, sim double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    def packed(df: DataFrame, nb: int) -> DataFrame:
+        return _pack_blocks(df, "vec_id", "embedding", nb, keys=(group_col,),
+                            keys_schema=f"{group_col} int")
+
+    return _block_topk(packed(corpus, n_blocks), packed(queries, 1), k,
+                       keys=(group_col,))
 
 
 def q_grouped_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1983,13 +1903,17 @@ FROM negexp GROUP BY query_id, vec_id
 # rank by the INTEGER dot product.  4× smaller vectors, SIMD-friendly
 # int8 kernels, and (the point here) an EXACT hash oracle: after the
 # one quantization round-trip (pure IEEE +,*,/,sqrt mirrored
-# shape-for-shape in both engines), everything downstream is int64
-# arithmetic with no accumulation-order sensitivity at all — unlike
-# the float cosine queries, the search phase cannot drift by an ulp.
+# shape-for-shape in both engines), everything downstream is exact
+# integer arithmetic with no accumulation-order sensitivity at all —
+# unlike the float cosine queries, the search phase cannot drift by an
+# ulp.
 #
 # Scale: quantization is map-only JVM column math (transform/aggregate,
-# no Python); search reuses the blocked-matmul shape of cosine_topk
-# with an int64 kernel; corpus never shuffled, queries broadcast.
+# no Python); search is cosine_topk's block kernel over the packed
+# integer-valued rows, un-normalized.  float64 is exact there: every
+# product and partial sum is an integer of magnitude ≤ dim·127² < 2⁵³,
+# so the kernel's sims are the integer dots.  Corpus never shuffled,
+# queries broadcast.
 # Recall vs the float baseline is gated in tests/test_round5_ops.py.
 INT8_SCALE = 127
 INT8_TOPK = 10
@@ -2025,63 +1949,13 @@ def int8_topk(corpus: DataFrame, queries: DataFrame, k: int = INT8_TOPK,
     """Top-``k`` neighbors per query under the quantized integer dot
     product → (query_id, neighbor_id, dot_q, rank); ties break by
     neighbor id (quantized scores tie often — determinism matters)."""
-    import numpy as np
-    import pandas as pd
-
-    def _pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        mat = np.array(pdf["qvec"].tolist(), dtype=np.int64)
-        return pd.DataFrame({
-            "blk": [int(pdf["blk"].iloc[0])],
-            "ids": [pdf["id"].to_numpy(np.int64)],
-            "mat": [mat.tobytes()],
-        })
-
     def packed(df: DataFrame, nb: int) -> DataFrame:
-        return (
-            int8_quantize(df, id_col, vec_col)
-            .withColumn("blk", F.pmod(F.xxhash64("id"), F.lit(nb)))
-            .groupBy("blk")
-            .applyInPandas(_pack, schema="blk long, ids array<long>, mat binary")
-        )
+        return _pack_blocks(int8_quantize(df, id_col, vec_col), "id", "qvec",
+                            nb, normalize=False)
 
-    qp = packed(queries, 1).select(F.col("ids").alias("q_ids"),
-                                   F.col("mat").alias("q_mat"))
-    cp = packed(corpus, n_blocks)
-
-    def _kernel(batches):
-        for pdf in batches:
-            frames = []
-            for _, row in pdf.iterrows():
-                q_ids = np.asarray(row["q_ids"], dtype=np.int64)
-                c_ids = np.asarray(row["ids"], dtype=np.int64)
-                Q = np.frombuffer(row["q_mat"], dtype=np.int64).reshape(len(q_ids), -1)
-                C = np.frombuffer(row["mat"], dtype=np.int64).reshape(len(c_ids), -1)
-                dots = Q @ C.T  # exact int64: |dot| <= 64 * 127^2
-                self_mask = q_ids[:, None] == c_ids[None, :]
-                dots = np.where(self_mask, np.iinfo(np.int64).min, dots)
-                order = np.lexsort(
-                    (np.broadcast_to(c_ids, dots.shape), -dots), axis=1
-                )
-                take = order[:, :k]
-                frames.append(pd.DataFrame({
-                    "query_id": np.repeat(q_ids, take.shape[1]),
-                    "neighbor_id": c_ids[take].ravel(),
-                    "dot_q": np.take_along_axis(dots, take, axis=1).ravel(),
-                }))
-            out = pd.concat(frames) if frames else pd.DataFrame(
-                {"query_id": [], "neighbor_id": [], "dot_q": []})
-            yield out[out["dot_q"] > np.iinfo(np.int64).min]
-
-    cand = cp.join(F.broadcast(qp)).mapInPandas(
-        _kernel, schema="query_id long, neighbor_id long, dot_q long"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dot_q").desc(), F.col("neighbor_id")
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return _block_topk(packed(corpus, n_blocks), packed(queries, 1), k).select(
+        "query_id", "neighbor_id", F.col("sim").cast("long").alias("dot_q"),
+        "rank")
 
 
 def q_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -32,7 +32,6 @@ from __future__ import annotations
 
 import math
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -67,13 +66,14 @@ def _stream_band_rows(doc_stream: DataFrame, n: int, rows_per_band: int,
     return rows.where(sig.isNotNull()).select("*", F.inline(bands))
 
 
-def _dedup_candidates(joined: DataFrame, ts_col: str | None) -> DataFrame:
-    """One row per (doc_id, match_id): run-scoped ``dropDuplicates``,
+def _dedup_candidates(joined: DataFrame, ts_col: str | None,
+                      id_col: str = "doc_id") -> DataFrame:
+    """One row per (``id_col``, match_id): run-scoped ``dropDuplicates``,
     or ``dropDuplicatesWithinWatermark`` under a ``ts_col`` watermark."""
     if ts_col is not None:
         return joined.dropDuplicatesWithinWatermark(
-            ["doc_id", "match_id"]).drop(ts_col)
-    return joined.dropDuplicates(["doc_id", "match_id"])
+            [id_col, "match_id"]).drop(ts_col)
+    return joined.dropDuplicates([id_col, "match_id"])
 
 
 def corpus_index(docs: DataFrame, n: int = 3,
@@ -224,61 +224,14 @@ def streaming_incremental_dedup_sketch(
 # --------------------------------------------------------------------------
 # Embedding twin (round 7): a STREAM of incoming vectors deduped
 # against a static corpus band index — the streaming face of
-# operators/similarity.embedding_incremental_matches, same shape as
-# the text twin above: map-only signature computation per micro-batch
-# (one vectorized matmul per Arrow batch; the hyperplane matrix is
-# seed-derived in every task, no broadcast state), stream-static
-# band-bucket join, stream-static vector join + exact cosine rescore.
-# No stream-side shuffle of the corpus ever happens.
-
-def emb_band_keys_udf(n_bits: int, rows_per_band: int, seed: int):
-    """Map-only producer of ``array<long>`` band keys per vector —
-    the same numpy pipeline as the batch ``_emb_band_keys`` (matmul
-    against the seed-derived hyperplanes, sign bits, per-band integer
-    keys), fused into one pandas UDF so a stream needs no signature
-    aggregation state."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    from grpc_map_reduce_spark.operators.similarity import hyperplanes
-
-    r = rows_per_band
-    assert n_bits % r == 0
-    n_bands = n_bits // r
-    weights = (1 << np.arange(r, dtype=np.int64))
-
-    @pandas_udf("array<long>")
-    def _keys(v: pd.Series) -> pd.Series:
-        if not len(v):
-            return pd.Series([], dtype=object)
-        V = np.array(v.tolist(), dtype=np.float64)
-        H = hyperplanes(seed, n_bits, V.shape[1])
-        bits = (V @ H.T) >= 0
-        keys = bits.reshape(len(V), n_bands, r).astype(np.int64) @ weights
-        return pd.Series(list(keys))
-
-    return _keys
-
-
-def cosine_sim_udf():
-    """Exact cosine of two vector columns, rounded to 6 dp — the
-    identical per-row numpy reduction as the batch rescore kernel, so
-    stream and batch sims are bit-equal."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _cos(va: pd.Series, vb: pd.Series) -> pd.Series:
-        if not len(va):
-            return pd.Series([], dtype=float)
-        A = np.array(va.tolist(), dtype=np.float64)
-        B = np.array(vb.tolist(), dtype=np.float64)
-        A /= np.linalg.norm(A, axis=1, keepdims=True)
-        B /= np.linalg.norm(B, axis=1, keepdims=True)
-        return pd.Series(np.round(np.einsum("ij,ij->i", A, B), 6))
-
-    return _cos
-
+# operators/similarity.embedding_incremental_matches, on the batch
+# kernels, the same shape as the text twin above: the batch
+# ``_emb_band_keys`` signs each micro-batch map-only (one vectorized
+# matmul per Arrow batch, hyperplanes generated once per task, the
+# stream's id, event time and vector passed through), a stream-static
+# band-bucket join, a stream-static vector join and the batch
+# ``_cosine_scores`` kernel.  No stream-side shuffle of the corpus
+# ever happens.
 
 def embedding_corpus_index(corpus: DataFrame,
                            id_col: str = "vec_id",
@@ -286,9 +239,12 @@ def embedding_corpus_index(corpus: DataFrame,
                            ) -> tuple[DataFrame, DataFrame]:
     """The static corpus side, built once with the BATCH machinery at
     the selective production calibration (guard ON): ``buckets
-    (band_idx, key, match_id)`` and ``vectors (match_id, _vb)``.  At
-    scale both live as bucketed parquet, maintained incrementally as
-    shards are accepted."""
+    (band_idx, key, match_id)`` and ``vectors (match_id, _vb)``.
+    Buckets of more than ``EMB_LSH_MAX_BUCKET_DEFAULT`` corpus vectors
+    are dropped by a size filter on each bucket's member array —
+    ``cross_bucket_pairs``' corpus-side guard, with no join.  At scale
+    both live as bucketed parquet, maintained incrementally as shards
+    are accepted."""
     from grpc_map_reduce_spark.operators.similarity import (
         EMB_LSH_BITS,
         EMB_LSH_MAX_BUCKET_DEFAULT,
@@ -297,17 +253,14 @@ def embedding_corpus_index(corpus: DataFrame,
         _emb_band_keys,
     )
 
-    cor_k = _emb_band_keys(
-        corpus, EMB_LSH_BITS, EMB_SELECTIVE_ROWS_PER_BAND, EMB_LSH_SEED,
-        id_col, vec_col,
-    ).withColumnRenamed("id", "match_id")
-    hot = (
-        cor_k.groupBy("band_idx", "key")
-        .agg(F.count("*").alias("sz"))
-        .filter(F.col("sz") > EMB_LSH_MAX_BUCKET_DEFAULT)
-        .select("band_idx", "key")
+    buckets = (
+        _emb_band_keys(corpus, EMB_LSH_BITS, EMB_SELECTIVE_ROWS_PER_BAND,
+                       EMB_LSH_SEED, id_col, vec_col)
+        .groupBy("band_idx", "key")
+        .agg(F.collect_list("id").alias("ms"))
+        .where(F.size("ms") <= EMB_LSH_MAX_BUCKET_DEFAULT)
+        .select("band_idx", "key", F.explode("ms").alias("match_id"))
     )
-    buckets = cor_k.join(F.broadcast(hot), ["band_idx", "key"], "left_anti")
     vectors = corpus.select(
         F.col(id_col).cast("long").alias("match_id"),
         F.col(vec_col).alias("_vb"),
@@ -332,32 +285,21 @@ def streaming_embedding_dedup(vec_stream: DataFrame, buckets: DataFrame,
         EMB_LSH_SEED,
         EMB_SELECTIVE_ROWS_PER_BAND,
         EMB_SELECTIVE_THRESHOLD,
+        _cosine_scores,
+        _emb_band_keys,
     )
 
-    keys_udf = emb_band_keys_udf(
-        EMB_LSH_BITS, EMB_SELECTIVE_ROWS_PER_BAND, EMB_LSH_SEED
-    )
-    if ts_col is not None:
-        vec_stream = vec_stream.withWatermark(ts_col, dedup_within)
     ts_cols = [ts_col] if ts_col is not None else []
-    exp = (
-        vec_stream.select(
-            F.col(id_col).cast("long").alias("id"),
-            *ts_cols,
-            F.col(vec_col).alias("_va"),
-            F.posexplode(keys_udf(F.col(vec_col))).alias("band_idx", "key"),
-        )
+    exp = _emb_band_keys(
+        vec_stream, EMB_LSH_BITS, EMB_SELECTIVE_ROWS_PER_BAND, EMB_LSH_SEED,
+        id_col, vec_col, keep=(*ts_cols, F.col(vec_col).alias("_va")),
     )
-    joined = exp.join(buckets, ["band_idx", "key"])  # stream-static
     if ts_col is not None:
-        cand = joined.dropDuplicatesWithinWatermark(
-            ["id", "match_id"]
-        ).drop(ts_col)
-    else:
-        cand = joined.dropDuplicates(["id", "match_id"])
+        exp = exp.withWatermark(ts_col, dedup_within)
+    joined = exp.join(buckets, ["band_idx", "key"])  # stream-static
+    cand = _dedup_candidates(joined, ts_col, "id")
     return (
-        cand.join(corpus_vecs, "match_id")  # stream-static
-        .withColumn("sim", cosine_sim_udf()(F.col("_va"), F.col("_vb")))
-        .filter(F.col("sim") >= EMB_SELECTIVE_THRESHOLD)
+        _cosine_scores(cand.join(corpus_vecs, "match_id"),  # stream-static
+                       EMB_SELECTIVE_THRESHOLD)
         .select(F.col("id").alias(id_col), "match_id", "sim")
     )

@@ -4,6 +4,8 @@ determinism of the seeded hyperplane signatures."""
 
 from __future__ import annotations
 
+import pytest
+
 from grpc_map_reduce_spark.operators.similarity import (
     embedding_lsh_candidates,
     embedding_lsh_near_dup,
@@ -37,6 +39,14 @@ def test_embedding_lsh_candidates_deterministic_and_pruning(spark, sf_dir):
     # the n·(n−1)/2 all-pairs blow-up it replaces.
     n = emb.count()
     assert len(a) < 0.5 * n * (n - 1) / 2
+
+
+def test_embedding_lsh_rejects_band_width_not_dividing_bits(spark, sf_dir):
+    """A ``rows_per_band`` that does not divide ``n_bits`` is refused
+    with ValueError, which ``python -O`` cannot strip."""
+    emb = table(spark, sf_dir, "embeddings")
+    with pytest.raises(ValueError, match="rows_per_band"):
+        embedding_lsh_candidates(emb, n_bits=96, rows_per_band=7)
 
 
 def test_embedding_lsh_max_bucket_guard(spark, sf_dir):

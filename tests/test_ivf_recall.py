@@ -34,12 +34,16 @@ def test_ivf_recall_vs_exact(spark, sf_dir):
 
 
 def test_ivf_full_probe_is_exact(spark, sf_dir):
-    """Probing every list = brute force: must equal the exact top-k."""
+    """Probing every list = brute force: the whole (query_id,
+    neighbor_id, sim, rank) rows must equal the exact top-k's — both
+    searches score through the same block kernel."""
     emb = table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 4)
-    exact = _topk_sets(cosine_topk(emb, queries))
-    full = _topk_sets(ivf_topk(emb, queries, n_lists=8, n_probe=8))
-    assert full == exact
+    cols = ["query_id", "neighbor_id", "sim", "rank"]
+    exact = sorted(map(tuple, cosine_topk(emb, queries).select(cols).collect()))
+    full = sorted(map(tuple, ivf_topk(emb, queries, n_lists=8, n_probe=8)
+                      .select(cols).collect()))
+    assert full == exact and len(exact) == 4 * 10
 
 
 def test_ivf_deterministic(spark, sf_dir):
