@@ -33,7 +33,8 @@ spec-conforming decoder, and the files this encoder writes are
 ordinary baseline JPEGs any decoder can read.
 
 Per-image Python looping is the accepted cost of a dependency-free
-codec, bounded by the Arrow batch size (multimodal.py's mapInPandas).
+codec, bounded by the Arrow batch size (multimodal.py's media row
+kernel, one ``mapInArrow`` pass).
 """
 
 from __future__ import annotations

@@ -19,9 +19,10 @@ which scanline filter to apply so tests can exercise every decoder
 branch (a filter-0-only encoder would leave Sub/Up/Average/Paeth
 untested).
 
-These run inside Arrow batches on executors (multimodal.py's
-mapInPandas); per-image Python looping is the accepted cost of a
-dependency-free codec and is bounded by the Arrow batch size.
+These run inside Arrow batches on executors (multimodal.py's media
+row kernel, one ``mapInArrow`` pass); per-image Python looping is the
+accepted cost of a dependency-free codec and is bounded by the Arrow
+batch size.
 """
 
 from __future__ import annotations

@@ -27,6 +27,24 @@ def test_media_schema(spark, sf_dir):
     assert isinstance(row.media, (bytes, bytearray)) and len(row.media) > 0
 
 
+def test_encoder_maps_null_text_to_null_media(spark):
+    """A NULL text encodes to a NULL payload, as attach_fake_media's
+    ``F.encode`` does, and that payload quarantines as corrupt."""
+    from grpc_map_reduce_spark.operators.multimodal import (
+        attach_png_media,
+        decode_with_quarantine,
+    )
+
+    docs = spark.createDataFrame([(1, "a" * 47), (2, None)],
+                                 "doc_id long, text string")
+    media = attach_png_media(docs)
+    got = {r.doc_id: r.media for r in media.collect()}
+    assert got[1] is not None and got[2] is None
+    status = {r.doc_id: (r.status, r.error_class)
+              for r in decode_with_quarantine(media).collect()}
+    assert status == {1: ("ok", ""), 2: ("corrupt", "ValueError")}
+
+
 def test_extract_features_shape_and_determinism(spark, sf_dir):
     media = attach_fake_media(table(spark, sf_dir, "documents"))
     feats = extract_features(media)

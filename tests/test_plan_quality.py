@@ -589,3 +589,19 @@ def test_kmv_profile_single_scan_per_column(spark, sf_dir):
     plan = _plan(spark, sf_dir, "kmv_merge_profile")
     assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 0, plan
     assert len(re.findall(r"\(\d+\) Scan ExistingRDD", plan)) == 8, plan
+
+
+def test_multimodal_plans_one_arrow_kernel(spark, sf_dir):
+    """Every multimodal query runs its codecs through one Arrow pass
+    per step (the media row kernel, or the WebDataset shard closure):
+    no pandas map anywhere in the family.  The quarantine query
+    encodes each document once, in the format its id picks, so it
+    plans no join."""
+    from grpc_map_reduce_spark.operators import multimodal
+
+    for name, *_ in multimodal.QUERIES:
+        plan = _plan(spark, sf_dir, name)
+        assert "MapInPandas" not in plan, (name, plan)
+        assert "MapInArrow" in plan, (name, plan)
+    plan = _plan(spark, sf_dir, "multimodal_quarantine")
+    assert not re.findall(JOIN_RE, plan), plan

@@ -29,6 +29,9 @@ def test_quarantine_records_error_class(spark):
         (1, b"XXXX" + png[4:], ("png", 8, 8, 1)),  # clobbered signature
         (2, png[:7], ("png", 8, 8, 1)),        # truncated mid-signature
         (3, png, ("mp4", 8, 8, 1)),            # unsupported format
+        (4, None, ("png", 8, 8, 1)),           # NULL payload
+        (5, png, None),                        # NULL metadata
+        (6, png, (None, 8, 8, 1)),             # NULL format
     ]
     media = spark.createDataFrame(
         rows,
@@ -39,6 +42,11 @@ def test_quarantine_records_error_class(spark):
            for r in decode_with_quarantine(media).collect()}
     assert got[0] == ("ok", "")
     assert got[3] == ("unsupported_format", "")
+    # a NULL payload or metadata struct is a corrupt row, never a
+    # TypeError that kills the job
+    assert got[4] == ("corrupt", "ValueError")
+    assert got[5] == ("corrupt", "ValueError")
+    assert got[6] == ("corrupt", "ValueError")
     for doc_id in (1, 2):
         status, cls = got[doc_id]
         assert status == "corrupt"

@@ -77,7 +77,7 @@ def main() -> None:
         "Columns: shuffles = Exchange nodes; bcast/smj = broadcast / "
         "sort-merge joins; gsort = range-partitioned (global) sorts; "
         "arrowPy = Arrow-batched Python nodes (pandas UDF / mapInPandas "
-        "/ UDTF); rowPy = row-at-a-time Python (only the documented "
+        "/ mapInArrow / UDTF); rowPy = row-at-a-time Python (only the documented "
         "`map_reduce` RDD escape hatch may ever show one); wscg = "
         "whole-stage-codegen subtrees.",
         "",
