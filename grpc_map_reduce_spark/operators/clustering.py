@@ -17,17 +17,18 @@ choice.
 Scale notes:
   * Each round is two groupBy-shuffles on the node id — no driver
     state; the edge set lives entirely in executors.
-  * ``localCheckpoint`` truncates lineage each round (iterative plans
-    otherwise grow unboundedly and re-execute from the scan); on a
-    real cluster use ``spark.sparkContext.setCheckpointDir`` + HDFS
-    ``checkpoint()`` for fault-tolerant truncation instead.
-  * Convergence test is a 2-value aggregate (count + xxhash64 sum of
-    the edge set) — O(1) driver traffic per round.
+  * ``iterate`` (plans/checkpoint.py) truncates lineage each round
+    (iterative plans otherwise grow unboundedly and re-execute from
+    the scan); setting ``spark.graft.reliableCheckpointDir`` makes
+    every round a fault-tolerant ``checkpoint()`` to that directory.
+  * Convergence test is a 2-value aggregate (count + xxhash64
+    bit_xor of the edge set) — O(1) driver traffic per round.  No
+    fixpoint within ``max_iter`` rounds raises instead of returning a
+    partial answer.
 """
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -35,7 +36,8 @@ from grpc_map_reduce_spark.operators.dedup import (
     LSH_MAX_BUCKET_DEFAULT, LSH_NEAR_DUP_THRESHOLD, SKETCH_MIN_BANDS,
     SKETCH_THRESHOLD, lsh_near_dup, lsh_near_dup_sketch, lsh_pairs_sql)
 from grpc_map_reduce_spark.operators.sketches import SPLIT_TRAIN_PCT
-from grpc_map_reduce_spark.plans.checkpoint import PIN_LEVEL, iter_checkpoint
+from grpc_map_reduce_spark.plans.checkpoint import (
+    PIN_LEVEL, iter_checkpoint, iterate)
 from grpc_map_reduce_spark.sources.tables import table
 
 CLUSTER_JACCARD_THRESHOLD = 0.05  # probed at sf0.01: 27 LSH edges (was 29 exact)
@@ -97,7 +99,8 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     """(node, component) for every node in ``edges`` (src/dst columns).
 
     ``component`` is the minimum node id of the connected component.
-    Root nodes map to themselves.
+    Root nodes map to themselves.  Raises ``RuntimeError`` when the
+    star rounds reach no fixpoint within ``max_iter`` rounds.
     """
     e = iter_checkpoint(
         edges.filter(F.col("src") != F.col("dst"))
@@ -107,22 +110,8 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
         )
         .distinct()
     )
-    prev = None
-    for _ in range(max_iter):
-        # lazy checkpoint: the convergence aggregate below is the
-        # action that materializes it, so each round runs ONE job
-        # (eager=True would run a materialization job AND the agg job)
-        e = iter_checkpoint(_small_star(_large_star(e)), eager=False)
-        # bit_xor, not sum: order-insensitive like sum but cannot
-        # overflow (ANSI mode makes a sum of 2^63-scale hashes throw)
-        sig = e.agg(
-            F.count("*").alias("n"),
-            F.coalesce(F.bit_xor(F.xxhash64("src", "dst")), F.lit(0)).alias("h"),
-        ).first()
-        cur = (sig["n"], sig["h"])
-        if cur == prev:
-            break
-        prev = cur
+    e = iterate(e, lambda e: _small_star(_large_star(e)), max_iter,
+                converge=True)
     # At the fixpoint the edge set is a star forest: (member, root).
     # The groupBy(min) is defensive canonicalization, free on the
     # already-tiny star edge set.
@@ -388,46 +377,29 @@ def pagerank(edges: DataFrame, damping: float = PAGERANK_DAMPING,
     deg = sym.groupBy("src").agg(F.count("*").alias("outd"))
     # Fold the out-degree onto each edge ONCE: every iteration then
     # does one join (ranks) + one groupBy instead of re-deriving the
-    # degree aggregate per materialization.  The loop-invariant edge
-    # table is repartitioned by the join key and persist()-ed — NOT
-    # localCheckpoint-ed: a checkpoint scan reports Unknown
-    # partitioning, so every iteration would re-exchange the FULL
-    # edge set, while the cache keeps the hash partitioning visible
-    # and each iteration ships only the small rank table to it (the
-    # GraphX pattern: edges stay put, ranks move).
+    # degree aggregate.  The loop-invariant edge table is
+    # hash-partitioned by the join key and is ``iterate``'s cache, so
+    # it stays put and only the small rank table moves (the GraphX
+    # pattern).
     n_part = edges.sparkSession.sparkContext.defaultParallelism
-    # Serialized cache level for the loop-invariant edge table, same
-    # policy as PIN_LEVEL: the dense diagnostic graph holds this cache
-    # resident across all K iterations, and the deserialized columnar
-    # default was a third of the 125x probe's 13 GB pool-sum peak.
-    sym_deg = (
-        sym.join(deg, "src").repartition(n_part, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    sym_deg = sym.join(deg, "src").repartition(n_part, "src")
     nodes = iter_checkpoint(deg.select(F.col("src").alias("node")), eager=False)
     n = nodes.count()
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    for _ in range(n_iter):
+
+    def power_iteration(ranks: DataFrame) -> DataFrame:
         contrib = (
             sym_deg.join(ranks, sym_deg.src == ranks.node)
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum(F.col("rank") / F.col("outd")).alias("c"))
         )
-        ranks = iter_checkpoint(
-            nodes.join(contrib, "node", "left")
-            .select(
-                "node",
-                (F.lit((1 - damping) / n)
-                 + damping * F.coalesce("c", F.lit(0.0))).alias("rank"),
-            ),
-            eager=False,
+        return nodes.join(contrib, "node", "left").select(
+            "node",
+            (F.lit((1 - damping) / n)
+             + damping * F.coalesce("c", F.lit(0.0))).alias("rank"),
         )
-    # Materialize the final ranks (cuts their lineage back to
-    # sym_deg), then release the cached edge table — same long-lived
-    # session leak LPA had: without this every invocation strands
-    # sym_deg's cached blocks.
-    ranks = iter_checkpoint(ranks)
-    sym_deg.unpersist(blocking=False)
+
+    ranks = iterate(nodes.withColumn("rank", F.lit(1.0 / n)), power_iteration,
+                    n_iter, cache=sym_deg)
     return ranks.select("node", F.round("rank", 6).alias("rank"))
 
 
@@ -880,36 +852,24 @@ def label_propagation(edges: DataFrame, n_iter: int = LPA_ITERS,
     if not edges_unique:
         sym = sym.distinct()
     n_part = edges.sparkSession.sparkContext.defaultParallelism
-    # Serialized loop-invariant cache, same policy as pagerank's
-    # sym_deg pin (see the 125x probe note there).
-    sym = (
-        sym.repartition(n_part, "dst")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    labels = sym.select(F.col("src").alias("node")).distinct() \
-        .withColumn("label", F.col("node"))
-    for _ in range(n_iter):
+    sym = sym.repartition(n_part, "dst")  # iterate's cache, as in pagerank
+
+    def vote(labels: DataFrame) -> DataFrame:
         votes = (
             sym.join(labels, sym.dst == labels.node)
             .groupBy("src", "label")
             .agg(F.count("*").alias("cnt"))
         )
-        labels = iter_checkpoint(
-            votes.groupBy("src")
-            .agg(F.max(F.struct(
-                F.col("cnt"), (-F.col("label")).alias("neg")
-            )).alias("m"))
-            .select(
-                F.col("src").alias("node"),
-                (-F.col("m.neg")).cast("long").alias("label"),
-            ),
-            eager=False,
+        return votes.groupBy("src").agg(F.max(F.struct(
+            F.col("cnt"), (-F.col("label")).alias("neg")
+        )).alias("m")).select(
+            F.col("src").alias("node"),
+            (-F.col("m.neg")).cast("long").alias("label"),
         )
-    # Materialize the final labels (cuts their lineage back to sym),
-    # then release the cached edge table — without this a long-lived
-    # session leaks sym's cached blocks on every invocation.
-    labels = iter_checkpoint(labels)
-    sym.unpersist(blocking=False)
+
+    labels = sym.select(F.col("src").alias("node")).distinct() \
+        .withColumn("label", F.col("node"))
+    labels = iterate(labels, vote, n_iter, cache=sym)
     sizes = labels.groupBy("label").agg(F.count("*").alias("community_size"))
     return labels.join(sizes, "label").select(
         "node", F.col("label").alias("community"), "community_size"
@@ -970,7 +930,7 @@ ORACLE_LPA = _lpa_oracle()
 # Sketch-edge graph twins (round 11): the rescore decision propagates
 # into the graph family.  dedup_clusters / leakage_safe_split feed CC
 # from the EXACT rescore, whose per-candidate shingle-array transport
-# is the measured 625× disk-killer (SURVEY §8.12, sketch_probe) — but
+# is the measured 625× disk-killer (SURVEY §8.12) — but
 # nothing in the graph algorithms needs the exact score: CC consumes
 # edge ENDPOINTS only.  These twins build the identical star-algorithm
 # chain from `lsh_near_dup_sketch` edges at the calibrated 0.25

@@ -166,12 +166,19 @@ def _decoder_snapshot() -> dict:
     return dict(_NATIVE_DECODERS)
 
 
+def _payload(payload: bytes | None) -> bytes:
+    """``payload``, or ``ValueError`` when it is NULL — the check for
+    the consumers that call a codec directly and read no metadata."""
+    if payload is None:
+        raise ValueError("media is NULL")
+    return payload
+
+
 def _media_format(payload: bytes | None, meta: dict | None) -> str:
     """``meta``'s format, or ``ValueError`` naming the NULL when the
     payload, the metadata struct or its format is NULL — a quarantine
     row, not a ``TypeError`` deep inside a codec."""
-    if payload is None:
-        raise ValueError("media is NULL")
+    _payload(payload)
     if meta is None:
         raise ValueError("media_meta is NULL")
     if meta["format"] is None:
@@ -395,7 +402,7 @@ def q_multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     see the module comment above ``JPEG_W``."""
 
     def row(doc_id, payload):
-        pix = decode_jpeg(payload)[3]
+        pix = decode_jpeg(_payload(payload))[3]
         yield doc_id, len(pix), list(pix)
 
     decoded = _row_map(attach_jpeg_media(_documents(spark, sf_dir)),
@@ -498,7 +505,7 @@ def augment_media(media_df: DataFrame) -> DataFrame:
     off = (PNG_W - AUG_CROP) // 2
 
     def row(doc_id, payload):
-        w0, h0, ch, pix = decode_png(payload)
+        w0, h0, ch, pix = decode_png(_payload(payload))
         a = np.frombuffer(pix, np.uint8).reshape(h0, w0)
         a = a[off:off + AUG_CROP, off:off + AUG_CROP]   # center crop
         a = a[:, ::-1]                                   # hflip
@@ -676,7 +683,7 @@ def sample_gif_frames(media_df: DataFrame, every_n: int = 2) -> DataFrame:
     ``every_n``-th decoded frame — one output row per kept frame."""
 
     def row(doc_id, payload):
-        frames = decode_gif(payload)[2]
+        frames = decode_gif(_payload(payload))[2]
         for i in range(0, len(frames), every_n):
             yield doc_id, i, hashlib.md5(frames[i]).hexdigest(), len(frames[i])
 
@@ -1140,7 +1147,7 @@ def dhash_images(media_df: DataFrame) -> DataFrame:
     import numpy as np
 
     def row(doc_id, payload):
-        w0, h0, ch, pix = decode_png(payload)
+        w0, h0, ch, pix = decode_png(_payload(payload))
         rp = _resize_pixels(pix, w0, h0, ch, DHASH_W, DHASH_H)
         a = np.frombuffer(rp, np.uint8).reshape(DHASH_H, DHASH_W)
         v = 0

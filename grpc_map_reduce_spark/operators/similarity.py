@@ -18,7 +18,7 @@ from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from grpc_map_reduce_spark.operators.dedup import bucket_pairs, cross_bucket_pairs
 from grpc_map_reduce_spark.sources.tables import table
-from grpc_map_reduce_spark.plans.checkpoint import iter_checkpoint
+from grpc_map_reduce_spark.plans.checkpoint import iterate
 
 
 def _pack_blocks(df: DataFrame, id_col: str, vec_col: str,
@@ -1083,8 +1083,12 @@ def _lloyd_refine(base: DataFrame, cent: DataFrame, n_iter: int) -> DataFrame:
     import pandas as pd
     from pyspark import TaskContext
 
-    def _make_partial(bc, k):
-        def _partial(batches):
+    def lloyd_pass(cent: DataFrame) -> DataFrame:
+        k, bc = _model_broadcast(cent)  # materializes the last round's pin
+        if k == 0:  # empty corpus → empty seed pack: nothing to refine
+            return cent
+
+        def partial(batches):
             C = np.frombuffer(bc.value, dtype=np.float64).reshape(k, -1)
             sums: dict[int, tuple[int, np.ndarray]] = {}
             for pdf in batches:
@@ -1106,10 +1110,8 @@ def _lloyd_refine(base: DataFrame, cent: DataFrame, n_iter: int) -> DataFrame:
                 "cnt": [c for c, _ in sums.values()],
                 "s": [s.tolist() for _, s in sums.values()],
             })
-        return _partial
 
-    def _make_combine(bc, k):
-        def _combine(pdf: pd.DataFrame) -> pd.DataFrame:
+        def combine(pdf: pd.DataFrame) -> pd.DataFrame:
             C = np.frombuffer(bc.value, dtype=np.float64).reshape(k, -1).copy()
             pdf = pdf.sort_values(["list_id", "pid"])
             for li, grp in pdf.groupby("list_id"):
@@ -1123,26 +1125,16 @@ def _lloyd_refine(base: DataFrame, cent: DataFrame, n_iter: int) -> DataFrame:
                 "cent_ids": [np.arange(C.shape[0], dtype=np.int64)],
                 "cent_mat": [C.tobytes()],
             })
-        return _combine
 
-    for _ in range(n_iter):
-        k, bc = _model_broadcast(cent)
-        if k == 0:  # empty corpus → empty seed pack: nothing to refine
-            return cent
-        partials = base.mapInPandas(
-            _make_partial(bc, k),
-            schema="pid long, list_id long, cnt long, s array<double>",
-        )
-
-        cent = iter_checkpoint(
-            partials
+        return (
+            base.mapInPandas(
+                partial, "pid long, list_id long, cnt long, s array<double>")
             .withColumn("g", F.lit(0))
             .groupBy("g")
-            .applyInPandas(_make_combine(bc, k),
-                           schema="cent_ids array<long>, cent_mat binary"),
-            eager=False,
+            .applyInPandas(combine, "cent_ids array<long>, cent_mat binary")
         )
-    return cent
+
+    return iterate(cent, lloyd_pass, n_iter)
 
 
 def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,

@@ -1,15 +1,19 @@
-"""Checkpoint strategy for iterative operators.
+"""Round loop and checkpoint strategy for iterative operators.
 
-The iterative family (connected components, LPA, pagerank, Lloyd
-refinement) truncates lineage every round — without it the plan
-doubles per iteration and the optimizer chokes.  ``localCheckpoint``
-is the right default: it pins blocks on the executors with zero
-external storage.  But local checkpoint blocks DIE WITH THEIR
-EXECUTOR, and a localCheckpoint-ed frame has no lineage to recompute
-from — on a real cluster, losing one executor mid-iteration kills
-the whole job.  That is acceptable in local[32] (one JVM — if it
-dies, everything dies) and NOT acceptable on 1000 executors, where
-the probability of at least one loss during a long job approaches 1.
+:func:`iterate` is the one round loop every iterative operator runs
+(connected components, pagerank, LPA, Lloyd refinement): the operator
+supplies one round's step and the driver owns the per-round lineage
+cut, the optional convergence test and its round cap, and the
+loop-invariant edge cache.  Lineage is cut every round — without it
+the plan doubles per iteration and the optimizer chokes.
+``localCheckpoint`` is the right default: it pins blocks on the
+executors with zero external storage.  But local checkpoint blocks
+DIE WITH THEIR EXECUTOR, and a localCheckpoint-ed frame has no
+lineage to recompute from — on a real cluster, losing one executor
+mid-iteration kills the whole job.  That is acceptable in local mode
+(one JVM — if it dies, everything dies) and NOT acceptable on 1000
+executors, where the probability of at least one loss during a long
+job approaches 1.
 
 ``iter_checkpoint`` is the swap point: set the session conf
 
@@ -39,10 +43,27 @@ import os
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 #: Session conf key: when set to a storage path, iterative operators
 #: use reliable checkpoint()-to-storage instead of localCheckpoint.
 RELIABLE_DIR_CONF = "spark.graft.reliableCheckpointDir"
+
+
+#: Storage level of every pin: ``iter_checkpoint``'s local path, the
+#: operators' own ``localCheckpoint`` pins and :func:`iterate`'s
+#: loop-invariant cache.  SERIALIZED memory+disk (PySpark's
+#: MEMORY_AND_DISK; the JVM default is the deserialized variant): the
+#: pins are the engine's only O(corpus) materializations, and the
+#: deserialized unroll reserves memory in whole-block units — under a
+#: capped heap with 32 tasks unrolling at once that is exactly where
+#: the 125x probe OOM'd (MemoryStore putIteratorAsValues →
+#: SizeEstimator).  The serialized path reserves incrementally and
+#: spills the tail of a block to disk instead of failing the job.
+#: Pins stay local even in reliable-checkpoint mode: a pin lives
+#: within one query, so recompute-on-executor-loss is the plan's
+#: normal (re)execution, not a correctness risk.
+PIN_LEVEL = StorageLevel.MEMORY_AND_DISK
 
 
 def _norm_ckpt_uri(uri: str) -> tuple:
@@ -122,17 +143,14 @@ def iter_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     path = spark.conf.get(RELIABLE_DIR_CONF, None)
     if path:
         sc = spark.sparkContext
-        # setCheckpointDir appends a per-call subdirectory, so the
-        # stored dir never string-equals the conf value; set it when
-        # nothing is set yet, and OVERRIDE (with a warning) when a
-        # dir set for some other purpose doesn't contain the conf
-        # path — silently checkpointing into a foreign dir would make
-        # the reliable knob a no-op for operators that rely on it
-        # (ADVICE r6).
-        cur = sc._jsc.sc().getCheckpointDir()
         # setCheckpointDir(p) stores p/<uuid> (often with a file:
-        # scheme prefix) — see _stored_dir_matches for the
-        # normalization contract.
+        # scheme prefix; see _stored_dir_matches), so the stored dir
+        # never string-equals the conf value.  Set it when nothing is
+        # set yet, and OVERRIDE (with a warning) when a dir set for
+        # some other purpose doesn't contain the conf path — silently
+        # checkpointing into a foreign dir would make the reliable
+        # knob a no-op for operators that rely on it (ADVICE r6).
+        cur = sc._jsc.sc().getCheckpointDir()
         if cur.isEmpty():
             sc.setCheckpointDir(path)
         elif not _stored_dir_matches(cur.get(), path):
@@ -158,31 +176,57 @@ def iter_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
         out = df.checkpoint(eager=True)
         df.unpersist()
         return out
-    # SERIALIZED memory+disk for the pinned blocks (PySpark's
-    # MEMORY_AND_DISK; the JVM default is the DESERIALIZED variant).
-    # Deserialized unroll of a large checkpoint block is exactly where
-    # the capped-heap 125x probe OOM'd (MemoryStore putIteratorAsValues
-    # → SizeEstimator while 32 tasks unroll at once); the serialized
-    # path reserves unroll memory incrementally in byte-buffer units
-    # and degrades to disk instead of dying.  Cost: one serialize per
-    # round on state that is read exactly once next round — noise at
-    # fixture scale (bench-gated), and the difference between "needs
-    # 2x heap headroom" and "runs in the heap it's given" at 125x.
-    return df.localCheckpoint(eager=eager,
-                              storageLevel=StorageLevel.MEMORY_AND_DISK)
+    # PIN_LEVEL: one serialize per round on state read exactly once
+    # next round — noise at fixture scale, and the difference between
+    # "needs 2x heap headroom" and "runs in the heap it's given" at 125x.
+    return df.localCheckpoint(eager=eager, storageLevel=PIN_LEVEL)
 
 
-#: Storage level for every operator-level ``localCheckpoint`` pin —
-#: pass as ``df.localCheckpoint(eager=..., storageLevel=PIN_LEVEL)``.
-#: SERIALIZED memory+disk, for the same reason as the local path
-#: above: the pins are the engine's only O(corpus) materializations
-#: (shingle explodes, posting lists, token tables), and the
-#: deserialized JVM default unrolls them as object arrays whose
-#: memory is reserved in whole-block units.  Under a capped heap with
-#: 32 tasks unrolling simultaneously that is exactly where the 125x
-#: probe OOM'd; the serialized path reserves incrementally and spills
-#: the tail of a block to disk instead of failing the job.  Pins stay
-#: local even in reliable-checkpoint mode: a pin lives within one
-#: query, so recompute-on-executor-loss is the plan's normal
-#: (re)execution, not a correctness risk.
-PIN_LEVEL = StorageLevel.MEMORY_AND_DISK
+def iterate(state: DataFrame, step, rounds: int, *, converge: bool = False,
+            cache: DataFrame | None = None) -> DataFrame:
+    """The round loop of every iterative operator: ``state`` after up
+    to ``rounds`` applications of ``step`` (DataFrame -> DataFrame).
+
+    Every round's output is cut by :func:`iter_checkpoint`, lazily, so
+    in local mode a round costs only the one job that next reads it;
+    reliable mode writes every round to storage.
+
+    ``converge=True`` stops at the first round whose ``(count,
+    bit_xor(xxhash64(row)))`` signature — order-insensitive, and unlike
+    a sum it cannot overflow under ANSI mode — repeats the previous
+    round's; that aggregate is the round's one job.  Using all
+    ``rounds`` without a repeat raises ``RuntimeError``: a state short
+    of its fixpoint is a wrong answer, not an approximate one.
+
+    ``cache`` is a loop-invariant frame the step reads every round (an
+    edge table), ``persist``-ed at :data:`PIN_LEVEL` (deserialized, it
+    was a third of the 125x probe's 13 GB pool-sum peak).  A cache,
+    not a checkpoint: a checkpoint scan reports unknown partitioning,
+    so every round would re-shuffle it, while the cache keeps its hash
+    partitioning visible to the round's join and only the small state
+    moves.  The last round is then eager, and the cache is released in
+    a ``finally`` — after the result is materialized, or when a round
+    raises.
+    """
+    if cache is not None:
+        cache.persist(PIN_LEVEL)
+    try:
+        prev = None
+        for i in range(rounds):
+            eager = cache is not None and not converge and i == rounds - 1
+            state = iter_checkpoint(step(state), eager=eager)
+            if converge:
+                sig = tuple(state.agg(
+                    F.count("*"),
+                    F.coalesce(F.bit_xor(F.xxhash64(*state.columns)), F.lit(0)),
+                ).first())
+                if sig == prev:
+                    return state
+                prev = sig
+        if converge:
+            raise RuntimeError(
+                f"no fixpoint within the round cap of {rounds} rounds")
+        return state
+    finally:
+        if cache is not None:
+            cache.unpersist(blocking=False)

@@ -127,6 +127,7 @@ spark = (
 spark.sparkContext.setLogLevel("ERROR")
 
 from grpc_map_reduce_spark.operators import clustering
+from grpc_map_reduce_spark.plans import checkpoint
 from grpc_map_reduce_spark.plans.checkpoint import iter_checkpoint as _orig
 
 # Ring of 40 nodes plus chords — non-uniform degrees so ranks differ.
@@ -152,7 +153,7 @@ def _faulty(schema):
 
 
 CALLS = {"n": 0}
-INJECT_AT = 6  # calls 1-3 are the prologue pins; 6 = ~iteration 3
+INJECT_AT = 6  # calls 1-3 are the prologue pins; 4-6 iterations 1-3
 
 
 def wrapped(df, eager=True):
@@ -162,7 +163,9 @@ def wrapped(df, eager=True):
     return _orig(df, eager)
 
 
-clustering.iter_checkpoint = wrapped
+# pagerank pins its prologue through clustering's name and runs its
+# power iterations through iterate's (plans.checkpoint): patch both
+clustering.iter_checkpoint = checkpoint.iter_checkpoint = wrapped
 got = sorted(map(tuple, clustering.pagerank(edges).collect()))
 
 import glob
@@ -180,9 +183,10 @@ spark.stop()
 
 def test_pagerank_recovers_from_mid_iteration_failure():
     """VERDICT r7 item 5a: the CC gate injects at the INPUT scan; this
-    one fails a task inside a MIDDLE power iteration's reliable
-    checkpoint job (iter_checkpoint call #6) and asserts the retried
-    run produces ranks identical to an uninjected plain-mode run."""
+    one fails a task inside a power iteration's reliable checkpoint
+    job (iter_checkpoint call #6, the third round) and asserts the
+    retried run produces ranks identical to an uninjected plain-mode
+    run."""
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     with tempfile.TemporaryDirectory() as tmp:
         ckpt = os.path.join(tmp, "ckpt")

@@ -319,3 +319,53 @@ def test_star_window_rewrite_matches_groupby_join_formulation(spark):
         got = {tuple(r) for r in _small_star(_large_star(df)).collect()}
         want = {tuple(r) for r in ref_small_star(ref_large_star(df)).collect()}
         assert got == want, trial
+
+
+def test_cc_round_cap_raises_instead_of_partial_answer(spark):
+    # A 201-node path needs ~9 star rounds; one round leaves a
+    # non-fixpoint edge set that used to come back as duplicated nodes
+    # in split components.
+    from grpc_map_reduce_spark.operators.clustering import connected_components
+
+    df = spark.createDataFrame([(i, i + 1) for i in range(200)],
+                               "src long, dst long")
+    with pytest.raises(RuntimeError, match="round cap of 1 rounds"):
+        connected_components(df, max_iter=1).collect()
+
+
+def _cache_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _ring(spark):
+    rows = [(i, (i + 1) % 30) for i in range(30)] + [(0, 15), (5, 20)]
+    return spark.createDataFrame(rows, "src long, dst long")
+
+
+@pytest.mark.parametrize("op", ["pagerank", "label_propagation"])
+def test_iterate_releases_edge_cache(spark, op):
+    from grpc_map_reduce_spark.operators import clustering
+
+    spark.catalog.clearCache()
+    assert len(getattr(clustering, op)(_ring(spark)).collect()) == 30
+    assert _cache_empty(spark)
+
+
+@pytest.mark.parametrize("op", ["pagerank", "label_propagation"])
+def test_iterate_releases_edge_cache_when_a_round_raises(spark, op,
+                                                         monkeypatch):
+    from grpc_map_reduce_spark.operators import clustering
+    from grpc_map_reduce_spark.plans import checkpoint
+
+    seen = []
+
+    def failing_round(df, eager=True):
+        seen.append(_cache_empty(spark))
+        raise RuntimeError("injected round failure")
+
+    spark.catalog.clearCache()
+    monkeypatch.setattr(checkpoint, "iter_checkpoint", failing_round)
+    with pytest.raises(RuntimeError, match="injected round failure"):
+        getattr(clustering, op)(_ring(spark))
+    assert seen == [False], "the edge cache was not held during the round"
+    assert _cache_empty(spark)

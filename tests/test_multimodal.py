@@ -45,6 +45,23 @@ def test_encoder_maps_null_text_to_null_media(spark):
     assert status == {1: ("ok", ""), 2: ("corrupt", "ValueError")}
 
 
+@pytest.mark.parametrize("consumer", ["dhash_images", "augment_media",
+                                      "sample_gif_frames"])
+def test_direct_codec_consumers_reject_null_media(spark, consumer):
+    """The consumers that call a codec directly name a NULL payload
+    with ``_media_format``'s ValueError, not a TypeError inside the
+    codec."""
+    from pyspark.errors import PythonException
+
+    from grpc_map_reduce_spark.operators import multimodal
+
+    media = spark.createDataFrame(
+        [(1, None, None)],
+        f"doc_id long, media binary, media_meta {multimodal.MEDIA_META_DDL}")
+    with pytest.raises(PythonException, match="ValueError: media is NULL"):
+        getattr(multimodal, consumer)(media).collect()
+
+
 def test_extract_features_shape_and_determinism(spark, sf_dir):
     media = attach_fake_media(table(spark, sf_dir, "documents"))
     feats = extract_features(media)
