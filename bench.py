@@ -72,29 +72,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from grpc_map_reduce_spark import get_spark, registry
-
-
-def recycle_jvm(spark, fresh_session):
-    """Stop the session AND its JVM, then build a fresh one.
-
-    ``spark.stop()`` alone reuses the live Py4J gateway, so the next
-    ``getOrCreate()`` lands in the SAME JVM — accumulated codegen
-    classes, metaspace, and JIT state survive, which is exactly the
-    degradation being reset.  Shutting the gateway down forces the
-    next SparkContext to launch a brand-new JVM.
-    """
-    from pyspark import SparkContext
-    from pyspark.sql import SparkSession
-
-    spark.stop()
-    gw = SparkContext._gateway
-    if gw is not None:
-        gw.shutdown()
-    SparkContext._gateway = None
-    SparkContext._jvm = None
-    SparkSession._instantiatedSession = None
-    SparkSession._activeSession = None
-    return fresh_session()
+from grpc_map_reduce_spark.plans.checkpoint import pins
 
 
 def main() -> None:
@@ -102,35 +80,31 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
 
-    def fresh_session():
-        spark = get_spark(
-            "grpc-map-reduce-spark-bench",
-            # The status store retains per-execution metrics for 1000 SQL
-            # executions by default — 125 AQE-heavy queries of listener
-            # state is pure driver-heap ballast in a bench session.
-            extra_conf={"spark.sql.ui.retainedExecutions": "8"},
-        )
-        spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark(
+        "grpc-map-reduce-spark-bench",
+        # The status store retains per-execution metrics for 1000 SQL
+        # executions by default — 125 AQE-heavy queries of listener
+        # state is pure driver-heap ballast in a bench session.
+        extra_conf={"spark.sql.ui.retainedExecutions": "8"},
+    )
+    spark.sparkContext.setLogLevel("ERROR")
 
-        # Absorb JVM/executor/Arrow-worker startup outside the timed
-        # region so the first query isn't charged for session warmup.
-        spark.range(1_000_000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
-        spark.read.parquet(f"{sf_dir}/documents.parquet").limit(10).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        # ...and the Python/Arrow worker pool (pandas-UDF operators).
-        from pyspark.sql.functions import pandas_udf
+    # Absorb JVM/executor/Arrow-worker startup outside the timed
+    # region so the first query isn't charged for session warmup.
+    spark.range(1_000_000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
+    spark.read.parquet(f"{sf_dir}/documents.parquet").limit(10).write.format(
+        "noop"
+    ).mode("overwrite").save()
+    # ...and the Python/Arrow worker pool (pandas-UDF operators).
+    from pyspark.sql.functions import pandas_udf
 
-        @pandas_udf("long")
-        def _noop_udf(s):
-            return s
+    @pandas_udf("long")
+    def _noop_udf(s):
+        return s
 
-        spark.range(10_000).select(_noop_udf("id")).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        return spark
-
-    spark = fresh_session()
+    spark.range(10_000).select(_noop_udf("id")).write.format("noop").mode(
+        "overwrite"
+    ).save()
 
     # Optional subset (comma-separated names) — lets the contract test
     # exercise the full harness in seconds instead of minutes.  The
@@ -165,30 +139,26 @@ def main() -> None:
                 # stage to its query (guide §1.5); thread-local, reset
                 # after the timed region.
                 # try/finally (ADVICE r11): a raising query must not
-                # leak its stale label onto subsequent jobs.
+                # leak its stale label onto subsequent jobs.  The pins
+                # scope releases the execution's pinned blocks when it
+                # exits, after the timed region.
                 spark.sparkContext.setJobDescription(
                     f"bench:{name}@pass{p}")
                 try:
-                    t0 = time.perf_counter()
-                    df = q.spark_fn(spark, sf_dir)
-                    df.write.format("noop").mode("overwrite").save()
-                    runs.append(time.perf_counter() - t0)
+                    with pins():
+                        t0 = time.perf_counter()
+                        df = q.spark_fn(spark, sf_dir)
+                        df.write.format("noop").mode("overwrite").save()
+                        runs.append(time.perf_counter() - t0)
                 finally:
                     spark.sparkContext.setJobDescription(None)
                 # Untimed housekeeping between executions: drop the Python
                 # references to finished plans so the JVM ContextCleaner can
-                # release their localCheckpoint RDDs and broadcasts — without
-                # this, 80+ queries of accumulated state inflate the later
-                # queries' timings by up to 2× (GC pressure, not plan cost).
-                # The ContextCleaner is ASYNC, so also unpersist the finished
-                # execution's pinned RDD blocks synchronously (blocking=True):
-                # ~15 LSH/iterative queries otherwise stack tens of
-                # checkpointed block sets in storage memory, and the later
-                # iterative queries' timings become load-dependent noise.
+                # release their broadcasts — without this, 80+ queries of
+                # accumulated state inflate the later queries' timings by
+                # up to 2× (GC pressure, not plan cost).
                 df = None
                 gc.collect()
-                for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                    rdd.unpersist(True)
             if p == 0:
                 cold[name] = round(runs[0], 3)
                 runs = runs[1:]
@@ -207,18 +177,10 @@ def main() -> None:
             # FASTER per query than every-1 — even starting under a
             # worse 1-min load (4.18 vs 0.59) — and it removes ~350
             # full-GC pauses (~2-4 min of wall) per inventory run; the
-            # per-run blocking unpersist above already bounds the
-            # state the old every-query cadence existed to flush.
+            # per-run pins scope above already releases the pinned
+            # blocks the old every-query cadence existed to flush.
             if n_done % int(os.environ.get("SPARK_GRAFT_BENCH_GC_EVERY", "8")) == 0:
                 spark.sparkContext._jvm.System.gc()
-            # JVM recycling (off by default): measured WORSE than per-query
-            # GC alone — each fresh JVM re-pays cold-JIT on its first
-            # queries (total 179.5 s recycling every 24 vs 149.6 s with one
-            # warm JVM + per-query System.gc()).  Kept as a knob because on
-            # larger inventories metaspace drag could eventually win.
-            restart_every = int(os.environ.get("SPARK_GRAFT_BENCH_RESTART_EVERY", "0"))
-            if restart_every and n_done % restart_every == 0:
-                spark = recycle_jvm(spark, fresh_session)
         pass_mins.append(this_pass)
 
     timings = {n: round(min(rs), 3) for n, rs in all_runs.items()}

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 
 from grpc_map_reduce_spark.operators.dedup import bucket_pairs
 from grpc_map_reduce_spark.sources.tables import table
-from grpc_map_reduce_spark.plans.checkpoint import PIN_LEVEL
+from grpc_map_reduce_spark.plans.checkpoint import pin
 
 #: Apriori pass-1 gate: parts in fewer baskets can never reach
 #: MIN_PAIR_SUPPORT, and the cut keeps the pair kernel's input dense.
@@ -57,10 +57,7 @@ def market_basket(li: DataFrame,
     # pinned: the basket set feeds THREE consumers (item counts, the
     # gated stream, the order total) — without the checkpoint its
     # distinct shuffle re-executes per consumer.
-    items = (
-        li.select("l_orderkey", "l_partkey").distinct()
-        .localCheckpoint(eager=False, storageLevel=PIN_LEVEL)
-    )
+    items = pin(li.select("l_orderkey", "l_partkey").distinct())
     item_n = items.groupBy("l_partkey").agg(F.count("*").alias("item_n"))
     freq = item_n.filter(F.col("item_n") >= min_item)
     # Basket-array pair generation: each order is one bucket of the

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from grpc_map_reduce_spark.sources.tables import table
-from grpc_map_reduce_spark.plans.checkpoint import PIN_LEVEL
+from grpc_map_reduce_spark.plans.checkpoint import pin
 
 #: the registered binary problem: fixture cluster label 0 vs 1
 CENTROID_POS, CENTROID_NEG = 0, 1
@@ -49,9 +49,10 @@ def centroid_classifier(vectors: DataFrame, pos: int = CENTROID_POS,
     from grpc_map_reduce_spark.operators.similarity import int8_quantize
 
     rows = vectors.filter(F.col(label_col).isin(pos, neg))
-    q = int8_quantize(rows, id_col, vec_col, keep=(label_col,)) \
-        .withColumn("cls", (F.col(label_col) == pos).cast("int")) \
-        .localCheckpoint(eager=False, storageLevel=PIN_LEVEL)  # feeds sums AND scoring
+    q = pin(  # feeds sums AND scoring
+        int8_quantize(rows, id_col, vec_col, keep=(label_col,))
+        .withColumn("cls", (F.col(label_col) == pos).cast("int"))
+    )
 
     # class sums per dimension — one explode + keyed agg (2·dims rows)
     dim_sums = (

@@ -37,7 +37,7 @@ from grpc_map_reduce_spark.operators.dedup import (
     SKETCH_THRESHOLD, lsh_near_dup, lsh_near_dup_sketch, lsh_pairs_sql)
 from grpc_map_reduce_spark.operators.sketches import SPLIT_TRAIN_PCT
 from grpc_map_reduce_spark.plans.checkpoint import (
-    PIN_LEVEL, iter_checkpoint, iterate)
+    iter_checkpoint, iterate, pin)
 from grpc_map_reduce_spark.sources.tables import table
 
 CLUSTER_JACCARD_THRESHOLD = 0.05  # probed at sf0.01: 27 LSH edges (was 29 exact)
@@ -473,7 +473,7 @@ def canonical_docs(docs: DataFrame) -> DataFrame:
     # Pinned: both the per-cluster argmax and the final flag join read
     # this — without the checkpoint the cluster-assignment join (and
     # the quality scan) re-execute once per consumer.
-    scored = clusters.join(qual, "doc_id").localCheckpoint(eager=False, storageLevel=PIN_LEVEL)
+    scored = pin(clusters.join(qual, "doc_id"))
     per_cluster = scored.groupBy("cluster_id").agg(
         F.count("*").alias("cluster_size"),
         F.max(F.struct(F.col("quality_bp"), (-F.col("doc_id")).alias("nid")))
@@ -632,7 +632,7 @@ def triangle_counts(edges: DataFrame, edges_unique: bool = False,
     ).where(F.col("a") != F.col("b"))
     if not edges_unique:
         e = e.distinct()
-    e = e.localCheckpoint(eager=True, storageLevel=PIN_LEVEL)
+    e = pin(e, eager=True)
     sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     deg = sym.groupBy(F.col("a").alias("node")).agg(
         F.count("*").alias("degree")
@@ -656,13 +656,12 @@ def triangle_counts(edges: DataFrame, edges_unique: bool = False,
     a_first = (F.col("da") < F.col("db")) | (
         (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
     )
-    d = (
+    d = pin(
         e.join(dega, "a").join(degb, "b")
         .select(
             F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("lo"),
             F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("hi"),
         )
-        .localCheckpoint(eager=False, storageLevel=PIN_LEVEL)
     )
     # Wedge-width experiment, measured and REJECTED (round 6): scaling
     # the wedge exchanges to ~1M rows/partition (d.repartition(n_wide,
@@ -752,9 +751,9 @@ def triangle_counts(edges: DataFrame, edges_unique: bool = False,
         # per-batch, not whole-phase).
         partials = []
         for j in range(wedge_batches):
-            pj = _wedge_counts(
+            pj = pin(_wedge_counts(
                 d.where(F.pmod(F.xxhash64("hi"), F.lit(wedge_batches)) == j)
-            ).localCheckpoint(eager=True, storageLevel=PIN_LEVEL)
+            ), eager=True)
             partials.append(pj)
         acc = partials[0]
         for pj in partials[1:]:

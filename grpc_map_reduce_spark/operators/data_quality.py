@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from grpc_map_reduce_spark.sources.tables import spread, table
-from grpc_map_reduce_spark.plans.checkpoint import PIN_LEVEL
+from grpc_map_reduce_spark.plans.checkpoint import pin
 
 
 def _rule(df: DataFrame, rule: str, violation_col) -> DataFrame:
@@ -585,7 +585,7 @@ def source_quality_psi(docs: DataFrame, bins: int = PSI_BINS) -> DataFrame:
     # totals, reference, grid) would otherwise each re-run the corpus
     # scoring scan
     return psi_from_counts(
-        quality_bin_counts(docs, bins).localCheckpoint(eager=False, storageLevel=PIN_LEVEL), bins
+        pin(quality_bin_counts(docs, bins)), bins
     )
 
 

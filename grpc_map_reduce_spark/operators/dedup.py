@@ -31,7 +31,7 @@ from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from grpc_map_reduce_spark.functions.text import shingle_hasher, words
 from grpc_map_reduce_spark.sources.tables import spread, table
-from grpc_map_reduce_spark.plans.checkpoint import PIN_LEVEL
+from grpc_map_reduce_spark.plans import checkpoint
 
 
 # --------------------------------------------------------------------------
@@ -438,17 +438,13 @@ def _shingle_sets(docs: DataFrame, n: int = 3, pin: bool = True) -> DataFrame:
     exchange spreads the work across all cores (the corpus arrives as a
     handful of large parquet files).
 
-    ``pin=False`` skips the checkpoint: consumers that traverse the
-    sets exactly ONCE (the band-census and sketch-rescore paths —
-    they read signatures, never rejoin the arrays) must not pin
-    O(corpus) shingle arrays in storage memory.  The pin is what
-    OOM'd the 8 GiB cap for `dedup_band_volume_census` at the 3125×
-    tier (~6 GB of sets for a query whose output is a ≤200-row
-    histogram — SURVEY §8.11, round-10 finding)."""
+    ``pin=False`` skips the pin: consumers that traverse the sets
+    exactly ONCE (the band-census and sketch-rescore paths — they read
+    signatures, never rejoin the arrays) must not store an O(corpus)
+    copy of the shingle arrays (~6 GB at the 3125× tier for a query
+    whose output is a ≤200-row histogram — SURVEY §8.11)."""
     out = _minhash_rows(spread(docs, "doc_id").select("doc_id", "text"), n)
-    if pin:
-        out = out.localCheckpoint(eager=False, storageLevel=PIN_LEVEL)
-    return out
+    return checkpoint.pin(out) if pin else out
 
 
 def minhash_signatures(docs: DataFrame, n: int = 3,
@@ -873,10 +869,9 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ngram_novelty(docs: DataFrame, n: int = 3) -> DataFrame:
     """(doc_id, n_shingles, n_unique, novelty_bp) per doc with ≥1
     shingle; novelty in basis points (10000 = all shingles unique)."""
-    sh = (
+    sh = checkpoint.pin(  # feeds df agg AND the join back
         _shingle_sets(docs, n)
         .select("doc_id", F.explode("sh_set").alias("h"))
-        .localCheckpoint(eager=False, storageLevel=PIN_LEVEL)  # feeds df agg AND the join back
     )
     dfreq = sh.groupBy("h").agg(F.count("*").alias("df"))
     return (
@@ -1569,12 +1564,7 @@ def lsh_near_dup_auto(docs: DataFrame, n: int = 3,
     shingle sets and the band rows are each checkpointed ONCE; the
     census aggregates over the band checkpoint, the chosen branch's
     candidate join reads the same checkpoint, and the exact branch's
-    rescore reads the checkpointed sets.  Both pins are DISK_ONLY
-    (guide §5): even the SERIALIZED memory+disk level OOM'd the 8 GiB
-    cap at the 3125× tier in round 11 (the guard pin, ledger item 7 —
-    storage-pool unroll competing with 32 concurrent scan tasks), and
-    disk-only blocks never compete with execution memory, while at
-    fixture scale the page cache makes the re-read free.
+    rescore reads the checkpointed sets.
     Both are local checkpoints, not ``persist``: a persisted frame
     stays registered in the session's CacheManager, which then
     silently serves every later identical ``_shingle_sets`` plan from
@@ -1585,12 +1575,8 @@ def lsh_near_dup_auto(docs: DataFrame, n: int = 3,
     regrouped per bucket (sz·(sz−1) is always even, so DIV 2 is exact
     either way).
     """
-    from pyspark import StorageLevel
-
-    sets = _shingle_sets(docs, n, pin=False).localCheckpoint(
-        eager=False, storageLevel=StorageLevel.DISK_ONLY)
-    bands = _band_rows(docs, n, rows_per_band, sets).localCheckpoint(
-        eager=False, storageLevel=StorageLevel.DISK_ONLY)
+    sets = _shingle_sets(docs, n)
+    bands = checkpoint.pin(_band_rows(docs, n, rows_per_band, sets))
     sizes = bands.groupBy("band_idx", "key").agg(F.count("*").alias("sz"))
     if max_bucket is not None:
         # The guarded chain drops hot buckets before pair generation,
@@ -1837,10 +1823,9 @@ def repeated_spans(docs: DataFrame, w: int = SPAN_WINDOW) -> DataFrame:
     short docs (< ``w`` tokens) report 0/0/0.
     """
     n_part = docs.sparkSession.sparkContext.defaultParallelism
-    wh = (
+    wh = checkpoint.pin(  # consumed by both branches below
         docs.repartition(n_part, "doc_id")
         .select("doc_id", F.explode(window_hashes_udf(w)("text")).alias("wh"))
-        .localCheckpoint(eager=False, storageLevel=PIN_LEVEL)  # consumed by both branches below
     )
     # windows per hash are already DISTINCT per doc (the UDF dedupes),
     # so count(*) per hash == distinct docs containing the window

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from grpc_map_reduce_spark.functions.money import cents
 from grpc_map_reduce_spark.sources.tables import spread, table
-from grpc_map_reduce_spark.plans.checkpoint import PIN_LEVEL
+from grpc_map_reduce_spark.plans.checkpoint import pin
 
 
 # --------------------------------------------------------------------------
@@ -428,7 +428,7 @@ def cascading_rollup(events: DataFrame) -> DataFrame:
         F.sum("total_value_cents").alias("total_value_cents"),
         F.max("max_value_cents").alias("max_value_cents"),
     )
-    hour = remerge(minute, "hour").localCheckpoint(eager=False, storageLevel=PIN_LEVEL)
+    hour = pin(remerge(minute, "hour"))
     day = remerge(hour, "day")
     out_cols = lambda df, grain: df.select(
         F.lit(grain).alias("grain"),
@@ -832,9 +832,8 @@ def engagement_dau_wau(events: DataFrame) -> DataFrame:
     day-grid range join would plan as a nested loop replicating the
     pair table once per grid day; the explode is a flat 7× of the
     reduced pair table instead."""
-    day_user = (
+    day_user = pin(  # feeds DAU and the WAU explode
         events.select(F.to_date("ts").alias("day"), "user_id").distinct()
-        .localCheckpoint(eager=False, storageLevel=PIN_LEVEL)  # feeds DAU and the WAU explode
     )
     dau = day_user.groupBy("day").agg(F.countDistinct("user_id").alias("dau"))
     wau = (

@@ -42,7 +42,7 @@ from grpc_map_reduce_spark.functions.text import (
     words,
 )
 from grpc_map_reduce_spark.sources.tables import table
-from grpc_map_reduce_spark.plans.checkpoint import PIN_LEVEL
+from grpc_map_reduce_spark.plans.checkpoint import pin
 
 #: Token budget per packed training sequence.  Sized for the fixture
 #: docs (10-99 words, median ~56); production values (2k-8k BPE
@@ -123,13 +123,12 @@ def decontaminate(docs: DataFrame, n: int = DECONTAM_NGRAM,
     # probe) read it, and without the checkpoint Spark re-runs the
     # shingling UDF over the whole corpus per branch.
     n_part = docs.sparkSession.sparkContext.defaultParallelism
-    sh = (
+    sh = pin(
         docs.repartition(n_part, "doc_id")
         .select(
             "doc_id",
             F.explode(distinct_shingle_hashes_udf(n)("text")).alias("sh_h"),
         )
-        .localCheckpoint(eager=False, storageLevel=PIN_LEVEL)
     )
     bench = sh.filter(is_bench).select("sh_h").distinct()
     train = docs.filter(~is_bench).select("doc_id")
@@ -278,10 +277,9 @@ def packing_efficiency(docs: DataFrame,
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     n_tokens = F.size(words("text")).cast("long")
-    starts = (
+    starts = pin(  # feeds the split scan AND totals
         docs.select("doc_id", "source", n_tokens.alias("n_tokens"))
         .withColumn("start", F.sum("n_tokens").over(w) - F.col("n_tokens"))
-        .localCheckpoint(eager=False, storageLevel=PIN_LEVEL)  # feeds the split scan AND totals
     )
     budgets_df = F.broadcast(docs.sparkSession.createDataFrame(
         [(b,) for b in budgets], "seq_budget long"

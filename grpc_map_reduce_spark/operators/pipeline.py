@@ -31,7 +31,7 @@ from grpc_map_reduce_spark.operators.sampling import (
 )
 from grpc_map_reduce_spark.operators.text_analysis import quality_scores
 from grpc_map_reduce_spark.sources.tables import table
-from grpc_map_reduce_spark.plans.checkpoint import PIN_LEVEL
+from grpc_map_reduce_spark.plans.checkpoint import pin
 
 #: Minimum composite quality score (basis points) — keeps ~66 % of the
 #: fixture corpus (probed at sf0.01: median 7040, p25 6124).
@@ -151,12 +151,11 @@ def training_prep(docs: DataFrame,
     # complete=False: token-less docs score -inf-like (absent) and can
     # never be selected, so the completion join (two more doc-keyed
     # exchanges) buys nothing here.
-    sel = (
+    sel = pin(
         dsir_scores(surv, complete=False)
         .select("doc_id", "source", "logw")
         .orderBy(F.desc("logw"), "doc_id")
         .limit(top_k)
-        .localCheckpoint(eager=False, storageLevel=PIN_LEVEL)
     )
     return epoch_shuffle(sel).select(
         "doc_id", "source", "logw", "shard", "shuffle_pos"

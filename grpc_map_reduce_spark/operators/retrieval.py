@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from grpc_map_reduce_spark.functions.text import words
 from grpc_map_reduce_spark.sources.tables import spread, table
-from grpc_map_reduce_spark.plans.checkpoint import PIN_LEVEL
+from grpc_map_reduce_spark.plans.checkpoint import pin
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -50,10 +50,7 @@ def bm25_scores(docs: DataFrame, terms: list[str], k1: float = BM25_K1,
     # (doc,word,tf) table once — O(vocab·docs) rows, far smaller than
     # the corpus — and every branch reads that.  (On a cluster,
     # ``checkpoint()`` to HDFS gives the fault-tolerant equivalent.)
-    tf = (
-        tokens.groupBy("doc_id", "word").agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=False, storageLevel=PIN_LEVEL)
-    )
+    tf = pin(tokens.groupBy("doc_id", "word").agg(F.count("*").alias("tf")))
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     stats = dl.agg(
         F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl")
@@ -140,11 +137,10 @@ def tfidf_keywords(docs: DataFrame, k: int = TFIDF_TOP_K) -> DataFrame:
     (doc_id, rank, word, tf, tfidf)."""
     from pyspark.sql.window import Window
 
-    tf = (
+    tf = pin(  # feeds df AND scoring
         spread(docs).select("doc_id", F.explode(words("text")).alias("word"))
         .groupBy("doc_id", "word")
         .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=False, storageLevel=PIN_LEVEL)  # feeds df AND scoring
     )
     dfreq = tf.groupBy("word").agg(F.count("*").alias("df"))
     n_docs = docs.agg(F.count("*").alias("n_docs"))

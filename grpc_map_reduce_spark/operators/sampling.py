@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from grpc_map_reduce_spark.functions.text import words
 from grpc_map_reduce_spark.operators.sketches import _md5_long
 from grpc_map_reduce_spark.sources.tables import table
-from grpc_map_reduce_spark.plans.checkpoint import PIN_LEVEL
+from grpc_map_reduce_spark.plans.checkpoint import pin
 
 #: Per-language keep rates (percent) — downsample the head language,
 #: keep the tail whole: the standard corpus-balancing move.
@@ -421,11 +421,9 @@ def dsir_scores(docs: DataFrame, target_source: str = DSIR_TARGET_SOURCE,
     per-doc scoring) — without pinning each branch re-runs the whole
     upstream (at 100 TB: the dedup window) to re-tokenize.
     """
-    toks = docs.select(
+    toks = pin(docs.select(
         "doc_id", "source", F.explode(words("text")).alias("word")
-    ).withColumn("b", _md5_long(F.col("word")) % n_buckets).localCheckpoint(
-        eager=False, storageLevel=PIN_LEVEL
-    )
+    ).withColumn("b", _md5_long(F.col("word")) % n_buckets))
     # BOTH count tables from ONE tokenize pass: the target count is a
     # conditional aggregate of the same groupBy, not a second scan.
     counts = toks.groupBy("b").agg(

@@ -28,13 +28,12 @@ cross-engine checkability.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from grpc_map_reduce_spark.functions.text import words
 from grpc_map_reduce_spark.sources.tables import table
-from grpc_map_reduce_spark.plans.checkpoint import PIN_LEVEL
+from grpc_map_reduce_spark.plans.checkpoint import pin
 
 CMS_DEPTH = 4   # number of hash rows (error probability ~ exp(-depth))
 CMS_WIDTH = 64  # counters per row (overestimate ~ n_tokens / width)
@@ -59,10 +58,9 @@ def cms_frequency_estimates(docs: DataFrame) -> DataFrame:
     """
     # wc feeds both the sketch build and the estimate join — pin the
     # reduced (word, count) table so the corpus is tokenized once.
-    wc = (
+    wc = pin(
         docs.select(F.explode(words("text")).alias("word"))
         .groupBy("word").agg(F.count("*").alias("n_exact"))
-        .localCheckpoint(eager=False, storageLevel=PIN_LEVEL)
     )
     rows = F.explode(F.array(*[F.lit(j) for j in range(CMS_DEPTH)])).alias("j")
     hashed = wc.select("word", "n_exact", rows).withColumn(
@@ -487,13 +485,9 @@ def kmv_estimate(df: DataFrame, col: str, k: int = KMV_K) -> DataFrame:
     value; the follow-up ``distinct`` on ``h`` keeps the old
     collision-fold semantics).  The distinct relation is tiny relative
     to the base table, so the two consumers read pinned blocks."""
-    vals = (
+    vals = pin(
         df.select(F.col(col).alias("v")).where(F.col("v").isNotNull())
         .distinct()
-        # DISK_ONLY: the distinct set is O(orders) rows for
-        # l_orderkey, and memory-level pins at that volume OOM'd the
-        # 8 GiB cap at the probe tiers (see lsh_near_dup_auto).
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     )
     h = F.conv(
         F.substring(F.md5(F.col("v").cast("string")), 1, 15), 16, 10
@@ -549,10 +543,9 @@ def kmv_merge_estimate(df: DataFrame, col: str, k: int = KMV_K) -> DataFrame:
     # distinct-VALUES relation is pinned once; count(*) over it IS
     # countDistinct(col), and the distinct-hash relation derives from
     # it (same hash set — md5 is a function of the value).
-    vals = (
+    vals = pin(
         df.select(F.col(col).alias("v")).where(F.col("v").isNotNull())
         .distinct()
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     )
     h = F.conv(
         F.substring(F.md5(F.col("v").cast("string")), 1, 15), 16, 10
@@ -562,10 +555,7 @@ def kmv_merge_estimate(df: DataFrame, col: str, k: int = KMV_K) -> DataFrame:
     # distinct exchange three times (VERDICT r8's one genuine bench
     # mover).  Lazy local-checkpoint pin: the first consumer
     # materializes it, the other two read pinned blocks.
-    hs = (
-        vals.select(h.alias("h")).where(F.col("h").isNotNull()).distinct()
-        .localCheckpoint(eager=False, storageLevel=PIN_LEVEL)
-    )
+    hs = pin(vals.select(h.alias("h")).where(F.col("h").isNotNull()).distinct())
 
     def kmin(src: DataFrame) -> DataFrame:
         return src.orderBy("h").limit(k)
@@ -831,11 +821,10 @@ def source_overlap_kmv(docs: DataFrame, k: int = SRC_KMV_K) -> DataFrame:
     w1 = Window.partitionBy("source", F.pmod("h", F.lit(_SRC_KMV_SALTS))) \
         .orderBy("h")
     w2 = Window.partitionBy("source").orderBy("h")
-    sk = (
+    sk = pin(  # both sides of the pair probe
         sh.withColumn("rn", F.row_number().over(w1)).filter(F.col("rn") <= k)
         .withColumn("rn2", F.row_number().over(w2)).filter(F.col("rn2") <= k)
         .select("source", "h")
-        .localCheckpoint(eager=False, storageLevel=PIN_LEVEL)  # both sides of the pair probe
     )
     srcs = sk.select("source").distinct()
     pairs = (

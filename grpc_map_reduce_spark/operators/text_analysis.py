@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from grpc_map_reduce_spark.functions.text import words
 from grpc_map_reduce_spark.sources.tables import table
-from grpc_map_reduce_spark.plans.checkpoint import PIN_LEVEL
+from grpc_map_reduce_spark.plans.checkpoint import pin
 
 #: Tiny English stopword list used by the quality/language heuristics.
 EN_STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "on", "for", "with")
@@ -248,16 +248,14 @@ def pmi_collocations(docs: DataFrame, min_count: int = PMI_MIN_COUNT) -> DataFra
     # once per table instead of once per consumer.  (The raw token
     # stream is never materialized — at scale re-reading compressed
     # parquet beats persisting an exploded token table.)
-    uni = (
+    uni = pin(
         toks.select(F.explode("ws").alias("word"))
         .groupBy("word").agg(F.count("*").alias("n_w"))
-        .localCheckpoint(eager=False, storageLevel=PIN_LEVEL)
     )
     tot = uni.agg(F.sum("n_w").cast("double").alias("n_tokens"))
-    bgc = (
+    bgc = pin(
         toks.select(F.explode(bigram_arr).alias("bigram"))
         .groupBy("bigram").agg(F.count("*").alias("n_pair"))
-        .localCheckpoint(eager=False, storageLevel=PIN_LEVEL)
     )
     btot = bgc.agg(F.sum("n_pair").cast("double").alias("n_bigrams"))
     u1 = uni.select(F.col("word").alias("w1"), F.col("n_w").alias("n_w1"))

@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from grpc_map_reduce_spark.functions.text import words
 from grpc_map_reduce_spark.sources.tables import spread, table
-from grpc_map_reduce_spark.plans.checkpoint import PIN_LEVEL
+from grpc_map_reduce_spark.plans.checkpoint import pin
 
 #: Vocabulary size for the registered query — small enough that the
 #: 31-word fixture corpus produces real OOV tokens (a K ≥ corpus
@@ -62,12 +62,11 @@ def doc_term_freqs(docs: DataFrame) -> DataFrame:
     (doc_id, word) reduce here and any downstream per-doc aggregate —
     the tokenize→reduce→per-doc-consumer chain runs on ONE exchange
     (LogicalRDD checkpoints carry outputPartitioning through)."""
-    return (
+    return pin(
         spread(docs, "doc_id")
         .select("doc_id", F.explode(words("text")).alias("word"))
         .groupBy("doc_id", "word")
         .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=False, storageLevel=PIN_LEVEL)
     )
 
 
@@ -261,13 +260,9 @@ def bpe_merges_from_counts(word_counts: DataFrame,
     # itself to 4 tasks — the classic coalesce pitfall, measured 8×
     # slower); the count() below is then a cheap job over the pinned
     # blocks, not a recompute.
-    wc = (
-        word_counts
-        .select(
-            F.split(F.col("word"), "").alias("syms"),
-            "n",
-        )
-        .localCheckpoint(storageLevel=PIN_LEVEL)  # the loop re-reads this table every round
+    wc = pin(  # the loop re-reads this table every round
+        word_counts.select(F.split(F.col("word"), "").alias("syms"), "n"),
+        eager=True,
     )
 
     if wc.count() <= local_max_words:
@@ -327,9 +322,7 @@ def bpe_merges_from_counts(word_counts: DataFrame,
 
         # lazy: the next round's argmax collect materializes it, so
         # each round runs ONE job instead of two
-        wc = wc.mapInPandas(
-            _apply, schema="syms array<string>, n long"
-        ).localCheckpoint(eager=False, storageLevel=PIN_LEVEL)
+        wc = pin(wc.mapInPandas(_apply, schema="syms array<string>, n long"))
 
     return spark.createDataFrame(
         merges, schema="rank long, left string, right string, "
@@ -584,12 +577,11 @@ def vocab_coverage_curve(docs: DataFrame,
     """(k, vocab_tokens, total_tokens, coverage_bp) per sweep point."""
     from pyspark.sql import Window
 
-    wc = (
+    wc = pin(  # feeds the top-K AND the total
         spread(docs)
         .select(F.explode(words("text")).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("n"))
-        .localCheckpoint(eager=False, storageLevel=PIN_LEVEL)  # feeds the top-K AND the total
     )
     top = wc.orderBy(F.col("n").desc(), "word").limit(max(ks))
     # rank over the ≤max(ks)-row post-limit table (documented-tiny

@@ -1,33 +1,39 @@
-"""Round loop and checkpoint strategy for iterative operators.
+"""Pins, their lifetime, and the round loop of iterative operators.
 
-:func:`iterate` is the one round loop every iterative operator runs
-(connected components, pagerank, LPA, Lloyd refinement): the operator
-supplies one round's step and the driver owns the per-round lineage
-cut, the optional convergence test and its round cap, and the
-loop-invariant edge cache.  Lineage is cut every round — without it
-the plan doubles per iteration and the optimizer chokes.
-``localCheckpoint`` is the right default: it pins blocks on the
-executors with zero external storage.  But local checkpoint blocks
-DIE WITH THEIR EXECUTOR, and a localCheckpoint-ed frame has no
-lineage to recompute from — on a real cluster, losing one executor
-mid-iteration kills the whole job.  That is acceptable in local mode
-(one JVM — if it dies, everything dies) and NOT acceptable on 1000
-executors, where the probability of at least one loss during a long
-job approaches 1.
+:func:`pin` is the one way the package pins a frame: a local
+checkpoint that cuts the lineage and keeps the blocks on the
+executors.  Every pin is stored at one level, ``DISK_ONLY``, and no
+caller picks another.  This is the reference's policy — it writes
+every intermediate to local disk at the stage boundary (PAPER.md
+§1.3) — and it is the level the O(corpus) pins need: in round 11 even
+the serialized memory+disk level ran the 8 GiB heap out of memory at
+the 3125× tier (storage-pool unroll competing with 32 concurrent scan
+tasks), while disk-only blocks never compete with execution memory
+and at fixture scale the page cache makes the re-read free.
 
-``iter_checkpoint`` is the swap point: set the session conf
+:func:`pins` scopes pin lifetime: every pin made inside a ``with
+pins():`` block is unpersisted (blocking) when the block exits, also
+by an exception, so a long-lived session running one query per block
+accumulates no pinned blocks.  A pin made outside any scope lives
+until the JVM ContextCleaner frees it with its frame.
+
+A local checkpoint dies with its executor and has no lineage to
+recompute from: fine in local mode (one JVM), not on a cluster, where
+losing one of 1000 executors during a long job is near certain.
+:func:`iterate`, the one round loop of every iterative operator
+(connected components, pagerank, LPA, Lloyd refinement), therefore
+cuts each round's lineage (without the cut the plan doubles per
+round) through the swap point ``iter_checkpoint``: set the session conf
 
     spark.graft.reliableCheckpointDir = hdfs://.../checkpoints
 
-(or call :func:`set_reliable_checkpoint_dir`) and every iterative
-operator switches to reliable ``Dataset.checkpoint()`` — each round's
-state is written to fault-tolerant storage, so an executor loss costs
-one re-read instead of the job.  Default (conf unset) stays
-``localCheckpoint``: no behavior change locally, identical results
-either way (checkpointing is a materialization strategy, not a
-semantics change — fixture hashes are invariant, tested in
-test_round6_ops.py; recovery under injected task failure is tested in
-test_checkpoint_recovery.py).
+(or call :func:`set_reliable_checkpoint_dir`) and each round's state
+is a reliable ``Dataset.checkpoint()`` to that storage, so an executor
+loss costs one re-read instead of the job.  Unset, a round is a
+:func:`pin`.  Results are identical either way (test_round6_ops.py;
+recovery under injected task failure: test_checkpoint_recovery.py).
+Operator-level pins stay local in both modes: a pin lives within one
+query, so recompute on executor loss is the plan's normal execution.
 
 Retention: sessions built by :func:`grpc_map_reduce_spark.get_spark`
 set ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` so
@@ -40,6 +46,8 @@ accordingly or enable the conf at session build.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
+from contextvars import ContextVar
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
@@ -50,20 +58,39 @@ from pyspark.sql import functions as F
 RELIABLE_DIR_CONF = "spark.graft.reliableCheckpointDir"
 
 
-#: Storage level of every pin: ``iter_checkpoint``'s local path, the
-#: operators' own ``localCheckpoint`` pins and :func:`iterate`'s
-#: loop-invariant cache.  SERIALIZED memory+disk (PySpark's
-#: MEMORY_AND_DISK; the JVM default is the deserialized variant): the
-#: pins are the engine's only O(corpus) materializations, and the
-#: deserialized unroll reserves memory in whole-block units — under a
-#: capped heap with 32 tasks unrolling at once that is exactly where
-#: the 125x probe OOM'd (MemoryStore putIteratorAsValues →
-#: SizeEstimator).  The serialized path reserves incrementally and
-#: spills the tail of a block to disk instead of failing the job.
-#: Pins stay local even in reliable-checkpoint mode: a pin lives
-#: within one query, so recompute-on-executor-loss is the plan's
-#: normal (re)execution, not a correctness risk.
-PIN_LEVEL = StorageLevel.MEMORY_AND_DISK
+#: The one storage level of every pin, loop cache and pre-checkpoint
+#: persist (see the module docstring).
+_LEVEL = StorageLevel.DISK_ONLY
+
+#: The JVM RDDs pinned inside the innermost active :func:`pins` scope,
+#: or None outside any scope.
+_scope: ContextVar[list | None] = ContextVar("pins", default=None)
+
+
+def pin(df: DataFrame, eager: bool = False) -> DataFrame:
+    """``df`` local-checkpointed at the one pin level; lazy unless
+    ``eager``.  Inside a :func:`pins` scope the pin is released when
+    the scope exits."""
+    out = df.localCheckpoint(eager=eager, storageLevel=_LEVEL)
+    recorded = _scope.get()
+    if recorded is not None:
+        recorded.append(out._jdf.queryExecution().logical().rdd())
+    return out
+
+
+@contextmanager
+def pins():
+    """Scope for pin lifetime: every :func:`pin` made inside the block
+    is unpersisted, blocking, when it exits (also by an exception).
+    Run the actions that read those pins inside the block."""
+    recorded: list = []
+    token = _scope.set(recorded)
+    try:
+        yield
+    finally:
+        _scope.reset(token)
+        for rdd in recorded:
+            rdd.unpersist(True)
 
 
 def _norm_ckpt_uri(uri: str) -> tuple:
@@ -133,7 +160,7 @@ def set_reliable_checkpoint_dir(spark: SparkSession, path: str | None) -> None:
 def iter_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     """Lineage-truncating checkpoint for loop-carried state.
 
-    localCheckpoint (fast, executor-local) unless the session's
+    :func:`pin` (fast, executor-local) unless the session's
     ``spark.graft.reliableCheckpointDir`` is set, in which case a
     reliable ``checkpoint()`` to that directory (survives executor
     loss).  ``eager=False`` preserves the one-job-per-round pattern
@@ -172,14 +199,11 @@ def iter_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
         # deliberately ignored here: a LAZY reliable checkpoint would
         # defer the write into whichever later action fires first and
         # pay the recompute then, which is strictly worse.
-        df = df.persist(PIN_LEVEL)
+        df = df.persist(_LEVEL)
         out = df.checkpoint(eager=True)
         df.unpersist()
         return out
-    # PIN_LEVEL: one serialize per round on state read exactly once
-    # next round — noise at fixture scale, and the difference between
-    # "needs 2x heap headroom" and "runs in the heap it's given" at 125x.
-    return df.localCheckpoint(eager=eager, storageLevel=PIN_LEVEL)
+    return pin(df, eager)
 
 
 def iterate(state: DataFrame, step, rounds: int, *, converge: bool = False,
@@ -199,7 +223,7 @@ def iterate(state: DataFrame, step, rounds: int, *, converge: bool = False,
     of its fixpoint is a wrong answer, not an approximate one.
 
     ``cache`` is a loop-invariant frame the step reads every round (an
-    edge table), ``persist``-ed at :data:`PIN_LEVEL` (deserialized, it
+    edge table), ``persist``-ed at the pin level (deserialized, it
     was a third of the 125x probe's 13 GB pool-sum peak).  A cache,
     not a checkpoint: a checkpoint scan reports unknown partitioning,
     so every round would re-shuffle it, while the cache keeps its hash
@@ -209,7 +233,7 @@ def iterate(state: DataFrame, step, rounds: int, *, converge: bool = False,
     raises.
     """
     if cache is not None:
-        cache.persist(PIN_LEVEL)
+        cache.persist(_LEVEL)
     try:
         prev = None
         for i in range(rounds):

@@ -29,7 +29,7 @@ import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from grpc_map_reduce_spark.plans.checkpoint import PIN_LEVEL
+from grpc_map_reduce_spark.plans.checkpoint import pin
 
 
 def write_bucketed(df: DataFrame, table_name: str, key: str,
@@ -76,7 +76,7 @@ def compact(spark: SparkSession, path: str,
     files = glob.glob(f"{path}/**/*.parquet", recursive=True)
     total = sum(os.path.getsize(f) for f in files)
     n_out = max(1, -(-total // target_bytes))  # ceil
-    df = spark.read.parquet(path).repartition(n_out).localCheckpoint(storageLevel=PIN_LEVEL)
+    df = pin(spark.read.parquet(path).repartition(n_out), eager=True)
     df.write.mode("overwrite").parquet(path)
     return len(files), len(glob.glob(f"{path}/**/*.parquet", recursive=True))
 
@@ -112,10 +112,10 @@ def upsert_date_partitions(spark: SparkSession, path: str, updates: DataFrame,
     try:
         days = [r[0] for r in updates.select(date_col).distinct().collect()]
         existing = spark.read.parquet(path).filter(F.col(date_col).isin(days))
-        merged = (
+        merged = pin(
             existing.join(updates.select(key_col), key_col, "left_anti")
-            .unionByName(updates.select(*existing.columns))
-            .localCheckpoint(storageLevel=PIN_LEVEL)
+            .unionByName(updates.select(*existing.columns)),
+            eager=True,
         )
         merged.write.mode("overwrite").partitionBy(date_col).parquet(path)
     finally:

@@ -47,7 +47,7 @@ from grpc_map_reduce_spark.operators.dedup import (
     _side_is_corpus,
     band_key_structs,
 )
-from grpc_map_reduce_spark.plans.checkpoint import PIN_LEVEL
+from grpc_map_reduce_spark.plans.checkpoint import pin
 
 
 def _stream_band_rows(doc_stream: DataFrame, n: int, rows_per_band: int,
@@ -161,10 +161,9 @@ def corpus_sketch_index(docs: DataFrame, n: int = 3,
     frame whose pin was the 3125× OOM — at real scale both live as
     bucketed parquet, exactly like the exact twin's index."""
     corpus = docs.filter(_side_is_corpus(F.col("doc_id")))
-    sig = (
+    sig = pin(
         _shingle_sets(corpus, n, pin=False)
         .where(F.col("sig").isNotNull()).select("doc_id", "sig")
-        .localCheckpoint(eager=False, storageLevel=PIN_LEVEL)
     )
     buckets = _band_rows(None, n, rows_per_band, sig).withColumnRenamed(
         "doc_id", "match_id")

@@ -178,41 +178,33 @@ def test_guards_are_on_by_default():
 def test_pin_storage_level_is_serialized(spark):
     """VERDICT r5 item 1 follow-through: the 125x capped-heap probe
     OOM'd unrolling DESERIALIZED localCheckpoint blocks (MemoryStore
-    putIteratorAsValues under 32 concurrent tasks).  Every pin in the
-    engine — iter_checkpoint's local path and the operator-level
-    PIN_LEVEL sites — must therefore store SERIALIZED memory+disk,
-    which reserves unroll memory incrementally and spills instead of
-    failing.  Assert the level on a live checkpointed frame, not just
-    the constant."""
-    from pyspark import StorageLevel
-
-    from grpc_map_reduce_spark.plans.checkpoint import (
-        PIN_LEVEL,
-        iter_checkpoint,
-    )
-
-    assert PIN_LEVEL == StorageLevel.MEMORY_AND_DISK
-    assert not PIN_LEVEL.deserialized
-    assert PIN_LEVEL.useDisk and PIN_LEVEL.useMemory
+    putIteratorAsValues under 32 concurrent tasks), and in round 11
+    even serialized memory+disk pins OOM'd the 8 GiB cap at 3125x.
+    Every pin in the engine — ``pin()`` and iter_checkpoint's local
+    path — therefore stores at the one level DISK_ONLY: serialized,
+    with no memory unroll at all.  Assert the level on live pinned
+    frames, not on a constant."""
+    from grpc_map_reduce_spark.plans.checkpoint import iter_checkpoint, pin
 
     # DataFrame.storageLevel consults the CACHE manager, which does
     # not track localCheckpoint blocks — diff the live persisted-RDD
-    # registry around the checkpoint and read the level off the NEW
-    # entry (the shared test session may hold other tests' caches,
+    # registry around the pin and read the level off the NEW entry
+    # (the shared test session may hold other tests' caches,
     # including deserialized DataFrame .persist() ones).
     jsc = spark.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keySet().toArray())
-    df = iter_checkpoint(spark.range(10).toDF("n"), eager=True)
-    assert df.count() == 10
-    new_levels = {
-        str(rdd.getStorageLevel())
-        for rid, rdd in jsc.getPersistentRDDs().items()
-        if rid not in before
-    }
-    assert new_levels, "eager localCheckpoint must register a persisted RDD"
-    # JVM toString: "StorageLevel(disk, memory, 1 replicas)" when
-    # serialized; a "deserialized" token appears for the JVM default.
-    for lvl in new_levels:
-        assert "disk, memory" in lvl and "deserialized" not in lvl, (
-            f"pinned blocks must be SERIALIZED memory+disk; got {new_levels}"
-        )
+    for make in (lambda df: pin(df, eager=True), iter_checkpoint):
+        before = set(jsc.getPersistentRDDs().keySet().toArray())
+        df = make(spark.range(10).toDF("n"))
+        assert df.count() == 10
+        new_levels = {
+            str(rdd.getStorageLevel())
+            for rid, rdd in jsc.getPersistentRDDs().items()
+            if rid not in before
+        }
+        assert new_levels, "an eager pin must register a persisted RDD"
+        # JVM toString: "StorageLevel(disk, 1 replicas)" for DISK_ONLY;
+        # a "deserialized" token appears for the JVM default.
+        for lvl in new_levels:
+            assert lvl == "StorageLevel(disk, 1 replicas)" and (
+                "deserialized" not in lvl
+            ), f"pinned blocks must be DISK_ONLY; got {new_levels}"

@@ -153,6 +153,7 @@ def main() -> int:
     t0 = time.time()
 
     import __spark_entry__ as entry
+    from grpc_map_reduce_spark.plans.checkpoint import pins
 
     if vanilla:
         # exactly what the grading driver does: a PLAIN session, none
@@ -217,7 +218,10 @@ def main() -> int:
         if only and name not in only:
             continue
         try:
-            sdf = fn(spark, sf_dir).toPandas()
+            # run inside a pins scope: a pin released before the
+            # action that reads it would fail the query here
+            with pins():
+                sdf = fn(spark, sf_dir).toPandas()
         except Exception as exc:  # noqa: BLE001
             results[name] = f"SPARK-ERROR {type(exc).__name__}: {exc}"
             print(f"{name:35s} {results[name]}", flush=True)

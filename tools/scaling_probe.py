@@ -59,6 +59,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from grpc_map_reduce_spark import get_spark, registry
+from grpc_map_reduce_spark.plans.checkpoint import pins
 
 BASE_SF = "/root/testdata/sf0.1"
 SCRATCH = os.path.join(
@@ -490,11 +491,10 @@ def _rebuild_session(spark, driver_memory: str, warm_probe):
     ``getOrCreate`` lands in the same (possibly OOM-poisoned) JVM and
     the ``spark.driver.memory`` extra_conf is a silent no-op (static
     conf, read at JVM launch).  Shutting the gateway down forces a
-    brand-new JVM — same recipe as bench.recycle_jvm.  The warmup
-    noop re-runs so the first post-restart probe isn't charged for
-    session/codegen/Arrow-worker spin-up (ADVICE r10).  Raises if the
-    rebuild itself fails; the caller turns that into a fatal JSON
-    line instead of aborting the sweep summary.
+    brand-new JVM.  The warmup noop re-runs so the first post-restart
+    probe isn't charged for session/codegen/Arrow-worker spin-up
+    (ADVICE r10).  Raises if the rebuild itself fails; the caller turns
+    that into a fatal JSON line instead of aborting the sweep summary.
     """
     from pyspark import SparkContext
     from pyspark.sql import SparkSession
@@ -670,10 +670,13 @@ def main() -> None:
                     budget, lambda n=name: sc.cancelJobGroup(n))
                 timer.start()
             try:
-                qs[name].spark_fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                dt = round(time.perf_counter() - t0, 3)
+                # the scope releases the probe's pins when it exits,
+                # untimed, so later probes aren't timed under earlier
+                # probes' storage
+                with pins():
+                    qs[name].spark_fn(spark, sf_dir).write.format(
+                        "noop").mode("overwrite").save()
+                    dt = round(time.perf_counter() - t0, 3)
             except Exception as exc:
                 dt = None
                 timeouts.append({"query": name, "mult": mult,
@@ -694,9 +697,9 @@ def main() -> None:
                     # fires exactly when the JVM/py4j gateway may be
                     # dead (ADVICE r10).  Shut the gateway down so
                     # getOrCreate launches a FRESH JVM (driver.memory
-                    # is a static conf — a no-op on a surviving JVM,
-                    # like bench.recycle_jvm), and never let a failed
-                    # rebuild abort the sweep before the summary.
+                    # is a static conf — a no-op on a surviving JVM),
+                    # and never let a failed rebuild abort the sweep
+                    # before the summary.
                     try:
                         spark = _rebuild_session(
                             spark, args.driver_memory, qs[probes[0]],
@@ -723,11 +726,6 @@ def main() -> None:
                 peaks[name][mult] = pk
                 print(json.dumps({"query": name, "mult": mult, "sec": dt,
                                   "peak_heap_mb": pk}), flush=True)
-            # bench-grade housekeeping: the iterative probes pin
-            # checkpointed RDD blocks; release them synchronously so
-            # later probes aren't timed under earlier probes' storage
-            for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                rdd.unpersist(True)
         if spark is None:  # fatal rebuild — fall through to the summary
             break
 

@@ -39,6 +39,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from grpc_map_reduce_spark import get_spark
+from grpc_map_reduce_spark.plans.checkpoint import pin
 
 
 def main() -> None:
@@ -84,8 +85,8 @@ def main() -> None:
         F.md5(F.col("id").cast("string")).alias("dim"),
     )
     # pin both inputs so every variant reads identical bytes
-    probe = probe.localCheckpoint()
-    build = build.localCheckpoint()
+    probe = pin(probe, eager=True)
+    build = pin(build, eager=True)
 
     def run(df, label):
         # collect(), not a noop write: the aggregate returns ONE row,

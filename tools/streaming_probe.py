@@ -29,6 +29,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from grpc_map_reduce_spark import get_spark
+from grpc_map_reduce_spark.plans.checkpoint import pin
 
 SCRATCH = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -157,8 +158,8 @@ def main() -> None:
     incoming.repartition(args.batches).write.parquet(src)
 
     buckets, sets = corpus_index(docs)
-    buckets = buckets.localCheckpoint()
-    sets = sets.localCheckpoint()
+    buckets = pin(buckets, eager=True)
+    sets = pin(sets, eager=True)
     n_expected = None  # batch-side candidate count for the state bound
     from grpc_map_reduce_spark.operators.dedup import (
         incremental_scored_pairs,
@@ -203,8 +204,8 @@ def main() -> None:
     vec_in.repartition(args.batches).write.parquet(vsrc)
 
     vbuckets, vectors = embedding_corpus_index(emb)
-    vbuckets = vbuckets.localCheckpoint()
-    vectors = vectors.localCheckpoint()
+    vbuckets = pin(vbuckets, eager=True)
+    vectors = pin(vectors, eager=True)
 
     vstream = (
         spark.readStream.schema(vec_in.schema)
@@ -328,8 +329,8 @@ def expiry_probe(mult: int, state_store: str = "hdfs") -> None:
     src = staged_batches(
         spark, SCRATCH, build_expiry_schedule(incoming, stamp))
     buckets, sets = corpus_index(docs)
-    buckets = buckets.localCheckpoint()
-    sets = sets.localCheckpoint()
+    buckets = pin(buckets, eager=True)
+    sets = pin(sets, eager=True)
     stream = (
         spark.readStream.schema(stamp(incoming, 0).schema)
         .option("maxFilesPerTrigger", 1)
