@@ -74,6 +74,14 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from grpc_map_reduce_spark import get_spark, registry
 from grpc_map_reduce_spark.plans.checkpoint import pins
 
+#: Queries between JVM ``System.gc()`` calls.  A same-code A/B at
+#: sf0.1 measured every-8 a geomean 1.051x FASTER per query than
+#: every-1 — even starting under a worse 1-min load (4.18 vs 0.59) —
+#: and it removes ~350 full-GC pauses (~2-4 min of wall) per inventory
+#: run; the per-run pins scope already releases the pinned blocks the
+#: old every-query cadence existed to flush.
+GC_EVERY = 8
+
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -169,17 +177,11 @@ def main() -> None:
             # state and RDD metadata pile up until a JVM GC lets the
             # ContextCleaner's weak-reference queue drain (its built-in
             # periodic GC runs every 30 min — never, in a 4-min bench).
-            # One System.gc() per few queries keeps late queries from
-            # paying earlier queries' garbage (measured: the same query
-            # is up to ~8x slower 60 queries into the session otherwise).
-            # Cadence default 8 (round 12, VERDICT r11 item 6): a
-            # same-code A/B at sf0.1 measured every-8 a geomean 1.051x
-            # FASTER per query than every-1 — even starting under a
-            # worse 1-min load (4.18 vs 0.59) — and it removes ~350
-            # full-GC pauses (~2-4 min of wall) per inventory run; the
-            # per-run pins scope above already releases the pinned
-            # blocks the old every-query cadence existed to flush.
-            if n_done % int(os.environ.get("SPARK_GRAFT_BENCH_GC_EVERY", "8")) == 0:
+            # One System.gc() per GC_EVERY queries keeps late queries
+            # from paying earlier queries' garbage (measured: the same
+            # query is up to ~8x slower 60 queries into the session
+            # otherwise).
+            if n_done % GC_EVERY == 0:
                 spark.sparkContext._jvm.System.gc()
         pass_mins.append(this_pass)
 

@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from grpc_map_reduce_spark.operators.dedup import (
     LSH_MAX_BUCKET_DEFAULT, LSH_NEAR_DUP_THRESHOLD, SKETCH_MIN_BANDS,
     SKETCH_THRESHOLD, lsh_near_dup, lsh_near_dup_sketch, lsh_pairs_sql)
-from grpc_map_reduce_spark.operators.sketches import SPLIT_TRAIN_PCT
+from grpc_map_reduce_spark.operators.sketches import SPLIT_TRAIN_PCT, _md5_long
 from grpc_map_reduce_spark.plans.checkpoint import (
     iter_checkpoint, iterate, pin)
 from grpc_map_reduce_spark.sources.tables import table
@@ -213,9 +213,7 @@ def leakage_safe_split(docs: DataFrame,
     split rule."""
     if assign is None:
         assign = dedup_clusters(docs, threshold=threshold, n=n)
-    bucket = F.conv(
-        F.substring(F.md5(F.col("cluster_id").cast("string")), 1, 8), 16, 10
-    ).cast("long") % 100
+    bucket = _md5_long(F.col("cluster_id").cast("string")) % 100
     return (
         docs.select("doc_id", "n_chars")
         .join(assign, "doc_id")

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from grpc_map_reduce_spark.operators.sketches import _md5_long
 from grpc_map_reduce_spark.sources.tables import spread, table
 from grpc_map_reduce_spark.plans.checkpoint import pin
 
@@ -269,9 +270,7 @@ SNAP_UPDATE_LO, SNAP_UPDATE_HI = 40, 60
 
 
 def _key_bucket(col) -> F.Column:
-    return F.conv(
-        F.substring(F.md5(col.cast("string")), 1, 8), 16, 10
-    ).cast("long") % 100
+    return _md5_long(col.cast("string")) % 100
 
 
 def snapshot_diff(orders: DataFrame) -> DataFrame:

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from grpc_map_reduce_spark.functions.text import shingle_hasher, words
+from grpc_map_reduce_spark.operators.sketches import _md5_long
 from grpc_map_reduce_spark.sources.tables import spread, table
 from grpc_map_reduce_spark.plans import checkpoint
 
@@ -94,7 +95,7 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.008,
     # are traversed once (one exchange into the per-shingle arrays), so
     # neither the sets nor the exploded rows are pinned; ``max_df`` is
     # the kernel's bucket-size cap.
-    sh = _shingle_sets(docs, n, pin=False).select(
+    sh = _shingle_sets(docs, n).select(
         "doc_id",
         F.size("sh_set").alias("n_shingles"),
         F.explode("sh_set").alias("sh_h"),
@@ -430,37 +431,19 @@ def _minhash_rows(df: DataFrame, n: int = 3) -> DataFrame:
     return df.mapInArrow(_minhash_kernel(n, [f.name for f in keep]), schema)
 
 
-def _shingle_sets(docs: DataFrame, n: int = 3, pin: bool = True) -> DataFrame:
+def _shingle_sets(docs: DataFrame, n: int = 3) -> DataFrame:
     """(doc_id, sh_set, sig) — each doc's DISTINCT shingle-HASH set and
-    its MinHash signature (:func:`_minhash_rows`), computed ONCE
-    (lazy-checkpointed) so candidate generation and rescoring share the
-    tokenization work.  The kernel runs *after* a repartition: the
-    exchange spreads the work across all cores (the corpus arrives as a
-    handful of large parquet files).
+    its MinHash signature (:func:`_minhash_rows`).  The kernel runs
+    *after* a repartition: the exchange spreads the work across all
+    cores (the corpus arrives as a handful of large parquet files).
 
-    ``pin=False`` skips the pin: consumers that traverse the sets
-    exactly ONCE (the band-census and sketch-rescore paths — they read
-    signatures, never rejoin the arrays) must not store an O(corpus)
-    copy of the shingle arrays (~6 GB at the 3125× tier for a query
-    whose output is a ≤200-row histogram — SURVEY §8.11)."""
-    out = _minhash_rows(spread(docs, "doc_id").select("doc_id", "text"), n)
-    return checkpoint.pin(out) if pin else out
-
-
-def minhash_signatures(docs: DataFrame, n: int = 3,
-                       sets: DataFrame | None = None,
-                       pin: bool = True) -> DataFrame:
-    """Per-doc MinHash signature columns m0..m15: a projection of the
-    kernel's ``sig`` (:func:`_minhash_rows`) — the same values as the
-    explode→groupBy(min) formulation, with no row expansion and no
-    aggregate.  Docs with an empty shingle set are dropped, as explode
-    drops them (a NULL signature would otherwise bucket all empty docs
-    together downstream)."""
-    if sets is None:
-        sets = _shingle_sets(docs, n, pin=pin)
-    return sets.where(F.col("sig").isNotNull()).select(
-        "doc_id", *[F.col("sig")[i].alias(f"m{i}") for i in range(len(MINHASH_A))]
-    )
+    Never pinned here: a caller that reads the sets twice (band rows,
+    then the exact rescore) pins them itself.  One that traverses them
+    once — the band census, hot-bucket and sketch-scoring paths read
+    signatures and never rejoin the arrays — must not store an
+    O(corpus) copy of the shingle arrays (~6 GB at the 3125× tier for a
+    query whose output is a ≤200-row histogram — SURVEY §8.11)."""
+    return _minhash_rows(spread(docs, "doc_id").select("doc_id", "text"), n)
 
 
 #: Hot-band-bucket guard, ON by default (round 6): a band bucket
@@ -590,21 +573,37 @@ def cross_bucket_pairs(rows: DataFrame, keys, member, is_corpus,
     )
 
 
-def _band_rows(docs: DataFrame, n: int, rows_per_band: int,
-               sets: DataFrame | None, pin: bool = True) -> DataFrame:
-    """(doc_id, band_idx, key): one row per doc per LSH band."""
-    if sets is None:
-        sets = _shingle_sets(docs, n, pin=pin)
+def _band_rows(sets: DataFrame, rows_per_band: int) -> DataFrame:
+    """``sets`` (any frame carrying ``doc_id`` and the signature ``sig``)
+    with one row per doc per LSH band: every column, plus ``band_idx``
+    and ``key`` (:func:`band_key_structs`).  Docs with an empty shingle
+    set (NULL ``sig``) have no band rows."""
     sig = F.col("sig")
     bands = band_key_structs(
         [sig[i] for i in range(len(MINHASH_A))], rows_per_band)
-    return sets.where(sig.isNotNull()).select("doc_id", F.inline(bands))
+    return sets.where(sig.isNotNull()).select("*", F.inline(bands))
+
+
+def _band_sizes(bands: DataFrame) -> DataFrame:
+    """(band_idx, key, sz): the size of every band bucket."""
+    return bands.groupBy("band_idx", "key").agg(F.count("*").alias("sz"))
+
+
+def _band_pairs(bands: DataFrame, max_bucket: int | None) -> DataFrame:
+    """(doc_a, doc_b, n_bands): every pair of docs sharing a band bucket
+    of ``bands`` (:func:`_band_rows`), with how many buckets it shares.
+    The band rows are traversed once, guard or no guard: the hot-bucket
+    guard is a size filter inside the pair kernel."""
+    return (
+        bucket_pairs(bands, ["band_idx", "key"], "doc_id", max_bucket)
+        .groupBy(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
+        .agg(F.count("*").alias("n_bands"))
+    )
 
 
 def lsh_hot_buckets(docs: DataFrame, n: int = 3,
                     rows_per_band: int = MINHASH_ROWS_PER_BAND,
-                    max_bucket: int = LSH_MAX_BUCKET_DEFAULT,
-                    sets: DataFrame | None = None) -> DataFrame:
+                    max_bucket: int = LSH_MAX_BUCKET_DEFAULT) -> DataFrame:
     """(band_idx, key, sz): the band buckets the default guard drops.
 
     The guard inside :func:`minhash_candidates` filters these buckets
@@ -614,9 +613,7 @@ def lsh_hot_buckets(docs: DataFrame, n: int = 3,
     activity instead of discovering it from a recall dip.
     """
     return (
-        _band_rows(docs, n, rows_per_band, sets)
-        .groupBy("band_idx", "key")
-        .agg(F.count("*").alias("sz"))
+        _band_sizes(_band_rows(_shingle_sets(docs, n), rows_per_band))
         .filter(F.col("sz") > max_bucket)
         .select("band_idx",
                 _band_key_text(F.col("key"), rows_per_band).alias("key"), "sz")
@@ -625,10 +622,7 @@ def lsh_hot_buckets(docs: DataFrame, n: int = 3,
 
 def minhash_candidates(docs: DataFrame, n: int = 3,
                        rows_per_band: int = MINHASH_ROWS_PER_BAND,
-                       sets: DataFrame | None = None,
                        max_bucket: int | None = LSH_MAX_BUCKET_DEFAULT,
-                       pin: bool = True,
-                       bands: DataFrame | None = None,
                        ) -> DataFrame:
     """Candidate near-dup pairs: docs sharing ≥1 LSH band bucket.
 
@@ -648,23 +642,10 @@ def minhash_candidates(docs: DataFrame, n: int = 3,
     semantics (the oracle-checked registrations do, knowingly);
     :func:`lsh_hot_buckets` reports what a guarded run drops.
 
-    ``bands`` (round 12) injects a precomputed band-rows frame
-    ((doc_id, band_idx, key), already materialized/pinned by the
-    caller) so a planner that ALREADY derived the band rows for its
-    census (``lsh_near_dup_auto``) does not pay the tokenize+minhash
-    pass a second time (VERDICT r11 item 2; guide §5 reuse).
+    The shingle sets are traversed once, so nothing is pinned.
     """
-    # ``pin`` decides whether the shingle sets _band_rows derives (when
-    # neither ``sets`` nor ``bands`` is given) are checkpointed.  The
-    # band rows themselves are traversed once, guard or no guard: the
-    # hot-bucket guard is a size filter inside the pair kernel.
-    exploded = bands if bands is not None else _band_rows(
-        docs, n, rows_per_band, sets, pin=pin)
-    return (
-        bucket_pairs(exploded, ["band_idx", "key"], "doc_id", max_bucket)
-        .groupBy(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
-        .agg(F.count("*").alias("n_bands"))
-    )
+    return _band_pairs(_band_rows(_shingle_sets(docs, n), rows_per_band),
+                       max_bucket)
 
 
 def q_minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -760,12 +741,45 @@ def _set_rescore(cand: DataFrame, sets: DataFrame) -> DataFrame:
     return _score_sets(cand.join(sa, a).join(sb, b))
 
 
+def _rescored_candidates(docs: DataFrame, n: int, rows_per_band: int,
+                         max_bucket: int | None) -> DataFrame:
+    """(doc_a, doc_b, n_bands, _sa, _sb, n_common, jaccard): every LSH
+    candidate pair (:func:`_band_pairs`) with its exact rescore
+    (:func:`_set_rescore`) — the chain the exact near-dup family
+    composes.  The band rows and both rescore sides read the shingle
+    sets, so they are pinned once, here."""
+    sets = checkpoint.pin(_shingle_sets(docs, n))
+    cand = _band_pairs(_band_rows(sets, rows_per_band), max_bucket)
+    return _set_rescore(cand, sets)
+
+
+def _min_bands(threshold: float, rows_per_band: int) -> int:
+    """The sketch operating point as a band count: a pair sharing
+    ``n_bands`` of the 16/r bands estimates Jaccard at n_bands·r/16, so
+    the estimate reaches ``threshold`` at ceil(threshold · 16/r) shared
+    bands — and never below one, the band that made it a candidate."""
+    return max(1, math.ceil(threshold * (len(MINHASH_A) // rows_per_band)))
+
+
+def _sketch_score(pairs: DataFrame, threshold: float,
+                  rows_per_band: int) -> DataFrame:
+    """``pairs`` (first two columns: the pair's ids; ``n_bands``: the
+    band buckets it shares) scored by MinHash signature agreement:
+    (a, b, n_bands, est_jaccard) where the estimate n_bands·r/16 (6 dp)
+    reaches ``threshold`` — the decision every sketch path shares."""
+    a, b = pairs.columns[:2]
+    n_bands = F.col("n_bands")
+    est = n_bands / F.lit(len(MINHASH_A) // rows_per_band)
+    return (
+        pairs.filter(n_bands >= _min_bands(threshold, rows_per_band))
+        .select(a, b, "n_bands", F.round(est, 6).alias("est_jaccard"))
+    )
+
+
 def lsh_near_dup(docs: DataFrame, n: int = 3,
                  threshold: float = LSH_NEAR_DUP_THRESHOLD,
                  rows_per_band: int = LSH_ROWS_PER_BAND,
                  max_bucket: int | None = LSH_MAX_BUCKET_DEFAULT,
-                 sets: DataFrame | None = None,
-                 bands: DataFrame | None = None,
                  ) -> DataFrame:
     """The composed scale path: LSH candidates → exact Jaccard rescore.
 
@@ -784,20 +798,10 @@ def lsh_near_dup(docs: DataFrame, n: int = 3,
     ``max_bucket`` (the hot-bucket pair fan-out cap, see
     :func:`minhash_candidates`) is ON by default; the oracle-twin
     registration passes ``None`` explicitly.
-
-    ``sets`` / ``bands`` (round 12) inject caller-pinned shingle sets
-    and band rows so a planner that already materialized them for its
-    census shares the passes instead of re-deriving them (VERDICT r11
-    item 2) — values are deterministic, so the output is unchanged.
     """
-    if sets is None:
-        sets = _shingle_sets(docs, n)
-    cand = minhash_candidates(
-        docs, n, rows_per_band=rows_per_band, sets=sets,
-        max_bucket=max_bucket, bands=bands,
-    ).select("doc_a", "doc_b")
     return (
-        _set_rescore(cand, sets).filter(F.col("jaccard") >= threshold)
+        _rescored_candidates(docs, n, rows_per_band, max_bucket)
+        .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
 
@@ -830,12 +834,8 @@ def containment_pairs(docs: DataFrame, n: int = 3,
                       ) -> DataFrame:
     """(doc_a, doc_b, n_common, cont_a_in_b, cont_b_in_a) for LSH
     candidate pairs where either direction's containment ≥ threshold."""
-    sets = _shingle_sets(docs, n)
-    cand = minhash_candidates(
-        docs, n, rows_per_band=rows_per_band, sets=sets, max_bucket=max_bucket
-    ).select("doc_a", "doc_b")
     scored = (
-        _set_rescore(cand, sets)
+        _rescored_candidates(docs, n, rows_per_band, max_bucket)
         .withColumn(
             "cont_a_in_b", F.round(F.col("n_common") / F.size("_sa"), 6)
         )
@@ -937,10 +937,21 @@ INCR_CORPUS_PCT = 70
 
 
 def _side_is_corpus(doc_id_col) -> F.Column:
-    bucket = F.conv(
-        F.substring(F.md5(doc_id_col.cast("string")), 1, 8), 16, 10
-    ).cast("long") % 100
-    return bucket < INCR_CORPUS_PCT
+    return _md5_long(doc_id_col.cast("string")) % 100 < INCR_CORPUS_PCT
+
+
+def _cross_side_pairs(sets: DataFrame, rows_per_band: int) -> DataFrame:
+    """(doc_id, match_id, n_bands): every (incoming, corpus) pair of
+    ``sets`` (:func:`_shingle_sets`) sharing a band bucket, with how
+    many it shares — the candidate stage both incremental paths
+    compose (:func:`cross_bucket_pairs`: never corpus×corpus)."""
+    bands = _band_rows(sets, rows_per_band).withColumn(
+        "is_corpus", _side_is_corpus(F.col("doc_id")))
+    return (
+        cross_bucket_pairs(bands, ["band_idx", "key"], "doc_id", "is_corpus")
+        .groupBy(F.col("a").alias("doc_id"), F.col("b").alias("match_id"))
+        .agg(F.count("*").alias("n_bands"))
+    )
 
 
 def incremental_scored_pairs(docs: DataFrame, n: int = 3,
@@ -950,14 +961,10 @@ def incremental_scored_pairs(docs: DataFrame, n: int = 3,
     above-threshold matches on the corpus side — the cross-side
     candidate set, exactly rescored.  The per-doc report below and
     the streaming twin (streaming/dedup.py) both reduce to this."""
-    sets = _shingle_sets(docs, n)
-    exploded = _band_rows(docs, n, rows_per_band, sets).withColumn(
-        "is_corpus", _side_is_corpus(F.col("doc_id")))
-    cand = cross_bucket_pairs(
-        exploded, ["band_idx", "key"], "doc_id", "is_corpus"
-    ).select(F.col("a").alias("doc_id"), F.col("b").alias("match_id")).distinct()
+    sets = checkpoint.pin(_shingle_sets(docs, n))  # band rows + rescore
     return (
-        _set_rescore(cand, sets).filter(F.col("jaccard") >= threshold)
+        _set_rescore(_cross_side_pairs(sets, rows_per_band), sets)
+        .filter(F.col("jaccard") >= threshold)
         .select("doc_id", "match_id", "jaccard")
     )
 
@@ -977,8 +984,8 @@ def incremental_sketch_pairs(docs: DataFrame, n: int = 3,
     sketch path removed (SURVEY §8.12).  Here the cross-side bucket
     pairs ARE the scorer: counting matching band buckets per (incoming,
     corpus) pair gives the MinHash agreement estimate at zero set
-    transport, and the shingle sets are never materialized at all
-    (``pin=False`` signatures only).  Work: one exchange of the band
+    transport, and the shingle sets are traversed once, for their
+    signatures, and never pinned.  Work: one exchange of the band
     rows into cross-side buckets — never corpus×corpus — plus a
     pair-keyed count.
 
@@ -988,22 +995,8 @@ def incremental_sketch_pairs(docs: DataFrame, n: int = 3,
     candidacy itself implies est 1/16 ≥ 0.05)."""
     if threshold is None:
         threshold = SKETCH_THRESHOLD
-    n_bands_total = len(MINHASH_A) // rows_per_band
-    min_bands = max(1, math.ceil(threshold * n_bands_total))
-    exploded = _band_rows(docs, n, rows_per_band, None, pin=False).withColumn(
-        "is_corpus", _side_is_corpus(F.col("doc_id"))
-    )
-    return (
-        cross_bucket_pairs(exploded, ["band_idx", "key"], "doc_id", "is_corpus")
-        .groupBy(F.col("a").alias("doc_id"), F.col("b").alias("match_id"))
-        .agg(F.count("*").alias("n_bands"))
-        .filter(F.col("n_bands") >= min_bands)
-        .select(
-            "doc_id", "match_id", "n_bands",
-            F.round(F.col("n_bands") / F.lit(n_bands_total), 6)
-            .alias("est_jaccard"),
-        )
-    )
+    cand = _cross_side_pairs(_shingle_sets(docs, n), rows_per_band)
+    return _sketch_score(cand, threshold, rows_per_band)
 
 
 def q_incremental_sketch_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1198,18 +1191,14 @@ def band_volume_census(docs: DataFrame, n: int = 3,
     Output is tiny (one row per distinct bucket size); two shuffles
     (bucket count, histogram), both on 8-byte keys.
 
-    ``pin=False`` (round 11): the census traverses the shingle sets
-    exactly once (signatures → band keys), so pinning them bought
-    nothing and cost everything — the ~6 GB of pinned arrays at the
-    3125× tier OOM'd the 8 GiB cap for a query whose whole output is
-    a histogram (SURVEY §8.11).  A capacity-planning query must be
-    cheaper than the capacity it plans.
+    Nothing is pinned: the census traverses the shingle sets exactly
+    once (signatures → band keys), and a pin of them bought nothing and
+    cost everything — the ~6 GB of pinned arrays at the 3125× tier
+    OOM'd the 8 GiB cap for a query whose whole output is a histogram
+    (SURVEY §8.11).  A capacity-planning query must be cheaper than the
+    capacity it plans.
     """
-    sizes = (
-        _band_rows(docs, n, rows_per_band, None, pin=False)
-        .groupBy("band_idx", "key")
-        .agg(F.count("*").alias("sz"))
-    )
+    sizes = _band_sizes(_band_rows(_shingle_sets(docs, n), rows_per_band))
     return (
         sizes.groupBy("sz")
         .agg(F.count("*").alias("n_buckets"))
@@ -1265,14 +1254,10 @@ def jaccard_estimate_calibration(docs: DataFrame, n: int = 3,
     candidate chain (same as lsh_near_dup, oracle-twin unguarded) +
     one tiny aggregate; output is ≤17 rows.
     """
-    sets = _shingle_sets(docs, n)
-    cand = minhash_candidates(
-        docs, n, rows_per_band=rows_per_band, sets=sets, max_bucket=None
-    )
     n_bands_total = len(MINHASH_A) // rows_per_band
-    scored = _set_rescore(cand, sets)
     return (
-        scored.groupBy("n_bands")
+        _rescored_candidates(docs, n, rows_per_band, None)
+        .groupBy("n_bands")
         .agg(
             F.count("*").alias("n_pairs"),
             F.sum(F.round(F.col("jaccard") * 1000000).cast("long"))
@@ -1333,15 +1318,13 @@ SKETCH_THRESHOLD = 0.25
 #: the sketch oracles, the auto-planner oracle, the incremental
 #: sketch oracle, and the clustering sketch-edge twins all read THIS
 #: constant instead of re-deriving the formula.
-SKETCH_MIN_BANDS = max(
-    1, math.ceil(SKETCH_THRESHOLD * (len(MINHASH_A) // LSH_ROWS_PER_BAND)))
+SKETCH_MIN_BANDS = _min_bands(SKETCH_THRESHOLD, LSH_ROWS_PER_BAND)
 
 
 def lsh_near_dup_sketch(docs: DataFrame, n: int = 3,
                         threshold: float = SKETCH_THRESHOLD,
                         rows_per_band: int = LSH_ROWS_PER_BAND,
                         max_bucket: int | None = LSH_MAX_BUCKET_DEFAULT,
-                        bands: DataFrame | None = None,
                         ) -> DataFrame:
     """Sketch-only near-dup scoring: LSH candidates scored by MinHash
     signature agreement — ZERO shingle-array transport.
@@ -1355,8 +1338,8 @@ def lsh_near_dup_sketch(docs: DataFrame, n: int = 3,
     matching signature components is a binomial estimator of Jaccard
     (E[n_bands/16] = J), so the rescore becomes a filter on the
     candidate aggregate — no join back to the sets, no array
-    transport, and the shingle sets themselves are traversed once
-    (``pin=False``) and never pinned.
+    transport, and the shingle sets themselves are traversed once and
+    never pinned.
 
     When is the swap safe?  Read `dedup_jaccard_calibration` for the
     corpus first: if the exact Jaccard mass sits where the agreement
@@ -1368,22 +1351,8 @@ def lsh_near_dup_sketch(docs: DataFrame, n: int = 3,
     Output: (doc_a, doc_b, n_bands, est_jaccard) for candidates with
     est_jaccard ≥ threshold, i.e. n_bands ≥ ceil(threshold · 16).
     """
-    n_bands_total = len(MINHASH_A) // rows_per_band
-    min_bands = max(1, math.ceil(threshold * n_bands_total))
-    cand = minhash_candidates(
-        docs, n, rows_per_band=rows_per_band, sets=None,
-        max_bucket=max_bucket, pin=False, bands=bands,
-    )
-    return (
-        cand.filter(F.col("n_bands") >= min_bands)
-        .select(
-            "doc_a",
-            "doc_b",
-            "n_bands",
-            F.round(F.col("n_bands") / F.lit(n_bands_total), 6)
-            .alias("est_jaccard"),
-        )
-    )
+    cand = minhash_candidates(docs, n, rows_per_band, max_bucket)
+    return _sketch_score(cand, threshold, rows_per_band)
 
 
 def q_lsh_near_dup_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1464,15 +1433,10 @@ def sketch_confusion(docs: DataFrame, n: int = 3,
     rescore ONCE on a sample, not forever on the corpus); output is
     ≤ 4 rows.
     """
-    n_bands_total = len(MINHASH_A) // rows_per_band
-    min_bands = max(1, math.ceil(threshold * n_bands_total))
-    sets = _shingle_sets(docs, n)
-    cand = minhash_candidates(
-        docs, n, rows_per_band=rows_per_band, sets=sets, max_bucket=None
-    )
-    scored = _set_rescore(cand, sets)
+    min_bands = _min_bands(threshold, rows_per_band)
     return (
-        scored.groupBy(
+        _rescored_candidates(docs, n, rows_per_band, None)
+        .groupBy(
             (F.col("n_bands") >= min_bands).alias("sketch_kept"),
             (F.col("jaccard") >= threshold).alias("exact_kept"),
         )
@@ -1536,8 +1500,8 @@ def lsh_near_dup_auto(docs: DataFrame, n: int = 3,
     decision procedure (`sketch_confusion`); this closes the loop by
     making the decision itself part of the operator: a one-row census
     aggregate (band-bucket size histogram — O(docs × bands), no pair
-    join, sets never materialized) measures the rescore volume the
-    corpus is about to generate, and the branch is chosen by
+    join) measures the rescore volume the corpus is about to generate,
+    and the branch is chosen by
     ``pair_budget``.  The driver-side action is a single scalar
     (bounded by construction) — the same ANALYZE-style stats
     collection AQE does between stages; amortize it by persisting the
@@ -1561,10 +1525,14 @@ def lsh_near_dup_auto(docs: DataFrame, n: int = 3,
     and the chosen branch previously each derived band rows from
     scratch — two full tokenize+minhash passes per execution (4.2 s
     warm at fixture scale, two corpus scans at 100 TB).  Now the
-    shingle sets and the band rows are each checkpointed ONCE; the
-    census aggregates over the band checkpoint, the chosen branch's
-    candidate join reads the same checkpoint, and the exact branch's
-    rescore reads the checkpointed sets.
+    shingle sets and the band rows are each pinned ONCE; the census
+    aggregates over the band pin, the chosen branch's candidate
+    pairs read the same pin, and the exact branch's rescore reads the
+    pinned sets.  Both pins are lazy, so the census job writes the
+    sets pin too, on either branch: the sketch branch never reads it
+    back.  Dropping it would cost the exact branch a second MinHash
+    pass over the corpus, so the sketch branch pays one O(corpus)
+    write instead.
     Both are local checkpoints, not ``persist``: a persisted frame
     stays registered in the session's CacheManager, which then
     silently serves every later identical ``_shingle_sets`` plan from
@@ -1575,9 +1543,10 @@ def lsh_near_dup_auto(docs: DataFrame, n: int = 3,
     regrouped per bucket (sz·(sz−1) is always even, so DIV 2 is exact
     either way).
     """
-    sets = _shingle_sets(docs, n)
-    bands = checkpoint.pin(_band_rows(docs, n, rows_per_band, sets))
-    sizes = bands.groupBy("band_idx", "key").agg(F.count("*").alias("sz"))
+    sets = checkpoint.pin(_shingle_sets(docs, n))
+    bands = checkpoint.pin(  # the keys only, not a copy of the arrays
+        _band_rows(sets, rows_per_band).select("doc_id", "band_idx", "key"))
+    sizes = _band_sizes(bands)
     if max_bucket is not None:
         # The guarded chain drops hot buckets before pair generation,
         # so only in-guard buckets contribute rescore volume.
@@ -1591,22 +1560,21 @@ def lsh_near_dup_auto(docs: DataFrame, n: int = 3,
         # rows to read it from — probes/monitoring get the planner's
         # choice directly instead of inferring it from output rows.
         decision.append(total > pair_budget)
+    cand = _band_pairs(bands, max_bucket)
     if total > pair_budget:
-        # Zero-transport branch: candidates re-read the checkpointed
-        # band rows; the shingle sets are never touched again.
-        out = lsh_near_dup_sketch(docs, n, threshold, rows_per_band,
-                                  max_bucket, bands=bands)
-        return out.select(
+        # Zero-transport branch: the shingle sets are never read again.
+        return _sketch_score(cand, threshold, rows_per_band).select(
             "doc_a", "doc_b",
             F.col("est_jaccard").alias("score"),
             F.lit(True).alias("used_sketch"),
         )
-    out = lsh_near_dup(docs, n, threshold, rows_per_band, max_bucket,
-                       sets=sets, bands=bands)
-    return out.select(
-        "doc_a", "doc_b",
-        F.col("jaccard").alias("score"),
-        F.lit(False).alias("used_sketch"),
+    return (
+        _set_rescore(cand, sets).filter(F.col("jaccard") >= threshold)
+        .select(
+            "doc_a", "doc_b",
+            F.col("jaccard").alias("score"),
+            F.lit(False).alias("used_sketch"),
+        )
     )
 
 

@@ -13,8 +13,8 @@ stream-side shuffle of the corpus ever happens:
     shingle-hash set and its full signature; the kernel is map-only,
     so a stream needs no signature aggregation state, and the
     signatures are bit-identical to the batch path's;
-  * band keys come from the signature through the batch
-    ``band_key_structs``, so stream and corpus keys share one format;
+  * band rows come from the signature through the batch
+    ``_band_rows``, so stream and corpus keys share one format;
   * candidates come from a stream-static join against the corpus
     band-bucket table; multi-band duplicates collapse via
     ``dropDuplicates`` (bounded by the in-flight shard in the
@@ -30,22 +30,19 @@ tests/test_streaming.py).
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from grpc_map_reduce_spark.operators.dedup import (
     LSH_NEAR_DUP_THRESHOLD,
     LSH_ROWS_PER_BAND,
-    MINHASH_A,
     SKETCH_THRESHOLD,
     _band_rows,
     _minhash_rows,
     _shingle_sets,
     _score_sets,
     _side_is_corpus,
-    band_key_structs,
+    _sketch_score,
 )
 from grpc_map_reduce_spark.plans.checkpoint import pin
 
@@ -53,17 +50,14 @@ from grpc_map_reduce_spark.plans.checkpoint import pin
 def _stream_band_rows(doc_stream: DataFrame, n: int, rows_per_band: int,
                       ts_col: str | None, dedup_within: str) -> DataFrame:
     """(doc_id, [ts_col,] sh_set, sig, band_idx, key): the stream's docs
-    through the batch kernel and band-key format, one row per doc per
-    band; docs with an empty shingle set are dropped.  ``ts_col`` passes
-    through the kernel and carries the ``dedup_within`` watermark."""
+    through the batch kernel and band rows (``_band_rows``).  ``ts_col``
+    passes through the kernel and carries the ``dedup_within``
+    watermark."""
     ts_cols = [ts_col] if ts_col is not None else []
     rows = _minhash_rows(doc_stream.select("doc_id", *ts_cols, "text"), n)
     if ts_col is not None:
         rows = rows.withWatermark(ts_col, dedup_within)
-    sig = F.col("sig")
-    bands = band_key_structs(
-        [sig[i] for i in range(len(MINHASH_A))], rows_per_band)
-    return rows.where(sig.isNotNull()).select("*", F.inline(bands))
+    return _band_rows(rows, rows_per_band)
 
 
 def _dedup_candidates(joined: DataFrame, ts_col: str | None,
@@ -82,11 +76,12 @@ def corpus_index(docs: DataFrame, n: int = 3,
     """The static corpus side, built once with the BATCH machinery:
     ``buckets (band_idx, key, match_id)`` and ``sets (match_id,
     sh_set)``.  At scale both live as bucketed parquet, maintained
-    incrementally as shards are accepted."""
+    incrementally as shards are accepted.  Both read the lazily pinned
+    shingle sets, so the corpus kernel runs once."""
     corpus = docs.filter(_side_is_corpus(F.col("doc_id")))
-    sets = _shingle_sets(corpus, n)
-    buckets = _band_rows(corpus, n, rows_per_band, sets).withColumnRenamed(
-        "doc_id", "match_id")
+    sets = pin(_shingle_sets(corpus, n))
+    buckets = _band_rows(sets, rows_per_band).select(
+        F.col("doc_id").alias("match_id"), "band_idx", "key")
     return buckets, sets.select(
         F.col("doc_id").alias("match_id"), F.col("sh_set").alias("_sb")
     )
@@ -150,23 +145,23 @@ def corpus_sketch_index(docs: DataFrame, n: int = 3,
                         ) -> tuple[DataFrame, DataFrame]:
     """Static corpus side for the sketch-mode stream: ``buckets
     (band_idx, key, match_id)`` and ``sigs (match_id, _sigb:
-    array<long>)`` — no shingle sets ever materialized (the whole
+    array<long>)`` — the shingle sets are never stored (the whole
     point of the mode).
 
-    Both outputs are lazily pinned (round-11 review): stream-static
-    joins re-execute the static side's plan EVERY micro-batch, so an
-    unpinned index would re-run the corpus tokenization UDF per
-    trigger, twice.  The pinned frames are the two small fixed-width
-    products (band keys + 16-long signatures), not the shingle-array
-    frame whose pin was the 3125× OOM — at real scale both live as
-    bucketed parquet, exactly like the exact twin's index."""
+    Both outputs read one lazily pinned signature table (round-11
+    review): stream-static joins re-execute the static side's plan
+    EVERY micro-batch, so an unpinned index would re-run the corpus
+    kernel per trigger, twice.  The pin holds the small fixed-width
+    16-long signatures, not the shingle-array frame whose pin was the
+    3125× OOM — at real scale both outputs live as bucketed parquet,
+    exactly like the exact twin's index."""
     corpus = docs.filter(_side_is_corpus(F.col("doc_id")))
     sig = pin(
-        _shingle_sets(corpus, n, pin=False)
+        _shingle_sets(corpus, n)
         .where(F.col("sig").isNotNull()).select("doc_id", "sig")
     )
-    buckets = _band_rows(None, n, rows_per_band, sig).withColumnRenamed(
-        "doc_id", "match_id")
+    buckets = _band_rows(sig, rows_per_band).select(
+        F.col("doc_id").alias("match_id"), "band_idx", "key")
     sigs = sig.select(F.col("doc_id").alias("match_id"),
                       F.col("sig").alias("_sigb"))
     return buckets, sigs
@@ -196,8 +191,6 @@ def streaming_incremental_dedup_sketch(
         raise ValueError(
             "streaming sketch twin supports rows_per_band=1 only "
             "(signature agreement == shared-band count requires r=1)")
-    n_bands_total = len(MINHASH_A)
-    min_bands = max(1, math.ceil(threshold * n_bands_total))
     exp = _stream_band_rows(doc_stream, n, 1, ts_col, dedup_within).drop(
         "sh_set").withColumnRenamed("sig", "_siga")
     joined = exp.join(buckets, ["band_idx", "key"])  # stream-static
@@ -208,16 +201,9 @@ def streaming_incremental_dedup_sketch(
             lambda x: x,
         )
     ).cast("long")
-    return (
-        cand.join(corpus_sigs, "match_id")  # stream-static, 16 longs
-        .withColumn("n_bands", agree)
-        .filter(F.col("n_bands") >= min_bands)
-        .select(
-            "doc_id", "match_id", "n_bands",
-            F.round(F.col("n_bands") / F.lit(n_bands_total), 6)
-            .alias("est_jaccard"),
-        )
-    )
+    scored = cand.join(corpus_sigs, "match_id").select(  # stream-static
+        "doc_id", "match_id", agree.alias("n_bands"))
+    return _sketch_score(scored, threshold, 1)
 
 
 # --------------------------------------------------------------------------

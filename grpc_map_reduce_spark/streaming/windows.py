@@ -244,85 +244,6 @@ def stateful_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
-def tws_user_totals(events: DataFrame) -> DataFrame:
-    """The same running per-user totals on the Spark-4
-    ``transformWithStateInPandas`` API (SPARK-49906 "Arbitrary
-    Stateful Processing v2"): typed ValueState handles instead of a
-    single opaque state tuple, an explicit processor lifecycle
-    (init/handleInputRows/close), and per-state TTL support.  Output
-    and state contents are identical to :func:`stateful_user_totals`
-    — the pair documents the old→new migration path while both APIs
-    ship.
-
-    Runtime dependency: the v2 API's state server speaks protobuf
-    between the JVM and the Python driver worker, so it needs the
-    ``protobuf`` package (and the RocksDB state store provider, set
-    below).  This container ships without protobuf — the gate below
-    turns the otherwise-inscrutable "driver worker exited
-    unexpectedly (crashed)" into an actionable error, and
-    test_streaming.py importorskips accordingly.  The v1
-    ``applyInPandasWithState`` twin above has no such dependency and
-    is the default."""
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError as e:
-        raise ImportError(
-            "transformWithStateInPandas requires the protobuf package "
-            "(pyspark arbitrary-state-v2 runtime dependency); use "
-            "stateful_user_totals (applyInPandasWithState) instead"
-        ) from e
-    events.sparkSession.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-    from pyspark.sql.types import (
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    state_schema = StructType([
-        StructField("total_cents", LongType()),
-        StructField("n", LongType()),
-    ])
-
-    class Totals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("totals", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._state.exists():
-                total_cents, n = self._state.get()
-            else:
-                total_cents, n = 0, 0
-            for pdf in rows:
-                # exact integer cents (functions.money batch contract)
-                total_cents += int(
-                    (pdf["value"] * 100).round().astype("int64").sum()
-                )
-                n += len(pdf)
-            self._state.update((total_cents, n))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "total_value_cents": [total_cents],
-                 "n_events": [n]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=Totals(),
-        outputStructType="user_id long, total_value_cents long, n_events long",
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def run_to_memory(df: DataFrame, query_name: str,
                   output_mode: str = "complete"):
     """Replay the whole backlog (availableNow) into an in-memory table

@@ -64,7 +64,7 @@ def test_lsh_near_dup_plan_has_no_shingle_self_join(spark, sf_dir):
     # assertion above is load-bearing, not vacuous.  (The exact path,
     # ngram_jaccard_pairs, enumerates pairs inside per-shingle arrays
     # and plans no join, so the witness is built by hand.)
-    sh = _shingle_sets(docs, pin=False).select(
+    sh = _shingle_sets(docs).select(
         "doc_id", F.explode("sh_set").alias("sh_h"))
     self_join = sh.alias("a").join(
         sh.alias("b"), (F.col("a.sh_h") == F.col("b.sh_h"))
@@ -163,19 +163,19 @@ def test_incremental_matches_symmetric_cross_side(spark, sf_dir):
 
 
 def test_minhash_signatures_match_explode_formulation(spark):
-    """The map-side array_min∘transform signature (round 6) must be
-    value-identical to the original explode→groupBy(min) formulation,
-    including dropping docs whose shingle set is empty (explode emits
-    no rows for them; the array path must filter, or empty docs would
-    all share NULL-keyed band buckets)."""
+    """The kernel's ``sig`` must be value-identical to the original
+    explode→groupBy(min) formulation, including dropping docs whose
+    shingle set is empty (explode emits no rows for them; the kernel
+    signs them NULL and the band rows must skip them, or empty docs
+    would all share NULL-keyed band buckets)."""
     import random
 
     from grpc_map_reduce_spark.operators.dedup import (
         MINHASH_A,
         MINHASH_B,
         MINHASH_P,
+        _band_rows,
         _shingle_sets,
-        minhash_signatures,
     )
 
     rng = random.Random(13)
@@ -189,8 +189,8 @@ def test_minhash_signatures_match_explode_formulation(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
     sets = _shingle_sets(docs)
-    got = {r["doc_id"]: tuple(r[f"m{i}"] for i in range(16))
-           for r in minhash_signatures(docs, sets=sets).collect()}
+    sigs = {r["doc_id"]: r["sig"] for r in sets.collect()}
+    got = {d: tuple(sig) for d, sig in sigs.items() if sig is not None}
 
     sh = sets.select("doc_id", F.explode("sh_set").alias("sh_h")).withColumn(
         "h", F.col("sh_h") % MINHASH_P
@@ -203,7 +203,9 @@ def test_minhash_signatures_match_explode_formulation(spark):
             for r in sh.groupBy("doc_id").agg(*mins).collect()}
 
     assert got == want
-    assert 30 not in got, "empty-text doc must be dropped, not NULL-signed"
+    assert sigs[30] is None, "empty-text doc must be NULL-signed"
+    banded = {r["doc_id"] for r in _band_rows(sets, 1).collect()}
+    assert banded == set(want), "NULL-signed docs must have no band rows"
 
 
 def test_band_keys_pack_components_injectively(spark):

@@ -458,48 +458,6 @@ def test_streaming_embedding_dedup_matches_batch(spark, sf_dir, tmp_path):
     assert got == want and len(want) > 0
 
 
-def test_transform_with_state_matches_batch(spark, sf_dir):
-    """The Spark-4 transformWithStateInPandas twin must land on the
-    same final per-user totals as both the v1 stateful op and the
-    batch aggregate.  The v2 API's JVM<->Python state server needs
-    protobuf; where it is absent (this container) the operator's
-    DOCUMENTED boundary is an actionable ImportError naming the v1
-    swap — asserted here so the test runs (not skips) everywhere,
-    the same contract pattern as the multimodal codec quarantine.
-    The v1 applyInPandasWithState parity test above always runs."""
-    from grpc_map_reduce_spark.streaming.windows import tws_user_totals
-
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        import pytest
-
-        stream = read_events_stream(spark, sf_dir)
-        with pytest.raises(ImportError, match="applyInPandasWithState"):
-            tws_user_totals(stream)
-        return
-
-    stream = read_events_stream(spark, sf_dir)
-    run_to_memory(tws_user_totals(stream), "tws_user_totals",
-                  output_mode="update")
-    rows = spark.table("tws_user_totals").collect()
-    got = {r.user_id: (r.total_value_cents, r.n_events) for r in rows}
-
-    from grpc_map_reduce_spark.functions.money import cents
-
-    want = {
-        r.user_id: (r.total_value_cents, r.n_events)
-        for r in table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.sum(cents("value")).alias("total_value_cents"),
-            F.count("*").alias("n_events"),
-        )
-        .collect()
-    }
-    assert got == want
-
-
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state."
     "RocksDBStateStoreProvider"
