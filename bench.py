@@ -19,7 +19,8 @@ test_bench_contract.py) carrying the headline number, the FULL warm
 per-query min map (``queries``), the top-10 warm mins, and warm
 regressions (>= 1.3x AND >= 0.5 s slower) vs the previous full run
 (snapshot at tools/bench_prev_sf*.json, rewritten after each full
-inventory run) — so the driver's tail always parses, always names
+inventory run, compared only when it was taken at the same
+``defaultParallelism``) — so the driver's tail always parses, always names
 the slow queries, and can rebuild the per-query round-over-round
 table.  The full record (cold map, cold_minus_warm) stays on line 1.
 
@@ -240,15 +241,19 @@ def main() -> None:
     # so a subset smoke (SPARK_GRAFT_BENCH_ONLY) can't poison it.
     # Snapshot is PER-SF (the contract test's full sf0.001 inventory
     # run must not become the "previous run" for a driver sf0.1 run —
-    # every query would trivially flag as a cross-sf regression).
+    # every query would trivially flag as a cross-sf regression), and
+    # it is compared only at the width it was taken at: a snapshot
+    # from local[32] says nothing about a local[4] run.
     prev_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "tools",
         f"bench_prev_sf{sf}.json",
     )
+    cpus = spark.sparkContext.defaultParallelism
     regressed: dict[str, float] = {}
     try:
         with open(prev_path) as fh:
-            prev = json.load(fh).get("queries", {})
+            snap = json.load(fh)
+        prev = snap.get("queries", {}) if snap.get("cpus") == cpus else {}
         for n, warm in timings.items():
             p = prev.get(n)
             # Ratio alone amplifies jitter on sub-second queries: the
@@ -289,7 +294,7 @@ def main() -> None:
     if only_set is None and timings:
         try:
             with open(prev_path, "w") as fh:
-                json.dump({"sf": sf, "queries": timings}, fh)
+                json.dump({"sf": sf, "cpus": cpus, "queries": timings}, fh)
         except OSError:
             pass
     spark.stop()

@@ -46,12 +46,12 @@ class _BitWriter:
         return bytes(self.out)
 
 
-def _lzw_encode(data: bytes, mcs: int = _MCS) -> bytes:
-    clear, end = 1 << mcs, (1 << mcs) + 1
+def _lzw_encode(data: bytes) -> bytes:
+    clear, end = 1 << _MCS, (1 << _MCS) + 1
     bw = _BitWriter()
 
     def reset():
-        return {bytes([i]): i for i in range(1 << mcs)}, end + 1, mcs + 1
+        return {bytes([i]): i for i in range(1 << _MCS)}, end + 1, _MCS + 1
 
     table, next_code, width = reset()
     bw.write(clear, width)

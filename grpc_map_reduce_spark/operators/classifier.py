@@ -40,18 +40,16 @@ from grpc_map_reduce_spark.plans.checkpoint import pin
 CENTROID_POS, CENTROID_NEG = 0, 1
 
 
-def centroid_classifier(vectors: DataFrame, pos: int = CENTROID_POS,
-                        neg: int = CENTROID_NEG,
-                        id_col: str = "vec_id", vec_col: str = "embedding",
-                        label_col: str = "label") -> DataFrame:
+def centroid_classifier(vectors: DataFrame) -> DataFrame:
     """(vec_id, margin_scaled, pred_label, true_label, correct) for
-    every row labeled ``pos`` or ``neg``."""
+    every row labeled ``CENTROID_POS`` or ``CENTROID_NEG``."""
     from grpc_map_reduce_spark.operators.similarity import int8_quantize
 
-    rows = vectors.filter(F.col(label_col).isin(pos, neg))
+    pos, neg = CENTROID_POS, CENTROID_NEG
+    rows = vectors.filter(F.col("label").isin(pos, neg))
     q = pin(  # feeds sums AND scoring
-        int8_quantize(rows, id_col, vec_col, keep=(label_col,))
-        .withColumn("cls", (F.col(label_col) == pos).cast("int"))
+        int8_quantize(rows, keep=("label",))
+        .withColumn("cls", (F.col("label") == pos).cast("int"))
     )
 
     # class sums per dimension — one explode + keyed agg (2·dims rows)
@@ -97,9 +95,9 @@ def centroid_classifier(vectors: DataFrame, pos: int = CENTROID_POS,
     scale = f"{d.format('na')} * na * nb * nb"
     return (
         dots.crossJoin(F.broadcast(wide))
-        .join(q.select("id", label_col), "id")
+        .join(q.select("id", "label"), "id")
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("vec_id"),
             # symmetric (toward-zero) scaled margin: sign-safe across
             # engines, int64-bounded at any corpus size
             F.expr(
@@ -109,10 +107,10 @@ def centroid_classifier(vectors: DataFrame, pos: int = CENTROID_POS,
             ).alias("margin_scaled"),
             F.expr(f"CASE WHEN ({margin}) > 0 THEN {pos} ELSE {neg} END")
             .cast("long").alias("pred_label"),
-            F.col(label_col).cast("long").alias("true_label"),
+            F.col("label").cast("long").alias("true_label"),
             F.expr(
                 f"(CASE WHEN ({margin}) > 0 THEN {pos} ELSE {neg} END)"
-                f" = {label_col}"
+                " = label"
             ).alias("correct"),
         )
     )

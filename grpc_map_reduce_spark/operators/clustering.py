@@ -124,8 +124,7 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     return members.unionByName(roots)
 
 
-def dedup_clusters(docs: DataFrame, threshold: float = CLUSTER_JACCARD_THRESHOLD,
-                   n: int = 3, edges: DataFrame | None = None) -> DataFrame:
+def dedup_clusters(docs: DataFrame, edges: DataFrame | None = None) -> DataFrame:
     """Every document's dedup cluster id (min doc_id of its component).
 
     Documents with no near-dup partner form singleton clusters of
@@ -133,7 +132,8 @@ def dedup_clusters(docs: DataFrame, threshold: float = CLUSTER_JACCARD_THRESHOLD
     ``cluster_id`` is the keeper.
 
     Edges come from the sub-quadratic LSH→rescore path
-    (:func:`~grpc_map_reduce_spark.operators.dedup.lsh_near_dup`), not
+    (:func:`~grpc_map_reduce_spark.operators.dedup.lsh_near_dup` at
+    ``CLUSTER_JACCARD_THRESHOLD``), not
     the exact all-pairs join, so edge generation survives 100 TB; the
     DuckDB oracle applies the identical candidate restriction.  The
     final assignment join is a plain shuffle join — ``cc`` is O(duped
@@ -145,7 +145,7 @@ def dedup_clusters(docs: DataFrame, threshold: float = CLUSTER_JACCARD_THRESHOLD
     join / coalesce contract (round-11 review).
     """
     if edges is None:
-        edges = lsh_near_dup(docs, n=n, threshold=threshold).select(
+        edges = lsh_near_dup(docs, threshold=CLUSTER_JACCARD_THRESHOLD).select(
             F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
         )
     cc = connected_components(edges)
@@ -201,25 +201,22 @@ SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id
 
 
 def leakage_safe_split(docs: DataFrame,
-                       threshold: float = CLUSTER_JACCARD_THRESHOLD,
-                       n: int = 3,
-                       train_pct: int = SPLIT_TRAIN_PCT,
                        assign: DataFrame | None = None) -> DataFrame:
     """Per-doc (doc_id, n_chars, cluster_id, split) with the split
-    decided by ``md5(cluster_id) % 100 < train_pct`` — deterministic,
+    decided by ``md5(cluster_id) % 100 < SPLIT_TRAIN_PCT`` — deterministic,
     engine-replayable, and constant within each near-dup cluster, so
     no cluster ever straddles train/test.  ``assign`` swaps the
     cluster-assignment source (sketch twin) while keeping the one
     split rule."""
     if assign is None:
-        assign = dedup_clusters(docs, threshold=threshold, n=n)
+        assign = dedup_clusters(docs)
     bucket = _md5_long(F.col("cluster_id").cast("string")) % 100
     return (
         docs.select("doc_id", "n_chars")
         .join(assign, "doc_id")
         .withColumn(
             "split",
-            F.when(bucket < train_pct, F.lit("train")).otherwise(F.lit("test")),
+            F.when(bucket < SPLIT_TRAIN_PCT, F.lit("train")).otherwise(F.lit("test")),
         )
     )
 
@@ -346,10 +343,9 @@ PAGERANK_ITERS = 3
 PAGERANK_EDGE_THRESHOLD = 0.008  # dense graph: ~6k edges at sf0.01
 
 
-def pagerank(edges: DataFrame, damping: float = PAGERANK_DAMPING,
-             n_iter: int = PAGERANK_ITERS,
-             edges_unique: bool = False) -> DataFrame:
-    """(node, rank) after ``n_iter`` power iterations on the
+def pagerank(edges: DataFrame, edges_unique: bool = False) -> DataFrame:
+    """(node, rank) after ``PAGERANK_ITERS`` power iterations (damping
+    ``PAGERANK_DAMPING``) on the
     symmetrized ``edges`` (src/dst).  Nodes = every id in the edge
     set; the symmetric closure means no dangling nodes.
 
@@ -392,12 +388,12 @@ def pagerank(edges: DataFrame, damping: float = PAGERANK_DAMPING,
         )
         return nodes.join(contrib, "node", "left").select(
             "node",
-            (F.lit((1 - damping) / n)
-             + damping * F.coalesce("c", F.lit(0.0))).alias("rank"),
+            (F.lit((1 - PAGERANK_DAMPING) / n)
+             + PAGERANK_DAMPING * F.coalesce("c", F.lit(0.0))).alias("rank"),
         )
 
     ranks = iterate(nodes.withColumn("rank", F.lit(1.0 / n)), power_iteration,
-                    n_iter, cache=sym_deg)
+                    PAGERANK_ITERS, cache=sym_deg)
     return ranks.select("node", F.round("rank", 6).alias("rank"))
 
 
@@ -833,9 +829,8 @@ FROM deg d LEFT JOIN per_node p USING (node)
 LPA_ITERS = 3
 
 
-def label_propagation(edges: DataFrame, n_iter: int = LPA_ITERS,
-                      edges_unique: bool = False) -> DataFrame:
-    """(node, community, community_size) after ``n_iter`` synchronous
+def label_propagation(edges: DataFrame, edges_unique: bool = False) -> DataFrame:
+    """(node, community, community_size) after ``LPA_ITERS`` synchronous
     majority-vote rounds; initial label = node id.
 
     ``edges_unique`` has the same contract as in :func:`pagerank`:
@@ -866,7 +861,7 @@ def label_propagation(edges: DataFrame, n_iter: int = LPA_ITERS,
 
     labels = sym.select(F.col("src").alias("node")).distinct() \
         .withColumn("label", F.col("node"))
-    labels = iterate(labels, vote, n_iter, cache=sym)
+    labels = iterate(labels, vote, LPA_ITERS, cache=sym)
     sizes = labels.groupBy("label").agg(F.count("*").alias("community_size"))
     return labels.join(sizes, "label").select(
         "node", F.col("label").alias("community"), "community_size"
@@ -936,19 +931,19 @@ ORACLE_LPA = _lpa_oracle()
 # ships zero arrays and the whole chain's transport is the band
 # explode plus the tiny edge set.  Guard ON on both sides (production
 # posture; the oracle mirrors it through lsh_pairs_sql's HAVING gate).
-def _sketch_edges(docs: DataFrame, n: int = 3) -> DataFrame:
+def _sketch_edges(docs: DataFrame) -> DataFrame:
     return lsh_near_dup_sketch(
-        docs, n=n, threshold=SKETCH_THRESHOLD,
+        docs, threshold=SKETCH_THRESHOLD,
         max_bucket=LSH_MAX_BUCKET_DEFAULT,
     ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
 
 
-def dedup_clusters_sketch(docs: DataFrame, n: int = 3) -> DataFrame:
+def dedup_clusters_sketch(docs: DataFrame) -> DataFrame:
     """`dedup_clusters` with zero-transport edge generation: CC over
     signature-agreement edges (est Jaccard ≥ 0.25) instead of
     exact-rescored ones.  Same total-assignment contract — same
     mechanism too: only the ``edges`` source differs."""
-    return dedup_clusters(docs, n=n, edges=_sketch_edges(docs, n))
+    return dedup_clusters(docs, edges=_sketch_edges(docs))
 
 
 def q_dedup_clusters_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:

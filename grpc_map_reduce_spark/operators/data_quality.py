@@ -430,19 +430,18 @@ def q_quality_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the score RANKS well; calibration says whether the score's magnitude
 # means anything — per equal-width score bin, predicted-ish mass vs
 # the observed positive rate.  Map-only bin assignment + one
-# ``bins``-row aggregate; every rate in integer basis points.
+# ``CALIBRATION_BINS``-row aggregate; every rate in integer basis points.
 CALIBRATION_BINS = 10
 
 
-def quality_calibration(docs: DataFrame,
-                        bins: int = CALIBRATION_BINS) -> DataFrame:
+def quality_calibration(docs: DataFrame) -> DataFrame:
     """(bin, n, n_pos, pos_rate_bp, mean_score_bp) over equal-width
     stop_bp bins — stopword share is exactly the en-ness signal the
     `looks_en` heuristic thresholds, so this table is its reliability
     diagram against the true lang=='en' label."""
     from grpc_map_reduce_spark.operators.text_analysis import quality_scores
 
-    width = 10000 // bins
+    width = 10000 // CALIBRATION_BINS
     # Zero-word docs have NULL stop_bp; least(NULL, bins-1) skips the
     # null in both engines, which would silently file them under the
     # TOP bin — exclude them instead (they carry no score signal).
@@ -450,7 +449,8 @@ def quality_calibration(docs: DataFrame,
         quality_scores(docs)
         .filter(F.col("stop_bp").isNotNull())
         .select(
-            F.least(F.expr(f"stop_bp DIV {width}"), F.lit(bins - 1)).alias("bin"),
+            F.least(F.expr(f"stop_bp DIV {width}"), F.lit(CALIBRATION_BINS - 1))
+            .alias("bin"),
             (F.col("lang") == "en").cast("long").alias("pos"),
             "stop_bp",
         )
@@ -556,20 +556,20 @@ PSI_BINS = 10
 PSI_SMOOTH = 0.5  # add-half per bucket: keeps empty cells finite
 
 
-def quality_bin_counts(docs: DataFrame, bins: int = PSI_BINS) -> DataFrame:
+def quality_bin_counts(docs: DataFrame) -> DataFrame:
     """(source, bin, c): the binned quality-score histogram — the
     mergeable sufficient statistic of the PSI (plain counts, so
     per-shard/per-micro-batch histograms sum into the corpus one;
     streaming/drift.py maintains exactly this table incrementally)."""
     from grpc_map_reduce_spark.operators.text_analysis import quality_scores
 
-    width = 10000 // bins
+    width = 10000 // PSI_BINS
     return (
         quality_scores(docs, keep=("source",))
         .filter(F.col("stop_bp").isNotNull())
         .select(
             "source",
-            F.least(F.expr(f"stop_bp DIV {width}"), F.lit(bins - 1))
+            F.least(F.expr(f"stop_bp DIV {width}"), F.lit(PSI_BINS - 1))
             .alias("bin"),
         )
         .groupBy("source", "bin")
@@ -577,18 +577,16 @@ def quality_bin_counts(docs: DataFrame, bins: int = PSI_BINS) -> DataFrame:
     )
 
 
-def source_quality_psi(docs: DataFrame, bins: int = PSI_BINS) -> DataFrame:
+def source_quality_psi(docs: DataFrame) -> DataFrame:
     """(source, n_docs, psi_e6) — per-source PSI of the stop_bp score
     distribution against the whole-corpus reference."""
     # pin the reduced (source, bin) counts: THREE consumers (source
     # totals, reference, grid) would otherwise each re-run the corpus
     # scoring scan
-    return psi_from_counts(
-        pin(quality_bin_counts(docs, bins)), bins
-    )
+    return psi_from_counts(pin(quality_bin_counts(docs)))
 
 
-def psi_from_counts(cnt: DataFrame, bins: int = PSI_BINS) -> DataFrame:
+def psi_from_counts(cnt: DataFrame) -> DataFrame:
     """The PSI fold over a ``(source, bin, c)`` histogram — shared by
     the batch operator and the streaming maintainer's serving view."""
     srcs = cnt.groupBy("source").agg(F.sum("c").alias("n_src"))
@@ -602,8 +600,8 @@ def psi_from_counts(cnt: DataFrame, bins: int = PSI_BINS) -> DataFrame:
             "source", "n_src",
             (F.coalesce("c", F.lit(0)) + PSI_SMOOTH).alias("pc"),
             (F.col("cb") + PSI_SMOOTH).alias("qc"),
-            (F.col("n_src") + PSI_SMOOTH * bins).alias("pd"),
-            (F.col("n_all") + PSI_SMOOTH * bins).alias("qd"),
+            (F.col("n_src") + PSI_SMOOTH * PSI_BINS).alias("pd"),
+            (F.col("n_all") + PSI_SMOOTH * PSI_BINS).alias("qd"),
         )
     )
     p = F.col("pc") / F.col("pd")

@@ -37,15 +37,15 @@ from grpc_map_reduce_spark.plans import checkpoint
 
 # --------------------------------------------------------------------------
 # E1: exact dedup.  Representative row = min(doc_id) per identical text.
-def dedup_exact(docs: DataFrame, key_col: str = "text") -> DataFrame:
-    """Group identical ``key_col`` payloads → keeper id + copy count.
+def dedup_exact(docs: DataFrame) -> DataFrame:
+    """Group identical ``text`` payloads → keeper id + copy count.
 
-    At scale, substitute ``F.xxhash64(key_col)`` as the grouping key
+    At scale, substitute ``F.xxhash64("text")`` as the grouping key
     (collision-checked) to keep shuffle rows fixed-width; fixtures are
     small enough to group on the raw text.
     """
     return (
-        docs.groupBy(key_col)
+        docs.groupBy("text")
         .agg(
             F.min("doc_id").alias("keep_doc_id"),
             F.count("*").alias("n_copies"),
@@ -76,7 +76,7 @@ GROUP BY text
 NGRAM_MAX_DF_DEFAULT = 1000
 
 
-def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.008,
+def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.008,
                         max_df: int | None = NGRAM_MAX_DF_DEFAULT) -> DataFrame:
     """Document pairs (doc_a < doc_b) with shingle-Jaccard ≥ threshold.
 
@@ -95,7 +95,7 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.008,
     # are traversed once (one exchange into the per-shingle arrays), so
     # neither the sets nor the exploded rows are pinned; ``max_df`` is
     # the kernel's bucket-size cap.
-    sh = _shingle_sets(docs, n).select(
+    sh = _shingle_sets(docs).select(
         "doc_id",
         F.size("sh_set").alias("n_shingles"),
         F.explode("sh_set").alias("sh_h"),
@@ -366,7 +366,7 @@ MINHASH_B = [3, 11, 29, 53, 97, 173, 313, 577, 1049, 1907, 3469, 6277, 11369, 20
 MINHASH_ROWS_PER_BAND = 2
 
 
-def _minhash_kernel(n: int, keep: list[str]):
+def _minhash_kernel(keep: list[str]):
     """The MinHash kernel over Arrow batches: each batch's ``keep``
     columns plus ``sh_set`` (:func:`shingle_hasher` of ``text``) and
     ``sig`` (the 16 permutation mins ``min((A_i·(h mod P) + B_i) mod P)``
@@ -374,7 +374,7 @@ def _minhash_kernel(n: int, keep: list[str]):
     numpy pass over the whole batch's concatenated hashes, cut into
     per-document mins by ``minimum.reduceat``.  A closure, like the
     hasher, so a Python worker runs it without importing this package."""
-    hash_doc = shingle_hasher(n)
+    hash_doc = shingle_hasher()
 
     def sign(batches):
         from itertools import chain
@@ -417,7 +417,7 @@ def _minhash_kernel(n: int, keep: list[str]):
     return sign
 
 
-def _minhash_rows(df: DataFrame, n: int = 3) -> DataFrame:
+def _minhash_rows(df: DataFrame) -> DataFrame:
     """``df`` with its ``text`` column replaced by ``sh_set`` (the
     distinct shingle-hash set, ``array<long>``) and ``sig`` (the 16
     MinHash components, ``array<long>``, NULL when the set is empty);
@@ -428,10 +428,10 @@ def _minhash_rows(df: DataFrame, n: int = 3) -> DataFrame:
     longs = ArrayType(LongType())
     schema = StructType(keep + [StructField("sh_set", longs),
                                 StructField("sig", longs)])
-    return df.mapInArrow(_minhash_kernel(n, [f.name for f in keep]), schema)
+    return df.mapInArrow(_minhash_kernel([f.name for f in keep]), schema)
 
 
-def _shingle_sets(docs: DataFrame, n: int = 3) -> DataFrame:
+def _shingle_sets(docs: DataFrame) -> DataFrame:
     """(doc_id, sh_set, sig) — each doc's DISTINCT shingle-HASH set and
     its MinHash signature (:func:`_minhash_rows`).  The kernel runs
     *after* a repartition: the exchange spreads the work across all
@@ -443,7 +443,7 @@ def _shingle_sets(docs: DataFrame, n: int = 3) -> DataFrame:
     signatures and never rejoin the arrays — must not store an
     O(corpus) copy of the shingle arrays (~6 GB at the 3125× tier for a
     query whose output is a ≤200-row histogram — SURVEY §8.11)."""
-    return _minhash_rows(spread(docs, "doc_id").select("doc_id", "text"), n)
+    return _minhash_rows(spread(docs, "doc_id").select("doc_id", "text"))
 
 
 #: Hot-band-bucket guard, ON by default (round 6): a band bucket
@@ -601,7 +601,7 @@ def _band_pairs(bands: DataFrame, max_bucket: int | None) -> DataFrame:
     )
 
 
-def lsh_hot_buckets(docs: DataFrame, n: int = 3,
+def lsh_hot_buckets(docs: DataFrame,
                     rows_per_band: int = MINHASH_ROWS_PER_BAND,
                     max_bucket: int = LSH_MAX_BUCKET_DEFAULT) -> DataFrame:
     """(band_idx, key, sz): the band buckets the default guard drops.
@@ -613,14 +613,14 @@ def lsh_hot_buckets(docs: DataFrame, n: int = 3,
     activity instead of discovering it from a recall dip.
     """
     return (
-        _band_sizes(_band_rows(_shingle_sets(docs, n), rows_per_band))
+        _band_sizes(_band_rows(_shingle_sets(docs), rows_per_band))
         .filter(F.col("sz") > max_bucket)
         .select("band_idx",
                 _band_key_text(F.col("key"), rows_per_band).alias("key"), "sz")
     )
 
 
-def minhash_candidates(docs: DataFrame, n: int = 3,
+def minhash_candidates(docs: DataFrame,
                        rows_per_band: int = MINHASH_ROWS_PER_BAND,
                        max_bucket: int | None = LSH_MAX_BUCKET_DEFAULT,
                        ) -> DataFrame:
@@ -644,7 +644,7 @@ def minhash_candidates(docs: DataFrame, n: int = 3,
 
     The shingle sets are traversed once, so nothing is pinned.
     """
-    return _band_pairs(_band_rows(_shingle_sets(docs, n), rows_per_band),
+    return _band_pairs(_band_rows(_shingle_sets(docs), rows_per_band),
                        max_bucket)
 
 
@@ -741,44 +741,44 @@ def _set_rescore(cand: DataFrame, sets: DataFrame) -> DataFrame:
     return _score_sets(cand.join(sa, a).join(sb, b))
 
 
-def _rescored_candidates(docs: DataFrame, n: int, rows_per_band: int,
-                         max_bucket: int | None) -> DataFrame:
+def _rescored_candidates(docs: DataFrame, max_bucket: int | None) -> DataFrame:
     """(doc_a, doc_b, n_bands, _sa, _sb, n_common, jaccard): every LSH
-    candidate pair (:func:`_band_pairs`) with its exact rescore
+    candidate pair (:func:`_band_pairs` at ``LSH_ROWS_PER_BAND``) with
+    its exact rescore
     (:func:`_set_rescore`) — the chain the exact near-dup family
     composes.  The band rows and both rescore sides read the shingle
     sets, so they are pinned once, here."""
-    sets = checkpoint.pin(_shingle_sets(docs, n))
-    cand = _band_pairs(_band_rows(sets, rows_per_band), max_bucket)
+    sets = checkpoint.pin(_shingle_sets(docs))
+    cand = _band_pairs(_band_rows(sets, LSH_ROWS_PER_BAND), max_bucket)
     return _set_rescore(cand, sets)
 
 
-def _min_bands(threshold: float, rows_per_band: int) -> int:
+def _min_bands(threshold: float) -> int:
     """The sketch operating point as a band count: a pair sharing
-    ``n_bands`` of the 16/r bands estimates Jaccard at n_bands·r/16, so
-    the estimate reaches ``threshold`` at ceil(threshold · 16/r) shared
-    bands — and never below one, the band that made it a candidate."""
-    return max(1, math.ceil(threshold * (len(MINHASH_A) // rows_per_band)))
+    ``n_bands`` of the 16/r bands (r = ``LSH_ROWS_PER_BAND``) estimates
+    Jaccard at n_bands·r/16, so the estimate reaches ``threshold`` at
+    ceil(threshold · 16/r) shared bands — and never below one, the band
+    that made it a candidate."""
+    return max(1, math.ceil(threshold * (len(MINHASH_A) // LSH_ROWS_PER_BAND)))
 
 
-def _sketch_score(pairs: DataFrame, threshold: float,
-                  rows_per_band: int) -> DataFrame:
+def _sketch_score(pairs: DataFrame, threshold: float) -> DataFrame:
     """``pairs`` (first two columns: the pair's ids; ``n_bands``: the
-    band buckets it shares) scored by MinHash signature agreement:
-    (a, b, n_bands, est_jaccard) where the estimate n_bands·r/16 (6 dp)
-    reaches ``threshold`` — the decision every sketch path shares."""
+    band buckets it shares at ``LSH_ROWS_PER_BAND``) scored by MinHash
+    signature agreement: (a, b, n_bands, est_jaccard) where the
+    estimate n_bands·r/16 (6 dp) reaches ``threshold`` — the decision
+    every sketch path shares."""
     a, b = pairs.columns[:2]
     n_bands = F.col("n_bands")
-    est = n_bands / F.lit(len(MINHASH_A) // rows_per_band)
+    est = n_bands / F.lit(len(MINHASH_A) // LSH_ROWS_PER_BAND)
     return (
-        pairs.filter(n_bands >= _min_bands(threshold, rows_per_band))
+        pairs.filter(n_bands >= _min_bands(threshold))
         .select(a, b, "n_bands", F.round(est, 6).alias("est_jaccard"))
     )
 
 
-def lsh_near_dup(docs: DataFrame, n: int = 3,
+def lsh_near_dup(docs: DataFrame,
                  threshold: float = LSH_NEAR_DUP_THRESHOLD,
-                 rows_per_band: int = LSH_ROWS_PER_BAND,
                  max_bucket: int | None = LSH_MAX_BUCKET_DEFAULT,
                  ) -> DataFrame:
     """The composed scale path: LSH candidates → exact Jaccard rescore.
@@ -800,7 +800,7 @@ def lsh_near_dup(docs: DataFrame, n: int = 3,
     registration passes ``None`` explicitly.
     """
     return (
-        _rescored_candidates(docs, n, rows_per_band, max_bucket)
+        _rescored_candidates(docs, max_bucket)
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
@@ -827,15 +827,14 @@ def q_lsh_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 CONTAINMENT_THRESHOLD = 0.5
 
 
-def containment_pairs(docs: DataFrame, n: int = 3,
+def containment_pairs(docs: DataFrame,
                       threshold: float = CONTAINMENT_THRESHOLD,
-                      rows_per_band: int = LSH_ROWS_PER_BAND,
                       max_bucket: int | None = LSH_MAX_BUCKET_DEFAULT,
                       ) -> DataFrame:
     """(doc_a, doc_b, n_common, cont_a_in_b, cont_b_in_a) for LSH
     candidate pairs where either direction's containment ≥ threshold."""
     scored = (
-        _rescored_candidates(docs, n, rows_per_band, max_bucket)
+        _rescored_candidates(docs, max_bucket)
         .withColumn(
             "cont_a_in_b", F.round(F.col("n_common") / F.size("_sa"), 6)
         )
@@ -866,11 +865,11 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the per-doc score that ranks what the pair-wise dedup family finds.
 # One shingle explode → document-frequency aggregate → one join back:
 # both shuffles keyed on the 8-byte shingle hash.
-def ngram_novelty(docs: DataFrame, n: int = 3) -> DataFrame:
+def ngram_novelty(docs: DataFrame) -> DataFrame:
     """(doc_id, n_shingles, n_unique, novelty_bp) per doc with ≥1
     shingle; novelty in basis points (10000 = all shingles unique)."""
     sh = checkpoint.pin(  # feeds df agg AND the join back
-        _shingle_sets(docs, n)
+        _shingle_sets(docs)
         .select("doc_id", F.explode("sh_set").alias("h"))
     )
     dfreq = sh.groupBy("h").agg(F.count("*").alias("df"))
@@ -940,12 +939,12 @@ def _side_is_corpus(doc_id_col) -> F.Column:
     return _md5_long(doc_id_col.cast("string")) % 100 < INCR_CORPUS_PCT
 
 
-def _cross_side_pairs(sets: DataFrame, rows_per_band: int) -> DataFrame:
+def _cross_side_pairs(sets: DataFrame) -> DataFrame:
     """(doc_id, match_id, n_bands): every (incoming, corpus) pair of
     ``sets`` (:func:`_shingle_sets`) sharing a band bucket, with how
     many it shares — the candidate stage both incremental paths
     compose (:func:`cross_bucket_pairs`: never corpus×corpus)."""
-    bands = _band_rows(sets, rows_per_band).withColumn(
+    bands = _band_rows(sets, LSH_ROWS_PER_BAND).withColumn(
         "is_corpus", _side_is_corpus(F.col("doc_id")))
     return (
         cross_bucket_pairs(bands, ["band_idx", "key"], "doc_id", "is_corpus")
@@ -954,25 +953,20 @@ def _cross_side_pairs(sets: DataFrame, rows_per_band: int) -> DataFrame:
     )
 
 
-def incremental_scored_pairs(docs: DataFrame, n: int = 3,
-                             threshold: float = LSH_NEAR_DUP_THRESHOLD,
-                             rows_per_band: int = LSH_ROWS_PER_BAND) -> DataFrame:
-    """(doc_id, match_id, jaccard): every incoming-side doc's
-    above-threshold matches on the corpus side — the cross-side
+def incremental_scored_pairs(docs: DataFrame) -> DataFrame:
+    """(doc_id, match_id, jaccard): every incoming-side doc's matches
+    at ``LSH_NEAR_DUP_THRESHOLD`` on the corpus side — the cross-side
     candidate set, exactly rescored.  The per-doc report below and
     the streaming twin (streaming/dedup.py) both reduce to this."""
-    sets = checkpoint.pin(_shingle_sets(docs, n))  # band rows + rescore
+    sets = checkpoint.pin(_shingle_sets(docs))  # band rows + rescore
     return (
-        _set_rescore(_cross_side_pairs(sets, rows_per_band), sets)
-        .filter(F.col("jaccard") >= threshold)
+        _set_rescore(_cross_side_pairs(sets), sets)
+        .filter(F.col("jaccard") >= LSH_NEAR_DUP_THRESHOLD)
         .select("doc_id", "match_id", "jaccard")
     )
 
 
-def incremental_sketch_pairs(docs: DataFrame, n: int = 3,
-                             threshold: float | None = None,
-                             rows_per_band: int = LSH_ROWS_PER_BAND
-                             ) -> DataFrame:
+def incremental_sketch_pairs(docs: DataFrame) -> DataFrame:
     """(doc_id, match_id, n_bands, est_jaccard): every incoming-side
     doc's corpus-side candidates scored by SIGNATURE AGREEMENT — the
     sketch decision applied to the incremental (shard-vs-corpus)
@@ -987,30 +981,20 @@ def incremental_sketch_pairs(docs: DataFrame, n: int = 3,
     transport, and the shingle sets are traversed once, for their
     signatures, and never pinned.  Work: one exchange of the band
     rows into cross-side buckets — never corpus×corpus — plus a
-    pair-keyed count.
-
-    ``threshold`` defaults to :data:`SKETCH_THRESHOLD` (the calibrated
-    operating point); pass the rescore threshold 0.05 only if a
-    downstream exact rescore follows (at 0.05 the filter is vacuous —
-    candidacy itself implies est 1/16 ≥ 0.05)."""
-    if threshold is None:
-        threshold = SKETCH_THRESHOLD
-    cand = _cross_side_pairs(_shingle_sets(docs, n), rows_per_band)
-    return _sketch_score(cand, threshold, rows_per_band)
+    pair-keyed count, kept at the calibrated :data:`SKETCH_THRESHOLD`."""
+    return _sketch_score(_cross_side_pairs(_shingle_sets(docs)), SKETCH_THRESHOLD)
 
 
 def q_incremental_sketch_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return incremental_sketch_pairs(table(spark, sf_dir, "documents"))
 
 
-def incremental_dedup(docs: DataFrame, n: int = 3,
-                      threshold: float = LSH_NEAR_DUP_THRESHOLD,
-                      rows_per_band: int = LSH_ROWS_PER_BAND) -> DataFrame:
+def incremental_dedup(docs: DataFrame) -> DataFrame:
     """(doc_id, n_matches, best_match_id, best_jaccard, is_dup) for
     every INCOMING doc: its near-dup matches in the corpus side, with
     the best match (max jaccard, min match_id among ties) surfaced.
     Unmatched docs report (0, -1, 0.0, false) — total output."""
-    scored = incremental_scored_pairs(docs, n, threshold, rows_per_band)
+    scored = incremental_scored_pairs(docs)
     best = (
         scored.groupBy("doc_id")
         .agg(
@@ -1047,8 +1031,7 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # is checked against the SAME DuckDB formulation.  (DuckDB runs the
 # exact quadratic join — fine at oracle scale; the Spark side is the
 # sub-quadratic plan under test.)
-def lsh_pairs_sql(threshold: float, rows_per_band: int = LSH_ROWS_PER_BAND,
-                  max_bucket: int | None = None) -> str:
+def lsh_pairs_sql(threshold: float, max_bucket: int | None = None) -> str:
     """CTE block (no ``WITH``) ending in ``pairs(doc_a, doc_b, jaccard)``.
 
     ``max_bucket`` mirrors the Spark-side hot-bucket guard
@@ -1058,7 +1041,7 @@ def lsh_pairs_sql(threshold: float, rows_per_band: int = LSH_ROWS_PER_BAND,
     where the guard never fires; the direct dedup twins run both
     sides unguarded (``None``).
     """
-    r = rows_per_band
+    r = LSH_ROWS_PER_BAND
     n_bands = len(MINHASH_A) // r
     min_cols = ",\n        ".join(
         f"min(({a}*h + {b}) % {MINHASH_P}) AS m{i}"
@@ -1170,10 +1153,7 @@ SELECT doc_a, doc_b, jaccard FROM pairs
 """
 
 
-def band_volume_census(docs: DataFrame, n: int = 3,
-                       rows_per_band: int = LSH_ROWS_PER_BAND,
-                       max_bucket: int = LSH_MAX_BUCKET_DEFAULT,
-                       ) -> DataFrame:
+def band_volume_census(docs: DataFrame) -> DataFrame:
     """Band-bucket size histogram with candidate-pair accounting:
     (sz, n_buckets, cand_pairs, in_guard) — for each observed bucket
     size, how many buckets and how many rescore pairs they will emit
@@ -1186,7 +1166,7 @@ def band_volume_census(docs: DataFrame, n: int = 3,
     bucket 154, guard silent — SURVEY §8.11), so it is registered as
     a first-class query a pipeline runs BEFORE committing a corpus
     to the pair path: total rescore volume = sum(cand_pairs) rows x
-    ~2 shingle-set payloads, and any size class near ``max_bucket``
+    ~2 shingle-set payloads, and any size class near the guard
     warns that corpus growth is about to hand the guard real drops.
     Output is tiny (one row per distinct bucket size); two shuffles
     (bucket count, histogram), both on 8-byte keys.
@@ -1198,7 +1178,7 @@ def band_volume_census(docs: DataFrame, n: int = 3,
     (SURVEY §8.11).  A capacity-planning query must be cheaper than the
     capacity it plans.
     """
-    sizes = _band_sizes(_band_rows(_shingle_sets(docs, n), rows_per_band))
+    sizes = _band_sizes(_band_rows(_shingle_sets(docs), LSH_ROWS_PER_BAND))
     return (
         sizes.groupBy("sz")
         .agg(F.count("*").alias("n_buckets"))
@@ -1206,7 +1186,7 @@ def band_volume_census(docs: DataFrame, n: int = 3,
             "sz",
             "n_buckets",
             F.expr("n_buckets * sz * (sz - 1) DIV 2").alias("cand_pairs"),
-            (F.col("sz") <= max_bucket).alias("in_guard"),
+            (F.col("sz") <= LSH_MAX_BUCKET_DEFAULT).alias("in_guard"),
         )
     )
 
@@ -1231,9 +1211,7 @@ FROM sizes GROUP BY sz
 """
 
 
-def jaccard_estimate_calibration(docs: DataFrame, n: int = 3,
-                                 rows_per_band: int = LSH_ROWS_PER_BAND,
-                                 ) -> DataFrame:
+def jaccard_estimate_calibration(docs: DataFrame) -> DataFrame:
     """Sketch-vs-exact calibration: for every LSH candidate pair,
     the MinHash signature agreement (``n_bands`` of 16 matching
     components at r=1) IS an estimator of Jaccard — aggregate the
@@ -1254,9 +1232,9 @@ def jaccard_estimate_calibration(docs: DataFrame, n: int = 3,
     candidate chain (same as lsh_near_dup, oracle-twin unguarded) +
     one tiny aggregate; output is ≤17 rows.
     """
-    n_bands_total = len(MINHASH_A) // rows_per_band
+    n_bands_total = len(MINHASH_A) // LSH_ROWS_PER_BAND
     return (
-        _rescored_candidates(docs, n, rows_per_band, None)
+        _rescored_candidates(docs, None)
         .groupBy("n_bands")
         .agg(
             F.count("*").alias("n_pairs"),
@@ -1318,12 +1296,11 @@ SKETCH_THRESHOLD = 0.25
 #: the sketch oracles, the auto-planner oracle, the incremental
 #: sketch oracle, and the clustering sketch-edge twins all read THIS
 #: constant instead of re-deriving the formula.
-SKETCH_MIN_BANDS = _min_bands(SKETCH_THRESHOLD, LSH_ROWS_PER_BAND)
+SKETCH_MIN_BANDS = _min_bands(SKETCH_THRESHOLD)
 
 
-def lsh_near_dup_sketch(docs: DataFrame, n: int = 3,
+def lsh_near_dup_sketch(docs: DataFrame,
                         threshold: float = SKETCH_THRESHOLD,
-                        rows_per_band: int = LSH_ROWS_PER_BAND,
                         max_bucket: int | None = LSH_MAX_BUCKET_DEFAULT,
                         ) -> DataFrame:
     """Sketch-only near-dup scoring: LSH candidates scored by MinHash
@@ -1351,8 +1328,8 @@ def lsh_near_dup_sketch(docs: DataFrame, n: int = 3,
     Output: (doc_a, doc_b, n_bands, est_jaccard) for candidates with
     est_jaccard ≥ threshold, i.e. n_bands ≥ ceil(threshold · 16).
     """
-    cand = minhash_candidates(docs, n, rows_per_band, max_bucket)
-    return _sketch_score(cand, threshold, rows_per_band)
+    cand = minhash_candidates(docs, LSH_ROWS_PER_BAND, max_bucket)
+    return _sketch_score(cand, threshold)
 
 
 def q_lsh_near_dup_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1413,13 +1390,11 @@ WHERE n_bands >= {SKETCH_MIN_BANDS}
 """
 
 
-def sketch_confusion(docs: DataFrame, n: int = 3,
-                     threshold: float = SKETCH_THRESHOLD,
-                     rows_per_band: int = LSH_ROWS_PER_BAND,
-                     ) -> DataFrame:
+def sketch_confusion(docs: DataFrame) -> DataFrame:
     """The sketch-safety decision procedure as a query: the 2×2
     confusion of sketch-kept vs exact-kept over all LSH candidates at
-    one operating threshold — (sketch_kept, exact_kept, n_pairs).
+    the :data:`SKETCH_THRESHOLD` operating point — (sketch_kept,
+    exact_kept, n_pairs).
 
     `dedup_jaccard_calibration` gives the per-level Jaccard mass;
     this collapses it to the number an operator actually decides on:
@@ -1433,12 +1408,11 @@ def sketch_confusion(docs: DataFrame, n: int = 3,
     rescore ONCE on a sample, not forever on the corpus); output is
     ≤ 4 rows.
     """
-    min_bands = _min_bands(threshold, rows_per_band)
     return (
-        _rescored_candidates(docs, n, rows_per_band, None)
+        _rescored_candidates(docs, None)
         .groupBy(
-            (F.col("n_bands") >= min_bands).alias("sketch_kept"),
-            (F.col("jaccard") >= threshold).alias("exact_kept"),
+            (F.col("n_bands") >= SKETCH_MIN_BANDS).alias("sketch_kept"),
+            (F.col("jaccard") >= SKETCH_THRESHOLD).alias("exact_kept"),
         )
         .agg(F.count("*").alias("n_pairs"))
     )
@@ -1481,9 +1455,7 @@ GROUP BY 1, 2
 AUTO_PAIR_BUDGET = 32_000_000
 
 
-def lsh_near_dup_auto(docs: DataFrame, n: int = 3,
-                      threshold: float = SKETCH_THRESHOLD,
-                      rows_per_band: int = LSH_ROWS_PER_BAND,
+def lsh_near_dup_auto(docs: DataFrame,
                       max_bucket: int | None = LSH_MAX_BUCKET_DEFAULT,
                       pair_budget: int = AUTO_PAIR_BUDGET,
                       decision: list | None = None,
@@ -1508,8 +1480,9 @@ def lsh_near_dup_auto(docs: DataFrame, n: int = 3,
     census alongside the corpus, exactly as `dedup_band_volume_census`
     is registered for.
 
-    Both branches run at the SAME ``threshold`` so the choice is an
-    accuracy/transport trade on one question, quantified per corpus by
+    Both branches run at the SAME :data:`SKETCH_THRESHOLD` so the
+    choice is an accuracy/transport trade on one question, quantified
+    per corpus by
     `dedup_sketch_confusion` (fixture @0.25: recall 1.00, precision
     0.926).  Output: (doc_a, doc_b, score, used_sketch) — score is the
     exact Jaccard or the signature estimate; used_sketch records the
@@ -1543,9 +1516,9 @@ def lsh_near_dup_auto(docs: DataFrame, n: int = 3,
     regrouped per bucket (sz·(sz−1) is always even, so DIV 2 is exact
     either way).
     """
-    sets = checkpoint.pin(_shingle_sets(docs, n))
+    sets = checkpoint.pin(_shingle_sets(docs))
     bands = checkpoint.pin(  # the keys only, not a copy of the arrays
-        _band_rows(sets, rows_per_band).select("doc_id", "band_idx", "key"))
+        _band_rows(sets, LSH_ROWS_PER_BAND).select("doc_id", "band_idx", "key"))
     sizes = _band_sizes(bands)
     if max_bucket is not None:
         # The guarded chain drops hot buckets before pair generation,
@@ -1563,13 +1536,13 @@ def lsh_near_dup_auto(docs: DataFrame, n: int = 3,
     cand = _band_pairs(bands, max_bucket)
     if total > pair_budget:
         # Zero-transport branch: the shingle sets are never read again.
-        return _sketch_score(cand, threshold, rows_per_band).select(
+        return _sketch_score(cand, SKETCH_THRESHOLD).select(
             "doc_a", "doc_b",
             F.col("est_jaccard").alias("score"),
             F.lit(True).alias("used_sketch"),
         )
     return (
-        _set_rescore(cand, sets).filter(F.col("jaccard") >= threshold)
+        _set_rescore(cand, sets).filter(F.col("jaccard") >= SKETCH_THRESHOLD)
         .select(
             "doc_a", "doc_b",
             F.col("jaccard").alias("score"),

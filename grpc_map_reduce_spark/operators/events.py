@@ -25,9 +25,13 @@ from grpc_map_reduce_spark.functions.money import cents
 from grpc_map_reduce_spark.sources.tables import spread, table
 from grpc_map_reduce_spark.plans.checkpoint import pin
 
+#: Window width and hop of the batch and streaming window aggregates.
+WINDOW_WIDTH = "1 hour"
+WINDOW_SLIDE = "30 minutes"
+
 
 # --------------------------------------------------------------------------
-def tumbling_window_agg(events: DataFrame, width: str = "1 hour") -> DataFrame:
+def tumbling_window_agg(events: DataFrame) -> DataFrame:
     """Per (hour, event_type): event count, value sum (exact integer
     cents — see functions.money), distinct users, and JSON-extracted
     per-window stats (avg/max of ``props.$.k``) — the windowed
@@ -45,7 +49,7 @@ def tumbling_window_agg(events: DataFrame, width: str = "1 hour") -> DataFrame:
     k = F.get_json_object("props", "$.k").cast("long")
     return (
         spread(events).withColumn("k", k)
-        .groupBy(F.window("ts", width).alias("w"), "event_type")
+        .groupBy(F.window("ts", WINDOW_WIDTH).alias("w"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
             F.sum(cents("value")).alias("total_value_cents"),
@@ -90,8 +94,7 @@ GROUP BY 1, 2, 3
 
 
 # --------------------------------------------------------------------------
-def sliding_window_agg(events: DataFrame, width: str = "1 hour",
-                       slide: str = "30 minutes") -> DataFrame:
+def sliding_window_agg(events: DataFrame) -> DataFrame:
     """Batch sliding (hopping) windows: every event lands in
     width/slide = 2 overlapping windows.  Spark's ``window(ts, width,
     slide)`` explodes each row into its windows before the aggregate —
@@ -99,7 +102,8 @@ def sliding_window_agg(events: DataFrame, width: str = "1 hour",
     fundamental cost of sliding windows on any engine (the streaming
     twin in streaming/windows.py carries the same expression)."""
     return (
-        spread(events).groupBy(F.window("ts", width, slide).alias("w"), "event_type")
+        spread(events).groupBy(F.window("ts", WINDOW_WIDTH, WINDOW_SLIDE).alias("w"),
+                               "event_type")
         .agg(
             F.count("*").alias("n_events"),
             F.sum(cents("value")).alias("total_value_cents"),
@@ -143,10 +147,9 @@ GROUP BY 1, 2, 3
 
 
 # --------------------------------------------------------------------------
-def asof_join(left: DataFrame, right: DataFrame, on: str = "user_id",
-              ts_col: str = "ts") -> DataFrame:
+def asof_join(left: DataFrame, right: DataFrame) -> DataFrame:
     """For each ``left`` row, attach the most recent ``right`` row with
-    ``right.ts <= left.ts`` for the same key (an as-of join).
+    ``right.ts <= left.ts`` for the same ``user_id`` (an as-of join).
 
     Implemented by unioning the two tagged streams and taking a
     running ``last(..., ignorenulls)`` over a single per-key ordered
@@ -154,16 +157,16 @@ def asof_join(left: DataFrame, right: DataFrame, on: str = "user_id",
     Ties (right row exactly at left.ts) match, like DuckDB ASOF JOIN.
     """
     r = right.select(
-        F.col(on),
-        F.col(ts_col).alias("_ts"),
+        "user_id",
+        F.col("ts").alias("_ts"),
         F.lit(0).alias("_side"),
-        F.struct(F.col(ts_col).alias("r_ts"), F.col("value").alias("r_value")).alias("_r"),
+        F.struct(F.col("ts").alias("r_ts"), F.col("value").alias("r_value")).alias("_r"),
         F.lit(None).cast("long").alias("event_id"),
         F.lit(None).cast("double").alias("value"),
     )
     l = left.select(
-        F.col(on),
-        F.col(ts_col).alias("_ts"),
+        "user_id",
+        F.col("ts").alias("_ts"),
         F.lit(1).alias("_side"),
         F.lit(None).cast("struct<r_ts:timestamp,r_value:double>").alias("_r"),
         "event_id",
@@ -172,7 +175,7 @@ def asof_join(left: DataFrame, right: DataFrame, on: str = "user_id",
     # _side orders the right row before the left row at equal ts, so
     # "<=" semantics fall out of the running last().
     w = (
-        Window.partitionBy(on)
+        Window.partitionBy("user_id")
         .orderBy("_ts", "_side")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
@@ -182,7 +185,7 @@ def asof_join(left: DataFrame, right: DataFrame, on: str = "user_id",
         .filter(F.col("_side") == 1)
         .select(
             "event_id",
-            F.col(on),
+            "user_id",
             F.col("_ts").alias("ts"),
             "value",
             F.col("_last_r.r_ts").alias("matched_ts"),
@@ -283,12 +286,12 @@ GROUP BY user_id, session_seq
 
 
 # --------------------------------------------------------------------------
-def range_join(left: DataFrame, right: DataFrame, on: str = "user_id",
-               ts_col: str = "ts", lookback_s: int = 900) -> DataFrame:
-    """Per ``left`` row: count + value-sum of same-key ``right`` rows in
-    the window ``[left.ts - lookback, left.ts]`` (a bounded range join).
+def range_join(left: DataFrame, right: DataFrame) -> DataFrame:
+    """Per ``left`` row: count + value-sum of same-``user_id`` ``right``
+    rows in the window ``[left.ts - 15 min, left.ts]`` (a bounded range
+    join).
 
-    The equi-key ``on`` makes this a shuffled hash/sort-merge join with
+    The equi-key makes this a shuffled hash/sort-merge join with
     the range predicate evaluated inside the matched key group — per-key
     fan-out is bounded by the lookback, so no cross-join blow-up.  For
     keys hot enough that a single key's rows overwhelm one task, bucket
@@ -297,18 +300,18 @@ def range_join(left: DataFrame, right: DataFrame, on: str = "user_id",
     scale.
     """
     r = right.select(
-        F.col(on).alias("_rk"),
-        F.col(ts_col).alias("_rts"),
+        F.col("user_id").alias("_rk"),
+        F.col("ts").alias("_rts"),
         F.col("value").alias("_rvalue"),
     )
     cond = (
-        (F.col(on) == F.col("_rk"))
-        & (F.col("_rts") >= F.col(ts_col) - F.expr(f"INTERVAL {lookback_s} SECONDS"))
-        & (F.col("_rts") <= F.col(ts_col))
+        (F.col("user_id") == F.col("_rk"))
+        & (F.col("_rts") >= F.col("ts") - F.expr("INTERVAL 900 SECONDS"))
+        & (F.col("_rts") <= F.col("ts"))
     )
     return (
         left.join(r, cond, "left")
-        .groupBy("event_id", on, ts_col, "value")
+        .groupBy("event_id", "user_id", "ts", "value")
         .agg(
             F.count("_rts").alias("n_recent"),
             F.coalesce(F.sum(cents("_rvalue")), F.lit(0).cast("long"))
@@ -571,13 +574,13 @@ WINDOW w2 AS (PARTITION BY user_id ORDER BY run)
 FUNNEL_STEPS = ("view", "click", "purchase")
 
 
-def funnel(events: DataFrame, steps: tuple[str, ...] = FUNNEL_STEPS) -> DataFrame:
+def funnel(events: DataFrame) -> DataFrame:
     """(user_id, did_<step>...) — strict-order funnel completion flags
     for every user in the event log."""
     users = events.select("user_id").distinct()
     out = users
     prev_t = None
-    for i, step in enumerate(steps):
+    for i, step in enumerate(FUNNEL_STEPS):
         ev = events.filter(F.col("event_type") == step)
         if prev_t is not None:
             ev = ev.join(prev_t, "user_id").filter(
@@ -766,7 +769,7 @@ def q_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 PATH_TOP_K = 20
 
 
-def top_event_paths(events: DataFrame, k: int = PATH_TOP_K) -> DataFrame:
+def top_event_paths(events: DataFrame) -> DataFrame:
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     paths = (
         events.withColumn("p1", F.lag("event_type", 2).over(w))
@@ -780,7 +783,7 @@ def top_event_paths(events: DataFrame, k: int = PATH_TOP_K) -> DataFrame:
     )
     return (
         paths.orderBy(F.col("n").desc(), "path")
-        .limit(k)
+        .limit(PATH_TOP_K)
         .select(
             "path", "n",
             F.row_number().over(

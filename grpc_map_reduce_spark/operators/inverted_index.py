@@ -22,9 +22,7 @@ from grpc_map_reduce_spark.functions.text import words
 from grpc_map_reduce_spark.sources.tables import table
 
 
-def inverted_index(docs: DataFrame, text_col: str = "text",
-                   source_col: str = "source",
-                   reference_parity: bool = False) -> DataFrame:
+def inverted_index(docs: DataFrame, reference_parity: bool = False) -> DataFrame:
     """Per word: count of distinct source docs + sorted CSV of them.
 
     Output columns: ``word, n_docs, doc_list`` — doc_list matches the
@@ -32,12 +30,11 @@ def inverted_index(docs: DataFrame, text_col: str = "text",
     ``reference_parity=True`` switches to the reference's exact
     tokenizer (case-preserving, Unicode letters — functions.text).
     """
-    w = (words(text_col, lowercase=False, unicode_letters=True)
-         if reference_parity else words(text_col))
+    w = (words("text", lowercase=False, unicode_letters=True)
+         if reference_parity else words("text"))
     return (
         docs
-        .select(F.col(source_col).alias("source"),
-                F.explode(w).alias("word"))
+        .select("source", F.explode(w).alias("word"))
         .groupBy("word")
         .agg(F.sort_array(F.collect_set("source")).alias("sources"))
         .select(

@@ -69,8 +69,8 @@ def _trigrams(docs: DataFrame) -> DataFrame:
     )
 
 
-def lang_profiles(docs: DataFrame, k: int = LANG_PROFILE_K) -> DataFrame:
-    """(lang, tg) — each language's top-``k`` trigrams by corpus
+def lang_profiles(docs: DataFrame) -> DataFrame:
+    """(lang, tg) — each language's top-``LANG_PROFILE_K`` trigrams by corpus
     count, ties broken by trigram so the profile is deterministic.
 
     One partial-aggregated shuffle bounded by partitions × trigram
@@ -84,7 +84,7 @@ def lang_profiles(docs: DataFrame, k: int = LANG_PROFILE_K) -> DataFrame:
     w = Window.partitionBy("lang").orderBy(F.col("n").desc(), "tg")
     return (
         counts.withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") <= k)
+        .filter(F.col("r") <= LANG_PROFILE_K)
         .select("lang", "tg")
     )
 
@@ -190,11 +190,10 @@ def _batch_trigram_codes(texts: list[str]) -> tuple[np.ndarray, np.ndarray]:
     return codes[valid], doc_of_pos[:-2][valid]
 
 
-def lang_profile_codes(docs: DataFrame,
-                       k: int = LANG_PROFILE_K) -> DataFrame:
+def lang_profile_codes(docs: DataFrame) -> DataFrame:
     """(lang, code) — `lang_profiles` with packed-int64 trigrams.
 
-    Same top-``k``-by-count, ties-by-trigram profile (packing is
+    Same top-``LANG_PROFILE_K``-by-count, ties-by-trigram profile (packing is
     order-preserving), but counting runs vectorized in Arrow batches
     and the shuffle carries (lang, code, partial-count) rows bounded
     by batches × vocabulary instead of the occurrence stream."""
@@ -232,7 +231,7 @@ def lang_profile_codes(docs: DataFrame,
     w = Window.partitionBy("lang").orderBy(F.col("n").desc(), "code")
     return (
         counts.withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") <= k)
+        .filter(F.col("r") <= LANG_PROFILE_K)
         .select("lang", "code")
     )
 

@@ -29,8 +29,7 @@ ReduceFn = Callable[[Any, Any], Any]
 
 
 def map_reduce(df: DataFrame, flat_map_fn: FlatMapFn, reduce_fn: ReduceFn,
-               schema: str = "key string, value string",
-               num_partitions: int | None = None) -> DataFrame:
+               schema: str = "key string, value string") -> DataFrame:
     """Classic MapReduce over a DataFrame: flatMap → shuffle → fold.
 
     ``flat_map_fn(row) -> iterable[(key, value)]`` is the mapper
@@ -39,13 +38,7 @@ def map_reduce(df: DataFrame, flat_map_fn: FlatMapFn, reduce_fn: ReduceFn,
     a whole value list; an associative fold is required here so Spark
     can combine map-side — the win the reference lacks, SURVEY.md §4.2).
     """
-    pairs = df.rdd.flatMap(flat_map_fn)
-    reduced = (
-        pairs.reduceByKey(reduce_fn, numPartitions=num_partitions)
-        if num_partitions
-        else pairs.reduceByKey(reduce_fn)
-    )
-    return reduced.toDF(schema=schema)
+    return df.rdd.flatMap(flat_map_fn).reduceByKey(reduce_fn).toDF(schema=schema)
 
 
 _JOBS: dict[str, tuple[FlatMapFn, ReduceFn, str]] = {}

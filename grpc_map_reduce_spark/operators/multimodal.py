@@ -668,6 +668,7 @@ FROM s
 #: pixels per document (text bytes, space-padded — the same oracle
 #: witness trick as PNG/WAV).
 GIF_W, GIF_H, GIF_NF = 8, 8, 3
+GIF_FRAME_STEP = 2  # sample every 2nd frame
 
 
 def attach_gif_media(docs: DataFrame) -> DataFrame:
@@ -678,13 +679,13 @@ def attach_gif_media(docs: DataFrame) -> DataFrame:
         GIF_W, GIF_H, [raw[i:i + fsz] for i in range(0, len(raw), fsz)]))
 
 
-def sample_gif_frames(media_df: DataFrame, every_n: int = 2) -> DataFrame:
+def sample_gif_frames(media_df: DataFrame) -> DataFrame:
     """REAL frame sampling: parse the GIF container, keep every
-    ``every_n``-th decoded frame — one output row per kept frame."""
+    ``GIF_FRAME_STEP``-th decoded frame — one output row per kept frame."""
 
     def row(doc_id, payload):
         frames = decode_gif(_payload(payload))[2]
-        for i in range(0, len(frames), every_n):
+        for i in range(0, len(frames), GIF_FRAME_STEP):
             yield doc_id, i, hashlib.md5(frames[i]).hexdigest(), len(frames[i])
 
     return _row_map(media_df, ["doc_id", "media"], row,
@@ -711,7 +712,7 @@ SELECT doc_id,
        CAST(f AS INTEGER) AS frame_idx,
        md5(substr(p, f * {GIF_W * GIF_H} + 1, {GIF_W * GIF_H})) AS frame_md5,
        CAST({GIF_W * GIF_H} AS BIGINT) AS frame_bytes
-FROM pix, unnest(range(0, {GIF_NF}, 2)) AS t(f)
+FROM pix, unnest(range(0, {GIF_NF}, {GIF_FRAME_STEP})) AS t(f)
 """
 
 
@@ -948,19 +949,16 @@ def _spec_twiddles() -> tuple[list, list]:
     return C, S
 
 
-def audio_spectrogram(media_df: DataFrame, frame: int = SPEC_FRAME) -> DataFrame:
+def audio_spectrogram(media_df: DataFrame) -> DataFrame:
     """(doc_id, frame_idx, frame_energy, dominant_bin, dominant_pow):
-    the decoded PCM cut into non-overlapping ``frame``-sample windows
-    (a trailing partial window is dropped, so a payload shorter than
-    one window yields no row); per window the integer energy
-    Σ|s−128|, the dominant bin 1..frame/2 of the fixed-point DFT (max
-    power, ties to the lowest bin) and that bin's exact power.  The
-    twiddle table is sized for ``SPEC_FRAME``; any other ``frame``
-    raises ``ValueError``."""
+    the decoded PCM cut into non-overlapping ``SPEC_FRAME``-sample
+    windows (a trailing partial window is dropped, so a payload shorter
+    than one window yields no row); per window the integer energy
+    Σ|s−128|, the dominant bin 1..SPEC_FRAME/2 of the fixed-point DFT
+    (max power, ties to the lowest bin) and that bin's exact power."""
     import numpy as np
 
-    if frame != SPEC_FRAME:
-        raise ValueError("twiddle table is sized for SPEC_FRAME")
+    frame = SPEC_FRAME
     C, S = (np.asarray(t, dtype=np.int64) for t in _spec_twiddles())  # (F/2, F)
 
     native = _decoder_snapshot()  # adapters bind at plan build
@@ -1000,11 +998,11 @@ def audio_spectrogram(media_df: DataFrame, frame: int = SPEC_FRAME) -> DataFrame
 AUDIO_DECIM = 2
 
 
-def downsample_audio(media_df: DataFrame,
-                     factor: int = AUDIO_DECIM) -> DataFrame:
-    """(doc_id, n_samples, rate, wave_md5): decimate PCM by ``factor``
-    (block mean), re-encode as a real WAV at rate/factor, decode
-    again, and hash the round-tripped samples."""
+def downsample_audio(media_df: DataFrame) -> DataFrame:
+    """(doc_id, n_samples, rate, wave_md5): decimate PCM by
+    ``AUDIO_DECIM`` (block mean), re-encode as a real WAV at the
+    decimated rate, decode again, and hash the round-tripped samples."""
+    factor = AUDIO_DECIM
     import numpy as np
 
     native = _decoder_snapshot()  # adapters bind at plan build
@@ -1159,10 +1157,10 @@ def dhash_images(media_df: DataFrame) -> DataFrame:
 
 
 def phash_near_dup_pairs(media_df: DataFrame,
-                         max_hamming: int = DHASH_HAMMING_MAX,
                          max_bucket: int | None = DHASH_MAX_BUCKET_DEFAULT
                          ) -> DataFrame:
-    """(doc_a, doc_b, hamming) for banded-candidate image pairs.
+    """(doc_a, doc_b, hamming) for banded-candidate image pairs within
+    ``DHASH_HAMMING_MAX``.
 
     ``max_bucket`` is the hot-bucket skew guard, ON by default (see
     :data:`DHASH_MAX_BUCKET_DEFAULT` for the measured 125x blowup it
@@ -1199,7 +1197,7 @@ def phash_near_dup_pairs(media_df: DataFrame,
             "hamming",
             F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))).cast("long"),
         )
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= DHASH_HAMMING_MAX)
         .select("doc_a", "doc_b", "hamming")
     )
 

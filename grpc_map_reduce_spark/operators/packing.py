@@ -106,11 +106,11 @@ FROM run
 """
 
 
-def decontaminate(docs: DataFrame, n: int = DECONTAM_NGRAM,
+def decontaminate(docs: DataFrame,
                   bench_mod: int = DECONTAM_BENCH_MOD,
                   min_hits: int = DECONTAM_MIN_HITS) -> DataFrame:
-    """Per training doc: distinct shingles shared with the benchmark
-    split, and the contamination flag.
+    """Per training doc: distinct ``DECONTAM_NGRAM``-word shingles shared
+    with the benchmark split, and the contamination flag.
 
     Training docs with zero overlap are kept in the output (left join,
     ``n_hits`` 0) so the result is a total audit of the train split.
@@ -127,7 +127,7 @@ def decontaminate(docs: DataFrame, n: int = DECONTAM_NGRAM,
         docs.repartition(n_part, "doc_id")
         .select(
             "doc_id",
-            F.explode(distinct_shingle_hashes_udf(n)("text")).alias("sh_h"),
+            F.explode(distinct_shingle_hashes_udf(DECONTAM_NGRAM)("text")).alias("sh_h"),
         )
     )
     bench = sh.filter(is_bench).select("sh_h").distinct()
@@ -193,14 +193,14 @@ WHERE d.doc_id % {DECONTAM_BENCH_MOD} <> 0
 LENGTH_BUCKETS = 8
 
 
-def length_buckets(docs: DataFrame, k: int = LENGTH_BUCKETS) -> DataFrame:
-    """(doc_id, n_tokens, bucket, bucket_size) — equal-frequency
-    length buckets, 1-based; bucket = 1 + #boundaries strictly below
+def length_buckets(docs: DataFrame) -> DataFrame:
+    """(doc_id, n_tokens, bucket, bucket_size) — ``LENGTH_BUCKETS``
+    equal-frequency length buckets, 1-based; bucket = 1 + #boundaries strictly below
     the doc's token count."""
     toks = docs.select(
         "doc_id", F.size(words("text")).cast("long").alias("n_tokens")
     )
-    qs = [i / k for i in range(1, k)]
+    qs = [i / LENGTH_BUCKETS for i in range(1, LENGTH_BUCKETS)]
     bounds = toks.agg(
         F.percentile("n_tokens", F.lit(qs)).alias("bs")
     )
@@ -267,10 +267,9 @@ ORACLE_LENGTH_BUCKETS = _length_buckets_oracle()
 PACK_SWEEP_BUDGETS = (128, 256, 512, 1024)
 
 
-def packing_efficiency(docs: DataFrame,
-                       budgets: tuple = PACK_SWEEP_BUDGETS) -> DataFrame:
+def packing_efficiency(docs: DataFrame) -> DataFrame:
     """(seq_budget, n_seqs, total_tokens, pad_tokens, pad_bp,
-    n_split_docs) per candidate budget."""
+    n_split_docs) per ``PACK_SWEEP_BUDGETS`` candidate budget."""
     w = (
         Window.partitionBy("source")
         .orderBy("doc_id")
@@ -282,7 +281,7 @@ def packing_efficiency(docs: DataFrame,
         .withColumn("start", F.sum("n_tokens").over(w) - F.col("n_tokens"))
     )
     budgets_df = F.broadcast(docs.sparkSession.createDataFrame(
-        [(b,) for b in budgets], "seq_budget long"
+        [(b,) for b in PACK_SWEEP_BUDGETS], "seq_budget long"
     ))
     crossing = (
         (F.col("n_tokens") > 0)

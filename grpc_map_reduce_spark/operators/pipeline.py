@@ -105,15 +105,13 @@ WHERE quality_bp >= {QUALITY_MIN_BP}
 # models are (correctly) fit on the CLEANED corpus, not the raw crawl:
 # composition order is part of the semantics, and the chained DuckDB
 # oracle pins exactly that order.
-def training_prep(docs: DataFrame,
-                  quality_min_bp: int = QUALITY_MIN_BP,
-                  top_k: int = TRAINING_TOP_K) -> DataFrame:
+def training_prep(docs: DataFrame) -> DataFrame:
     """documents → (doc_id, source, logw, shard, shuffle_pos) for the
     selected training subset.
 
     Selection is the deterministic take-K variant of DSIR's importance
     resampling: rank the scored pool by (logw DESC, doc_id) and keep
-    the ``top_k`` most target-like docs — the paper's fixed training
+    the ``TRAINING_TOP_K`` most target-like docs — the paper's fixed training
     budget, minus the Gumbel noise (seeded noise would hash-diverge
     across engines; rank is reproducible everywhere).  A plain
     ``logw > 0`` gate is degenerate on corpora whose sources share a
@@ -145,7 +143,7 @@ def training_prep(docs: DataFrame,
     # in the pipeline.
     surv = (
         quality_scores(kept, keep=("source", "text"))
-        .filter(F.col("quality_bp") >= quality_min_bp)
+        .filter(F.col("quality_bp") >= QUALITY_MIN_BP)
         .select("doc_id", "source", "text")
     )
     # complete=False: token-less docs score -inf-like (absent) and can
@@ -155,7 +153,7 @@ def training_prep(docs: DataFrame,
         dsir_scores(surv, complete=False)
         .select("doc_id", "source", "logw")
         .orderBy(F.desc("logw"), "doc_id")
-        .limit(top_k)
+        .limit(TRAINING_TOP_K)
     )
     return epoch_shuffle(sel).select(
         "doc_id", "source", "logw", "shard", "shuffle_pos"

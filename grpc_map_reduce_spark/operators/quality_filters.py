@@ -451,10 +451,6 @@ def compression_signal(docs: DataFrame) -> DataFrame:
     )
 
 
-def q_compression_signal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return compression_signal(table(spark, sf_dir, "documents"))
-
-
 # Structure-gated driver twin (VERDICT r9 item 5): zlib's DEFLATE
 # output is genuinely non-replayable in DuckDB, so the raw
 # `deflate_bytes` column can never be hash-checked — but the size

@@ -474,26 +474,29 @@ GROUP BY l_returnflag
 # partial window as a shuffle on the group key; for heavily-skewed
 # groups the same result comes from groupBy(key).agg(max_by/top-k
 # sketch), but rank-filter is the general exact form.
-def topk_orders_per_priority(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
+TOPK_PER_PRIORITY = 3
+
+
+def topk_orders_per_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_orderpriority").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey")
     )
     return (
         orders.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOPK_PER_PRIORITY)
         .select("o_orderpriority", "rank", "o_orderkey", "o_totalprice")
     )
 
 
-ORACLE_TOPK_PER_GROUP = """
+ORACLE_TOPK_PER_GROUP = f"""
 SELECT o_orderpriority, rank, o_orderkey, o_totalprice
 FROM (
     SELECT o_orderpriority, o_orderkey, o_totalprice,
            row_number() OVER (PARTITION BY o_orderpriority
                               ORDER BY o_totalprice DESC, o_orderkey) AS rank
     FROM orders
-) WHERE rank <= 3
+) WHERE rank <= {TOPK_PER_PRIORITY}
 """
 
 

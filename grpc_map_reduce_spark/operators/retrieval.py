@@ -35,9 +35,9 @@ DEFAULT_TERMS = ("join", "hash", "scan")
 TOP_K = 15
 
 
-def bm25_scores(docs: DataFrame, terms: list[str], k1: float = BM25_K1,
-                b: float = BM25_B, top_k: int = TOP_K) -> DataFrame:
-    """Top-k documents by BM25 score for ``terms`` → (doc_id, bm25).
+def bm25_scores(docs: DataFrame, terms: list[str], top_k: int = TOP_K) -> DataFrame:
+    """Top-k documents by BM25 score (``BM25_K1``, ``BM25_B``) for
+    ``terms`` → (doc_id, bm25).
 
     idf(t) = ln((N - df + 0.5)/(df + 0.5) + 1)  (the Lucene form —
     never negative, well-defined for df = N).
@@ -61,6 +61,7 @@ def bm25_scores(docs: DataFrame, terms: list[str], k1: float = BM25_K1,
         .agg(F.count("*").alias("df"))
     )
     idf = F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1)
+    k1, b = BM25_K1, BM25_B
     tf_norm = (
         F.col("tf") * (k1 + 1)
         / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl")))
@@ -132,8 +133,8 @@ LIMIT {TOP_K}
 TFIDF_TOP_K = 3
 
 
-def tfidf_keywords(docs: DataFrame, k: int = TFIDF_TOP_K) -> DataFrame:
-    """Top-``k`` words per document by smooth TF-IDF →
+def tfidf_keywords(docs: DataFrame) -> DataFrame:
+    """Top-``TFIDF_TOP_K`` words per document by smooth TF-IDF →
     (doc_id, rank, word, tf, tfidf)."""
     from pyspark.sql.window import Window
 
@@ -154,7 +155,7 @@ def tfidf_keywords(docs: DataFrame, k: int = TFIDF_TOP_K) -> DataFrame:
         tf.join(F.broadcast(dfreq), "word")
         .crossJoin(F.broadcast(n_docs))
         .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TFIDF_TOP_K)
         .select(
             "doc_id", F.col("rank").cast("long").alias("rank"), "word", "tf",
             F.round(score, 6).alias("tfidf"),
@@ -214,14 +215,13 @@ def positional_index(docs: DataFrame) -> DataFrame:
     )
 
 
-def phrase_search(docs: DataFrame,
-                  phrases: list[tuple[str, str]] = PHRASES) -> DataFrame:
-    """Per (phrase, doc): occurrence count + first hit position."""
+def phrase_search(docs: DataFrame) -> DataFrame:
+    """Per (``PHRASES`` entry, doc): occurrence count + first hit position."""
     idx = positional_index(docs)
-    probe = [w for p in phrases for w in p]
+    probe = [w for p in PHRASES for w in p]
     hits = None
     pruned = idx.where(F.col("word").isin(probe))
-    for w1, w2 in phrases:
+    for w1, w2 in PHRASES:
         a = pruned.where(F.col("word") == w1).select(
             "doc_id", F.col("pos").alias("p1")
         )
@@ -301,25 +301,25 @@ RRF_TOP = 15
 RRF_QUERY_VEC = 0
 
 
-def hybrid_rrf(docs: DataFrame, emb: DataFrame,
-               terms: list[str], query_vec_id: int = RRF_QUERY_VEC,
-               pool: int = RRF_POOL, top: int = RRF_TOP) -> DataFrame:
-    """(doc_id, r_text, r_vec, rrf, rank): top-``top`` fused results."""
+def hybrid_rrf(docs: DataFrame, emb: DataFrame, terms: list[str]) -> DataFrame:
+    """(doc_id, r_text, r_vec, rrf, rank): top-``RRF_TOP`` fused results
+    of the ``RRF_POOL`` best text hits and the ``RRF_POOL`` nearest
+    neighbors of vector ``RRF_QUERY_VEC``."""
     from pyspark.sql import Window
 
     from grpc_map_reduce_spark.operators.similarity import cosine_topk
 
-    # Both windows rank tiny post-limit candidate lists (≤ pool rows),
+    # Both windows rank tiny post-limit candidate lists (≤ RRF_POOL rows),
     # so the unpartitioned sort is a single-partition no-op, not a
     # corpus-wide global sort.
     wt = Window.orderBy(F.col("bm25").desc(), "doc_id")
     t = (
-        bm25_scores(docs, terms, top_k=pool)
+        bm25_scores(docs, terms, top_k=RRF_POOL)
         .withColumn("r_text", F.row_number().over(wt).cast("long"))
         .select("doc_id", "r_text")
     )
     v = cosine_topk(
-        emb, emb.filter(F.col("vec_id") == query_vec_id), k=pool
+        emb, emb.filter(F.col("vec_id") == RRF_QUERY_VEC), k=RRF_POOL
     ).select(F.col("neighbor_id").alias("doc_id"), F.col("rank").alias("r_vec"))
 
     fused = (
@@ -340,7 +340,7 @@ def hybrid_rrf(docs: DataFrame, emb: DataFrame,
     return (
         fused.withColumn("rrf", F.round(_contrib("r_text") + _contrib("r_vec"), 6))
         .withColumn("rank", F.row_number().over(wr).cast("long"))
-        .filter(F.col("rank") <= top)
+        .filter(F.col("rank") <= RRF_TOP)
     )
 
 

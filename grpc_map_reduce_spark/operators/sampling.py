@@ -44,35 +44,32 @@ BALANCE_CAP = 60
 
 
 def stratified_sample(df: DataFrame, rates: dict[str, int] | None = None,
-                      default_rate: int = SAMPLE_DEFAULT_RATE,
                       strata_col: str = "lang",
                       id_col: str = "doc_id") -> DataFrame:
     """Rows whose hash bucket falls under their stratum's keep rate.
 
     ``rates`` maps stratum value → keep percent (0-100); unlisted
-    strata keep ``default_rate``.  Bucket = md5(id) mod 100, so
+    strata keep ``SAMPLE_DEFAULT_RATE``.  Bucket = md5(id) mod 100, so
     membership is a pure function of the row id — stable across runs
     and engines.
     """
     rates = SAMPLE_RATES if rates is None else rates
     bucket = _md5_long(F.col(id_col).cast("string")) % 100
-    rate = F.lit(default_rate)
+    rate = F.lit(SAMPLE_DEFAULT_RATE)
     for stratum, pct in rates.items():
         rate = F.when(F.col(strata_col) == stratum, F.lit(pct)).otherwise(rate)
     return df.filter(bucket < rate)
 
 
-def balanced_downsample(df: DataFrame, cap: int = BALANCE_CAP,
-                        strata_col: str = "lang",
-                        id_col: str = "doc_id") -> DataFrame:
-    """At most ``cap`` rows per stratum: the ``cap`` lowest md5 hashes
-    (ties broken by id → fully deterministic).  Adds ``sample_rank``
-    (1-based position within the stratum's kept set)."""
-    h = _md5_long(F.col(id_col).cast("string"))
-    w = Window.partitionBy(strata_col).orderBy(h, F.col(id_col))
+def balanced_downsample(df: DataFrame) -> DataFrame:
+    """At most ``BALANCE_CAP`` rows per ``lang``: the lowest md5 hashes
+    of ``doc_id`` (ties broken by id → fully deterministic).  Adds
+    ``sample_rank`` (1-based position within the stratum's kept set)."""
+    h = _md5_long(F.col("doc_id").cast("string"))
+    w = Window.partitionBy("lang").orderBy(h, F.col("doc_id"))
     return (
         df.withColumn("sample_rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("sample_rank") <= cap)
+        .filter(F.col("sample_rank") <= BALANCE_CAP)
     )
 
 
@@ -144,9 +141,7 @@ MIXTURE_BUDGET_PCT = 100  # output size target, percent of input rows
 def mixture_epoch_resample(df: DataFrame,
                            weights: dict[str, int] | None = None,
                            default_weight: int = MIXTURE_DEFAULT_WEIGHT,
-                           budget_pct: int = MIXTURE_BUDGET_PCT,
-                           source_col: str = "source",
-                           id_col: str = "doc_id") -> DataFrame:
+                           budget_pct: int = MIXTURE_BUDGET_PCT) -> DataFrame:
     """Resample to a target source mixture → input rows + ``epoch``.
 
     Target mixture: source s's share of the output is proportional to
@@ -165,9 +160,9 @@ def mixture_epoch_resample(df: DataFrame,
     weights = MIXTURE_WEIGHTS if weights is None else weights
     w_col = F.lit(default_weight)
     for s, w in weights.items():
-        w_col = F.when(F.col(source_col) == s, F.lit(w)).otherwise(w_col)
+        w_col = F.when(F.col("source") == s, F.lit(w)).otherwise(w_col)
 
-    counts = df.groupBy(source_col).agg(F.count("*").alias("n_s"))
+    counts = df.groupBy("source").agg(F.count("*").alias("n_s"))
     totals = (
         counts.withColumn("w", w_col)
         .agg(
@@ -176,7 +171,7 @@ def mixture_epoch_resample(df: DataFrame,
         )
     )
     ratio_bp = F.expr(f"(t_rows * {budget_pct} * w * 100) DIV w_total")
-    bucket = _md5_long(F.col(id_col).cast("string")) % 10000
+    bucket = _md5_long(F.col("doc_id").cast("string")) % 10000
     copies = (ratio_bp / 10000).cast("long") + (
         (bucket < ratio_bp % 10000).cast("long")
     )
@@ -256,13 +251,10 @@ WHERE n_copies > 0
 TEMP_BUDGET_PCT = 100
 
 
-def temperature_epoch_resample(df: DataFrame,
-                               budget_pct: int = TEMP_BUDGET_PCT,
-                               source_col: str = "source",
-                               id_col: str = "doc_id") -> DataFrame:
+def temperature_epoch_resample(df: DataFrame) -> DataFrame:
     """Resample so source shares follow ``sqrt(n_s)`` (α=0.5
     temperature sampling) → input rows + ``epoch``."""
-    counts = df.groupBy(source_col).agg(F.count("*").alias("n_s")).withColumn(
+    counts = df.groupBy("source").agg(F.count("*").alias("n_s")).withColumn(
         "s_i", F.floor(F.sqrt("n_s") * 1000).cast("long")
     )
     totals = counts.agg(
@@ -272,14 +264,14 @@ def temperature_epoch_resample(df: DataFrame,
         "share_bp", F.expr("(s_i * 10000) DIV s_total")
     ).withColumn(
         "ratio_bp",
-        F.expr(f"(t_rows * {budget_pct} * share_bp) DIV (100 * n_s)"),
-    ).select(source_col, "ratio_bp")
-    bucket = _md5_long(F.col(id_col).cast("string")) % 10000
+        F.expr(f"(t_rows * {TEMP_BUDGET_PCT} * share_bp) DIV (100 * n_s)"),
+    ).select("source", "ratio_bp")
+    bucket = _md5_long(F.col("doc_id").cast("string")) % 10000
     copies = (F.col("ratio_bp") / 10000).cast("long") + (
         (bucket < F.col("ratio_bp") % 10000).cast("long")
     )
     return (
-        df.join(F.broadcast(per_source), source_col)
+        df.join(F.broadcast(per_source), "source")
         .withColumn("_copies", copies)
         .filter(F.col("_copies") > 0)
         .select(
@@ -343,22 +335,21 @@ EPOCH_SHUFFLE_SEED = 17
 EPOCH_SHUFFLE_SHARDS = 8
 
 
-def epoch_shuffle(df: DataFrame, n_shards: int = EPOCH_SHUFFLE_SHARDS,
-                  seed: int = EPOCH_SHUFFLE_SEED,
-                  id_col: str = "doc_id") -> DataFrame:
+def epoch_shuffle(df: DataFrame, seed: int = EPOCH_SHUFFLE_SEED) -> DataFrame:
     """(id, shard, shuffle_pos): a deterministic sharded permutation.
 
-    ``shard`` = seeded md5 hash mod ``n_shards``; ``shuffle_pos`` is
+    ``shard`` = seeded md5 hash of ``doc_id`` mod
+    ``EPOCH_SHUFFLE_SHARDS``; ``shuffle_pos`` is
     the row's 1-based position inside its shard, ordered by (hash,
     id).  One hash-partition shuffle total; no global sort ever.
     """
     h = _md5_long(
-        F.concat(F.col(id_col).cast("string"), F.lit(f"#e{seed}"))
+        F.concat(F.col("doc_id").cast("string"), F.lit(f"#e{seed}"))
     )
     out = df.withColumn("__h", h).withColumn(
-        "shard", (F.col("__h") % n_shards).cast("long")
+        "shard", (F.col("__h") % EPOCH_SHUFFLE_SHARDS).cast("long")
     )
-    w = Window.partitionBy("shard").orderBy("__h", id_col)
+    w = Window.partitionBy("shard").orderBy("__h", "doc_id")
     return (
         out.withColumn("shuffle_pos", F.row_number().over(w).cast("long"))
         .drop("__h")
@@ -399,15 +390,14 @@ DSIR_BUCKETS = 1024
 DSIR_TARGET_SOURCE = "src0"
 
 
-def dsir_scores(docs: DataFrame, target_source: str = DSIR_TARGET_SOURCE,
-                n_buckets: int = DSIR_BUCKETS,
-                complete: bool = True) -> DataFrame:
+def dsir_scores(docs: DataFrame, complete: bool = True) -> DataFrame:
     """(doc_id, source, logw, target_like) — add-one-smoothed hashed
     unigram importance weights.
 
     λ(b) = ln((ct[b]+1)/(T+B)) − ln((cr[b]+1)/(R+B)); logw(doc) =
     Σ_tokens λ(bucket(token)), rounded to 4 dp; ``target_like`` =
-    logw > 0.  Plan: both language models come from ONE B-row count
+    logw > 0, with B = ``DSIR_BUCKETS`` and the target the
+    ``DSIR_TARGET_SOURCE`` rows.  Plan: both language models come from ONE B-row count
     table (conditional aggregate, map-side partial, then broadcast);
     per-token broadcast join + one groupBy(doc) sum.  The raw corpus
     is never joined to itself and the only full shuffles are the
@@ -423,13 +413,13 @@ def dsir_scores(docs: DataFrame, target_source: str = DSIR_TARGET_SOURCE,
     """
     toks = pin(docs.select(
         "doc_id", "source", F.explode(words("text")).alias("word")
-    ).withColumn("b", _md5_long(F.col("word")) % n_buckets))
+    ).withColumn("b", _md5_long(F.col("word")) % DSIR_BUCKETS))
     # BOTH count tables from ONE tokenize pass: the target count is a
     # conditional aggregate of the same groupBy, not a second scan.
     counts = toks.groupBy("b").agg(
         F.count("*").alias("cr"),
         F.sum(
-            F.when(F.col("source") == target_source, 1).otherwise(0)
+            F.when(F.col("source") == DSIR_TARGET_SOURCE, 1).otherwise(0)
         ).alias("ct"),
     )
     tot = counts.agg(
@@ -441,8 +431,8 @@ def dsir_scores(docs: DataFrame, target_source: str = DSIR_TARGET_SOURCE,
         .select(
             "b",
             (
-                F.log((F.col("ct") + 1) / (F.col("t_total") + n_buckets))
-                - F.log((F.col("cr") + 1) / (F.col("r_total") + n_buckets))
+                F.log((F.col("ct") + 1) / (F.col("t_total") + DSIR_BUCKETS))
+                - F.log((F.col("cr") + 1) / (F.col("r_total") + DSIR_BUCKETS))
             ).alias("lam"),
         )
     )

@@ -21,6 +21,11 @@ from grpc_map_reduce_spark.sources.tables import table
 from grpc_map_reduce_spark.plans.checkpoint import iterate
 
 
+#: Corpus blocks of the packed vector searches (one numpy matmul per
+#: block pair).
+VEC_BLOCKS = 16
+
+
 def _pack_blocks(df: DataFrame, id_col: str, vec_col: str,
                  n_blocks: int, keys: tuple = (),
                  keys_schema: str = "", normalize: bool = True) -> DataFrame:
@@ -116,9 +121,7 @@ def _block_topk(cpacked: DataFrame, qpacked: DataFrame, k: int,
     )
 
 
-def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
-                id_col: str = "vec_id", vec_col: str = "embedding",
-                n_blocks: int = 16) -> DataFrame:
+def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """For each query vector, the top-``k`` most-similar corpus rows.
 
     Output: ``(query_id, neighbor_id, sim, rank)`` with ``sim`` rounded
@@ -126,12 +129,12 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     deterministic and engine-portable.
 
     Plan: pack the (small) query set into one summary row and the
-    corpus into ``n_blocks`` blocks; :func:`_block_topk` broadcasts the
+    corpus into ``VEC_BLOCKS`` blocks; :func:`_block_topk` broadcasts the
     queries to every corpus block, runs one numpy matmul per block and
     ranks the block winners.  The corpus is never shuffled and no pair
     rows are materialized."""
-    return _block_topk(_pack_blocks(corpus, id_col, vec_col, n_blocks),
-                       _pack_blocks(queries, id_col, vec_col, 1), k)
+    return _block_topk(_pack_blocks(corpus, "vec_id", "embedding", VEC_BLOCKS),
+                       _pack_blocks(queries, "vec_id", "embedding", 1), k)
 
 
 def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -178,12 +181,15 @@ SELECT query_id, neighbor_id, sim, rank FROM ranked WHERE rank <= 10
 EMBED_MAX_BLOCK_ROWS = 32768
 
 
-def embedding_near_dup(corpus: DataFrame, threshold: float = 0.4,
-                       id_col: str = "vec_id", vec_col: str = "embedding",
-                       n_blocks: int = 16,
+#: Cosine threshold of the embedding near-dup pair (exact and LSH).
+EMB_NEAR_DUP_THRESHOLD = 0.4
+
+
+def embedding_near_dup(corpus: DataFrame, n_blocks: int = VEC_BLOCKS,
                        max_block_rows: int | None = EMBED_MAX_BLOCK_ROWS,
                        ) -> DataFrame:
-    """All pairs (a < b) with cosine similarity ≥ threshold — the
+    """All pairs (a < b) with cosine similarity ≥
+    ``EMB_NEAR_DUP_THRESHOLD`` — the
     embedding-space analog of near-dup detection.
 
     Exact all-pairs, executed as a *blocked* self-join with a
@@ -200,7 +206,7 @@ def embedding_near_dup(corpus: DataFrame, threshold: float = 0.4,
     import numpy as np
     import pandas as pd
 
-    packed = _pack_blocks(corpus, id_col, vec_col, n_blocks)
+    packed = _pack_blocks(corpus, "vec_id", "embedding", n_blocks)
     pairs = (
         packed.select(F.col("blk").alias("ba"), F.col("ids").alias("ids_a"),
                       F.col("mat").alias("mat_a"))
@@ -239,7 +245,7 @@ def embedding_near_dup(corpus: DataFrame, threshold: float = 0.4,
                     # distinct blocks: each unordered pair appears
                     # once, in arbitrary orientation — orient below.
                     mask = ids_a[:, None] != ids_b[None, :]
-                ia, ib = np.nonzero((sims >= threshold) & mask)
+                ia, ib = np.nonzero((sims >= EMB_NEAR_DUP_THRESHOLD) & mask)
                 lo = np.minimum(ids_a[ia], ids_b[ib])
                 hi = np.maximum(ids_a[ia], ids_b[ib])
                 out_a.append(lo); out_b.append(hi); out_s.append(sims[ia, ib])
@@ -329,16 +335,15 @@ EMB_LSH_MAX_BUCKET_DEFAULT = 1000
 
 
 def _emb_band_keys(df: DataFrame, n_bits: int, rows_per_band: int,
-                   seed: int, id_col: str, vec_col: str,
                    keep: tuple = ()) -> DataFrame:
     """(id, *keep, band_idx, key) hyperplane-LSH band rows for every
     vector: one row per vector per band, the ``keep`` columns passed
     through.  The batch paths and the streaming twin all sign vectors
     here.
 
-    One vectorized matmul per Arrow batch against a seed-deterministic
-    hyperplane matrix, generated once per task (no driver state, no
-    shuffle of the vectors)."""
+    One vectorized matmul per Arrow batch against the
+    ``EMB_LSH_SEED``-deterministic hyperplane matrix, generated once per
+    task (no driver state, no shuffle of the vectors)."""
     import numpy as np
 
     r = rows_per_band
@@ -358,7 +363,7 @@ def _emb_band_keys(df: DataFrame, n_bits: int, rows_per_band: int,
             if H is None:
                 # Hash-derived → identical hyperplanes in every
                 # task/run AND in the DuckDB oracle.
-                H = hyperplanes(seed, n_bits, V.shape[1])
+                H = hyperplanes(EMB_LSH_SEED, n_bits, V.shape[1])
             bits = (V @ H.T) >= 0  # sign bits; norm-invariant
             keys = bits.reshape(len(V), n_bands, r).astype(np.int64) @ weights
             yield pdf.drop(columns="v").iloc[np.repeat(np.arange(len(V)), n_bands)].assign(
@@ -367,7 +372,7 @@ def _emb_band_keys(df: DataFrame, n_bits: int, rows_per_band: int,
             )
 
     base = df.select(
-        F.col(id_col).cast("long").alias("id"), *keep, F.col(vec_col).alias("v")
+        F.col("vec_id").cast("long").alias("id"), *keep, F.col("embedding").alias("v")
     )
     longs = [StructField(c, LongType()) for c in ("band_idx", "key")]
     return base.mapInPandas(_bands, StructType(base.schema.fields[:-1] + longs))
@@ -375,8 +380,6 @@ def _emb_band_keys(df: DataFrame, n_bits: int, rows_per_band: int,
 
 def embedding_lsh_candidates(corpus: DataFrame, n_bits: int = EMB_LSH_BITS,
                              rows_per_band: int = EMB_LSH_ROWS_PER_BAND,
-                             seed: int = EMB_LSH_SEED,
-                             id_col: str = "vec_id", vec_col: str = "embedding",
                              max_bucket: int | None =
                              EMB_LSH_MAX_BUCKET_DEFAULT) -> DataFrame:
     """Candidate pairs (id_a < id_b, n_bands) sharing ≥1 hyperplane-LSH
@@ -388,9 +391,7 @@ def embedding_lsh_candidates(corpus: DataFrame, n_bits: int = EMB_LSH_BITS,
     pair rows.  ``max_bucket`` drops oversized buckets before pair
     fan-out (same skew rationale as the MinHash path).
     """
-    exploded = _emb_band_keys(
-        corpus, n_bits, rows_per_band, seed, id_col, vec_col
-    )
+    exploded = _emb_band_keys(corpus, n_bits, rows_per_band)
     return (
         bucket_pairs(exploded, ["band_idx", "key"], "id", max_bucket)
         .groupBy(F.col("a").alias("id_a"), F.col("b").alias("id_b"))
@@ -423,26 +424,24 @@ def _cosine_scores(pairs: DataFrame, threshold: float) -> DataFrame:
 
 
 def _cosine_rescore(cand: DataFrame, left: DataFrame, right: DataFrame,
-                    id_col: str, vec_col: str,
                     threshold: float) -> DataFrame:
     """Exact-cosine rescore of candidate pairs: ``cand``'s two id
     columns name the output (a, b, sim); ``a`` ids are looked up in
     ``left``, ``b`` ids in ``right``, and :func:`_cosine_scores` keeps
     pairs whose cosine is ≥ ``threshold``.  Work is O(candidates)."""
     a, b = cand.columns
-    va = left.select(F.col(id_col).cast("long").alias(a),
-                     F.col(vec_col).alias("_va"))
-    vb = right.select(F.col(id_col).cast("long").alias(b),
-                      F.col(vec_col).alias("_vb"))
+    va = left.select(F.col("vec_id").cast("long").alias(a),
+                     F.col("embedding").alias("_va"))
+    vb = right.select(F.col("vec_id").cast("long").alias(b),
+                      F.col("embedding").alias("_vb"))
     return _cosine_scores(cand.join(va, a).join(vb, b), threshold).select(
         a, b, "sim")
 
 
-def embedding_lsh_near_dup(corpus: DataFrame, threshold: float = 0.4,
+def embedding_lsh_near_dup(corpus: DataFrame,
+                           threshold: float = EMB_NEAR_DUP_THRESHOLD,
                            n_bits: int = EMB_LSH_BITS,
                            rows_per_band: int = EMB_LSH_ROWS_PER_BAND,
-                           seed: int = EMB_LSH_SEED,
-                           id_col: str = "vec_id", vec_col: str = "embedding",
                            max_bucket: int | None =
                            EMB_LSH_MAX_BUCKET_DEFAULT) -> DataFrame:
     """Sub-quadratic twin of :func:`embedding_near_dup`: hyperplane-LSH
@@ -457,9 +456,9 @@ def embedding_lsh_near_dup(corpus: DataFrame, threshold: float = 0.4,
     banding → candidates → exact rescore entirely in SQL.
     """
     cand = embedding_lsh_candidates(
-        corpus, n_bits, rows_per_band, seed, id_col, vec_col, max_bucket
+        corpus, n_bits, rows_per_band, max_bucket
     ).select("id_a", "id_b")
-    return _cosine_rescore(cand, corpus, corpus, id_col, vec_col, threshold)
+    return _cosine_rescore(cand, corpus, corpus, threshold)
 
 
 #: Bounded input size for the recall-stress harness: the adversarial
@@ -577,12 +576,10 @@ EMB_SELECTIVE_THRESHOLD = 0.9
 EMB_SELECTIVE_ROWS_PER_BAND = 16  # 96 bits -> 6 bands of 16
 
 
-def planted_twins(corpus: DataFrame, id_col: str = "vec_id",
-                  vec_col: str = "embedding",
-                  eps_den: int = EMB_AUG_EPS_DEN,
-                  id_offset: int = EMB_AUG_ID_OFFSET) -> DataFrame:
+def planted_twins(corpus: DataFrame) -> DataFrame:
     """One deterministic near-dup twin per corpus vector (id +
-    ``id_offset``, per-coordinate md5 noise scaled by 1/``eps_den``).
+    ``EMB_AUG_ID_OFFSET``, per-coordinate md5 noise scaled by
+    1/``EMB_AUG_EPS_DEN``).
     Map-only, JVM-side (``transform`` + ``md5`` + ``conv``) — no
     shuffle, no Python."""
     # The noise key must be the ORIGINAL id while the output id is
@@ -590,9 +587,9 @@ def planted_twins(corpus: DataFrame, id_col: str = "vec_id",
     # can't silently bind the md5 argument to the offset output alias
     # (it did: every planted vector carried the wrong noise).
     return corpus.select(
-        F.col(id_col).cast("long").alias("_oid"), F.col(vec_col).alias("_v")
+        F.col("vec_id").cast("long").alias("_oid"), F.col("embedding").alias("_v")
     ).select(
-        (F.col("_oid") + F.lit(id_offset)).alias(id_col),
+        (F.col("_oid") + F.lit(EMB_AUG_ID_OFFSET)).alias("vec_id"),
         F.transform(
             "_v",
             lambda x, j: x.cast("double")
@@ -607,26 +604,21 @@ def planted_twins(corpus: DataFrame, id_col: str = "vec_id",
                     ), 16, 10,
                 ).cast("double") / F.lit(float(1 << 52))) * F.lit(2.0)
                 - F.lit(1.0)
-            ) / F.lit(float(eps_den)),
-        ).alias(vec_col),
+            ) / F.lit(float(EMB_AUG_EPS_DEN)),
+        ).alias("embedding"),
     )
 
 
-def planted_near_dup_corpus(corpus: DataFrame, id_col: str = "vec_id",
-                            vec_col: str = "embedding",
-                            eps_den: int = EMB_AUG_EPS_DEN,
-                            id_offset: int = EMB_AUG_ID_OFFSET) -> DataFrame:
+def planted_near_dup_corpus(corpus: DataFrame) -> DataFrame:
     """Union the corpus with its :func:`planted_twins`.  Exists so
     approximate operators can be exercised at their selective
     production calibration on fixtures that have no natural
     near-dups."""
     base = corpus.select(
-        F.col(id_col).cast("long").alias(id_col),
-        F.transform(vec_col, lambda x, j: x.cast("double")).alias(vec_col),
+        F.col("vec_id").cast("long").alias("vec_id"),
+        F.transform("embedding", lambda x, j: x.cast("double")).alias("embedding"),
     )
-    return base.unionByName(
-        planted_twins(corpus, id_col, vec_col, eps_den, id_offset)
-    )
+    return base.unionByName(planted_twins(corpus))
 
 
 def q_embedding_lsh_selective(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -705,9 +697,7 @@ SELECT id_a, id_b, sim FROM sims WHERE sim >= {EMB_SELECTIVE_THRESHOLD}
 """
 
 
-def selective_band_params(n: int, n_bands: int = 6,
-                          floor: int = EMB_SELECTIVE_ROWS_PER_BAND
-                          ) -> tuple[int, int]:
+def selective_band_params(n: int) -> tuple[int, int]:
     """(n_bits, rows_per_band) for an n-vector corpus at the
     selective regime.
 
@@ -717,26 +707,21 @@ def selective_band_params(n: int, n_bands: int = 6,
     random candidate pairs and the 125× probe measured the registered
     query super-linear (95.7 s vs 7.8 s @25×).  Scaling r with
     log2(n) keeps the expected random collisions O(n): the smallest
-    r ≥ floor with 2^r ≥ 16·n bounds per-band random candidates at
+    r ≥ ``EMB_SELECTIVE_ROWS_PER_BAND`` with 2^r ≥ 16·n bounds
+    per-band random candidates at
     ~n/32.  Twin recall falls gently with r (0.955^r per band for
     ~0.99-sim pairs; ≥0.9 overall through r≈24 at 6 bands).  Fixture
     corpora (n ≤ 4096, incl. the sf0.1 planted corpus) always
-    compute r = floor, so the pinned registered query and this
+    compute r = 16, so the pinned registered query and this
     scaled path agree there — the same pin-the-oracle /
     scale-the-caller split as semdedup's auto-K (gated in
     test_embedding_lsh.py).
     """
-    r = max(floor, (16 * n - 1).bit_length() if n > 0 else floor)
-    return n_bands * r, r
+    r = max(EMB_SELECTIVE_ROWS_PER_BAND, (16 * n - 1).bit_length())
+    return 6 * r, r
 
 
 def embedding_lsh_selective_scaled(corpus: DataFrame,
-                                   threshold: float = EMB_SELECTIVE_THRESHOLD,
-                                   seed: int = EMB_LSH_SEED,
-                                   id_col: str = "vec_id",
-                                   vec_col: str = "embedding",
-                                   max_bucket: int | None =
-                                   EMB_LSH_MAX_BUCKET_DEFAULT,
                                    n: int | None = None) -> DataFrame:
     """The selective near-dup path with :func:`selective_band_params`
     sizing — the scale caller's entry point (one count() action, a
@@ -746,8 +731,7 @@ def embedding_lsh_selective_scaled(corpus: DataFrame,
         n = corpus.count()
     n_bits, r = selective_band_params(n)
     return embedding_lsh_near_dup(
-        corpus, threshold, n_bits=n_bits, rows_per_band=r, seed=seed,
-        id_col=id_col, vec_col=vec_col, max_bucket=max_bucket,
+        corpus, EMB_SELECTIVE_THRESHOLD, n_bits=n_bits, rows_per_band=r,
     )
 
 
@@ -778,12 +762,8 @@ def q_embedding_lsh_selective_scaled(spark: SparkSession,
 
 def embedding_incremental_matches(
     corpus: DataFrame, incoming: DataFrame,
-    threshold: float = EMB_SELECTIVE_THRESHOLD,
     n_bits: int = EMB_LSH_BITS,
     rows_per_band: int = EMB_SELECTIVE_ROWS_PER_BAND,
-    seed: int = EMB_LSH_SEED,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    max_bucket: int | None = EMB_LSH_MAX_BUCKET_DEFAULT,
 ) -> DataFrame:
     """(id, match_id, sim): every incoming-side vector's
     above-threshold corpus matches — the cross-side candidate set,
@@ -792,29 +772,24 @@ def embedding_incremental_matches(
     as the text side's ``incremental_scored_pairs``."""
 
     def side(df: DataFrame, is_corpus: bool) -> DataFrame:
-        return _emb_band_keys(
-            df, n_bits, rows_per_band, seed, id_col, vec_col
-        ).withColumn("is_corpus", F.lit(is_corpus))
+        return _emb_band_keys(df, n_bits, rows_per_band).withColumn(
+            "is_corpus", F.lit(is_corpus))
 
     cand = (
         cross_bucket_pairs(
             side(incoming, False).unionByName(side(corpus, True)),
-            ["band_idx", "key"], "id", "is_corpus", max_bucket,
+            ["band_idx", "key"], "id", "is_corpus", EMB_LSH_MAX_BUCKET_DEFAULT,
         )
         .select(F.col("a").alias("id"), F.col("b").alias("match_id"))
         .distinct()
     )
-    return _cosine_rescore(cand, incoming, corpus, id_col, vec_col, threshold)
+    return _cosine_rescore(cand, incoming, corpus, EMB_SELECTIVE_THRESHOLD)
 
 
 def embedding_incremental_neardup(
     corpus: DataFrame, incoming: DataFrame,
-    threshold: float = EMB_SELECTIVE_THRESHOLD,
     n_bits: int = EMB_LSH_BITS,
     rows_per_band: int = EMB_SELECTIVE_ROWS_PER_BAND,
-    seed: int = EMB_LSH_SEED,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    max_bucket: int | None = EMB_LSH_MAX_BUCKET_DEFAULT,
 ) -> DataFrame:
     """Streaming-ingest ANN dedup: for every INCOMING vector, its
     near-dup matches in the corpus — the embedding twin of
@@ -839,10 +814,7 @@ def embedding_incremental_neardup(
     # size r from the CORPUS via selective_band_params (see
     # embedding_incremental_neardup_scaled); the registered query
     # keeps r pinned for oracle exactness.
-    matched = embedding_incremental_matches(
-        corpus, incoming, threshold, n_bits, rows_per_band, seed,
-        id_col, vec_col, max_bucket,
-    )
+    matched = embedding_incremental_matches(corpus, incoming, n_bits, rows_per_band)
     best = (
         matched.groupBy("id")
         .agg(
@@ -859,10 +831,10 @@ def embedding_incremental_neardup(
         )
     )
     return (
-        incoming.select(F.col(id_col).cast("long").alias("id"))
+        incoming.select(F.col("vec_id").cast("long").alias("id"))
         .join(best, "id", "left")
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("vec_id"),
             F.coalesce("n_matches", F.lit(0)).cast("long").alias("n_matches"),
             F.coalesce("best_match_id", F.lit(-1)).cast("long")
             .alias("best_match_id"),
@@ -873,12 +845,7 @@ def embedding_incremental_neardup(
 
 
 def embedding_incremental_neardup_scaled(
-    corpus: DataFrame, incoming: DataFrame,
-    threshold: float = EMB_SELECTIVE_THRESHOLD,
-    seed: int = EMB_LSH_SEED,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    max_bucket: int | None = EMB_LSH_MAX_BUCKET_DEFAULT,
-) -> DataFrame:
+    corpus: DataFrame, incoming: DataFrame) -> DataFrame:
     """Scale caller's entry point: band width sized from the corpus
     via :func:`selective_band_params` (one count() scalar), so random
     cross-side collisions stay O(n) as the index grows.  Fixture
@@ -887,9 +854,7 @@ def embedding_incremental_neardup_scaled(
     n = corpus.count()
     n_bits, r = selective_band_params(n)
     return embedding_incremental_neardup(
-        corpus, incoming, threshold, n_bits=n_bits, rows_per_band=r,
-        seed=seed, id_col=id_col, vec_col=vec_col, max_bucket=max_bucket,
-    )
+        corpus, incoming, n_bits=n_bits, rows_per_band=r)
 
 
 def q_embedding_incremental_neardup(spark: SparkSession,
@@ -1138,8 +1103,7 @@ def _lloyd_refine(base: DataFrame, cent: DataFrame, n_iter: int) -> DataFrame:
 
 
 def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
-             n_lists: int = 8, n_probe: int = 2, kmeans_iters: int = 2,
-             id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+             n_lists: int = 8, n_probe: int = 2, kmeans_iters: int = 2) -> DataFrame:
     """Approximate top-k via an IVF (inverted-file) index — the scale
     path for :func:`cosine_topk`.
 
@@ -1161,7 +1125,7 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     operator and that a full probe reproduces its rows exactly.
     """
     base = corpus.select(
-        F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("v"))
+        F.col("vec_id").cast("long").alias("id"), F.col("embedding").alias("v"))
     model = _fit_centroids(base, n_lists, kmeans_iters)
     if model[0] == 0:  # empty corpus: no lists, no results
         return corpus.sparkSession.createDataFrame(
@@ -1169,8 +1133,8 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
 
     def lists(df: DataFrame, n: int) -> DataFrame:
         return _pack_blocks(
-            _nearest_centroids(df, vec_col, model, "list_id", n),
-            id_col, vec_col, 1, keys=("list_id",), keys_schema="list_id long")
+            _nearest_centroids(df, "embedding", model, "list_id", n),
+            "vec_id", "embedding", 1, keys=("list_id",), keys_schema="list_id long")
 
     return _block_topk(lists(corpus, 1), lists(queries, n_probe), k,
                        keys=("list_id",))
@@ -1208,9 +1172,7 @@ ANN_AUTO_SCAN_BUDGET = 50_000_000
 
 def ann_topk_auto(corpus: DataFrame, queries: DataFrame, k: int = 10,
                   scan_budget: int = ANN_AUTO_SCAN_BUDGET,
-                  decision: list | None = None,
-                  id_col: str = "vec_id", vec_col: str = "embedding",
-                  ) -> DataFrame:
+                  decision: list | None = None) -> DataFrame:
     """Stats-driven ANN strategy selection: the engine counts the
     corpus and the query batch and picks exact brute-force or the IVF
     index itself — the second instance of the planner pattern
@@ -1238,11 +1200,9 @@ def ann_topk_auto(corpus: DataFrame, queries: DataFrame, k: int = 10,
         decision.append(use_ivf)
     if use_ivf:
         out = ivf_topk(corpus, queries, k=k, n_lists=KMEANS_K,
-                       n_probe=IVF_N_PROBE, kmeans_iters=KMEANS_ITERS,
-                       id_col=id_col, vec_col=vec_col)
+                       n_probe=IVF_N_PROBE, kmeans_iters=KMEANS_ITERS)
     else:
-        out = cosine_topk(corpus, queries, k=k,
-                          id_col=id_col, vec_col=vec_col)
+        out = cosine_topk(corpus, queries, k=k)
     return out.withColumn("used_ivf", F.lit(use_ivf))
 
 
@@ -1341,16 +1301,14 @@ def _fit_centroids(base: DataFrame, k: int, n_iter: int):
     return _model_broadcast(_lloyd_refine(base, cent, n_iter))
 
 
-def embedding_kmeans(corpus: DataFrame, k: int = KMEANS_K,
-                     n_iter: int = KMEANS_ITERS, id_col: str = "vec_id",
-                     vec_col: str = "embedding") -> DataFrame:
-    """(vec_id, cluster, cluster_size) after ``n_iter`` spherical
-    Lloyd rounds from the ``k`` lowest-id seed vectors."""
+def embedding_kmeans(corpus: DataFrame) -> DataFrame:
+    """(vec_id, cluster, cluster_size) after ``KMEANS_ITERS`` spherical
+    Lloyd rounds from the ``KMEANS_K`` lowest-id seed vectors."""
     base = corpus.select(
-        F.col(id_col).cast("long").alias("id"),
-        F.col(vec_col).alias("v"),  # float32 stays JVM-side; numpy upcasts exactly
+        F.col("vec_id").cast("long").alias("id"),
+        F.col("embedding").alias("v"),  # float32 stays JVM-side; numpy upcasts exactly
     )
-    model = _fit_centroids(base, k, n_iter)
+    model = _fit_centroids(base, KMEANS_K, KMEANS_ITERS)
     if model[0] == 0:  # empty corpus: nothing to assign
         return corpus.sparkSession.createDataFrame(
             [], "vec_id long, cluster long, cluster_size long")
@@ -1571,14 +1529,12 @@ def semdedup_auto_k(n: int) -> int:
     return max(KMEANS_K, n // SEMDEDUP_TARGET_CLUSTER_ROWS)
 
 
-def semdedup(corpus: DataFrame, threshold: float = SEMDEDUP_THRESHOLD,
-             k: int | None = None, n_iter: int = KMEANS_ITERS,
-             id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def semdedup(corpus: DataFrame, k: int | None = None) -> DataFrame:
     """Per-vector semantic-dedup verdict: (vec_id, cluster,
     n_prior_dups, keep, max_prior_sim).
 
     A vector is a duplicate if some SAME-CLUSTER vector with a lower
-    id has cosine ≥ ``threshold``; the lowest id in each duplicate
+    id has cosine ≥ ``SEMDEDUP_THRESHOLD``; the lowest id in each duplicate
     neighborhood is the keeper (``keep = true``), so the kept set is
     deterministic.  ``max_prior_sim`` is the rounded max similarity
     to any lower-id cluster-mate (−2.0 sentinel when none — engines
@@ -1600,12 +1556,12 @@ def semdedup(corpus: DataFrame, threshold: float = SEMDEDUP_THRESHOLD,
     import pandas as pd
 
     base = corpus.select(
-        F.col(id_col).cast("long").alias("id"),
-        F.col(vec_col).alias("v"),
+        F.col("vec_id").cast("long").alias("id"),
+        F.col("embedding").alias("v"),
     )
     if k is None:
         k = semdedup_auto_k(base.count())
-    model = _fit_centroids(base, k, n_iter)
+    model = _fit_centroids(base, k, KMEANS_ITERS)
     if model[0] == 0:  # empty corpus: nothing to dedup
         return corpus.sparkSession.createDataFrame(
             [], "vec_id long, cluster long, n_prior_dups long, "
@@ -1620,7 +1576,7 @@ def semdedup(corpus: DataFrame, threshold: float = SEMDEDUP_THRESHOLD,
         prior = np.tril(np.ones((m, m), dtype=bool), -1)  # j < i by id order
         masked = np.where(prior, sims, -np.inf)
         mx = masked.max(axis=1)
-        nd = (masked >= threshold).sum(axis=1)
+        nd = (masked >= SEMDEDUP_THRESHOLD).sum(axis=1)
         return pd.DataFrame({
             "vec_id": pdf["id"].to_numpy(),
             "cluster": pdf["cluster"].to_numpy(),
@@ -1725,17 +1681,15 @@ SELECT query_id, neighbor_id, sim, rank FROM ranked WHERE rank <= {ANN_FILTER_K}
 GROUPED_ANN_K = 5
 
 
-def grouped_cosine_topk(corpus: DataFrame, queries: DataFrame,
-                        k: int = GROUPED_ANN_K, group_col: str = "label",
-                        n_blocks: int = 4) -> DataFrame:
-    """(query_id, neighbor_id, sim, rank): top-``k`` neighbors within
-    the query's own ``group_col`` partition."""
+def grouped_cosine_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, sim, rank): top-``GROUPED_ANN_K``
+    neighbors within the query's own ``label`` partition."""
     def packed(df: DataFrame, nb: int) -> DataFrame:
-        return _pack_blocks(df, "vec_id", "embedding", nb, keys=(group_col,),
-                            keys_schema=f"{group_col} int")
+        return _pack_blocks(df, "vec_id", "embedding", nb, keys=("label",),
+                            keys_schema="label int")
 
-    return _block_topk(packed(corpus, n_blocks), packed(queries, 1), k,
-                       keys=(group_col,))
+    return _block_topk(packed(corpus, 4), packed(queries, 1), GROUPED_ANN_K,
+                       keys=("label",))
 
 
 def q_grouped_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1784,10 +1738,10 @@ SELECT query_id, neighbor_id, sim, rank FROM ranked WHERE rank <= {GROUPED_ANN_K
 CONTRASTIVE_N_NEG = 3
 
 
-def contrastive_pairs(corpus: DataFrame, queries: DataFrame,
-                      n_neg: int = CONTRASTIVE_N_NEG) -> DataFrame:
+def contrastive_pairs(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     """(query_id, vec_id, role, sim): one 'positive' (nearest
-    neighbor) + ``n_neg`` deterministic 'negative' rows per query."""
+    neighbor) + ``CONTRASTIVE_N_NEG`` deterministic 'negative' rows per
+    query."""
     pos = cosine_topk(corpus, queries, k=1).select(
         "query_id",
         F.col("neighbor_id").alias("vec_id"),
@@ -1809,7 +1763,7 @@ def contrastive_pairs(corpus: DataFrame, queries: DataFrame,
     w = Window.partitionBy("query_id").orderBy("h")
     picked = (
         cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= n_neg)
+        .filter(F.col("rn") <= CONTRASTIVE_N_NEG)
         .select("query_id", "vec_id")
     )
     fold = lambda arr: F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x)  # noqa: E731
@@ -1912,8 +1866,7 @@ INT8_TOPK = 10
 INT8_NQ = 8  # registered query set: vec_id < 8, as the float baseline
 
 
-def int8_quantize(vectors: DataFrame, id_col: str = "vec_id",
-                  vec_col: str = "embedding", keep: tuple = ()) -> DataFrame:
+def int8_quantize(vectors: DataFrame, keep: tuple = ()) -> DataFrame:
     """(id, qvec, *keep): unit-normalized, Q7-quantized vectors —
     pure column math, map-only, whole-stage codegen.
 
@@ -1922,7 +1875,7 @@ def int8_quantize(vectors: DataFrame, id_col: str = "vec_id",
     (ORACLE_INT8_TOPK, classifier.ORACLE_CENTROID) carries the same
     ``WHERE nrm > 0`` filter so the engines cannot diverge on a
     degenerate embedding (NaN qvec vs division error)."""
-    x = F.col(vec_col)
+    x = F.col("embedding")
     norm = F.sqrt(F.aggregate(
         x, F.lit(0.0),
         lambda acc, v: acc + v.cast("double") * v.cast("double"),
@@ -1931,21 +1884,18 @@ def int8_quantize(vectors: DataFrame, id_col: str = "vec_id",
         x, lambda v: F.round(v.cast("double") / norm * INT8_SCALE).cast("long")
     )
     return (vectors.where(norm > 0)
-            .select(F.col(id_col).cast("long").alias("id"),
+            .select(F.col("vec_id").cast("long").alias("id"),
                     q.alias("qvec"), *keep))
 
 
-def int8_topk(corpus: DataFrame, queries: DataFrame, k: int = INT8_TOPK,
-              id_col: str = "vec_id", vec_col: str = "embedding",
-              n_blocks: int = 16) -> DataFrame:
-    """Top-``k`` neighbors per query under the quantized integer dot
+def int8_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """Top-``INT8_TOPK`` neighbors per query under the quantized integer dot
     product → (query_id, neighbor_id, dot_q, rank); ties break by
     neighbor id (quantized scores tie often — determinism matters)."""
     def packed(df: DataFrame, nb: int) -> DataFrame:
-        return _pack_blocks(int8_quantize(df, id_col, vec_col), "id", "qvec",
-                            nb, normalize=False)
+        return _pack_blocks(int8_quantize(df), "id", "qvec", nb, normalize=False)
 
-    return _block_topk(packed(corpus, n_blocks), packed(queries, 1), k).select(
+    return _block_topk(packed(corpus, VEC_BLOCKS), packed(queries, 1), INT8_TOPK).select(
         "query_id", "neighbor_id", F.col("sim").cast("long").alias("dot_q"),
         "rank")
 

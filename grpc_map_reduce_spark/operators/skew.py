@@ -108,10 +108,9 @@ def salted_shuffle_join(probe: DataFrame, build: DataFrame, key: str,
 # --------------------------------------------------------------------------
 # The reference's flagship job, skew-hardened: token frequencies are
 # Zipfian, so the top word is exactly the aggregation-skew case.
-def wordcount_salted(docs: DataFrame, text_col: str = "text",
-                     n_salts: int = 16) -> DataFrame:
-    tokens = docs.select(F.explode(words(text_col)).alias("word"))
-    return salted_aggregate(tokens, ["word"], {"cnt": F.lit(1)}, n_salts)
+def wordcount_salted(docs: DataFrame) -> DataFrame:
+    tokens = docs.select(F.explode(words("text")).alias("word"))
+    return salted_aggregate(tokens, ["word"], {"cnt": F.lit(1)})
 
 
 def q_wordcount_salted(spark: SparkSession, sf_dir: str) -> DataFrame:

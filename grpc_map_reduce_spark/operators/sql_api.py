@@ -23,11 +23,10 @@ from pyspark.sql import DataFrame, SparkSession
 from grpc_map_reduce_spark.sources.tables import TABLE_NAMES, table
 
 
-def register_views(spark: SparkSession, sf_dir: str,
-                   names: tuple[str, ...] = TABLE_NAMES) -> None:
+def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every fixture table as a session temp view, so
     ``spark.sql`` can reference them by name."""
-    for name in names:
+    for name in TABLE_NAMES:
         table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 

@@ -237,7 +237,7 @@ FROM documents
 PMI_MIN_COUNT = 5
 
 
-def pmi_collocations(docs: DataFrame, min_count: int = PMI_MIN_COUNT) -> DataFrame:
+def pmi_collocations(docs: DataFrame) -> DataFrame:
     toks = docs.select(words("text").alias("ws"))
     bigram_arr = F.transform(
         F.slice(F.col("ws"), 1, F.greatest(F.size("ws") - 1, F.lit(0))),
@@ -265,7 +265,7 @@ def pmi_collocations(docs: DataFrame, min_count: int = PMI_MIN_COUNT) -> DataFra
         / (F.col("n_bigrams") * F.col("n_w1").cast("double") * F.col("n_w2"))
     )
     return (
-        bgc.filter(F.col("n_pair") >= min_count)
+        bgc.filter(F.col("n_pair") >= PMI_MIN_COUNT)
         .select(
             F.split("bigram", " ")[0].alias("w1"),
             F.split("bigram", " ")[1].alias("w2"),

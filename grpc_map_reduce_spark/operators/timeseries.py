@@ -127,8 +127,8 @@ FROM grid g LEFT JOIN hourly h
 
 
 # --------------------------------------------------------------------------
-def anomaly_zscore(events: DataFrame, n_sigma: int = 3) -> DataFrame:
-    """Events more than ``n_sigma`` population standard deviations from
+def anomaly_zscore(events: DataFrame) -> DataFrame:
+    """Events more than 3 population standard deviations from
     their event_type's mean value — evaluated in exact integer
     arithmetic (module docstring) so the cut is bit-identical across
     engines and scales without a float-equality hazard."""
@@ -144,7 +144,7 @@ def anomaly_zscore(events: DataFrame, n_sigma: int = 3) -> DataFrame:
     x = F.col("value_cents").cast("decimal(38,0)")
     lhs = (F.col("_n") * x - F.col("_s")) * (F.col("_n") * x - F.col("_s"))
     rhs = (
-        F.lit(n_sigma * n_sigma).cast("decimal(38,0)")
+        F.lit(9).cast("decimal(38,0)")  # 3 sigma, squared
         * (F.col("_n") * F.col("_q") - F.col("_s") * F.col("_s"))
     )
     return (
@@ -202,13 +202,12 @@ WHERE s.n > 1
 CONC_WINDOW_S = 300
 
 
-def peak_concurrency(events: DataFrame,
-                     window_s: int = CONC_WINDOW_S) -> DataFrame:
+def peak_concurrency(events: DataFrame) -> DataFrame:
     """(hour, peak_concurrency, n_starts) — max simultaneously-active
     event windows during each hour."""
     start = events.select(F.col("ts").alias("t"), F.lit(1).alias("delta"))
     end = events.select(
-        (F.col("ts") + F.expr(f"INTERVAL {window_s} SECONDS")).alias("t"),
+        (F.col("ts") + F.expr(f"INTERVAL {CONC_WINDOW_S} SECONDS")).alias("t"),
         F.lit(-1).alias("delta"),
     )
     deltas = start.unionByName(end).withColumn(

@@ -39,9 +39,8 @@ from grpc_map_reduce_spark.sources.tables import table
 CHUNK_WORDS = 10
 
 
-def passage_chunks(spark: SparkSession, docs: DataFrame,
-                   chunk_words: int = CHUNK_WORDS) -> DataFrame:
-    """(doc_id, chunk_idx, chunk_text, n_words) — fixed-width word
+def passage_chunks(spark: SparkSession, docs: DataFrame) -> DataFrame:
+    """(doc_id, chunk_idx, chunk_text, n_words) — ``CHUNK_WORDS``-word
     windows per document via a Python UDTF in a SQL ``LATERAL`` join.
 
     The UDTF is Arrow-batched and partition-parallel: each executor
@@ -56,9 +55,9 @@ def passage_chunks(spark: SparkSession, docs: DataFrame,
     class ChunkWords:
         def eval(self, text: str):
             ws = [w for w in token_re.split(text.lower()) if w]
-            for i in range(0, len(ws), chunk_words):
-                chunk = ws[i:i + chunk_words]
-                yield i // chunk_words, " ".join(chunk), len(chunk)
+            for i in range(0, len(ws), CHUNK_WORDS):
+                chunk = ws[i:i + CHUNK_WORDS]
+                yield i // CHUNK_WORDS, " ".join(chunk), len(chunk)
 
     spark.udtf.register("passage_chunks_udtf", ChunkWords)
     docs.select("doc_id", "text").createOrReplaceTempView("_chunk_docs")

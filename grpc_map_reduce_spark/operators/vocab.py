@@ -70,15 +70,15 @@ def doc_term_freqs(docs: DataFrame) -> DataFrame:
     )
 
 
-def top_k_vocab(tf: DataFrame, k: int = VOCAB_K) -> DataFrame:
-    """The ``k`` most frequent words of a ``(doc_id, word, tf)``
+def top_k_vocab(tf: DataFrame) -> DataFrame:
+    """The ``VOCAB_K`` most frequent words of a ``(doc_id, word, tf)``
     term-frequency table → (word, n); ties broken by word so the
     vocabulary is deterministic."""
     return (
         tf.groupBy("word")
         .agg(F.sum("tf").alias("n"))
         .orderBy(F.col("n").desc(), "word")
-        .limit(k)
+        .limit(VOCAB_K)
     )
 
 
@@ -196,14 +196,14 @@ def _merge_syms(syms: list, left: str, right: str) -> list:
     return merged
 
 
-def _local_merge_loop(vocab: dict, n_merges: int) -> list:
+def _local_merge_loop(vocab: dict) -> list:
     """The K merge rounds over a collected {syms-tuple: count} table.
     Identical argmax contract to the distributed loop: max pair
     count, ties broken lexicographically on (left, right)."""
     from collections import Counter
 
     out = []
-    for rank in range(1, n_merges + 1):
+    for rank in range(1, BPE_MERGES + 1):
         pairs: Counter = Counter()
         for syms, n in vocab.items():
             for a, b in zip(syms, syms[1:]):
@@ -220,10 +220,10 @@ def _local_merge_loop(vocab: dict, n_merges: int) -> list:
     return out
 
 
-def bpe_merges(docs: DataFrame, n_merges: int = BPE_MERGES,
+def bpe_merges(docs: DataFrame,
                local_max_words: int = BPE_LOCAL_MAX_WORDS) -> DataFrame:
     """(rank, left, right, merged, pair_count) — the first
-    ``n_merges`` BPE merges learned from the corpus.
+    ``BPE_MERGES`` BPE merges learned from the corpus.
 
     Ties on pair count break lexicographically on (left, right) so
     the merge sequence is deterministic across engines and runs.
@@ -237,12 +237,11 @@ def bpe_merges(docs: DataFrame, n_merges: int = BPE_MERGES,
         spread(docs)
         .select(F.explode(words("text")).alias("word"))
         .groupBy("word").agg(F.count("*").alias("n")),
-        n_merges=n_merges, local_max_words=local_max_words,
+        local_max_words=local_max_words,
     )
 
 
 def bpe_merges_from_counts(word_counts: DataFrame,
-                           n_merges: int = BPE_MERGES,
                            local_max_words: int = BPE_LOCAL_MAX_WORDS,
                            ) -> DataFrame:
     """The merge loop over an already-reduced ``(word, n)`` frequency
@@ -268,7 +267,7 @@ def bpe_merges_from_counts(word_counts: DataFrame,
     if wc.count() <= local_max_words:
         vocab = {tuple(r["syms"]): r["n"] for r in wc.collect()}
         return spark.createDataFrame(
-            _local_merge_loop(vocab, n_merges),
+            _local_merge_loop(vocab),
             schema="rank long, left string, right string, "
                    "merged string, pair_count long",
         )
@@ -278,7 +277,7 @@ def bpe_merges_from_counts(word_counts: DataFrame,
     wc = wc.coalesce(4)
 
     merges = []
-    for rank in range(1, n_merges + 1):
+    for rank in range(1, BPE_MERGES + 1):
         pairs = (
             wc.select(
                 F.posexplode(F.slice("syms", 1, F.size("syms") - 1)).alias(
@@ -400,12 +399,12 @@ v0 AS MATERIALIZED (
 )"""
 
 
-def _bpe_merges_oracle(n_merges: int = BPE_MERGES) -> str:
-    rounds = ",".join(_bpe_round_sql(r) for r in range(1, n_merges + 1))
+def _bpe_merges_oracle() -> str:
+    rounds = ",".join(_bpe_round_sql(r) for r in range(1, BPE_MERGES + 1))
     out = "\nUNION ALL\n".join(
         f"SELECT CAST({r} AS BIGINT) AS rank, l AS \"left\", rgt AS \"right\","
         f" l || rgt AS merged, CAST(cnt AS BIGINT) AS pair_count FROM m{r}"
-        for r in range(1, n_merges + 1)
+        for r in range(1, BPE_MERGES + 1)
     )
     return f"WITH {_BPE_V0_SQL},{rounds}\n{out}"
 
@@ -482,19 +481,19 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bpe_encode_stats(tf, bpe_merges_from_counts(_word_counts(tf)))
 
 
-def _bpe_encode_oracle(n_merges: int = BPE_MERGES) -> str:
+def _bpe_encode_oracle() -> str:
     """Replay training (the merge-round chain) AND encoding: each
     distinct corpus word runs through the same g1..gK folds the
     trainer produced; per-doc totals weight by term frequency —
     upgrading vocab_bpe_encode from rows-only to a full hash check."""
-    rounds = ",".join(_bpe_round_sql(r) for r in range(1, n_merges + 1))
+    rounds = ",".join(_bpe_round_sql(r) for r in range(1, BPE_MERGES + 1))
     enc = ",".join(
         f"""
 e{r} AS MATERIALIZED (
     SELECT word, {_fold_sql(r)} AS syms
     FROM e{r - 1} CROSS JOIN g{r}
 )"""
-        for r in range(1, n_merges + 1)
+        for r in range(1, BPE_MERGES + 1)
     )
     return f"""
 WITH {_BPE_V0_SQL},{rounds},
@@ -502,7 +501,7 @@ e0 AS (
     SELECT word, string_split(word, '') AS syms
     FROM (SELECT DISTINCT word FROM toks)
 ),{enc},
-nt AS (SELECT word, len(syms) AS n_t FROM e{n_merges}),
+nt AS (SELECT word, len(syms) AS n_t FROM e{BPE_MERGES}),
 dtf AS (SELECT doc_id, word, count(*) AS tf FROM toks GROUP BY 1, 2)
 SELECT d.doc_id,
        CAST(sum(d.tf) AS BIGINT) AS n_words,
@@ -572,9 +571,9 @@ FROM cnt GROUP BY freq
 VOCAB_CURVE_KS = (8, 16, 32, 64)
 
 
-def vocab_coverage_curve(docs: DataFrame,
-                         ks: tuple = VOCAB_CURVE_KS) -> DataFrame:
-    """(k, vocab_tokens, total_tokens, coverage_bp) per sweep point."""
+def vocab_coverage_curve(docs: DataFrame) -> DataFrame:
+    """(k, vocab_tokens, total_tokens, coverage_bp) per
+    ``VOCAB_CURVE_KS`` sweep point."""
     from pyspark.sql import Window
 
     wc = pin(  # feeds the top-K AND the total
@@ -583,8 +582,8 @@ def vocab_coverage_curve(docs: DataFrame,
         .groupBy("word")
         .agg(F.count("*").alias("n"))
     )
-    top = wc.orderBy(F.col("n").desc(), "word").limit(max(ks))
-    # rank over the ≤max(ks)-row post-limit table (documented-tiny
+    top = wc.orderBy(F.col("n").desc(), "word").limit(max(VOCAB_CURVE_KS))
+    # rank over the ≤max(VOCAB_CURVE_KS)-row post-limit table (documented-tiny
     # unpartitioned window, same class as the winsorize thresholds)
     ranked = top.withColumn(
         "rank", F.row_number().over(
@@ -593,7 +592,7 @@ def vocab_coverage_curve(docs: DataFrame,
     )
     total = wc.agg(F.sum("n").alias("total_tokens"))
     ks_df = docs.sparkSession.createDataFrame(
-        [(k,) for k in ks], "k long"
+        [(k,) for k in VOCAB_CURVE_KS], "k long"
     )
     return (
         F.broadcast(ks_df)

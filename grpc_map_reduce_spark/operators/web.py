@@ -70,9 +70,9 @@ def _segments(docs: DataFrame) -> DataFrame:
     )
 
 
-def strip_boilerplate(docs: DataFrame,
-                      min_docs: int = BOILERPLATE_MIN_DOCS) -> DataFrame:
-    """Remove corpus-level boilerplate segments from every document.
+def strip_boilerplate(docs: DataFrame) -> DataFrame:
+    """Remove corpus-level boilerplate segments (in at least
+    ``BOILERPLATE_MIN_DOCS`` documents) from every document.
 
     Output (one row per doc with ≥1 word):
       * ``n_segs`` / ``n_removed`` / ``n_kept`` — segment counts;
@@ -85,7 +85,7 @@ def strip_boilerplate(docs: DataFrame,
     boiler = (
         segs.groupBy("seg")
         .agg(F.countDistinct("doc_id").alias("nd"))
-        .filter(F.col("nd") >= min_docs)
+        .filter(F.col("nd") >= BOILERPLATE_MIN_DOCS)
         .select("seg", F.lit(True).alias("_bl"))
     )
     marked = segs.join(F.broadcast(boiler), "seg", "left").withColumn(

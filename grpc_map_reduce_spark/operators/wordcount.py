@@ -24,8 +24,7 @@ from grpc_map_reduce_spark.functions.text import words
 from grpc_map_reduce_spark.sources.tables import table
 
 
-def wordcount(docs: DataFrame, text_col: str = "text",
-              reference_parity: bool = False) -> DataFrame:
+def wordcount(docs: DataFrame, reference_parity: bool = False) -> DataFrame:
     """Count token occurrences across the corpus → ``(word, cnt)``.
 
     ``reference_parity=True`` tokenizes exactly like the reference's
@@ -33,8 +32,8 @@ def wordcount(docs: DataFrame, text_col: str = "text",
     functions.text); the default mode is the pinned ASCII-lower
     contract the DuckDB oracle checks.
     """
-    w = (words(text_col, lowercase=False, unicode_letters=True)
-         if reference_parity else words(text_col))
+    w = (words("text", lowercase=False, unicode_letters=True)
+         if reference_parity else words("text"))
     return (
         docs
         .select(F.explode(w).alias("word"))

@@ -186,10 +186,10 @@ def bloom_pruning_witness(
 
 def skew_split_witness(
     spark: SparkSession, n_probe: int = 8_000_000, n_build: int = 1_000_000,
-    hot_frac: float = 0.4, threshold_mb: int = 4,
+    threshold_mb: int = 4,
 ) -> dict:
-    """Run the planted-hot-key join under AQE skew splitting and
-    return the executed plan's skew metrics.
+    """Run the planted-hot-key join (40% of probe rows on key 0) under
+    AQE skew splitting and return the executed plan's skew metrics.
 
     Same shape as tools/skew_probe.py (which measures WALL CLOCK of
     AQE-vs-salting); this witness captures the RUNTIME ARTIFACT the
@@ -222,7 +222,7 @@ def skew_split_witness(
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
 
         probe = spark.range(n_probe).select(
-            F.when(F.rand(7) < hot_frac, F.lit(0))
+            F.when(F.rand(7) < 0.4, F.lit(0))
             .otherwise((F.rand(11) * n_build).cast("long")).alias("k"),
             F.md5(F.col("id").cast("string")).alias("payload"),
         )

@@ -56,15 +56,7 @@ def _ensure_loaded() -> None:
     global _LOADED
     if _LOADED:
         return
-    from grpc_map_reduce_spark.operators import (  # noqa: F401
-        dedup,
-        inverted_index,
-        map_reduce,
-        relational,
-        similarity,
-        text_analysis,
-        wordcount,
-    )
+    from grpc_map_reduce_spark.operators import inverted_index, wordcount
 
     register(
         "wordcount",

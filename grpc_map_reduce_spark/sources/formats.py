@@ -22,30 +22,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def read_csv(spark: SparkSession, path: str, schema: str, *,
-             header: bool = True, mode: str = "FAILFAST") -> DataFrame:
-    """Read CSV with an explicit DDL ``schema`` (no inference pass).
-
-    ``FAILFAST`` surfaces malformed rows immediately; switch to
-    ``PERMISSIVE`` + a ``_corrupt_record`` column when quarantining bad
-    rows is preferable to failing a 10-hour job.
-    """
+def read_csv(spark: SparkSession, path: str, schema: str) -> DataFrame:
+    """Read headed CSV with an explicit DDL ``schema`` (no inference
+    pass).  ``FAILFAST`` surfaces malformed rows immediately."""
     return (
         spark.read.schema(schema)
-        .option("header", str(header).lower())
-        .option("mode", mode)
+        .option("header", "true")
+        .option("mode", "FAILFAST")
         .csv(path)
     )
 
 
-def read_jsonl(spark: SparkSession, path: str, schema: str, *,
-               mode: str = "FAILFAST") -> DataFrame:
+def read_jsonl(spark: SparkSession, path: str, schema: str) -> DataFrame:
     """Read newline-delimited JSON with an explicit DDL ``schema``.
 
     One JSON object per line is the only splittable JSON layout —
     multi-line documents force one task per file.
     """
-    return spark.read.schema(schema).option("mode", mode).json(path)
+    return spark.read.schema(schema).option("mode", "FAILFAST").json(path)
 
 
 def to_parquet(df: DataFrame, path: str, *,
@@ -59,10 +53,10 @@ def to_parquet(df: DataFrame, path: str, *,
     w.parquet(path)
 
 
-def write_csv(df: DataFrame, path: str, *, header: bool = True) -> None:
-    """Export as CSV part files (one per partition, written in
+def write_csv(df: DataFrame, path: str) -> None:
+    """Export as headed CSV part files (one per partition, written in
     parallel by executors — no driver collect)."""
-    df.write.mode("overwrite").option("header", str(header).lower()).csv(path)
+    df.write.mode("overwrite").option("header", "true").csv(path)
 
 
 def write_jsonl(df: DataFrame, path: str) -> None:

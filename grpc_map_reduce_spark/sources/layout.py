@@ -140,17 +140,21 @@ def upsert_date_partitions(spark: SparkSession, path: str, updates: DataFrame,
 # the identical layout also drives file-level skipping.)
 
 
-def z_value(cols: list[Column | str], bits: int = 16) -> Column:
-    """Interleave the low ``bits`` bits of each (already range-scaled,
+#: Bits per dimension of the z-curve key.
+Z_BITS = 16
+
+
+def z_value(cols: list[Column | str]) -> Column:
+    """Interleave the low ``Z_BITS`` bits of each (already range-scaled,
     non-negative) column into one z-curve key — pure JVM bit math, one
     whole-stage-codegen expression, no UDF.  Callers scale raw values
-    into ``[0, 2**bits)`` first (:func:`scale_to_bits`) so the HIGH
+    into ``[0, 2**Z_BITS)`` first (:func:`scale_to_bits`) so the HIGH
     bits of each dimension — the ones that decide locality — survive.
     """
     cs = [F.col(c).cast("long") if isinstance(c, str) else c.cast("long")
           for c in cols]
     z = F.lit(0).cast("long")
-    for b in range(bits):
+    for b in range(Z_BITS):
         for i, c in enumerate(cs):
             z = z.bitwiseOR(
                 F.shiftleft(
@@ -161,12 +165,11 @@ def z_value(cols: list[Column | str], bits: int = 16) -> Column:
     return z
 
 
-def scale_to_bits(col: Column | str, lo: float, hi: float,
-                  bits: int = 16) -> Column:
-    """Affinely map ``[lo, hi]`` into the integer grid ``[0, 2**bits)``
+def scale_to_bits(col: Column | str, lo: float, hi: float) -> Column:
+    """Affinely map ``[lo, hi]`` into the integer grid ``[0, 2**Z_BITS)``
     (values outside clamp to the edges)."""
     c = F.col(col) if isinstance(col, str) else col
-    top = (1 << bits) - 1
+    top = (1 << Z_BITS) - 1
     scaled = ((c - F.lit(lo)) * F.lit(float(top)) / F.lit(float(hi - lo)))
     return F.least(
         F.greatest(F.round(scaled).cast("long"), F.lit(0)), F.lit(top)
@@ -174,27 +177,22 @@ def scale_to_bits(col: Column | str, lo: float, hi: float,
 
 
 def write_zordered(df: DataFrame, path: str, cols: list[str],
-                   ranges: dict[str, tuple[float, float]] | None = None,
-                   bits: int = 16, n_files: int = 16) -> None:
+                   n_files: int = 16) -> None:
     """Write ``df`` as ``n_files`` parquet files clustered on the
     z-curve over ``cols``.
 
-    ``ranges`` maps each column to its (min, max) for bit scaling; if
-    omitted, one O(1)-to-driver aggregate computes them (two scalars
-    per column — at 100 TB prefer passing known domain bounds and
-    skipping the extra scan).  The write shuffles once
+    Each column's (min, max) for bit scaling comes from one
+    O(1)-to-driver aggregate (two scalars per column).  The write
+    shuffles once
     (``repartitionByRange`` on the z key — contiguous z ranges per
     file, the property that makes the per-file bounding boxes tight).
     """
-    if ranges is None:
-        aggs = []
-        for c in cols:
-            aggs += [F.min(c).alias(f"__lo_{c}"), F.max(c).alias(f"__hi_{c}")]
-        row = df.agg(*aggs).first()
-        ranges = {c: (row[f"__lo_{c}"], row[f"__hi_{c}"]) for c in cols}
-    z = z_value(
-        [scale_to_bits(c, *ranges[c], bits=bits) for c in cols], bits=bits
-    )
+    aggs = []
+    for c in cols:
+        aggs += [F.min(c).alias(f"__lo_{c}"), F.max(c).alias(f"__hi_{c}")]
+    row = df.agg(*aggs).first()
+    z = z_value([scale_to_bits(c, row[f"__lo_{c}"], row[f"__hi_{c}"])
+                 for c in cols])
     (
         df.withColumn("__z", z)
         .repartitionByRange(n_files, "__z")

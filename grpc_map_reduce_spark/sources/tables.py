@@ -141,7 +141,6 @@ def _events_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str,
-                names: tuple[str, ...] = TABLE_NAMES) -> dict[str, DataFrame]:
+def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Load the fixture tables into a dict of lazy DataFrames."""
-    return {name: table(spark, sf_dir, name) for name in names}
+    return {name: table(spark, sf_dir, name) for name in TABLE_NAMES}

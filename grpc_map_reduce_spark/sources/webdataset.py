@@ -72,15 +72,14 @@ def read_tar_members(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def write_tar_shards(df: DataFrame, path: str, n_shards: int,
-                     name_col: str = "member",
-                     payload_col: str = "payload") -> DataFrame:
-    """Hash-route rows into ``n_shards`` tar shards under ``path`` —
-    the writer half of the WebDataset layout.  Shard files are written
-    EXECUTOR-SIDE (``path`` must be shared storage on a cluster; the
-    driver only sees per-shard metadata rows, never payload bytes).
-    Members sort by name within a shard so shard bytes are
-    deterministic.  Returns (shard_id, n_members, n_bytes) metadata."""
+def write_tar_shards(df: DataFrame, path: str, n_shards: int) -> DataFrame:
+    """Hash-route ``(member, payload)`` rows into ``n_shards`` tar
+    shards under ``path`` — the writer half of the WebDataset layout.
+    Shard files are written EXECUTOR-SIDE (``path`` must be shared
+    storage on a cluster; the driver only sees per-shard metadata rows,
+    never payload bytes).  Members sort by name within a shard so shard
+    bytes are deterministic.  Returns (shard_id, n_members, n_bytes)
+    metadata."""
     import os
 
     os.makedirs(path, exist_ok=True)
@@ -89,7 +88,7 @@ def write_tar_shards(df: DataFrame, path: str, n_shards: int,
         members: dict[int, list] = {}
         for pdf in it:
             for shard, name, payload in zip(
-                pdf["_shard"], pdf[name_col], pdf[payload_col]
+                pdf["_shard"], pdf["member"], pdf["payload"]
             ):
                 members.setdefault(int(shard), []).append((name, bytes(payload)))
         rows = {"shard_id": [], "n_members": [], "n_bytes": []}
@@ -103,9 +102,9 @@ def write_tar_shards(df: DataFrame, path: str, n_shards: int,
         yield pd.DataFrame(rows)
 
     routed = df.select(
-        F.pmod(F.xxhash64(F.col(name_col)), F.lit(n_shards)).alias("_shard"),
-        name_col,
-        payload_col,
+        F.pmod(F.xxhash64(F.col("member")), F.lit(n_shards)).alias("_shard"),
+        "member",
+        "payload",
     ).repartition(n_shards, "_shard")
     return routed.mapInPandas(
         batches, schema="shard_id long, n_members long, n_bytes long"

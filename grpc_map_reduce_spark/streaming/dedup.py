@@ -47,17 +47,17 @@ from grpc_map_reduce_spark.operators.dedup import (
 from grpc_map_reduce_spark.plans.checkpoint import pin
 
 
-def _stream_band_rows(doc_stream: DataFrame, n: int, rows_per_band: int,
-                      ts_col: str | None, dedup_within: str) -> DataFrame:
+def _stream_band_rows(doc_stream: DataFrame, ts_col: str | None = None,
+                      dedup_within: str = "1 hour") -> DataFrame:
     """(doc_id, [ts_col,] sh_set, sig, band_idx, key): the stream's docs
-    through the batch kernel and band rows (``_band_rows``).  ``ts_col``
-    passes through the kernel and carries the ``dedup_within``
-    watermark."""
+    through the batch kernel and band rows (``_band_rows`` at
+    ``LSH_ROWS_PER_BAND``).  ``ts_col`` passes through the kernel and
+    carries the ``dedup_within`` watermark."""
     ts_cols = [ts_col] if ts_col is not None else []
-    rows = _minhash_rows(doc_stream.select("doc_id", *ts_cols, "text"), n)
+    rows = _minhash_rows(doc_stream.select("doc_id", *ts_cols, "text"))
     if ts_col is not None:
         rows = rows.withWatermark(ts_col, dedup_within)
-    return _band_rows(rows, rows_per_band)
+    return _band_rows(rows, LSH_ROWS_PER_BAND)
 
 
 def _dedup_candidates(joined: DataFrame, ts_col: str | None,
@@ -70,17 +70,15 @@ def _dedup_candidates(joined: DataFrame, ts_col: str | None,
     return joined.dropDuplicates([id_col, "match_id"])
 
 
-def corpus_index(docs: DataFrame, n: int = 3,
-                 rows_per_band: int = LSH_ROWS_PER_BAND
-                 ) -> tuple[DataFrame, DataFrame]:
+def corpus_index(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     """The static corpus side, built once with the BATCH machinery:
     ``buckets (band_idx, key, match_id)`` and ``sets (match_id,
     sh_set)``.  At scale both live as bucketed parquet, maintained
     incrementally as shards are accepted.  Both read the lazily pinned
     shingle sets, so the corpus kernel runs once."""
     corpus = docs.filter(_side_is_corpus(F.col("doc_id")))
-    sets = pin(_shingle_sets(corpus, n))
-    buckets = _band_rows(sets, rows_per_band).select(
+    sets = pin(_shingle_sets(corpus))
+    buckets = _band_rows(sets, LSH_ROWS_PER_BAND).select(
         F.col("doc_id").alias("match_id"), "band_idx", "key")
     return buckets, sets.select(
         F.col("doc_id").alias("match_id"), F.col("sh_set").alias("_sb")
@@ -88,13 +86,11 @@ def corpus_index(docs: DataFrame, n: int = 3,
 
 
 def streaming_incremental_dedup(doc_stream: DataFrame, buckets: DataFrame,
-                                corpus_sets: DataFrame, n: int = 3,
-                                threshold: float = LSH_NEAR_DUP_THRESHOLD,
-                                rows_per_band: int = LSH_ROWS_PER_BAND,
+                                corpus_sets: DataFrame,
                                 ts_col: str | None = None,
                                 dedup_within: str = "1 hour") -> DataFrame:
     """(doc_id, match_id, jaccard) appended per micro-batch: each
-    streamed doc's above-threshold corpus matches.
+    streamed doc's corpus matches at ``LSH_NEAR_DUP_THRESHOLD``.
 
     ``ts_col``: optional ingest-timestamp column on the stream.  When
     given, the candidate dedup becomes
@@ -112,14 +108,13 @@ def streaming_incremental_dedup(doc_stream: DataFrame, buckets: DataFrame,
     at-least-once per pair and downstream consumers must dedup (or
     upsert) on (doc_id, match_id) if they need exactly-once pairs
     (ADVICE r8)."""
-    exp = _stream_band_rows(doc_stream, n, rows_per_band, ts_col,
-                            dedup_within).drop("sig")
+    exp = _stream_band_rows(doc_stream, ts_col, dedup_within).drop("sig")
     joined = exp.withColumnRenamed("sh_set", "_sa").join(
         buckets, ["band_idx", "key"])  # stream-static
     cand = _dedup_candidates(joined, ts_col)
     return (
         _score_sets(cand.join(corpus_sets, "match_id"))  # stream-static
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= LSH_NEAR_DUP_THRESHOLD)
         .select("doc_id", "match_id", "jaccard")
     )
 
@@ -140,9 +135,7 @@ def streaming_incremental_dedup(doc_stream: DataFrame, buckets: DataFrame,
 # batch `incremental_sketch_pairs` score exactly (parity-gated).
 
 
-def corpus_sketch_index(docs: DataFrame, n: int = 3,
-                        rows_per_band: int = LSH_ROWS_PER_BAND
-                        ) -> tuple[DataFrame, DataFrame]:
+def corpus_sketch_index(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Static corpus side for the sketch-mode stream: ``buckets
     (band_idx, key, match_id)`` and ``sigs (match_id, _sigb:
     array<long>)`` — the shingle sets are never stored (the whole
@@ -157,10 +150,10 @@ def corpus_sketch_index(docs: DataFrame, n: int = 3,
     exactly like the exact twin's index."""
     corpus = docs.filter(_side_is_corpus(F.col("doc_id")))
     sig = pin(
-        _shingle_sets(corpus, n)
+        _shingle_sets(corpus)
         .where(F.col("sig").isNotNull()).select("doc_id", "sig")
     )
-    buckets = _band_rows(sig, rows_per_band).select(
+    buckets = _band_rows(sig, LSH_ROWS_PER_BAND).select(
         F.col("doc_id").alias("match_id"), "band_idx", "key")
     sigs = sig.select(F.col("doc_id").alias("match_id"),
                       F.col("sig").alias("_sigb"))
@@ -168,33 +161,20 @@ def corpus_sketch_index(docs: DataFrame, n: int = 3,
 
 
 def streaming_incremental_dedup_sketch(
-        doc_stream: DataFrame, buckets: DataFrame, corpus_sigs: DataFrame,
-        n: int = 3, threshold: float = SKETCH_THRESHOLD,
-        rows_per_band: int = LSH_ROWS_PER_BAND,
-        ts_col: str | None = None,
-        dedup_within: str = "1 hour") -> DataFrame:
+        doc_stream: DataFrame, buckets: DataFrame,
+        corpus_sigs: DataFrame) -> DataFrame:
     """(doc_id, match_id, n_bands, est_jaccard) appended per
     micro-batch: each streamed doc's corpus candidates at signature
-    agreement ≥ ``threshold``.  Same watermark/dedup-state contract as
-    :func:`streaming_incremental_dedup`; the agreement count is
-    recomputed from the two signature arrays AFTER the candidate
+    agreement ≥ ``SKETCH_THRESHOLD``, with the run-scoped candidate
+    dedup of :func:`streaming_incremental_dedup`.  The agreement count
+    is recomputed from the two signature arrays AFTER the candidate
     dedup (the dedup collapses multi-band matches to one row, so the
-    band join can't be counted — the arrays can, and at r=1 the two
-    numbers are identical)."""
-    if rows_per_band != 1:
-        # At r>1 per-component agreement (what zip_with counts below)
-        # is NOT the shared-band count the batch twin and the
-        # estimator use: a pair sharing one 2-row band has agreement
-        # 2 but n_bands 1.  The registered banding is r=1; refuse the
-        # silent divergence instead of emitting a mislabeled estimate
-        # (round-11 review).
-        raise ValueError(
-            "streaming sketch twin supports rows_per_band=1 only "
-            "(signature agreement == shared-band count requires r=1)")
-    exp = _stream_band_rows(doc_stream, n, 1, ts_col, dedup_within).drop(
+    band join can't be counted — the arrays can, and at the r=1
+    banding of ``LSH_ROWS_PER_BAND`` the two numbers are identical)."""
+    exp = _stream_band_rows(doc_stream).drop(
         "sh_set").withColumnRenamed("sig", "_siga")
     joined = exp.join(buckets, ["band_idx", "key"])  # stream-static
-    cand = _dedup_candidates(joined, ts_col)
+    cand = _dedup_candidates(joined, None)
     agree = F.size(
         F.filter(
             F.zip_with("_siga", "_sigb", lambda a, b: a == b),
@@ -203,7 +183,7 @@ def streaming_incremental_dedup_sketch(
     ).cast("long")
     scored = cand.join(corpus_sigs, "match_id").select(  # stream-static
         "doc_id", "match_id", agree.alias("n_bands"))
-    return _sketch_score(scored, threshold, 1)
+    return _sketch_score(scored, SKETCH_THRESHOLD)
 
 
 # --------------------------------------------------------------------------
@@ -218,10 +198,7 @@ def streaming_incremental_dedup_sketch(
 # ``_cosine_scores`` kernel.  No stream-side shuffle of the corpus
 # ever happens.
 
-def embedding_corpus_index(corpus: DataFrame,
-                           id_col: str = "vec_id",
-                           vec_col: str = "embedding"
-                           ) -> tuple[DataFrame, DataFrame]:
+def embedding_corpus_index(corpus: DataFrame) -> tuple[DataFrame, DataFrame]:
     """The static corpus side, built once with the BATCH machinery at
     the selective production calibration (guard ON): ``buckets
     (band_idx, key, match_id)`` and ``vectors (match_id, _vb)``.
@@ -233,30 +210,26 @@ def embedding_corpus_index(corpus: DataFrame,
     from grpc_map_reduce_spark.operators.similarity import (
         EMB_LSH_BITS,
         EMB_LSH_MAX_BUCKET_DEFAULT,
-        EMB_LSH_SEED,
         EMB_SELECTIVE_ROWS_PER_BAND,
         _emb_band_keys,
     )
 
     buckets = (
-        _emb_band_keys(corpus, EMB_LSH_BITS, EMB_SELECTIVE_ROWS_PER_BAND,
-                       EMB_LSH_SEED, id_col, vec_col)
+        _emb_band_keys(corpus, EMB_LSH_BITS, EMB_SELECTIVE_ROWS_PER_BAND)
         .groupBy("band_idx", "key")
         .agg(F.collect_list("id").alias("ms"))
         .where(F.size("ms") <= EMB_LSH_MAX_BUCKET_DEFAULT)
         .select("band_idx", "key", F.explode("ms").alias("match_id"))
     )
     vectors = corpus.select(
-        F.col(id_col).cast("long").alias("match_id"),
-        F.col(vec_col).alias("_vb"),
+        F.col("vec_id").cast("long").alias("match_id"),
+        F.col("embedding").alias("_vb"),
     )
     return buckets, vectors
 
 
 def streaming_embedding_dedup(vec_stream: DataFrame, buckets: DataFrame,
                               corpus_vecs: DataFrame,
-                              id_col: str = "vec_id",
-                              vec_col: str = "embedding",
                               ts_col: str | None = None,
                               dedup_within: str = "1 hour") -> DataFrame:
     """(vec_id, match_id, sim) appended per micro-batch: each
@@ -267,7 +240,6 @@ def streaming_embedding_dedup(vec_stream: DataFrame, buckets: DataFrame,
     contract as :func:`streaming_incremental_dedup`."""
     from grpc_map_reduce_spark.operators.similarity import (
         EMB_LSH_BITS,
-        EMB_LSH_SEED,
         EMB_SELECTIVE_ROWS_PER_BAND,
         EMB_SELECTIVE_THRESHOLD,
         _cosine_scores,
@@ -276,8 +248,8 @@ def streaming_embedding_dedup(vec_stream: DataFrame, buckets: DataFrame,
 
     ts_cols = [ts_col] if ts_col is not None else []
     exp = _emb_band_keys(
-        vec_stream, EMB_LSH_BITS, EMB_SELECTIVE_ROWS_PER_BAND, EMB_LSH_SEED,
-        id_col, vec_col, keep=(*ts_cols, F.col(vec_col).alias("_va")),
+        vec_stream, EMB_LSH_BITS, EMB_SELECTIVE_ROWS_PER_BAND,
+        keep=(*ts_cols, F.col("embedding").alias("_va")),
     )
     if ts_col is not None:
         exp = exp.withWatermark(ts_col, dedup_within)
@@ -286,5 +258,5 @@ def streaming_embedding_dedup(vec_stream: DataFrame, buckets: DataFrame,
     return (
         _cosine_scores(cand.join(corpus_vecs, "match_id"),  # stream-static
                        EMB_SELECTIVE_THRESHOLD)
-        .select(F.col("id").alias(id_col), "match_id", "sim")
+        .select(F.col("id").alias("vec_id"), "match_id", "sim")
     )

@@ -25,7 +25,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from grpc_map_reduce_spark.operators.data_quality import (
-    PSI_BINS,
     psi_from_counts,
     quality_bin_counts,
 )
@@ -81,8 +80,7 @@ def _bind_delta_to_checkpoint(delta_dir: str, checkpoint_dir: str) -> None:
 
 
 def incremental_quality_bins(docs: DataFrame, delta_dir: str,
-                             checkpoint_dir: str, bins: int = PSI_BINS,
-                             available_now: bool = True) -> None:
+                             checkpoint_dir: str) -> None:
     """Maintain the (source, bin, c) histogram under ``delta_dir``,
     one idempotent hive partition per micro-batch.  ``delta_dir`` is
     bound to ``checkpoint_dir`` on first use — see
@@ -91,27 +89,24 @@ def incremental_quality_bins(docs: DataFrame, delta_dir: str,
 
     def _upsert(batch_df: DataFrame, batch_id: int) -> None:
         (
-            quality_bin_counts(batch_df, bins)
+            quality_bin_counts(batch_df)
             # overwrite, not append: a replayed batch replaces its own
             # delta — exactly-once on a plain parquet sink
             .write.mode("overwrite")
             .parquet(f"{delta_dir}/batch_id={batch_id}")
         )
 
-    writer = (
+    (
         docs.writeStream.foreachBatch(_upsert)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if available_now:
-        q.awaitTermination()
 
 
-def serve_source_psi(spark: SparkSession, delta_dir: str,
-                     bins: int = PSI_BINS) -> DataFrame:
+def serve_source_psi(spark: SparkSession, delta_dir: str) -> DataFrame:
     """The live PSI over every committed histogram delta — identical
     to the batch ``source_quality_psi`` of the same documents."""
     merged = (
@@ -119,4 +114,4 @@ def serve_source_psi(spark: SparkSession, delta_dir: str,
         .groupBy("source", "bin")
         .agg(F.sum("c").alias("c"))
     )
-    return psi_from_counts(merged, bins)
+    return psi_from_counts(merged)

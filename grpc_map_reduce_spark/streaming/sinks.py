@@ -27,13 +27,11 @@ from grpc_map_reduce_spark.functions.money import cents
 
 
 def ingest_to_parquet(df: DataFrame, output_dir: str, checkpoint_dir: str,
-                      partition_by: str | None = None,
-                      available_now: bool = True) -> None:
+                      partition_by: str | None = None) -> None:
     """Append-mode parquet ingest with exactly-once checkpointing.
 
-    ``available_now=True`` drains the current backlog and stops (the
-    batch-replay / test harness mode); ``False`` runs until killed
-    (production).  ``partition_by`` writes hive-style directories so
+    An ``availableNow`` trigger drains the current backlog and stops
+    (the batch-replay mode).  ``partition_by`` writes hive-style directories so
     downstream readers get partition pruning (sources/layout.py).
     """
     writer = (
@@ -44,11 +42,7 @@ def ingest_to_parquet(df: DataFrame, output_dir: str, checkpoint_dir: str,
     )
     if partition_by is not None:
         writer = writer.partitionBy(partition_by)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if available_now:
-        q.awaitTermination()
+    writer.trigger(availableNow=True).start().awaitTermination()
 
 
 # --------------------------------------------------------------------------
@@ -69,8 +63,7 @@ def ingest_to_parquet(df: DataFrame, output_dir: str, checkpoint_dir: str,
 # read all deltas, re-aggregate, write one snapshot, drop the
 # replaced deltas — the same read path, run offline.
 def incremental_minute_rollup(events: DataFrame, delta_dir: str,
-                              checkpoint_dir: str,
-                              available_now: bool = True) -> None:
+                              checkpoint_dir: str) -> None:
     """Maintain a minute-grain rollup of the events stream under
     ``delta_dir`` (one hive partition ``batch_id=N`` per micro-batch),
     exactly-once under replay."""
@@ -92,16 +85,14 @@ def incremental_minute_rollup(events: DataFrame, delta_dir: str,
             .parquet(f"{delta_dir}/batch_id={batch_id}")
         )
 
-    writer = (
+    (
         events.writeStream.foreachBatch(_upsert)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if available_now:
-        q.awaitTermination()
 
 
 def serve_minute_rollup(spark: SparkSession, delta_dir: str) -> DataFrame:

@@ -15,6 +15,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from grpc_map_reduce_spark.functions.money import cents
+from grpc_map_reduce_spark.operators.events import WINDOW_SLIDE, WINDOW_WIDTH
+
+#: Event-time watermark of every streaming window, join and dedup.
+WATERMARK = "2 hours"
 
 def read_events_stream(spark: SparkSession, sf_dir: str,
                        max_files_per_trigger: int | None = None) -> DataFrame:
@@ -46,8 +50,8 @@ def read_events_stream(spark: SparkSession, sf_dir: str,
     return df
 
 
-def streaming_tumbling_agg(events: DataFrame, width: str = "1 hour",
-                           watermark: str = "2 hours") -> DataFrame:
+def streaming_tumbling_agg(events: DataFrame, width: str = WINDOW_WIDTH,
+                           watermark: str = WATERMARK) -> DataFrame:
     """Streaming twin of ``operators.events.tumbling_window_agg``.
 
     The watermark bounds state: windows older than (max event time −
@@ -77,16 +81,14 @@ def streaming_tumbling_agg(events: DataFrame, width: str = "1 hour",
     )
 
 
-def streaming_sliding_agg(events: DataFrame, width: str = "1 hour",
-                          slide: str = "30 minutes",
-                          watermark: str = "2 hours") -> DataFrame:
+def streaming_sliding_agg(events: DataFrame) -> DataFrame:
     """Sliding (hopping) windows: each event lands in width/slide
     overlapping windows.  State cost scales with the overlap factor —
     at 100 TB keep width/slide small (here 2×) or pre-aggregate into
     slide-sized tumbling panes and roll up downstream."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width, slide).alias("w"), "event_type")
+        events.withWatermark("ts", WATERMARK)
+        .groupBy(F.window("ts", WINDOW_WIDTH, WINDOW_SLIDE).alias("w"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
             F.sum(cents("value")).alias("total_value_cents"),
@@ -101,15 +103,15 @@ def streaming_sliding_agg(events: DataFrame, width: str = "1 hour",
     )
 
 
-def streaming_session_agg(events: DataFrame, gap: str = "30 minutes",
-                          watermark: str = "2 hours") -> DataFrame:
+def streaming_session_agg(events: DataFrame) -> DataFrame:
     """Streaming twin of ``operators.events.q_session_window``: the
     SAME ``session_window`` expression runs under Structured
     Streaming — sessions merge across micro-batches in the state
-    store and finalize once the watermark passes their gap horizon."""
+    store and finalize once the watermark passes their 30-minute gap
+    horizon."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        events.withWatermark("ts", WATERMARK)
+        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(
             F.count("*").alias("n_events"),
             F.sum(cents("value")).alias("session_value_cents"),
@@ -124,14 +126,12 @@ def streaming_session_agg(events: DataFrame, gap: str = "30 minutes",
     )
 
 
-def stream_stream_purchase_click_join(events: DataFrame,
-                                      watermark: str = "2 hours",
-                                      horizon: str = "1 hour") -> DataFrame:
+def stream_stream_purchase_click_join(events: DataFrame) -> DataFrame:
     """Stream-stream inner join: each purchase to every click by the
-    same user within the preceding ``horizon``.
+    same user within the preceding hour.
 
     Both sides carry watermarks and the join condition bounds
-    click_ts to [purchase_ts − horizon, purchase_ts], so Spark can
+    click_ts to [purchase_ts − 1 hour, purchase_ts], so Spark can
     size the join state store from watermark + time bound and evict
     rows that can no longer match — without the interval condition a
     stream-stream join would buffer both streams forever."""
@@ -142,7 +142,7 @@ def stream_stream_purchase_click_join(events: DataFrame,
             F.col("ts").alias("click_ts"),
             F.col("event_id").alias("click_id"),
         )
-        .withWatermark("click_ts", watermark)
+        .withWatermark("click_ts", WATERMARK)
     )
     purchases = (
         events.filter(F.col("event_type") == "purchase")
@@ -152,13 +152,13 @@ def stream_stream_purchase_click_join(events: DataFrame,
             F.col("event_id").alias("purchase_id"),
             F.col("value").alias("purchase_value"),
         )
-        .withWatermark("purchase_ts", watermark)
+        .withWatermark("purchase_ts", WATERMARK)
     )
     return purchases.join(
         clicks,
         (F.col("p_user_id") == F.col("user_id"))
         & (F.col("click_ts") <= F.col("purchase_ts"))
-        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr(f"INTERVAL {horizon}")),
+        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 1 hour")),
     ).select(
         "purchase_id", "p_user_id", "purchase_ts", "purchase_value",
         "click_id", "click_ts",
@@ -190,23 +190,22 @@ def user_first_seen_dim(batch_events: DataFrame) -> DataFrame:
     )
 
 
-def streaming_dedup(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def streaming_dedup(events: DataFrame) -> DataFrame:
     """Streaming exact dedup on event_id: ``dropDuplicates`` keyed by
     id + event-time with a watermark, so the dedup state store is
     bounded by the watermark horizon instead of growing forever — the
     streaming-ingest form of extension E1."""
-    return events.withWatermark("ts", watermark).dropDuplicates(["event_id", "ts"])
+    return events.withWatermark("ts", WATERMARK).dropDuplicates(["event_id", "ts"])
 
 
-def streaming_dedup_within_watermark(events: DataFrame,
-                                     watermark: str = "2 hours") -> DataFrame:
+def streaming_dedup_within_watermark(events: DataFrame) -> DataFrame:
     """Streaming dedup on event_id ALONE via
     ``dropDuplicatesWithinWatermark``: unlike :func:`streaming_dedup`
     (whose key must include the event-time column for state eviction),
     the within-watermark form dedups on the business key and still
     evicts state once the watermark passes — the right semantics when
     retried deliveries can carry jittered timestamps."""
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
+    return events.withWatermark("ts", WATERMARK).dropDuplicatesWithinWatermark(
         ["event_id"]
     )
 

@@ -27,13 +27,11 @@ def read_text_stream(spark: SparkSession, input_dir: str,
     return reader.text(input_dir)
 
 
-def streaming_wordcount(lines: DataFrame,
-                        reference_parity: bool = True) -> DataFrame:
+def streaming_wordcount(lines: DataFrame) -> DataFrame:
     """Streaming twin of ``operators.wordcount.wordcount`` — identical
-    tokenize→explode→count plan under the micro-batch engine.
-    Defaults to reference-parity tokenization (the CLI contract)."""
-    w = (words(F.col("value"), lowercase=False, unicode_letters=True)
-         if reference_parity else words(F.col("value")))
+    tokenize→explode→count plan under the micro-batch engine, with
+    reference-parity tokenization (the CLI contract)."""
+    w = words(F.col("value"), lowercase=False, unicode_letters=True)
     return (
         lines.select(F.explode(w).alias("word"))
         .groupBy("word")

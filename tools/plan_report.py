@@ -13,7 +13,7 @@ listed with a note instead of a full audit.
 
 NOTE for plan-only tooling (ADVICE r6): several registry entries
 execute real work at DataFrame-CONSTRUCTION time — dedup_triangles
-runs an eager localCheckpoint of its edge table (the measured
+pins its edge table eagerly (``pin(..., eager=True)``, the measured
 disk-peak fix) plus its wedge-count sizing aggregate, and
 ann_ivf_topk / embedding_kmeans run first()/count() model actions.
 Merely building those queries (e.g. for explain here or in
@@ -102,9 +102,7 @@ def main() -> None:
     ]
     for name, a in rows:
         if a is None:
-            out.append(f"| {name} | — | — | — | — | — | — | — | *{ITERATIVE[name]}* |"
-                       .replace(" | *", " — *").replace("— — *", "— *"))
-            out[-1] = f"| {name} | *{ITERATIVE[name]}* |||||||"
+            out.append(f"| {name} | *{ITERATIVE[name]}* |||||||")
             continue
         out.append(
             f"| {name} | {a['exchanges']} | {a['bcast_joins']} | {a['sm_joins']} "

@@ -235,6 +235,39 @@ HOT_TEMPLATE = (
 )
 
 
+#: Every fixture table but ``documents``: a documents-only variant
+#: symlinks these from its source dir.
+SIDE_TABLES = ("region", "nation", "customer", "supplier", "part",
+               "orders", "lineitem", "events", "embeddings")
+
+
+def _link_side_tables(src: str, out: str) -> None:
+    for tbl in SIDE_TABLES:
+        os.symlink(os.path.join(src, f"{tbl}.parquet"),
+                   os.path.join(out, f"{tbl}.parquet"))
+
+
+def _docs_variant(spark, mult: int, suffix: str, when) -> str:
+    """The ``x{mult}-{suffix}`` variant of the replicated dir: the side
+    tables symlinked, ``documents.text`` replaced where ``when`` (an
+    unfinished ``F.when``) matches."""
+    from pyspark.sql import functions as F
+
+    base = synthesize(spark, mult)
+    out = os.path.join(SCRATCH, f"x{mult}-{suffix}")
+    done = os.path.join(out, "_COMPLETE_v3")  # v3: v6 base (affine letters)
+    if os.path.exists(done):
+        return out
+    shutil.rmtree(out, ignore_errors=True)
+    os.makedirs(out)
+    _link_side_tables(base, out)
+    docs = spark.read.parquet(os.path.join(base, "documents.parquet"))
+    docs.withColumn("text", when.otherwise(F.col("text"))).write.mode(
+        "overwrite").parquet(os.path.join(out, "documents.parquet"))
+    open(done, "w").close()
+    return out
+
+
 def synthesize(spark, mult: int, zipf_hot: int = 0,
                hot_cluster: int = 0) -> str:
     """Build (or reuse) the replicated scratch dir for ``mult``.
@@ -254,59 +287,16 @@ def synthesize(spark, mult: int, zipf_hot: int = 0,
     (doc_id-hash selected, disjoint from rotation) — a near-dup
     MEGA-CLUSTER whose size grows linearly with the multiplier, the
     boilerplate-clone skew the hot-bucket guard exists for."""
+    from pyspark.sql import functions as F
+
     if hot_cluster:
-        from pyspark.sql import functions as F
-
-        base = synthesize(spark, mult)
-        out = os.path.join(SCRATCH, f"x{mult}-hotclu{hot_cluster}")
-        done = os.path.join(out, "_COMPLETE_v3")  # v3: v6 base (affine letters)
-        if os.path.exists(done):
-            return out
-        shutil.rmtree(out, ignore_errors=True)
-        os.makedirs(out)
-        for tbl in ("region", "nation", "customer", "supplier", "part",
-                    "orders", "lineitem", "events", "embeddings"):
-            os.symlink(os.path.join(base, f"{tbl}.parquet"),
-                       os.path.join(out, f"{tbl}.parquet"))
-        docs = spark.read.parquet(os.path.join(base, "documents.parquet"))
-        docs.withColumn(
-            "text",
-            F.when(
-                F.pmod(F.xxhash64("doc_id", F.lit("hotclu")),
-                       F.lit(100)) < hot_cluster,
-                F.lit(HOT_TEMPLATE),
-            ).otherwise(F.col("text")),
-        ).write.mode("overwrite").parquet(
-            os.path.join(out, "documents.parquet")
-        )
-        open(done, "w").close()
-        return out
+        return _docs_variant(spark, mult, f"hotclu{hot_cluster}", F.when(
+            F.pmod(F.xxhash64("doc_id", F.lit("hotclu")), F.lit(100)) < hot_cluster,
+            F.lit(HOT_TEMPLATE)))
     if zipf_hot:
-        from pyspark.sql import functions as F
-
-        base = synthesize(spark, mult)
-        out = os.path.join(SCRATCH, f"x{mult}-zipf{zipf_hot}")
-        done = os.path.join(out, "_COMPLETE_v3")  # v3: v6 base (affine letters)
-        if os.path.exists(done):
-            return out
-        shutil.rmtree(out, ignore_errors=True)
-        os.makedirs(out)
-        for tbl in ("region", "nation", "customer", "supplier", "part",
-                    "orders", "lineitem", "events", "embeddings"):
-            os.symlink(os.path.join(base, f"{tbl}.parquet"),
-                       os.path.join(out, f"{tbl}.parquet"))
-        docs = spark.read.parquet(os.path.join(base, "documents.parquet"))
-        docs.withColumn(
-            "text",
-            F.when(
-                F.pmod(F.xxhash64("doc_id"), F.lit(100)) < zipf_hot,
-                F.concat(F.col("text"), F.lit(" zipfhot zipfhead")),
-            ).otherwise(F.col("text")),
-        ).write.mode("overwrite").parquet(
-            os.path.join(out, "documents.parquet")
-        )
-        open(done, "w").close()
-        return out
+        return _docs_variant(spark, mult, f"zipf{zipf_hot}", F.when(
+            F.pmod(F.xxhash64("doc_id"), F.lit(100)) < zipf_hot,
+            F.concat(F.col("text"), F.lit(" zipfhot zipfhead"))))
     # Past 126x (round 10, the 625x tier): the TEXT maps now extend
     # indefinitely (seeded permutations, distinctness verified), but
     # the embedding roll+sign-flip family still has period 126 — so
@@ -315,8 +305,6 @@ def synthesize(spark, mult: int, zipf_hot: int = 0,
     # UNREPLICATED from sf0.1.  main() refuses non-document probes at
     # these multipliers (they would silently measure 1x volume).
     if mult > 126:
-        from pyspark.sql import functions as F
-
         _verify_replica_maps(mult)
         out = os.path.join(SCRATCH, f"x{mult}-docsonly")
         done = os.path.join(out, "_COMPLETE_v1")
@@ -324,10 +312,7 @@ def synthesize(spark, mult: int, zipf_hot: int = 0,
             return out
         shutil.rmtree(out, ignore_errors=True)
         os.makedirs(out)
-        for tbl in ("region", "nation", "customer", "supplier", "part",
-                    "orders", "lineitem", "events", "embeddings"):
-            os.symlink(os.path.join(BASE_SF, f"{tbl}.parquet"),
-                       os.path.join(out, f"{tbl}.parquet"))
+        _link_side_tables(BASE_SF, out)
         src = spark.read.parquet(os.path.join(BASE_SF, "documents.parquet"))
         # Data-driven replication: one broadcast cross-join against a
         # (k, translate-target) table instead of a mult-way union.
@@ -379,10 +364,7 @@ def synthesize(spark, mult: int, zipf_hot: int = 0,
     if not any(os.path.exists(p) for p in (v1, v2, v3, v4, v5)):
         shutil.rmtree(out, ignore_errors=True)  # partial prior attempt
     os.makedirs(out, exist_ok=True)
-    from pyspark.sql import functions as F
-
-    for tbl in ("region", "nation", "customer", "supplier", "part",
-                "orders", "lineitem", "events", "documents", "embeddings"):
+    for tbl in (*SIDE_TABLES, "documents"):
         if (os.path.exists(v4) or os.path.exists(v5)) \
                 and tbl != "documents":
             continue
