@@ -49,26 +49,15 @@ def main(argv: list[str] | None = None) -> int:
     input_dir, fn = argv[1], argv[2]
     output_dir = argv[3] if len(argv) > 3 else "./output"
 
-    from grpc_map_reduce_spark import get_spark
+    from grpc_map_reduce_spark.session import get_spark, sql_conf
     from grpc_map_reduce_spark.sinks.text import run_reference_job
 
     spark = get_spark("grpc-map-reduce-spark-cli")
-    if partitions is not None:
-        # session-level so the job's one shuffle (the groupBy) uses it;
-        # getOrCreate may have reused a live session, so set at runtime
-        # and RESTORE after the job — a reused session must not keep
-        # the override for unrelated later jobs (ADVICE r5).
-        prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-        spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
-        try:
-            run_reference_job(spark, input_dir, fn, output_dir,
-                              num_files=partitions)
-        finally:
-            if prev is None:
-                spark.conf.unset("spark.sql.shuffle.partitions")
-            else:
-                spark.conf.set("spark.sql.shuffle.partitions", prev)
-    else:
+    # --partitions is session-level so the job's one shuffle (the
+    # groupBy) uses it, and scoped: getOrCreate may have reused a live
+    # session, which must not keep the override for later jobs (ADVICE r5).
+    confs = {} if partitions is None else {"spark.sql.shuffle.partitions": str(partitions)}
+    with sql_conf(spark, confs):
         run_reference_job(spark, input_dir, fn, output_dir,
                           num_files=partitions)
     print(f"{fn} output written to {output_dir}")

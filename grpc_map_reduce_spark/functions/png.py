@@ -1,4 +1,5 @@
-"""Minimal pure-stdlib PNG codec — the real-media half of extension E4.
+"""Minimal PNG codec on the stdlib and numpy — the real-media half of
+extension E4.
 
 The container has no PIL/ffmpeg and installs are off-limits, but PNG
 is a fully public spec (W3C PNG / RFC 2083) whose only compression
@@ -29,6 +30,8 @@ from __future__ import annotations
 
 import struct
 import zlib
+
+import numpy as np
 
 PNG_SIGNATURE = b"\x89PNG\r\n\x1a\n"
 
@@ -96,10 +99,6 @@ def decode_png(data: bytes) -> tuple[int, int, int, bytes]:
     #     Python with the predictor inlined (pa = |b-c|, pb = |a-c|,
     #     pc = |a+b-2c| — the p-form differences, no function call,
     #     ~2x) — the same per-row structure libpng uses.
-    try:
-        import numpy as _np
-    except ImportError:  # pragma: no cover - numpy is baked in
-        _np = None
     prev_start = -1  # start of previous unfiltered scanline in `out`
     for y in range(height):
         fbyte = raw[y * (stride + 1)]
@@ -109,28 +108,16 @@ def decode_png(data: bytes) -> tuple[int, int, int, bytes]:
         if fbyte == 0:  # None
             out[start:start + stride] = line
         elif fbyte == 1:  # Sub
-            if _np is not None:
-                lanes = _np.frombuffer(line, _np.uint8).reshape(-1, ch)
-                cur = (lanes.astype(_np.int64).cumsum(axis=0) & 0xFF)
-                out[start:start + stride] = (
-                    cur.astype(_np.uint8).reshape(-1).tobytes()
-                )
-            else:
-                for x in range(stride):
-                    a = out[start + x - ch] if x >= ch else 0
-                    out[start + x] = (line[x] + a) & 0xFF
+            lanes = np.frombuffer(line, np.uint8).reshape(-1, ch)
+            cur = (lanes.astype(np.int64).cumsum(axis=0) & 0xFF)
+            out[start:start + stride] = cur.astype(np.uint8).reshape(-1).tobytes()
         elif fbyte == 2:  # Up
-            if _np is not None:
-                cur = _np.frombuffer(line, _np.uint8).copy()
-                if y:
-                    cur += _np.frombuffer(
-                        out, _np.uint8, count=stride, offset=prev_start
-                    )  # uint8 add wraps mod 256
-                out[start:start + stride] = cur.tobytes()
-            else:
-                for x in range(stride):
-                    b = out[prev_start + x] if y else 0
-                    out[start + x] = (line[x] + b) & 0xFF
+            cur = np.frombuffer(line, np.uint8).copy()
+            if y:
+                cur += np.frombuffer(
+                    out, np.uint8, count=stride, offset=prev_start
+                )  # uint8 add wraps mod 256
+            out[start:start + stride] = cur.tobytes()
         elif fbyte == 3:  # Average — sequential in the left byte
             prev = out[prev_start:prev_start + stride] if y \
                 else bytes(stride)

@@ -1156,16 +1156,14 @@ def dhash_images(media_df: DataFrame) -> DataFrame:
     return _row_map(media_df, ["doc_id", "media"], row, "doc_id long, dhash long")
 
 
-def phash_near_dup_pairs(media_df: DataFrame,
-                         max_bucket: int | None = DHASH_MAX_BUCKET_DEFAULT
-                         ) -> DataFrame:
+def phash_near_dup_pairs(media_df: DataFrame) -> DataFrame:
     """(doc_a, doc_b, hamming) for banded-candidate image pairs within
     ``DHASH_HAMMING_MAX``.
 
-    ``max_bucket`` is the hot-bucket skew guard, ON by default (see
-    :data:`DHASH_MAX_BUCKET_DEFAULT` for the measured 125x blowup it
-    prevents) and mirrored in the oracle's HAVING filter; ``None``
-    restores the exact unguarded band pairs."""
+    Band buckets above :data:`DHASH_MAX_BUCKET_DEFAULT` members are
+    dropped (the hot-bucket skew guard; see the constant for the
+    measured 125x blowup it prevents), as in the oracle's HAVING
+    filter."""
     bands = F.array(*[
         F.struct(
             F.lit(j).alias("band_idx"),
@@ -1183,7 +1181,7 @@ def phash_near_dup_pairs(media_df: DataFrame,
     # join back to the signatures.
     cand = (
         bucket_pairs(exploded, ["band_idx", "key"],
-                     F.struct("doc_id", "dhash"), max_bucket)
+                     F.struct("doc_id", "dhash"), DHASH_MAX_BUCKET_DEFAULT)
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),

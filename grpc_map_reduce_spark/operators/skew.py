@@ -23,12 +23,14 @@ operators cover the two cases AQE does not:
 Both are result-invariant rewrites — the salted wordcount below is
 oracle-checked against the SAME SQL as the unsalted one.
 
-WHEN TO SALT A JOIN vs TRUST AQE (measured, round 9 —
-tools/skew_probe.py, 20 M probe rows / 40 % hot key / 25x volume):
+WHEN TO SALT A JOIN vs TRUST AQE (measured by ``tools/plan_report.py``,
+the skew walls in PLANS.md: 20 M probe rows / 40 % hot key / 1.5 M
+build keys):
 
   * plain shuffle EQUI-join with a hot key: do NOT salt.  AQE's
     runtime split finished in 2.1 s where skew-off took 8.1 s (3.8x)
-    and the manually salted join took 3.9 s — the split beats salting
+    and the manually salted join took 3.9 s (round 9, 32 cores; on
+    4 cores 10.3 s vs 14.8 s vs 16.7 s) — the split beats salting
     because it never pays the n_salts x build-side replication (which
     also OOM'd a task's hash-map build at 4 M keys x 8 salts).
   * EXCEPT when the hot partition is highly compressible: AQE skew

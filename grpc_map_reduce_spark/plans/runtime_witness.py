@@ -17,14 +17,15 @@ the evidence out of the executed plan's own SQL metrics:
   filter above the fact scan.  Witness = the `might_contain` Filter
   node in the FINAL plan plus its `numOutputRows` metric vs the rows
   scanned: the ROWS PRUNED BEFORE THE SHUFFLE.
-* **skew**: a planted zipf-hot equi-join (same shape as
-  `tools/skew_probe.py`) under AQE skew splitting — witness =
-  `AQEShuffleRead` nodes whose `numSkewedPartitions` /
-  `numSkewedSplits` metrics are > 0 in the executed plan.
+* **skew**: the :func:`planted_pair` hot-key equi-join under AQE skew
+  splitting — witness = `AQEShuffleRead` nodes whose
+  `numSkewedPartitions` / `numSkewedSplits` metrics are > 0 in the
+  executed plan.  :func:`skew_walls` times the same join with the
+  split off, on, and salted instead (the decision rule in
+  ``operators/skew.py``).
 
 Both witnesses are pytest-gated (tests/test_runtime_mechanisms.py)
-and surfaced in PLANS.md's runtime appendix via
-`tools/runtime_plan_report.py --mechanisms`.
+and surfaced in PLANS.md's runtime appendix by `tools/plan_report.py`.
 """
 
 from __future__ import annotations
@@ -34,39 +35,37 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def iter_executed_nodes(jnode):
-    """DFS over an EXECUTED physical plan, descending through the
-    adaptive wrappers py4j would otherwise treat as leaves:
-    `AdaptiveSparkPlanExec` hides the re-planned tree behind
-    `executedPlan()`, materialized `QueryStageExec`s behind `plan()`,
-    and `ReusedExchangeExec` behind `child()` — none of which appear
-    in `children()`."""
-    yield jnode
-    cls = jnode.getClass().getSimpleName()
-    if cls == "AdaptiveSparkPlanExec":
-        yield from iter_executed_nodes(jnode.executedPlan())
-        return
-    if cls.endswith("QueryStageExec"):
-        yield from iter_executed_nodes(jnode.plan())
-        return
-    ch = jnode.children()
-    for i in range(ch.size()):
-        yield from iter_executed_nodes(ch.apply(i))
+from grpc_map_reduce_spark.operators.skew import salted_shuffle_join
+from grpc_map_reduce_spark.plans.audit import (
+    executed_plan,
+    final_plan,
+    iter_executed_nodes,
+    node_metrics,
+)
+from grpc_map_reduce_spark.plans.checkpoint import pin, pins
+from grpc_map_reduce_spark.session import sql_conf
 
 
-def node_metrics(jnode) -> dict[str, int]:
-    """A plan node's SQL metrics as {key: value} (post-execution)."""
-    out = {}
-    it = jnode.metrics().iterator()
-    while it.hasNext():
-        kv = it.next()
-        out[kv._1()] = kv._2().value()
-    return out
+def _wall(df: DataFrame) -> tuple[list, float]:
+    """``df.collect()`` and its wall seconds.  collect(), not a noop
+    write: a write plans its own copy, and the executed plan read
+    afterwards would never have finalized."""
+    t0 = time.perf_counter()
+    rows = df.collect()
+    return rows, round(time.perf_counter() - t0, 3)
 
 
-def _executed_nodes(df: DataFrame):
-    return list(iter_executed_nodes(df._jdf.queryExecution().executedPlan()))
+def _join_stats(joined: DataFrame) -> DataFrame:
+    """One row over a join of a ``payload`` side and a ``dim`` side.
+    Both payload columns are carried through the aggregate: AQE skew
+    detection reads COMPRESSED map-output sizes, and a pruned hot
+    partition of identical 8-byte keys lz4-compresses to ~nothing and
+    evades it (r8 probe lesson)."""
+    return joined.groupBy().agg(
+        F.count("*").alias("n"),
+        F.max(F.length("payload")).alias("p"),
+        F.max(F.length("dim")).alias("d"),
+    )
 
 
 def bloom_pruning_witness(
@@ -81,26 +80,17 @@ def bloom_pruning_witness(
     exactly when the bloom pays) and the application-side scan
     threshold is lowered so probe-scale estimates cross it.  Returns
     rows scanned / rows surviving `might_contain` / rows pruned, and
-    a with-vs-without wall comparison on identical pinned inputs.
+    a with-vs-without wall comparison on identical inputs.
     """
-    prev = {
-        k: spark.conf.get(k, None)
-        for k in (
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.optimizer.runtime.bloomFilter.enabled",
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-        )
-    }
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set(
-            "spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+    bloom_key = "spark.sql.optimizer.runtime.bloomFilter.enabled"
+    with sql_conf(spark, {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        bloom_key: "true",
         # default 10 GB: the witness's whole point is crossing it with
         # probe-scale stats (Range leaf stats are exact: 8 B/row)
-        spark.conf.set(
-            "spark.sql.optimizer.runtime.bloomFilter."
-            "applicationSideScanSizeThreshold", str(8 * 1024 * 1024))
-
+        "spark.sql.optimizer.runtime.bloomFilter."
+        "applicationSideScanSizeThreshold": str(8 * 1024 * 1024),
+    }):
         fact = spark.range(n_fact).select(
             (F.col("id") % n_dim).alias("k"),
             F.md5(F.col("id").cast("string")).alias("payload"),
@@ -118,34 +108,21 @@ def bloom_pruning_witness(
         # targets at 100 TB.
         dim = spark.range(n_dim).select(
             F.col("id").alias("k"),
-            F.md5(F.col("id").cast("string")).alias("dim_attr"),
+            F.md5(F.col("id").cast("string")).alias("dim"),
         ).filter(
-            (F.conv(F.substring("dim_attr", 1, 4), 16, 10).cast("long")
+            (F.conv(F.substring("dim", 1, 4), 16, 10).cast("long")
              % sel_mod) == 0
         )
-
-        def shape():
-            return (
-                fact.join(dim, "k")
-                .groupBy()
-                .agg(F.count("*").alias("n"),
-                     F.max(F.length("payload")).alias("p"),
-                     F.max(F.length("dim_attr")).alias("d"))
-            )
 
         # untimed warm-up (codegen + shuffle-writer spin-up) so the
         # first timed variant isn't charged for session cold-start
         fact.limit(100_000).join(dim, "k").groupBy().agg(
             F.count("*")).collect()
 
-        q = shape()
-        t0 = time.perf_counter()
-        n_joined = q.collect()[0]["n"]
-        wall_bloom = round(time.perf_counter() - t0, 3)
-
-        nodes = _executed_nodes(q)
+        q = _join_stats(fact.join(dim, "k"))
+        rows, wall_bloom = _wall(q)
         bloom_filters = [
-            n for n in nodes
+            n for n in iter_executed_nodes(executed_plan(q))
             if n.getClass().getSimpleName() == "FilterExec"
             and "might_contain" in n.condition().toString()
         ]
@@ -153,115 +130,120 @@ def bloom_pruning_witness(
             int(node_metrics(n).get("numOutputRows", 0))
             for n in bloom_filters
         )
-        final_str = (
-            q._jdf.queryExecution().executedPlan().toString()
-            .split("== Initial Plan ==", 1)[0]
-        )
 
         # identical query, bloom off — the pruning's wall-clock value
-        spark.conf.set(
-            "spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
-        q_off = shape()
-        t0 = time.perf_counter()
-        q_off.collect()
-        wall_off = round(time.perf_counter() - t0, 3)
+        spark.conf.set(bloom_key, "false")
+        _, wall_off = _wall(_join_stats(fact.join(dim, "k")))
 
         return {
             "bloom_filter_nodes": len(bloom_filters),
-            "might_contain_in_final": "might_contain" in final_str,
+            "might_contain_in_final": "might_contain" in final_plan(q),
             "fact_rows_scanned": n_fact,
             "rows_after_bloom": rows_after,
             "rows_pruned": n_fact - rows_after if bloom_filters else 0,
-            "rows_joined": n_joined,
+            "rows_joined": rows[0]["n"],
             "wall_bloom_on_s": wall_bloom,
             "wall_bloom_off_s": wall_off,
         }
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+
+
+def planted_pair(spark: SparkSession, n_probe: int,
+                 n_build: int) -> tuple[DataFrame, DataFrame]:
+    """The planted hot-key join inputs: ``n_probe`` probe rows, 40% of
+    them on key 0 and the rest uniform over the ``n_build`` build keys.
+    Each row carries an md5 ``payload`` / ``dim`` string so partition
+    bytes are meaningful."""
+    probe = spark.range(n_probe).select(
+        F.when(F.rand(7) < 0.4, F.lit(0))
+        .otherwise((F.rand(11) * n_build).cast("long")).alias("k"),
+        F.md5(F.col("id").cast("string")).alias("payload"),
+    )
+    build = spark.range(n_build).select(
+        F.col("id").alias("k"),
+        F.md5(F.col("id").cast("string")).alias("dim"),
+    )
+    return probe, build
+
+
+def _skew_conf(threshold_mb: int) -> dict[str, str]:
+    """AQE skew splitting with its thresholds lowered to
+    ``threshold_mb`` so probe volume crosses them — at 100 TB the
+    256 MB default crosses on real skew."""
+    mb = str(threshold_mb * 1024 * 1024)
+    return {
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": mb,
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": mb,
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+    }
 
 
 def skew_split_witness(
     spark: SparkSession, n_probe: int = 8_000_000, n_build: int = 1_000_000,
     threshold_mb: int = 4,
 ) -> dict:
-    """Run the planted-hot-key join (40% of probe rows on key 0) under
-    AQE skew splitting and return the executed plan's skew metrics.
-
-    Same shape as tools/skew_probe.py (which measures WALL CLOCK of
-    AQE-vs-salting); this witness captures the RUNTIME ARTIFACT the
-    r9 audit had never observed: `AQEShuffleRead` metrics
-    `numSkewedPartitions` / `numSkewedSplits` > 0 in a final plan.
-    Thresholds are lowered so the probe volume crosses them — at
-    100 TB the 256 MB default crosses on real skew.  Both payload
-    columns are carried through the aggregate: AQE skew detection
-    reads COMPRESSED map-output sizes, and a pruned hot partition of
-    identical 8-byte keys lz4-compresses to ~nothing and evades it
-    (r8 probe lesson).
-    """
-    prev = {
-        k: spark.conf.get(k, None)
-        for k in (
-            "spark.sql.adaptive.skewJoin.enabled",
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-            "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            "spark.sql.autoBroadcastJoinThreshold",
-        )
-    }
-    try:
-        mb = str(threshold_mb * 1024 * 1024)
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-        spark.conf.set(
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", mb)
-        spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-        spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", mb)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-
-        probe = spark.range(n_probe).select(
-            F.when(F.rand(7) < 0.4, F.lit(0))
-            .otherwise((F.rand(11) * n_build).cast("long")).alias("k"),
-            F.md5(F.col("id").cast("string")).alias("payload"),
-        )
-        build = spark.range(n_build).select(
-            F.col("id").alias("k"),
-            F.md5(F.col("id").cast("string")).alias("dim"),
-        )
-        q = (
-            probe.hint("merge").join(build, "k")
-            .groupBy()
-            .agg(F.count("*").alias("n"),
-                 F.max(F.length("payload")).alias("p"),
-                 F.max(F.length("dim")).alias("d"))
-        )
-        t0 = time.perf_counter()
-        q.collect()
-        wall = round(time.perf_counter() - t0, 3)
+    """Run the planted-hot-key sort-merge join under AQE skew
+    splitting and return the executed plan's skew metrics: the RUNTIME
+    ARTIFACT the r9 audit had never observed, `AQEShuffleRead` metrics
+    `numSkewedPartitions` / `numSkewedSplits` > 0 in a final plan."""
+    with sql_conf(spark, _skew_conf(threshold_mb)):
+        probe, build = planted_pair(spark, n_probe, n_build)
+        q = _join_stats(probe.hint("merge").join(build, "k"))
+        _, wall = _wall(q)
 
         skewed_parts = skewed_splits = aqe_reads = 0
-        for n in _executed_nodes(q):
+        for n in iter_executed_nodes(executed_plan(q)):
             if n.getClass().getSimpleName() == "AQEShuffleReadExec":
                 aqe_reads += 1
                 m = node_metrics(n)
                 skewed_parts += int(m.get("numSkewedPartitions", 0))
                 skewed_splits += int(m.get("numSkewedSplits", 0))
-        final_str = (
-            q._jdf.queryExecution().executedPlan().toString()
-            .split("== Initial Plan ==", 1)[0]
-        )
         return {
             "aqe_reads": aqe_reads,
             "num_skewed_partitions": skewed_parts,
             "num_skewed_splits": skewed_splits,
-            "skewed_in_final_str": "skewed" in final_str,
+            "skewed_in_final_str": "skewed" in final_plan(q),
             "wall_s": wall,
         }
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+
+
+#: Planted-pair volume of :func:`skew_walls`: 20 M probe rows over
+#: 1.5 M build keys, skew thresholds lowered to 8 MB.  The build side
+#: must keep the 8x replicated build hash map within a task's execution
+#: memory: 4 M keys x 8 salts OOM'd it (round 9) — a cost of salting
+#: the AQE split never pays.
+WALLS_PROBE_ROWS = 20_000_000
+WALLS_BUILD_ROWS = 1_500_000
+WALLS_THRESHOLD_MB = 8
+
+
+def skew_walls(spark: SparkSession) -> dict:
+    """Wall seconds of the planted-hot-key join three ways, on ONE
+    pinned :func:`planted_pair` so every variant reads identical
+    bytes: sort-merge with the AQE skew split off, with it on (and
+    whether it fired), and ``salted_shuffle_join`` with 8 salts."""
+    skew_key = "spark.sql.adaptive.skewJoin.enabled"
+    with sql_conf(spark, _skew_conf(WALLS_THRESHOLD_MB)), pins():
+        probe, build = (pin(side, eager=True) for side in planted_pair(
+            spark, WALLS_PROBE_ROWS, WALLS_BUILD_ROWS))
+        # untimed warm-up so the first variant isn't charged for
+        # codegen and shuffle-writer spin-up
+        _join_stats(probe.limit(100_000).join(build, "k")).collect()
+
+        spark.conf.set(skew_key, "false")
+        _, off = _wall(_join_stats(probe.hint("merge").join(build, "k")))
+        spark.conf.set(skew_key, "true")
+        split = _join_stats(probe.hint("merge").join(build, "k"))
+        _, on = _wall(split)
+        _, salted = _wall(_join_stats(
+            salted_shuffle_join(probe, build, "k", n_salts=8)))
+        return {
+            "probe_rows": WALLS_PROBE_ROWS,
+            "build_rows": WALLS_BUILD_ROWS,
+            "threshold_mb": WALLS_THRESHOLD_MB,
+            "smj_skew_split_off_s": off,
+            "smj_skew_split_on_s": on,
+            "salted_shuffle_join_s": salted,
+            "skew_split_fired": "skewed" in final_plan(split),
+        }

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import os
 import re
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -164,3 +165,21 @@ def get_spark(app_name: str = "grpc-map-reduce-spark", *, cpus: int | str | None
         width = max(512, 16 * spark.sparkContext.defaultParallelism)
         spark.conf.set(width_key, str(width))
     return spark
+
+
+@contextmanager
+def sql_conf(spark: SparkSession, confs: dict[str, str]):
+    """Set the runtime SQL ``confs`` for the block.  On exit, also by
+    an exception, each key gets its previous value back, or is unset
+    if it had none — a reused session keeps no override."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -30,6 +30,7 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from grpc_map_reduce_spark.plans.checkpoint import pin
+from grpc_map_reduce_spark.session import sql_conf
 
 
 def write_bucketed(df: DataFrame, table_name: str, key: str,
@@ -107,9 +108,7 @@ def upsert_date_partitions(spark: SparkSession, path: str, updates: DataFrame,
     # "dynamic" would silently turn every later plain
     # mode("overwrite").partitionBy(...) in the session into a
     # partition-granular overwrite instead of a full-table one
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with sql_conf(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         days = [r[0] for r in updates.select(date_col).distinct().collect()]
         existing = spark.read.parquet(path).filter(F.col(date_col).isin(days))
         merged = pin(
@@ -118,11 +117,6 @@ def upsert_date_partitions(spark: SparkSession, path: str, updates: DataFrame,
             eager=True,
         )
         merged.write.mode("overwrite").partitionBy(date_col).parquet(path)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        else:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
 
 # --------------------------------------------------------------------------

@@ -7,6 +7,7 @@ import pytest
 
 from grpc_map_reduce_spark import get_spark
 from grpc_map_reduce_spark.sources.tables import TABLE_NAMES
+from tools.check_correctness import _canon, _strict_match, _unhashable_cols
 
 SF_SMALL = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
@@ -61,55 +62,25 @@ def duck(sf_dir):
     con.close()
 
 
-def normalize(rows, colnames):
-    """Order-insensitive, name-sorted canonical form (mimics the
-    driver's compare: sort columns by name, then hash values)."""
-    order = sorted(range(len(colnames)), key=lambda i: colnames[i])
-    canon = []
-    for row in rows:
-        canon.append(tuple(_canon_value(row[i]) for i in order))
-    return sorted(colnames), sorted(canon, key=repr)
-
-
-def _canon_value(v):
-    import datetime
-    import math
-
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        # Queries round explicitly; this only absorbs repr noise.
-        return f"{v:.9g}"
-    if isinstance(v, datetime.datetime):
-        return v.isoformat()
-    if isinstance(v, datetime.date):
-        return v.isoformat()
-    if isinstance(v, list):
-        return tuple(_canon_value(x) for x in v)
-    return v
-
-
 def assert_matches_oracle(spark, duck, sf_dir, name):
-    """Run registry query `name` on Spark and its DuckDB oracle; compare."""
+    """Run registry query `name` on Spark and its DuckDB oracle and
+    compare them as the driver's gate does (tools/check_correctness.py):
+    columns sorted by name, rows sorted, values byte-strict on their
+    rendering, and a list column is a failure of its own."""
     from grpc_map_reduce_spark import registry
 
     q = registry.all_queries()[name]
-    sdf = q.spark_fn(spark, sf_dir)
-    s_cols = sdf.columns
-    s_rows = [tuple(r) for r in sdf.collect()]
-    rel = duck.execute(q.oracle)
-    d_cols = [d[0] for d in rel.description]
-    d_rows = rel.fetchall()
-
-    s_names, s_canon = normalize(s_rows, s_cols)
-    d_names, d_canon = normalize(d_rows, d_cols)
-    assert s_names == d_names, f"{name}: column names differ: {s_names} vs {d_names}"
-    assert len(s_canon) == len(d_canon), (
-        f"{name}: row count differs: spark={len(s_canon)} duckdb={len(d_canon)}"
+    got = q.spark_fn(spark, sf_dir).toPandas()
+    want = duck.execute(q.oracle).df()
+    unhashable = sorted(set(_unhashable_cols(got)) | set(_unhashable_cols(want)))
+    assert not unhashable, f"{name}: list/array output columns {unhashable}"
+    a, b = _canon(got), _canon(want)
+    assert list(a.columns) == list(b.columns), (
+        f"{name}: column names differ: {list(a.columns)} vs {list(b.columns)}"
     )
-    mismatches = [
-        (a, b) for a, b in zip(s_canon, d_canon) if a != b
-    ]
-    assert not mismatches, (
-        f"{name}: {len(mismatches)} row mismatches; first 5: {mismatches[:5]}"
+    assert len(a) == len(b), f"{name}: row count differs: spark={len(a)} duckdb={len(b)}"
+    bad = _strict_match(a, b)
+    assert not bad, (
+        f"{name}: values differ in {bad}; first 5 rows:\n"
+        f"{a[bad].head().to_string()}\nvs\n{b[bad].head().to_string()}"
     )

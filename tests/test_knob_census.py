@@ -13,9 +13,7 @@ it runs in the fast tier.
   the called name (``f(...)`` or ``obj.f(...)``; ``Cls(...)`` calls
   ``Cls.__init__``).  A name shared by two definitions counts for both.
 * A call sets a parameter when it passes it by position or keyword, or
-  when it passes ``*args`` / ``**kwargs``.  A test that pins a default
-  (``inspect.signature(f).parameters["p"]``) keeps ``p`` in use too: it
-  makes that default a contract.
+  when it passes ``*args`` / ``**kwargs``.
 * Pass-through: a call that passes the calling function's own parameter
   of the same name sets it only if that parameter is set somewhere, is
   required, or has a different default.  Resolved to a fixed point.
@@ -123,15 +121,6 @@ def unset_knobs() -> list[str]:
                     deferred.append(((d.key, param), (src.key, param)))
                 else:
                     is_set.add((d.key, param))
-    # inspect.signature(f).parameters["p"]: a test pinning f's default
-    for node in (n for _, tree in trees for n in ast.walk(tree)):
-        sig = node.value.value if (isinstance(node, ast.Subscript)
-                                   and isinstance(node.value, ast.Attribute)
-                                   and node.value.attr == "parameters") else None
-        if (isinstance(sig, ast.Call) and _name(sig.func) == "signature" and sig.args
-                and isinstance(node.slice, ast.Constant)):
-            is_set.update((d.key, node.slice.value)
-                          for d in by_name.get(_name(sig.args[0]), []))
     changed = True
     while changed:
         changed = False

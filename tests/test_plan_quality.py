@@ -15,7 +15,12 @@ import re
 from pyspark.sql import functions as F
 
 from grpc_map_reduce_spark import registry
-from grpc_map_reduce_spark.plans.audit import explain_str, plan_audit
+from grpc_map_reduce_spark.plans.audit import (
+    explain_str,
+    final_plan,
+    final_plan_audit,
+    plan_audit,
+)
 from grpc_map_reduce_spark.sources.tables import table
 
 
@@ -47,8 +52,19 @@ def test_q1_scan_prunes_and_pushes(spark, sf_dir):
 
 def test_q5_dimension_joins_broadcast(spark, sf_dir):
     audit = plan_audit(registry.all_queries()["q5_region_revenue"].spark_fn(spark, sf_dir))
-    assert audit["has_broadcast_join"], "small dims must broadcast"
-    assert not audit["has_python_udf"], "relational path must stay JVM-side"
+    assert audit["bcast_joins"], "small dims must broadcast"
+    assert not audit["arrow_py"] + audit["row_py"], "relational path must stay JVM-side"
+
+
+def test_plan_audit_counts_pandas_map_nodes(spark):
+    """mapInPandas and applyInPandas plan as MapInPandas and
+    FlatMapGroupsInPandas nodes: the audit must count both as Python,
+    or a no-Python gate cannot see them."""
+    df = spark.range(4)
+    for frame in (df.mapInPandas(lambda it: it, "id long"),
+                  df.groupBy("id").applyInPandas(lambda pdf: pdf, "id long")):
+        audit = plan_audit(frame)
+        assert audit["arrow_py"] + audit["row_py"] >= 1, explain_str(frame)
 
 
 def test_q3_topk_avoids_global_sort(spark, sf_dir):
@@ -60,8 +76,8 @@ def test_q3_topk_avoids_global_sort(spark, sf_dir):
 
 def test_wordcount_stays_jvm_side_with_partial_agg(spark, sf_dir):
     audit = plan_audit(registry.all_queries()["wordcount"].spark_fn(spark, sf_dir))
-    assert audit["has_partial_agg"]
-    assert not audit["has_python_udf"], (
+    assert audit["partial_aggs"]
+    assert not audit["arrow_py"] + audit["row_py"], (
         "the reference-parity tokenize path must not use Python UDFs"
     )
     # codegen subtree count is only visible pre-execution with AQE off
@@ -69,7 +85,7 @@ def test_wordcount_stays_jvm_side_with_partial_agg(spark, sf_dir):
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         audit = plan_audit(registry.all_queries()["wordcount"].spark_fn(spark, sf_dir))
-        assert audit["codegen_stages"] >= 1
+        assert audit["codegen"] >= 1
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
 
@@ -144,8 +160,8 @@ def test_q9_dims_broadcast(spark, sf_dir):
     audit = plan_audit(
         registry.all_queries()["q9_nation_year_profit"].spark_fn(spark, sf_dir)
     )
-    assert audit["has_broadcast_join"]
-    assert not audit["has_python_udf"]
+    assert audit["bcast_joins"]
+    assert not audit["arrow_py"] + audit["row_py"]
 
 
 def test_q22_anti_join_broadcasts(spark, sf_dir):
@@ -470,12 +486,9 @@ def test_aqe_final_plan_converts_smj(spark, sf_dir):
     convert to broadcast once real (fixture-small) statistics arrive,
     and at least one AQEShuffleRead must appear (proof the adaptive
     re-planner actually engaged, not just that the flag is set).
-    tools/runtime_plan_report.py carries the full ten-query audit;
-    its PLANS.md appendix documents the one legitimate survivor
+    tools/plan_report.py carries the full ten-query audit; its
+    PLANS.md appendix documents the one legitimate survivor
     (hybrid_rrf's bounded full-outer top-k merge)."""
-    from tools.runtime_plan_report import final_plan_audit
-    from grpc_map_reduce_spark import registry
-
     qs = registry.all_queries()
     for name in ("dedup_canonical", "docs_leakage_safe_split"):
         rec = final_plan_audit(qs[name].spark_fn(spark, sf_dir))
@@ -567,8 +580,7 @@ def test_lsh_near_dup_intersects_each_pair_once(spark, sf_dir):
     and no ``concat_ws`` string key anywhere in the executed plan."""
     df = registry.all_queries()["dedup_lsh_neardup"].spark_fn(spark, sf_dir)
     df.collect()
-    adaptive = df._jdf.queryExecution().executedPlan()
-    plan = adaptive.executedPlan().toString()  # the final plan only
+    plan = final_plan(df)
     assert plan.count("array_intersect(") == 1, plan
     assert "transform(" not in plan, plan
     assert "concat_ws" not in plan, plan

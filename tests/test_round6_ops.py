@@ -168,11 +168,6 @@ def test_guards_are_on_by_default():
                similarity.embedding_lsh_near_dup):
         assert (inspect.signature(fn).parameters["max_bucket"].default
                 == similarity.EMB_LSH_MAX_BUCKET_DEFAULT), fn.__name__
-    from grpc_map_reduce_spark.operators import multimodal
-
-    assert (inspect.signature(multimodal.phash_near_dup_pairs)
-            .parameters["max_bucket"].default
-            == multimodal.DHASH_MAX_BUCKET_DEFAULT)
 
 
 def test_pin_storage_level_is_serialized(spark):

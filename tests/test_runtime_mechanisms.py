@@ -2,9 +2,8 @@
 item 1): runtime bloom-filter pruning and AQE skew-join splits,
 witnessed through the executed plan's own SQL metrics rather than
 static explain.  Volumes are the smallest that cross the (lowered)
-thresholds so the gate stays fast; tools/runtime_plan_report.py
---mechanisms runs the same witnesses at full probe volume for
-PLANS.md.
+thresholds so the gate stays fast; tools/plan_report.py runs the same
+witnesses at full probe volume for PLANS.md.
 
 The session-reuse gates below check that a long-lived session does not
 re-derive what an earlier query already derived: parquet schemas
